@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expressions.{HtmlBlocks, KieBest, PdfGlyphRuns, Simhash, TokenSpans, VecDot}
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point — the idiomatic way to ship this
   * library's custom expressions into any session, including pure-SQL
@@ -16,55 +16,15 @@ import graft.expressions.{HtmlBlocks, KieBest, PdfGlyphRuns, Simhash, TokenSpans
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Injects `html_blocks`, `pdf_glyph_runs` and `vec_dot` into the
+  * Injects every function of [[GraftFunctions.sqlFunctions]] into the
   * function registry (session-independent, catalog-visible — unlike the
-  * temp-function fallback in [[graft.functions.GraftFunctions.register]]).
+  * temp-function fallback in [[GraftFunctions.register]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  /** exact-arity gate — the shared one from GraftFunctions (review fix:
-    * `children.head` builders silently dropped surplus arguments) */
-  private def arity(name: String, ns: Set[Int])(
-      f: Seq[Expression] => Expression)(
-      children: Seq[Expression]): Expression =
-    graft.functions.GraftFunctions.arity(name, ns)(f)(children)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("html_blocks"),
-      info("html_blocks",
-        "html_blocks(text) - tokenizes HTML into content blocks with spans and link-density features"),
-      arity("html_blocks", Set(1))(children => HtmlBlocks(children.head))))
-    ext.injectFunction((
-      FunctionIdentifier("pdf_glyph_runs"),
-      info("pdf_glyph_runs",
-        "pdf_glyph_runs(text[, chunk]) - parses glyph-run payloads into line-clustered runs with spans; chunk selects a MaxRuns-sized window for chunked mega-payload processing"),
-      arity("pdf_glyph_runs", Set(1, 2))(children =>
-        if (children.length == 2) PdfGlyphRuns(children.head, children(1))
-        else PdfGlyphRuns(children.head))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      info("vec_dot",
-        "vec_dot(a, b) - allocation-free dot product of two array<double> columns"),
-      arity("vec_dot", Set(2))(children =>
-        VecDot(children.head, children(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64",
-        "simhash64(text) - single-pass 64-bit SimHash document fingerprint"),
-      arity("simhash64", Set(1))(children => Simhash(children.head))))
-    ext.injectFunction((
-      FunctionIdentifier("kie_best"),
-      info("kie_best",
-        "kie_best(text) - best electricity/carbon KIE candidates as struct<ke,kc>"),
-      arity("kie_best", Set(1))(children => KieBest(children.head))))
-    ext.injectFunction((
-      FunctionIdentifier("token_spans"),
-      info("token_spans",
-        "token_spans(text) - whitespace tokens with char spans in the single-space-collapsed string"),
-      arity("token_spans", Set(1))(children => TokenSpans(children.head))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
+        f.builder))
+    }
 }

@@ -17,7 +17,7 @@ import graft.plans.ExtractionJob
   * N deterministic turns in-job (smoke runs need no pre-made input).
   *
   * Re-running with the same `<outDir>` resumes from the manifest:
-  * completed buckets are skipped (left-anti join), partial buckets are
+  * completed buckets are filtered out, partial buckets are
   * overwritten atomically via dynamic partition overwrite — kill the
   * job at any point and re-submit to finish it. Pass `[waveBuckets]` to
   * commit in waves of that many buckets, so a kill loses at most one
@@ -42,19 +42,16 @@ object SubmitMain {
         // wave-commit granularity: bound a mid-run kill's blast radius
         // to waveBuckets buckets (see ExtractionJob.run scaladoc)
         waveBuckets = if (args.length > 3) Some(args(3).toInt) else None)
-      val manifest = ExtractionJob.run(spark, input, cfg)
-      // one summary line per bucket completed by THIS run (resume-aware:
-      // an already-complete run prints nothing here)
-      val rows = manifest.orderBy("bucket").collect()
-      rows.foreach { r =>
-        println(s"bucket=${r.getAs[Int]("bucket")} " +
-          s"turns=${r.getAs[Long]("turns_processed")} " +
-          s"blocks_dropped=${r.getAs[Long]("blocks_dropped")} " +
-          s"fallbacks=${r.getAs[Long]("parser_fallbacks")} " +
-          s"truncated=${r.getAs[Long]("turns_truncated")}")
-      }
-      // count from the already-collected rows — a manifest.count() here
-      // re-scanned the whole manifest dir for one number
+      // the manifest rows THIS run committed (a local frame: no Spark job)
+      val rows = ExtractionJob.run(spark, input, cfg).collect()
+      def total(c: String): Long =
+        rows.map(r => if (r.isNullAt(r.fieldIndex(c))) 0L else r.getAs[Long](c)).sum
+      // one JSON summary line for the run (resume-aware: an
+      // already-complete run sums to zero)
+      val summary = Seq("buckets" -> rows.length.toLong,
+        "turns" -> total("turns_processed"), "blocks_dropped" -> total("blocks_dropped"),
+        "fallbacks" -> total("parser_fallbacks"), "truncated" -> total("turns_truncated"))
+      println(summary.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
       println(s"graft-extract complete: ${rows.length} buckets " +
         s"this run, output at ${ExtractionJob.dataDir(cfg)}")
       // job time from input resolution to manifest collect — the figure a

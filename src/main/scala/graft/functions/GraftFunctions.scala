@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 
-import graft.expressions.{HtmlBlocks, KieBest, PdfGlyphRuns, Simhash, TokenSpans}
+import graft.expressions.{HtmlBlocks, KieBest, PdfGlyphRuns, Simhash, TokenSpans, VecDot}
 
 /** Column facade + SQL registration for the graft's custom Catalyst
   * expressions. Everything else in the engine is Spark built-ins.
@@ -42,39 +43,49 @@ object GraftFunctions {
   def token_spans(text: Column): Column =
     column(TokenSpans(expr(text)))
 
-  /** Exact-arity gate for SQL registration (review fix: `exprs.head`
-    * builders silently DROPPED surplus arguments — e.g. a misremembered
-    * html_blocks(text, limit) analyzed fine and ignored the limit).
-    * Shared with [[graft.GraftExtensions]] — one gate, one message shape.
+  /** One SQL-callable custom expression: name, usage text, accepted
+    * argument counts and builder. [[builder]] gates the exact arity
+    * (review fix: `exprs.head` builders silently DROPPED surplus
+    * arguments — e.g. a misremembered html_blocks(text, limit) analyzed
+    * fine and ignored the limit).
     */
-  private[graft] def arity[T](name: String, ns: Set[Int])(
-      f: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => T)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): T = {
-    require(ns.contains(exprs.length),
-      s"$name expects ${ns.toSeq.sorted.mkString(" or ")} argument(s), " +
-        s"got ${exprs.length}")
-    f(exprs)
+  private[graft] final case class SqlFunction(name: String, usage: String,
+      arities: Set[Int], build: Seq[Expression] => Expression) {
+    val builder: Seq[Expression] => Expression = { exprs =>
+      require(arities.contains(exprs.length),
+        s"$name expects ${arities.toSeq.sorted.mkString(" or ")} argument(s), " +
+          s"got ${exprs.length}")
+      build(exprs)
+    }
   }
+
+  /** The one function table both SQL registration paths loop over:
+    * [[register]] (session temp functions) and [[graft.GraftExtensions]]
+    * (catalog-visible, injected at session build).
+    */
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("html_blocks",
+      "html_blocks(text) - tokenizes HTML into content blocks with spans and link-density features",
+      Set(1), e => HtmlBlocks(e.head)),
+    SqlFunction("pdf_glyph_runs",
+      "pdf_glyph_runs(text[, chunk]) - parses glyph-run payloads into line-clustered runs with spans; chunk selects a MaxRuns-sized window for chunked mega-payload processing",
+      Set(1, 2), e => if (e.length == 2) PdfGlyphRuns(e.head, e(1)) else PdfGlyphRuns(e.head)),
+    SqlFunction("vec_dot",
+      "vec_dot(a, b) - allocation-free dot product of two array<double> columns",
+      Set(2), e => VecDot(e.head, e(1))),
+    SqlFunction("simhash64",
+      "simhash64(text) - single-pass 64-bit SimHash document fingerprint",
+      Set(1), e => Simhash(e.head)),
+    SqlFunction("kie_best",
+      "kie_best(text) - best electricity/carbon KIE candidates as struct<ke,kc>",
+      Set(1), e => KieBest(e.head)),
+    SqlFunction("token_spans",
+      "token_spans(text) - whitespace tokens with char spans in the single-space-collapsed string",
+      Set(1), e => TokenSpans(e.head)))
 
   /** Register the expressions for SQL use (`SELECT html_blocks(text)…`). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "html_blocks",
-      arity("html_blocks", Set(1))(exprs => HtmlBlocks(exprs.head)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pdf_glyph_runs",
-      arity("pdf_glyph_runs", Set(1, 2))(exprs =>
-        if (exprs.length == 2) PdfGlyphRuns(exprs.head, exprs(1))
-        else PdfGlyphRuns(exprs.head)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64",
-      arity("simhash64", Set(1))(exprs => Simhash(exprs.head)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kie_best",
-      arity("kie_best", Set(1))(exprs => KieBest(exprs.head)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "token_spans",
-      arity("token_spans", Set(1))(exprs => TokenSpans(exprs.head)), "built-in")
+    sqlFunctions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
   }
 }

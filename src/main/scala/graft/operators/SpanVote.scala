@@ -76,7 +76,9 @@ object SpanVote {
       // A direct cast("int") of a wide-typed hostile offset (JSON
       // ingestion infers LongType) would throw CAST_OVERFLOW under ANSI
       // before the guard runs — or, non-ANSI, wrap into a plausible
-      // in-range phantom span that sails through it (review finding)
+      // in-range phantom span that sails through it (review finding).
+      // Scope: integral offset types only — a Double/Decimal offset
+      // beyond long range still throws on this cast under ANSI
       col("start").cast("long").as("startL"), col("end").cast("long").as("endL"))
       // hostile-span guard AT THE SOURCE (null/inverted/degenerate/
       // out-of-int-range spans describe no span and never elect —

@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.operators.Extract
 
@@ -19,12 +20,12 @@ import graft.operators.Extract
   *    mega-conversation (10^8 turns) spreads across buckets in
   *    saltChunk-sized runs instead of serializing into one task; per-turn
   *    outputs never need re-merging so ordering inside each chunk suffices.
-  *  - Resume: broadcast left_anti join of the input against completed
-  *    manifest buckets — the graft analog of the reference's cache reuse
-  *    (`pipeline.py:100-191`) but with durable exactly-once-per-bucket
-  *    semantics: data is written with dynamic partition overwrite, so
-  *    re-running a bucket that crashed mid-write replaces its directory
-  *    instead of appending duplicates.
+  *  - Resume: the input is filtered against the completed manifest
+  *    buckets, snapshotted once per run — the graft analog of the
+  *    reference's cache reuse (`pipeline.py:100-191`) but with durable
+  *    exactly-once-per-bucket semantics: data is written with dynamic
+  *    partition overwrite, so re-running a bucket that crashed mid-write
+  *    replaces its directory instead of appending duplicates.
   *  - Lineage/metrics (north_star triplet): turns processed, blocks
   *    dropped, parser fallbacks — derived per bucket with one hash
   *    aggregate over the written rows and appended to the manifest.
@@ -49,7 +50,7 @@ object ExtractionJob {
       outDir: String,
       numBuckets: Int = 32,
       saltChunk: Int = 4096,
-      bucketExpr: Option[org.apache.spark.sql.Column] = None,
+      bucketExpr: Option[Column] = None,
       waveBuckets: Option[Int] = None)
 
   /** salted bucket id: hash(conv_id, turn_idx / saltChunk) mod numBuckets */
@@ -66,7 +67,7 @@ object ExtractionJob {
     * null row, before any of that, is the only resume-safe semantics.
     * The default hash key is never null, so it skips the branch.
     */
-  private def bucketKey(cfg: Config): org.apache.spark.sql.Column =
+  private def bucketKey(cfg: Config): Column =
     cfg.bucketExpr match {
       case None => bucketCol(cfg.numBuckets, cfg.saltChunk)
       case Some(e) => coalesce(e.cast("int"),
@@ -90,89 +91,103 @@ object ExtractionJob {
         .filter(col("status") === "complete")
         .select("bucket").distinct()
     else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.IntegerType))))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField("bucket", IntegerType))))
   }
 
   /** Run (or resume) the extraction job over `input` (transcript schema).
-    * Returns the per-bucket manifest rows written by THIS run.
+    * Returns the manifest rows THIS run appended, as a local frame with
+    * the manifest's schema (no re-read of `_manifest`).
     *
     * `onlyBuckets` processes a subset — used by tests to simulate a killed
     * run (the manifest then records only those buckets as complete).
     *
-    * With `cfg.waveBuckets = Some(w)` the todo bucket-id space is split
-    * into waves of `w` and each wave is written + manifest-committed
-    * independently: a SIGKILL mid-run loses at most one wave's work and
-    * a re-submit resumes from the last committed wave (demonstrated at
-    * stress scale in BASELINE.md). Cost model: the wave loop iterates
-    * over the STATIC id range 0 until numBuckets (no extra pass over the
-    * input to discover ids), but each wave's extraction re-scans the
-    * input to filter its buckets out — K waves = K scans. At 100 TB pick
-    * w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
-    * commits without the re-scan.
+    * Every run is a loop of waves, each written and manifest-committed on
+    * its own: `cfg.waveBuckets = None` is one wave (of `onlyBuckets`, or
+    * every todo bucket), `Some(w)` splits the candidate ids into waves of
+    * `w`, so a SIGKILL mid-run loses at most one wave's work and a
+    * re-submit resumes from the last committed wave (demonstrated at
+    * stress scale in BASELINE.md). Cost model:
+    *  - one `_manifest` snapshot per run, read before any write: this
+    *    run's waves are disjoint, so no wave completes an id that a later
+    *    wave asks for;
+    *  - K waves = K input scans (the bucket key is computed, not a storage
+    *    partition; a wave whose ids are all done folds to an empty scan).
+    *    The default key's candidates are the static range 0 until
+    *    numBuckets; a custom key's are discovered by one pruned distinct
+    *    scan, capped at [[MaxBucketIds]]. At 100 TB pick
+    *    w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
+    *    commits without the re-scan;
+    *  - one manifest aggregate per wave over the rows it durably wrote,
+    *    collected and appended as one file.
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config,
-      onlyBuckets: Option[Seq[Int]] = None): DataFrame = cfg.waveBuckets match {
-    case Some(w) =>
-      require(w > 0, s"waveBuckets must be positive, got $w")
-      // candidate id space: the default hash key is 0 until numBuckets by
-      // construction (no pass over the input needed); a CUSTOM bucketExpr
-      // can emit ANY int (date-derived, offset), so its ids must be
-      // discovered — a column-pruned distinct over the single computed
-      // int column (partial-agg'd, driver-bounded by the bucket count).
-      // Without this, out-of-range ids would silently match no wave and
-      // the job would process nothing.
-      val candidates = onlyBuckets.getOrElse {
-        cfg.bucketExpr match {
-          case None => (0 until cfg.numBuckets): Seq[Int]
-          case Some(_) => input.select(bucketKey(cfg).as("bucket"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-        }
-      }.toSeq.sorted
-      // zero candidates (empty input under a custom key, or an empty
-      // onlyBuckets): run ONE empty wave so the output/manifest dirs
-      // exist and the return is an empty manifest frame, same as the
-      // non-wave path — not a PATH_NOT_FOUND on the read below
-      if (candidates.isEmpty)
-        return runWave(spark, input, cfg, Some(Seq.empty))
-      // ids actually committed by this run's waves (≤ numBuckets — driver-safe)
-      val written = scala.collection.mutable.ArrayBuffer.empty[Integer]
-      candidates.grouped(w).foreach { wave =>
-        val m = runWave(spark, input, cfg, Some(wave))
-        written ++= m.select("bucket").collect().map(r => Integer.valueOf(r.getInt(0)))
-      }
-      // runWave always creates the manifest dir (even a zero-row append
-      // writes _SUCCESS), so this read is safe after ≥1 wave
-      val all = spark.read.option("mergeSchema", "true").parquet(manifestDir(cfg))
-      if (written.isEmpty) all.filter(lit(false))
-      else all.filter(col("bucket").isin(written.toSeq: _*))
-    case None => runWave(spark, input, cfg, onlyBuckets)
+      onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
+    val waves: Seq[Option[Seq[Int]]] = cfg.waveBuckets match {
+      case None => Seq(onlyBuckets)
+      case Some(w) =>
+        require(w > 0, s"waveBuckets must be positive, got $w")
+        val candidates = onlyBuckets.getOrElse(bucketIds(input, cfg)).distinct.sorted
+        // zero candidates (empty input under a custom key, or an empty
+        // onlyBuckets): ONE empty wave, so the output/manifest dirs exist
+        // and the return is an empty manifest frame
+        if (candidates.isEmpty) Seq(Some(Nil))
+        else candidates.grouped(w).map(Some(_)).toSeq
+    }
+
+    // EAGER snapshot of completed bucket ids (≤ the bucket count): a lazy
+    // manifest read is re-evaluated after this run's own writes refresh
+    // the path cache, which silently empties every frame derived from it
+    val doneIds = completedBuckets(spark, cfg).collect().map(_.getInt(0)).toSeq
+    val notDone = if (doneIds.isEmpty) lit(true) else !col("bucket").isin(doneIds: _*)
+    // bucketKey pins the schema to int and fail-fasts null custom keys
+    val bucketed = input.withColumn("bucket", bucketKey(cfg))
+
+    val commits = waves.map { wave =>
+      // this wave's buckets: not complete before the run (complement, not
+      // `0 until numBuckets`: a custom bucketExpr may use keys outside that
+      // range), and in the wave. The one predicate selects the input rows
+      // and prunes the manifest's read-back of the written table.
+      val thisRun = wave.fold(notDone)(bs => notDone && col("bucket").isin(bs: _*))
+      commitWave(spark, bucketed.filter(thisRun), thisRun, cfg)
+    }
+    // collecting a local frame runs no Spark job
+    spark.createDataFrame(java.util.Arrays.asList(commits.flatMap(_.collect()): _*),
+      commits.head.schema)
   }
 
-  private def runWave(spark: SparkSession, input: DataFrame, cfg: Config,
-      onlyBuckets: Option[Seq[Int]]): DataFrame = {
+  /** Cap on the distinct ids a custom `bucketExpr` may yield under wave
+    * commits: discovery collects them to the driver, so a key with more
+    * values is rejected before anything is written.
+    */
+  val MaxBucketIds = 10000
+
+  /** candidate bucket ids: the default hash key is 0 until numBuckets by
+    * construction (no pass over the input); a CUSTOM bucketExpr can emit
+    * any int (date-derived, offset), so its ids are discovered — a
+    * column-pruned distinct over the single computed int column, probed
+    * with `limit(MaxBucketIds + 1)` so the collect stays bounded. Without
+    * discovery, out-of-range ids would silently match no wave.
+    */
+  private def bucketIds(input: DataFrame, cfg: Config): Seq[Int] = cfg.bucketExpr match {
+    case None => 0 until cfg.numBuckets
+    case Some(e) =>
+      val ids = input.select(bucketKey(cfg).as("bucket")).distinct()
+        .limit(MaxBucketIds + 1).collect().map(_.getInt(0)).toSeq
+      require(ids.length <= MaxBucketIds,
+        s"graft.ExtractionJob: custom bucketExpr $e yields more than" +
+          s" $MaxBucketIds distinct bucket ids (MaxBucketIds)")
+      ids
+  }
+
+  /** One wave: extract and write `todo` (the wave's input rows), derive
+    * the wave's manifest rows from the rows durably written under
+    * `thisRun`, and append them as one manifest file. Returns the
+    * appended rows as a local frame.
+    */
+  private def commitWave(spark: SparkSession, todo: DataFrame, thisRun: Column,
+      cfg: Config): DataFrame = {
     val t0 = System.currentTimeMillis()
-    val bExpr = bucketKey(cfg)
-
-    // bucketKey pins the schema to int and fail-fasts null custom keys
-    val bucketed = input.withColumn("bucket", bExpr)
-
-    // EAGER snapshot of completed bucket ids (≤ numBuckets): a lazy
-    // manifest read here is re-evaluated after this run's own writes
-    // refresh the path cache, which silently empties every downstream
-    // frame derived from it
-    val doneIds: Seq[Integer] = completedBuckets(spark, cfg)
-      .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
-    val todo0 =
-      if (doneIds.isEmpty) bucketed
-      else bucketed.filter(!col("bucket").isin(doneIds: _*))
-    val todo = onlyBuckets match {
-      case Some(bs) => todo0.filter(col("bucket").isin(bs.map(Integer.valueOf): _*))
-      case None => todo0
-    }
 
     // bucket is computed ONCE on the input and passed THROUGH the
     // extraction (review fix: the earlier drop-and-recompute evaluated
@@ -210,21 +225,10 @@ object ExtractionJob {
     // which touches ~1 % of the written bytes — at every width), and it
     // is the honest lineage source: the manifest describes the durable
     // bytes, not a cached twin of them. An Iceberg writer would emit
-    // these stats in commit metadata for free.
+    // these stats in commit metadata for free. A crashed run's partial
+    // bucket is never complete, so its rows — just re-written by this
+    // wave's dynamic overwrite — correctly enter this manifest.
     //
-    // This run's buckets = everything in the table EXCEPT prior-complete
-    // ids (complement, not `0 until numBuckets`: a custom bucketExpr may
-    // use keys outside that range, e.g. date-derived — the prune must
-    // not assume the id space). A crashed run's partial bucket is never
-    // in doneIds, so its rows — just re-written by THIS run's dynamic
-    // overwrite — correctly enter this manifest.
-    val notDone =
-      if (doneIds.isEmpty) lit(true)
-      else !col("bucket").isin(doneIds: _*)
-    val thisRun = onlyBuckets match {
-      case Some(bs) => notDone && col("bucket").isin(bs.map(Integer.valueOf): _*)
-      case None => notDone
-    }
     // explicit schema: an all-buckets-done resume or an empty input
     // leaves nothing to infer from, and the read must still plan
     val manifest = spark.read.schema(extracted.schema).parquet(dataDir(cfg))
@@ -242,14 +246,14 @@ object ExtractionJob {
       .withColumn("status", lit("complete"))
       .withColumn("wall_ms", lit(System.currentTimeMillis() - t0))
 
-    // this run's bucket ids (≤ numBuckets — driver-safe), collected
-    // BEFORE the manifest write refreshes the path cache
-    val bucketIds = manifest.select("bucket").collect()
-      .map(r => Integer.valueOf(r.getInt(0))).toSeq
-    manifest.write.mode(SaveMode.Append).parquet(manifestDir(cfg))
-    val all = spark.read.option("mergeSchema", "true").parquet(manifestDir(cfg))
-    if (bucketIds.isEmpty) all.filter(lit(false))
-    else all.filter(col("bucket").isin(bucketIds: _*))
+    // the aggregate runs once: its rows (≤ the wave's bucket ids —
+    // driver-safe) are collected and appended as exactly those rows, so
+    // the file and the returned frame hold the same values. Nullable
+    // schema: the one a read of `_manifest` has.
+    val local = spark.createDataFrame(java.util.Arrays.asList(manifest.collect(): _*),
+      StructType(manifest.schema.map(_.copy(nullable = true))))
+    local.coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(cfg))
+    local
   }
 
   /** the final output table (all completed buckets), stable per-key order */

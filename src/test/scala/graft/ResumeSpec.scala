@@ -308,4 +308,83 @@ class ResumeSpec extends SparkSpecBase {
             col("prev_turn") >= col("turn_idx"))))
     assert(bad.count() === 0)
   }
+
+  /** parquet files in the manifest dir (one per commit) */
+  private def manifestFiles(cfg: Config): Int =
+    Option(new java.io.File(ExtractionJob.manifestDir(cfg)).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+
+  /** Spark jobs started by `body` */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graftbridge.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("run returns exactly the rows it appended, one manifest file per commit") {
+    val in = TranscriptGen.inputDf(spark, 1000L)
+    def readManifest(cfg: Config) =
+      spark.read.option("mergeSchema", "true").parquet(ExtractionJob.manifestDir(cfg))
+    def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+    // single commit: the returned frame IS the manifest, wall_ms included
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
+    val single = ExtractionJob.run(spark, in, cfg)
+    assert(single.count() === 4)
+    assert(single.schema === readManifest(cfg).schema)
+    assert(sameRows(single, readManifest(cfg)))
+    assert(manifestFiles(cfg) === 1)
+
+    // wave resume: 2 + 3 commits, each one file; the resume returns the
+    // manifest's rows minus the partial run's
+    val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
+    val partial = ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
+    assert(manifestFiles(cfgW) === 2)
+    val resumed = ExtractionJob.run(spark, in, cfgW)
+    assert(manifestFiles(cfgW) === 5)
+    assert(resumed.select("bucket").collect().map(_.getInt(0)).sorted === Array(6, 7))
+    assert(sameRows(resumed, readManifest(cfgW).exceptAll(partial)))
+    assert(sameRows(partial.union(resumed), readManifest(cfgW)))
+  }
+
+  test("Spark jobs per commit stay capped") {
+    // one commit = data write (2 jobs) + manifest aggregate collect (2) +
+    // one-file manifest append (1); a resume adds one manifest snapshot
+    // (3) and its all-done first wave. A second manifest aggregate or a
+    // read of `_manifest` after a write breaks the caps.
+    val in = TranscriptGen.inputDf(spark, 1000L)
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
+    val single = jobsOf { ExtractionJob.run(spark, in, cfg).collect(); () }
+    assert(single <= 5, s"single commit ran $single Spark jobs")
+    val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
+    ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
+    val resume = jobsOf { ExtractionJob.run(spark, in, cfgW).collect(); () }
+    assert(resume <= 14, s"3-wave resume ran $resume Spark jobs")
+  }
+
+  test("custom-key discovery is capped at MaxBucketIds and fails fast") {
+    // more distinct ids than the cap: the bounded probe rejects the key
+    // before anything is written
+    val n = ExtractionJob.MaxBucketIds + 1
+    val in = spark.range(n).select(col("id").cast("string").as("conv_id"),
+      lit(0).as("turn_idx"), lit("user").as("role"), lit("x").as("text"),
+      lit(null).cast("string").as("tool"))
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64,
+      bucketExpr = Some(col("conv_id").cast("int")), waveBuckets = Some(2))
+    val ex = intercept[IllegalArgumentException] { ExtractionJob.run(spark, in, cfg) }
+    assert(ex.getMessage.contains("bucketExpr"))
+    assert(ex.getMessage.contains(ExtractionJob.MaxBucketIds.toString))
+    assert(!new java.io.File(ExtractionJob.dataDir(cfg)).exists())
+  }
 }

@@ -27,6 +27,9 @@ abstract class SparkSpecBase extends AnyFunSuite {
     * sweeps over many seeds — any seed must uphold the same contracts,
     * so a soak failure is a real bug plus its repro seed in one.
     */
-  final def fuzzSeed: Long =
-    sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(20260819L)
+  final def fuzzSeed: Long = sys.env.get("GRAFT_FUZZ_SEED") match {
+    case None => 20260819L
+    case Some(s) => s.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"GRAFT_FUZZ_SEED must be a whole number (a Long), got '$s'"))
+  }
 }
