@@ -18,17 +18,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `text`  — decoded, collapsed block text
   *  - `start`/`end` — char-span of the block's content in the RAW payload
   *  - `words` / `link_words` — token counts for Boilerpipe-style
-  *    text-density / link-density classification (done downstream with
-  *    Catalyst higher-order functions, NOT here)
+  *    text-density / link-density classification
   *  - `boiler` — inside a nav/header/footer/aside ancestor
   *
   * This is the graft analog of the reference's text-detection stage (boxes +
-  * per-box features, `pytorch_mobile/ocr_pipeline.py:447-533`); the
-  * classification itself stays in declarative Catalyst expressions
-  * (see `graft.operators.HtmlPath`), mirroring the reference's split between
-  * detection and confidence-threshold routing.
+  * per-box features, `pytorch_mobile/ocr_pipeline.py:447-533`).
+  * [[HtmlBlocks.extract]] adds the classification and confidence on top
+  * (the html path's whole per-row job, staged by `graft.operators.Extract`);
+  * the confidence-threshold routing stays in Extract's declarative τ-ladder,
+  * mirroring the reference's split between detection and routing.
   *
-  * Codegen: a static call into [[HtmlBlocks.evalUtf8]] — keeps the staged
+  * Codegen: a static call into [[HtmlBlocks.evalUtf8]] — keeps the
   * projection inside whole-stage codegen (CodegenFallback would break the
   * span and route rows through the interpreted path). Per-row cost is
   * linear in payload size.
@@ -53,6 +53,83 @@ case class HtmlBlocks(child: Expression) extends UnaryExpression
 }
 
 object HtmlBlocks {
+
+  /** classifier: minimum words for a content block (Boilerpipe-style) */
+  val MinWords = 8
+
+  /** NOT NULL struct of the given fields */
+  private[expressions] def requiredStruct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  /** raw-char spans, the `spans` column type of every extraction path */
+  val spansType: ArrayType = ArrayType(
+    requiredStruct("start" -> IntegerType, "end" -> IntegerType), containsNull = false)
+
+  /** one assembled block selection: joined text, spans, confidence, size */
+  private val candidateType = requiredStruct("text" -> StringType,
+    "spans" -> spansType, "conf" -> DoubleType, "n" -> IntegerType)
+
+  /** [[extract]] result: all blocks, the cap flag, and the primary (`kept`)
+    * and aggressive (`aggr`) selections — each NULL when it is empty */
+  val extractType: StructType =
+    requiredStruct("total" -> IntegerType, "truncated" -> BooleanType)
+      .add("kept", candidateType).add("aggr", candidateType)
+
+  /** The html path's per-row job, one call: tokenize, then assemble the
+    * density-classified blocks (`kept`, see [[keep]]) and the aggressive
+    * re-parse (`aggr`: every non-boiler block regardless of density, its
+    * confidence halved — the re-parse penalty). Confidence is the
+    * reference's top-k geometric mean (A1) over per-block
+    * (1 - link_density²) scores. `truncated`: the [[MaxBlocks]] cap fired
+    * with non-whitespace content left past the stop point (`capCursor`).
+    */
+  def extract(input: UTF8String): InternalRow = {
+    val blocks = tokenize(input.toString)
+    val n = blocks.length
+    InternalRow(n, n == MaxBlocks && blocks.last.capCursor >= 0,
+      candidate(blocks.filter(keep), 1.0),
+      candidate(blocks.filterNot(_.boiler), 0.5))
+  }
+
+  /** Boilerpipe-style keep predicate with Readability-style subtree
+    * rescue: a block below the per-block word floor is still kept when its
+    * container subtree is content-dense (aggregate words ≥ 2×floor at
+    * acceptable aggregate link density) AND the container consists
+    * entirely of small blocks — a content `<div>` of many short `<p>`s no
+    * longer drops wholesale, while short trimmings sharing a container
+    * with a substantial block stay dropped (that block already carries
+    * the container's content).
+    */
+  private def keep(b: Block): Boolean =
+    !b.boiler && b.linkWords * 3 <= b.words &&
+      (b.words >= MinWords ||
+        (b.cmaxWords < MinWords && b.cwords >= MinWords * 2 &&
+          b.clinkWords * 3 <= b.cwords))
+
+  private def candidate(bs: Vector[Block], confScale: Double): InternalRow =
+    if (bs.isEmpty) null
+    else InternalRow(UTF8String.fromString(bs.map(_.text).mkString("\n")),
+      new GenericArrayData(bs.map[Any](b => InternalRow(b.start, b.end)).toArray),
+      geoMeanTopK(bs.map { b =>
+        val ld = b.linkWords.toDouble / b.words
+        1.0 - ld * ld
+      }.toArray) * confScale, bs.length)
+
+  /** Top-k geometric mean (reference `field_confidence`,
+    * `pipeline.py:399-414`): floor each score at 1e-3, keep the top 80 %
+    * when n > 20, return prod^(1/k) — summed in descending order with
+    * StrictMath, as Spark's `log`/`exp` evaluate it, so the value is bit
+    * for bit `graft.functions.TextFunctions.geoMeanTopK`. Sorts `scores`
+    * in place.
+    */
+  def geoMeanTopK(scores: Array[Double]): Double = {
+    val n = scores.length
+    val k = if (n > 20) math.ceil(n * 0.8).toInt else n
+    java.util.Arrays.sort(scores)
+    if (n == 0) 0.0
+    else StrictMath.exp((n - 1 to n - k by -1).foldLeft(0.0)((acc, i) =>
+      acc + StrictMath.log(math.max(scores(i), 1e-3))) / k)
+  }
 
   /** static eval shared by interpreted and generated code paths */
   def evalUtf8(input: UTF8String): ArrayData = {

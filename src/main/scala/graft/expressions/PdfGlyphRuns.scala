@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * glyph source — no PDFBox jar ships with the sandbox): a `%PDF-` header
   * line, then one glyph run per line `G <x> <y> <fontSize> <text...>`, in
   * ARBITRARY order. The expression parses runs with raw char offsets and
-  * performs the layout-analysis step: 1-D gap clustering of y coordinates
-  * into text lines (`line` field). The reading-order SORT and the line
-  * assembly stay downstream as declarative Catalyst `array_sort`/`aggregate`
-  * (see `graft.operators.PdfPath`).
+  * performs the layout-analysis step: recursive XY-cut of the runs into
+  * reading-order text lines (`line` field). [[PdfGlyphRuns.extract]] is the
+  * pdf path's whole per-row job on top of it (chunking, reading-order sort,
+  * line assembly, parse confidence), staged by `graft.operators.Extract`.
   *
   * Reference analog: bbox detection + clockwise point ordering feeding
   * reading-order concatenation (`pytorch_mobile/ocr_pipeline.py:655-664`,
@@ -28,74 +28,38 @@ import org.apache.spark.unsafe.types.UTF8String
   * don't kill the job, mirroring `_validate_file_format`'s role but with
   * row-level status semantics, SURVEY S3).
   *
-  * `chunk` selects a [[PdfGlyphRuns.MaxRuns]]-sized WINDOW of parsed runs
-  * (chunk k = parsed runs [k·MaxRuns, (k+1)·MaxRuns)): the patch-split
-  * analog (reference `jax_denoising_adapter.py:293-348` — fixed-size
-  * patches bound the per-unit working set of an unboundedly large input).
-  * Chunk 0 is exactly the unchunked parse; over-cap payloads are processed
-  * by evaluating successive chunks (each an O(payload) skip-scan — only
-  * rows that actually exceeded the cap pay it) and concatenating, so
-  * "truncated" means chunk-capped, not content-dropped-at-MaxRuns. Line
-  * numbers are offset chunk·MaxRuns so merged chunks keep a total
-  * reading order (chunk-major; the XY-cut runs per chunk — the patch-seam
-  * tradeoff the reference blends with overlapping windows). `chunk` is an
-  * expression child (not a constructor constant) so the chunk index can
-  * be a `transform(sequence(...))` lambda variable — the whole chunked
-  * evaluation stays one declarative projection.
+  * The SQL form parses the first [[PdfGlyphRuns.MaxRuns]] runs (chunk 0).
   */
-case class PdfGlyphRuns(child: Expression, chunk: Expression = Literal(0))
-    extends BinaryExpression {
+case class PdfGlyphRuns(child: Expression) extends UnaryExpression
+    with ImplicitCastInputTypes {
 
-  override def left: Expression = child
-  override def right: Expression = chunk
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+
   override def dataType: DataType = PdfGlyphRuns.outType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "pdf_glyph_runs"
-  // analysis-time typing (review fix): without an input-type check a
-  // SQL call like pdf_glyph_runs(text, 1::BIGINT) passed analysis and
-  // crashed per-row in codegen/eval (evalUtf8 takes (UTF8String, Int));
-  // this makes it a plan-time error instead
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-    if (child.dataType != StringType)
-      TypeCheckFailure(s"$prettyName expects a STRING payload, got " +
-        child.dataType.simpleString)
-    else if (chunk.dataType != IntegerType)
-      TypeCheckFailure(s"$prettyName expects an INT chunk index, got " +
-        chunk.dataType.simpleString)
-    else TypeCheckSuccess
-  }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PdfGlyphRuns =
-    copy(child = newLeft, chunk = newRight)
+  override protected def withNewChildInternal(newChild: Expression): PdfGlyphRuns =
+    copy(child = newChild)
 
-  override def nullSafeEval(input: Any, chunkVal: Any): Any =
-    PdfGlyphRuns.evalUtf8(input.asInstanceOf[UTF8String],
-      chunkVal.asInstanceOf[Int])
+  override def nullSafeEval(input: Any): Any =
+    PdfGlyphRuns.evalUtf8(input.asInstanceOf[UTF8String])
 
-  /** codegen = a static call — keeps the staged projection inside
-    * whole-stage codegen instead of breaking the span (CodegenFallback
-    * would route every row through the interpreted eval path).
+  /** codegen = a static call — keeps the projection inside whole-stage
+    * codegen instead of breaking the span (CodegenFallback would route
+    * every row through the interpreted eval path).
     */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (c, k) => s"graft.expressions.PdfGlyphRuns.evalUtf8($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.expressions.PdfGlyphRuns.evalUtf8($c)")
 }
 
 object PdfGlyphRuns {
 
   /** static eval shared by interpreted and generated code paths */
-  def evalUtf8(input: UTF8String): ArrayData = evalUtf8(input, 0)
-
-  def evalUtf8(input: UTF8String, chunk: Int): ArrayData = {
-    val runs = parse(input.toString, chunk)
-    new GenericArrayData(runs.map { r =>
+  def evalUtf8(input: UTF8String): ArrayData =
+    new GenericArrayData(parse(input.toString).map { r =>
       InternalRow(r.line, r.x, r.y, UTF8String.fromString(r.text), r.start, r.end)
     }.toArray[Any])
-  }
 
   /** y-distance above which two runs belong to different text lines */
   val RowTol = 10
@@ -106,13 +70,16 @@ object PdfGlyphRuns {
     */
   val MaxRuns = 5000
 
-  /** chunked-processing bound (G9 patch-split analog): over-cap payloads
-    * are evaluated in up to MaxChunks successive [[MaxRuns]] windows, so
-    * the per-row working set stays ≤ MaxChunks·MaxRuns runs and a
-    * hostile payload costs at most MaxChunks O(payload) passes.
-    * "truncated" lineage means the CHUNK bound fired (content beyond
-    * MaxChunks·MaxRuns parsed runs was dropped), not the single-window
-    * cap.
+  /** chunked-processing bound (G9 patch-split analog, reference
+    * `jax_denoising_adapter.py:293-348` — fixed-size patches bound the
+    * per-unit working set of an unboundedly large input): [[extract]]
+    * lays out up to MaxChunks successive [[MaxRuns]] windows of parsed
+    * runs, each XY-cut on its own with lines offset by the window start
+    * (chunk-major reading order — the patch-seam tradeoff the reference
+    * blends with overlapping windows), so full text survives up to
+    * MaxChunks·MaxRuns runs. "truncated" lineage means the CHUNK bound
+    * fired (content beyond MaxChunks·MaxRuns parsed runs was dropped),
+    * not the single-window cap.
     */
   val MaxChunks = 2
 
@@ -142,17 +109,52 @@ object PdfGlyphRuns {
   final case class Run(var line: Int, x: Int, y: Int, text: String,
       start: Int, end: Int)
 
+  /** The pdf path's per-row job, one call: parse the chunk windows (one
+    * scan), sort the runs into reading order (line, x, raw offset — a
+    * total order), join them (a space within a line, a newline between
+    * lines) and derive the parse confidence: parsed runs over candidate
+    * `G ` lines ([[candidateCount]]).
+    */
+  def extract(input: UTF8String): InternalRow = {
+    val s = input.toString
+    val cands = candidateCount(s)
+    val cap = MaxChunks * MaxRuns
+    val runs = scan(s, 0, cap).grouped(MaxRuns).zipWithIndex
+      .flatMap { case (w, k) => layout(w, k * MaxRuns) }.toArray
+    java.util.Arrays.sort(runs, readingOrder)
+    val text = new java.lang.StringBuilder
+    var lines = 0
+    for ((r, k) <- runs.zipWithIndex) {
+      val newLine = k == 0 || r.line != runs(k - 1).line
+      if (newLine) lines += 1
+      if (k > 0) text.append(if (newLine) '\n' else ' ')
+      text.append(r.text)
+    }
+    InternalRow(UTF8String.fromString(text.toString),
+      new GenericArrayData(runs.map[Any](r => InternalRow(r.start, r.end))),
+      if (cands > 0) runs.length.toDouble / cands else 0.0,
+      lines, runs.length, runs.length == cap && cands > cap)
+  }
+
+  val extractType: StructType = HtmlBlocks.requiredStruct(
+    "text" -> StringType, "spans" -> HtmlBlocks.spansType,
+    "conf" -> DoubleType, "lines" -> IntegerType, "runs" -> IntegerType,
+    "truncated" -> BooleanType)
+
+  private val readingOrder = java.util.Comparator.comparingInt[Run](_.line)
+    .thenComparingInt(_.x).thenComparingInt(_.start)
+
   def parse(s: String): Array[Run] = parse(s, 0)
 
-  /** Parse the `chunk`-th [[MaxRuns]]-sized window of parsed runs. The
-    * scan always starts from the payload head (run windows are defined in
-    * PARSED-run index space, and whether a line parses is only known by
-    * parsing it), so chunk k costs one O(payload) pass — paid only by
-    * rows whose candidate count exceeded the previous windows.
+  /** The `chunk`-th [[MaxRuns]]-sized window of parsed runs, laid out. */
+  def parse(s: String, chunk: Int): Array[Run] =
+    layout(scan(s, chunk * MaxRuns, (chunk + 1) * MaxRuns), chunk * MaxRuns)
+
+  /** Parsed runs with index in [lo, hi), in payload order. Windows are in
+    * PARSED-run index space (whether a line parses is only known by
+    * parsing it), so the scan always starts from the payload head.
     */
-  def parse(s: String, chunk: Int): Array[Run] = {
-    val lo = chunk * MaxRuns
-    val hi = lo + MaxRuns
+  private def scan(s: String, lo: Int, hi: Int): Array[Run] = {
     var parsed = 0
     val n = s.length
     // skip leading whitespace, tolerate ONE wrapping tag (the sniffing
@@ -198,19 +200,20 @@ object PdfGlyphRuns {
       }
       i = eol + 1
     }
+    runs.toArray
+  }
 
-    // layout analysis: recursive XY-cut (largest-gap-first) assigns
-    // reading-order line numbers — left column reads fully before right.
-    // Chunk offset keeps merged chunks in a total chunk-major order.
-    val arr = runs.toArray
-    if (arr.nonEmpty) {
-      assignLines(arr)
-      if (lo > 0) {
-        var k = 0
-        while (k < arr.length) { arr(k).line += lo; k += 1 }
-      }
+  /** Layout analysis of one window: recursive XY-cut (largest-gap-first)
+    * assigns reading-order line numbers — left column reads fully before
+    * right. Lines are offset by `lo`, the window's first run index, so
+    * merged windows keep a total chunk-major order.
+    */
+  private def layout(window: Array[Run], lo: Int): Array[Run] = {
+    if (window.nonEmpty) {
+      assignLines(window)
+      if (lo > 0) window.foreach(_.line += lo)
     }
-    arr
+    window
   }
 
   /** Recursive XY-cut layout analysis (north-star "XY-cut layout

@@ -21,14 +21,6 @@ object GraftFunctions {
   def pdf_glyph_runs(text: Column): Column =
     column(PdfGlyphRuns(expr(text)))
 
-  /** `pdf_glyph_runs(text, chunk)` — the `chunk`-th
-    * [[graft.expressions.PdfGlyphRuns.MaxRuns]]-sized window of parsed
-    * runs (chunked mega-payload processing; chunk may be a
-    * `transform(sequence(...))` lambda variable)
-    */
-  def pdf_glyph_runs(text: Column, chunk: Column): Column =
-    column(PdfGlyphRuns(expr(text), expr(chunk)))
-
   /** `simhash64(text)` → 64-bit document fingerprint (long) */
   def simhash64(text: Column): Column =
     column(Simhash(expr(text)))
@@ -68,8 +60,8 @@ object GraftFunctions {
       "html_blocks(text) - tokenizes HTML into content blocks with spans and link-density features",
       Set(1), e => HtmlBlocks(e.head)),
     SqlFunction("pdf_glyph_runs",
-      "pdf_glyph_runs(text[, chunk]) - parses glyph-run payloads into line-clustered runs with spans; chunk selects a MaxRuns-sized window for chunked mega-payload processing",
-      Set(1, 2), e => if (e.length == 2) PdfGlyphRuns(e.head, e(1)) else PdfGlyphRuns(e.head)),
+      "pdf_glyph_runs(text) - parses glyph-run payloads into line-clustered runs with spans",
+      Set(1), e => PdfGlyphRuns(e.head)),
     SqlFunction("vec_dot",
       "vec_dot(a, b) - allocation-free dot product of two array<double> columns",
       Set(2), e => VecDot(e.head, e(1))),

@@ -17,25 +17,6 @@ case class Turn(
     tool: String,
     ts: Timestamp)
 
-/** Extraction output for one turn.
-  *
-  * Mirrors the role of the reference's `OcrResult` + extracted-fields record
-  * (reference `pipeline.py:374-423`, `pipeline.py:2587-2613`): full extracted
-  * text, parallel span offsets, which path ("engine") produced it, a
-  * confidence, and status/metrics columns instead of stringly-typed
-  * underscore keys.
-  */
-case class ExtractedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    path: String,
-    text: String,
-    spans: Seq[Span],
-    confidence: Double,
-    status: String,
-    blocks_total: Int,
-    blocks_kept: Int)
-
 /** Generator row: input turn + analytically-computed golden expectation.
   * Goldens are computed at generation time, never by running the reference
   * (see FIXTURES.md §3).

@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.DataType
 
-import graft.functions.GraftFunctions._
+import graft.expressions.{HtmlBlocks, PdfGlyphRuns}
 import graft.functions.TextFunctions._
 
 /** The extraction core: per-turn content sniffing → per-format extraction
@@ -20,18 +23,18 @@ import graft.functions.TextFunctions._
   * whichever is better" (`pipeline.py:1989-2002`) — a filter+union second
   * pass was rejected because it doubles the input scan at 100 TB.
   *
-  * Staging note (scale-critical): the tokenizer expressions and the
+  * Staging note (scale-critical): each parsed path is ONE native call —
+  * [[graft.expressions.HtmlBlocks.extract]] /
+  * [[graft.expressions.PdfGlyphRuns.extract]], each owning its path's
+  * classification, chunking, reading order and caps — and it and the
   * Jackson JSON parse are materialized ONCE per row as intermediate
-  * columns, gated by the sniffed format (`when(fmt === ..., tokenize)`),
-  * and all downstream references are attribute reads. Catalyst's
-  * CollapseProject keeps the stages separate because the producing
-  * expressions are non-cheap and multiply-referenced; without this the
-  * assembled CASE would re-evaluate `html_blocks` ~10× per row.
+  * struct columns, gated by the sniffed format (`when(fmt === ..., parse)`);
+  * the τ-ladder CASE reads their fields. Catalyst's CollapseProject keeps
+  * the stages separate because the producing expressions are non-cheap
+  * and multiply-referenced; without this the assembled CASE would
+  * re-evaluate each parse several times per row.
   */
 object Extract {
-
-  /** classifier: minimum words for a content block (Boilerpipe-style) */
-  val MinWords = 8
 
   /** Confidence ladder (reference `config.py:10-12`: accept 0.95 /
     * enhance 0.90 / escalate 0.85; routing `pipeline.py:1984-2050`): a
@@ -73,13 +76,7 @@ object Extract {
 
   // ------------------------------------------------------------- plain
 
-  /** `plain`/`wspan` are the STAGED normalized-text / whole-span columns
-    * — plainNormalize expands to a sizable codegen subtree and is
-    * referenced by four result branches (plain path, tooljson fallback,
-    * html/pdf cascade); inlining it four times pushed the generated
-    * projection past Janino's method limits and the whole stage fell
-    * back to interpreted eval (~2.5× per-row cost, observed in bench).
-    */
+  /** `plain`/`wspan`: the staged normalized-text / whole-span columns */
   private def plainRes(plain: Column, wspan: Column): Column =
     res(lit("plain"), plain, wspan, lit(1.0),
       lit("success"), lit(1), lit(1))
@@ -120,34 +117,9 @@ object Extract {
 
   // ------------------------------------------------------------- html
 
-  /** Boilerpipe-style keep predicate over one block struct, with
-    * Readability-style subtree rescue: a block below the per-block word
-    * floor is still kept when its container subtree is content-dense
-    * (aggregate words ≥ 2×floor at acceptable aggregate link density)
-    * AND the container consists entirely of small blocks — a content
-    * `<div>` of many short `<p>`s no longer drops wholesale, while
-    * short trimmings sharing a container with a substantial block stay
-    * dropped (that block already carries the container's content).
-    */
-  private def keepBlock(b: Column): Column =
-    !b.getField("boiler") &&
-      b.getField("link_words") * 3 <= b.getField("words") &&
-      (b.getField("words") >= MinWords ||
-        (b.getField("cmax_words") < MinWords &&
-          b.getField("cwords") >= MinWords * 2 &&
-          b.getField("clink_words") * 3 <= b.getField("cwords")))
-
-  private def blockScores(bs: Column): Column = transform(bs, b => {
-    val ld = b.getField("link_words").cast("double") / b.getField("words")
-    lit(1.0) - ld * ld
-  })
-
-  /** HTML path assembly from staged columns: `blocks` = all tokenized
-    * blocks, `kept` = density-classified content blocks, `aggr` = the
-    * aggressive re-parse (every non-boiler block regardless of density),
-    * `ck`/`ca` = their staged geometric-mean confidences (ca pre-halved —
-    * the re-parse penalty). Confidence is the reference's top-k geometric
-    * mean (A1) over per-block (1 - link_density²) scores.
+  /** HTML path from the staged [[HtmlBlocks.extract]] struct `h`: `kept`
+    * (density-classified content blocks) and `aggr` (the aggressive
+    * re-parse, confidence pre-halved), each NULL when empty.
     *
     * τ-ladder ([[TauEnhance]]): primary at ≥ 0.90 is accepted; below
     * that, keep-better across primary / aggressive / plain-normalization
@@ -156,28 +128,27 @@ object Extract {
     * Ladder-chosen alternatives report status "fallback" (the status
     * vocabulary is the {success, fallback, blank} contract).
     */
-  private def htmlRes(plain: Column, wspan: Column, blocks: Column,
-      kept: Column, aggr: Column, ck: Column, ca: Column): Column = {
-    def assemble(ks: Column, conf: Column, status: Column): Column =
-      res(lit("html"),
-        array_join(transform(ks, b => b.getField("text")), "\n"),
-        transform(ks, b => spanOf(b.getField("start"), b.getField("end"))),
-        conf, status, size(blocks), size(ks))
+  private def htmlRes(plain: Column, wspan: Column, h: Column): Column = {
+    def assemble(c: Column, status: String): Column =
+      res(lit("html"), c.getField("text"), c.getField("spans"),
+        c.getField("conf"), lit(status), h.getField("total"), c.getField("n"))
 
-    val ckv = coalesce(ck, lit(-1.0))
-    val cav = coalesce(ca, lit(-1.0))
-
-    when(size(kept) > 0 && ck >= TauEnhance,
-      assemble(kept, ck, lit("success")))
+    val kept = h.getField("kept")
+    val (ckv, cav) = htmlConfs(h)
+    when(kept.getField("conf") >= TauEnhance, assemble(kept, "success"))
       // keep-better ladder below τ_enhance (primary wins ties)
-      .when(size(kept) > 0 && ckv >= cav && ckv >= PlainAltConf,
-        assemble(kept, ck, lit("success")))
+      .when(ckv >= cav && ckv >= PlainAltConf, assemble(kept, "success"))
       .when(cav >= greatest(ckv, lit(PlainAltConf)),
-        assemble(aggr, ca, lit("fallback")))
+        assemble(h.getField("aggr"), "fallback"))
       // best-effort return (`pipeline.py:2052-2065`): the plain
       // normalization of the raw payload beats everything parsed
-      .otherwise(plainAlt(plain, wspan, lit("html"), size(blocks)))
+      .otherwise(plainAlt(plain, wspan, lit("html"), h.getField("total")))
   }
+
+  /** (primary, aggressive) html confidences, -1 for an empty selection */
+  private def htmlConfs(h: Column): (Column, Column) =
+    (coalesce(h.getField("kept").getField("conf"), lit(-1.0)),
+      coalesce(h.getField("aggr").getField("conf"), lit(-1.0)))
 
   /** low-confidence plain-path alternative used by the per-path cascade */
   private def plainAlt(plain: Column, wspan: Column, path: Column,
@@ -186,62 +157,31 @@ object Extract {
 
   // ------------------------------------------------------------- pdf
 
-  /** sign comparator — NOT subtraction: `a - b` overflows Int for
-    * hostile coordinate pairs (e.g. 2e9 vs -2e9, both accepted by the
-    * parser), which under ANSI mode throws ARITHMETIC_OVERFLOW and kills
-    * the job on one adversarial row (non-ANSI: wrapped sign, broken
-    * order). */
-  private def sgn(x: Column, y: Column): Column =
-    when(x < y, -1).when(x > y, 1).otherwise(0)
-
-  /** reading-order comparator: (line, x, raw offset) — a total order */
-  private def readingOrder(a: Column, b: Column): Column = {
-    val l = sgn(a.getField("line"), b.getField("line"))
-    val x = sgn(a.getField("x"), b.getField("x"))
-    when(l =!= 0, l).when(x =!= 0, x)
-      .otherwise(sgn(a.getField("start"), b.getField("start")))
-  }
-
-  /** PDF path assembly from staged columns: `runs` (parsed glyph runs with
-    * y-gap line clustering), `sorted` (reading-order sorted), and `conf`
-    * (staged parsed-run fraction over candidate `G ` lines). Line
-    * assembly via aggregate with line-change separators.
+  /** PDF path from the staged [[PdfGlyphRuns.extract]] struct `p`:
+    * reading-order text and spans, `lines` (distinct text lines) and
+    * `conf` (parsed-run fraction over candidate `G ` lines).
     *
     * τ-ladder: the pdf alternative IS the plain normalization — a parse
     * whose run fraction falls below [[PlainAltConf]] loses the
     * keep-better comparison and returns the plain alternative (the
     * round-2 form only cascaded when ZERO runs parsed).
     */
-  private def pdfRes(plain: Column, wspan: Column,
-      runs: Column, sorted: Column, conf: Column): Column = {
-    // line assembly: per-run separator chosen by comparing with the
-    // PREVIOUS run (element_at is 1-based, the lambda index 0-based, so
-    // element_at(sorted, i) IS the predecessor), then one array_join —
-    // linear in payload size. The previous string-accumulating fold
-    // copied the whole prefix per run: O(chars × runs) per row, ~10⁹
-    // char copies on a MaxRuns hostile payload.
-    val text = array_join(
-      transform(sorted, (r, i) =>
-        when(i === 0, r.getField("text"))
-          .when(r.getField("line") ===
-              element_at(sorted, i).getField("line"),
-            concat(lit(" "), r.getField("text")))
-          .otherwise(concat(lit("\n"), r.getField("text")))),
-      "")
-
-    val spans = transform(sorted, r =>
-      spanOf(r.getField("start"), r.getField("end")))
-
-    val nLines = size(array_distinct(transform(runs, _.getField("line"))))
-
-    when(size(runs) > 0 && conf >= PlainAltConf,
-      res(lit("pdf"), text, spans, conf,
+  private def pdfRes(plain: Column, wspan: Column, p: Column): Column = {
+    val conf = p.getField("conf")
+    when(p.getField("runs") > 0 && conf >= PlainAltConf,
+      res(lit("pdf"), p.getField("text"), p.getField("spans"), conf,
         when(conf >= 1.0, "success").otherwise("fallback"),
-        nLines, nLines))
+        p.getField("lines"), p.getField("lines")))
       // keep-better: zero runs OR run fraction below the plain
       // alternative's confidence → plain normalization wins
       .otherwise(plainAlt(plain, wspan, lit("pdf"), lit(0)))
   }
+
+  /** one staged per-row parse: the path module's static `extract` */
+  private def nativeExtract(owner: Class[_], dataType: DataType,
+      raw: Column): Column =
+    column(StaticInvoke(owner, dataType, "extract", Seq(expr(raw)),
+      returnNullable = false))
 
   // ------------------------------------------------------------- routing
 
@@ -257,65 +197,31 @@ object Extract {
   def apply(df: DataFrame, passThrough: Seq[String]): DataFrame = {
     val raw = col("text")
     val fmt = col("__fmt")
+    val h = col("__h")
+    val p = col("__p")
     val staged = df
       .withColumn("__fmt", sniff(raw, col("tool")))
       // stage the non-cheap parses ONCE per row, gated by format
-      .withColumn("__hb", when(fmt === "html", html_blocks(raw)))
-      .withColumn("__kept", when(fmt === "html",
-        filter(col("__hb"), b => keepBlock(b))))
-      .withColumn("__aggr", when(fmt === "html",
-        filter(col("__hb"), b => !b.getField("boiler"))))
-      // staged path confidences — referenced by the τ-ladder result
-      // branches AND the plain-gating predicate below (inlining the
-      // geo-mean subtree twice would double the per-row cost)
-      .withColumn("__ck", when(fmt === "html" && size(col("__kept")) > 0,
-        geoMeanTopK(blockScores(col("__kept")))))
-      .withColumn("__ca", when(fmt === "html" && size(col("__aggr")) > 0,
-        geoMeanTopK(blockScores(col("__aggr"))) * 0.5))
-      .withColumn("__pr0", when(fmt === "pdf", pdf_glyph_runs(raw)))
-      // candidate `G `-line count, staged: referenced by confidence AND
-      // status — inlined it re-split the raw payload 3× per row
-      .withColumn("__cand", when(fmt === "pdf",
-        size(filter(split(raw, "\n"), l => substring(l, 1, 2) === "G "))))
-      // Chunked mega-payload processing (G9 patch-split analog, reference
-      // `jax_denoising_adapter.py:293-348`): a payload whose primary
-      // parse filled the MaxRuns window AND whose candidate count proves
-      // more content exists evaluates the successive windows (chunks
-      // 1..MaxChunks-1, lines offset chunk·MaxRuns for a total
-      // chunk-major reading order) and concatenates — full text survives
-      // up to MaxChunks·MaxRuns runs. The CASE branch is lazy: under-cap
-      // rows (the overwhelming majority) never evaluate the extra
-      // O(payload) chunk scans.
-      .withColumn("__pr",
-        if (graft.expressions.PdfGlyphRuns.MaxChunks <= 1) col("__pr0")
-        else when(fmt === "pdf",
-          when(size(col("__pr0")) === graft.expressions.PdfGlyphRuns.MaxRuns &&
-              col("__cand") > graft.expressions.PdfGlyphRuns.MaxRuns,
-            concat(col("__pr0"),
-              flatten(transform(
-                sequence(lit(1),
-                  lit(graft.expressions.PdfGlyphRuns.MaxChunks - 1)),
-                k => pdf_glyph_runs(raw, k)))))
-            .otherwise(col("__pr0"))))
-      .withColumn("__sorted", when(fmt === "pdf",
-        array_sort(col("__pr"), (a, b) => readingOrder(a, b))))
-      .withColumn("__pconf", when(fmt === "pdf",
-        when(col("__cand") > 0,
-          size(col("__pr")).cast("double") / col("__cand").cast("double"))
-          .otherwise(lit(0.0))))
+      .withColumn("__h", when(fmt === "html",
+        nativeExtract(classOf[HtmlBlocks], HtmlBlocks.extractType, raw)))
+      .withColumn("__p", when(fmt === "pdf",
+        nativeExtract(classOf[PdfGlyphRuns], PdfGlyphRuns.extractType, raw)))
       .withColumn("__tj", when(fmt === "tooljson",
         get_json_object(raw, "$.output.text")))
 
     // plain-path text + whole-span, staged ONCE and gated to the rows
     // that can actually read them (plain/tooljson always; html/pdf only
     // when every parsed alternative sits below the plain alternative's
-    // confidence → the ladder will pick plain)
+    // confidence → the ladder will pick plain). Staged because
+    // plainNormalize is referenced by four result branches (plain path,
+    // tooljson fallback, html/pdf cascade); inlining it four times pushed
+    // the generated projection past Janino's method limits and the whole
+    // stage fell back to interpreted eval (~2.5× per-row cost).
+    val (ckv, cav) = htmlConfs(h)
     val needPlain = fmt === "plain" || fmt === "tooljson" ||
-      (fmt === "html" &&
-        greatest(coalesce(col("__ck"), lit(-1.0)),
-          coalesce(col("__ca"), lit(-1.0))) < PlainAltConf) ||
+      (fmt === "html" && greatest(ckv, cav) < PlainAltConf) ||
       (fmt === "pdf" &&
-        (size(col("__pr")) === 0 || col("__pconf") < PlainAltConf))
+        (p.getField("runs") === 0 || p.getField("conf") < PlainAltConf))
     val staged2 = staged
       .withColumn("__plain", when(needPlain, plainNormalize(raw)))
       .withColumn("__wspan", when(needPlain, wholeSpan(raw)))
@@ -323,49 +229,21 @@ object Extract {
     val wspan = col("__wspan")
 
     // Truncation lineage (reference warnings trail, `pipeline.py:
-    // 2799-2801`): hostile payloads stop at the tokenizers' hard caps —
-    // the flag records that content MAY have been dropped, so lineage
+    // 2799-2801`): hostile payloads stop at the parsers' hard caps — the
+    // flag records that content MAY have been dropped, so lineage
     // (manifest `turns_truncated`) sees it instead of a silent cap. The
-    // flag is CONSERVATIVE, like the reference's page-count warning: a
-    // chunk-capped PDF parse whose surplus candidates were all malformed,
-    // or a cap-full HTML parse trailed only by closing markup, still
-    // flags (never the reverse — a sub-cap parse examined every candidate
-    // and cannot have dropped content). PDF flags at the CHUNK bound
-    // (MaxChunks·MaxRuns — single-window overflows are chunk-processed,
-    // not dropped); HTML flags from the tokenizer's own cap-hit cursor
-    // (cap_cursor, -1 unless the MaxBlocks cap fired): non-whitespace
-    // material beyond where the scan STOPPED — a cap-full parse that
-    // consumed the whole document no longer over-flags, and the cursor
-    // names exactly where content was dropped.
-    val pdfCap = graft.expressions.PdfGlyphRuns.MaxChunks *
-      graft.expressions.PdfGlyphRuns.MaxRuns
-    val capCur = element_at(col("__hb"), -1).getField("cap_cursor")
-    val truncated =
-      when(fmt === "pdf",
-        size(col("__pr")) === pdfCap && col("__cand") > pdfCap)
-        // the dropped-content test lives in the tokenizer (cap_cursor is
-        // set ONLY when the cap fired AND non-ws material remains past
-        // the stop point, in the tokenizer's own UTF-16 coordinates — a
-        // Spark-side `< contentEnd(raw)` compare mixed code units with
-        // code points and could under-flag astral-char payloads). The
-        // size conjunct is the ANSI short-circuit guard for
-        // element_at(__hb, -1), which THROWS on an empty array
-        // (script-only / empty html payloads).
-        .when(fmt === "html",
-          size(col("__hb")) === graft.expressions.HtmlBlocks.MaxBlocks &&
-            capCur >= 0)
-        .otherwise(lit(false))
-
+    // flag is CONSERVATIVE, like the reference's page-count warning, and
+    // each parser derives it in its own coordinates: PDF at the CHUNK
+    // bound (single-window overflows are chunk-processed, not dropped),
+    // HTML from the tokenizer's cap-hit cursor.
     val routed = staged2.withColumn("__x",
       when(fmt === "blank", blankRes)
-        .when(fmt === "pdf",
-          pdfRes(plain, wspan, col("__pr"), col("__sorted"), col("__pconf")))
-        .when(fmt === "html",
-          htmlRes(plain, wspan, col("__hb"), col("__kept"), col("__aggr"),
-            col("__ck"), col("__ca")))
+        .when(fmt === "pdf", pdfRes(plain, wspan, p))
+        .when(fmt === "html", htmlRes(plain, wspan, h))
         .when(fmt === "tooljson", toolJsonRes(raw, col("__tj"), plain, wspan))
         .otherwise(plainRes(plain, wspan)))
-      .withColumn("__trunc", truncated)
+      .withColumn("__trunc", when(fmt === "pdf", p.getField("truncated"))
+        .when(fmt === "html", h.getField("truncated")).otherwise(lit(false)))
 
     routed.select(Seq(col("conv_id"), col("turn_idx"),
       col("__x.path").as("path"),

@@ -39,7 +39,8 @@ class ExtensionsSpec extends AnyFunSuite {
       for (bad <- Seq(
           "SELECT simhash64(ARRAY())",
           "SELECT vec_dot('abc', ARRAY(1.0D))",
-          "SELECT html_blocks(ARRAY(1, 2))")) {
+          "SELECT html_blocks(ARRAY(1, 2))",
+          "SELECT pdf_glyph_runs(ARRAY(1))")) {
         val e = intercept[org.apache.spark.sql.AnalysisException](
           s.sql(bad).collect())
         assert(e.getMessage.contains("DATATYPE_MISMATCH"), bad)

@@ -1,6 +1,9 @@
 package graft
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.gen.TranscriptGen
 import graft.operators.Extract
@@ -16,31 +19,49 @@ class GoldenEqualitySpec extends SparkSpecBase {
   lazy val out = Extract(TranscriptGen.inputDf(spark, N)).cache()
   lazy val golden = TranscriptGen.goldenDf(spark, N)
 
-  test("staged projection: each tokenizer plans EXACTLY once") {
-    // The staging invariant (Extract Scaladoc): html_blocks /
-    // pdf_glyph_runs / the Jackson JSON parse are materialized once per
-    // row as gated intermediate columns; a refactor that lets
-    // CollapseProject re-inline them into the assembled CASE multiplies
-    // per-row cost ~10×. Parquet-backed input — local relations
-    // constant-fold and show no real plan.
+  /** Parquet-backed input — local relations constant-fold and show no
+    * real plan. */
+  private lazy val parquetInput = {
     val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
     TranscriptGen.inputDf(spark, 200L).write.mode("overwrite").parquet(dir)
-    val plan = Extract(spark.read.parquet(dir))
-      .queryExecution.executedPlan.toString
-    for (fn <- Seq("html_blocks", "pdf_glyph_runs", "get_json_object")) {
-      val count = fn.r.findAllMatchIn(plan).size
-      // pdf_glyph_runs additionally appears ONCE as the chunk-window
-      // parse inside the lazily-gated over-cap CASE branch (G9 chunked
-      // processing) — a lambda-driven occurrence, never the primary
-      val lambdaDriven =
-        s"$fn\\([^()]*, lambda".r.findAllMatchIn(plan).size
-      assert(count - lambdaDriven === 1,
-        s"$fn appears $count times ($lambdaDriven chunk-lambda) in the plan:\n$plan")
-      if (fn == "pdf_glyph_runs")
-        assert(lambdaDriven === 1,
-          s"expected one gated chunk-window parse:\n$plan")
-      else assert(lambdaDriven === 0)
+    spark.read.parquet(dir)
+  }
+
+  test("staged projection: each tokenizer plans EXACTLY once") {
+    // The staging invariant (Extract Scaladoc): the html and pdf paths
+    // are one native `extract` call each and the Jackson JSON parse one
+    // get_json_object, each materialized once per row as a gated
+    // intermediate column; a refactor that lets CollapseProject re-inline
+    // them into the assembled CASE multiplies per-row cost. The paths'
+    // assembly lives in the native calls: no bare tokenizer call and no
+    // higher-order lambda is left in the plan.
+    val plan = Extract(parquetInput).queryExecution.executedPlan.toString
+    for (fn <- Seq("graft.expressions.HtmlBlocks.extract(",
+        "graft.expressions.PdfGlyphRuns.extract(", "get_json_object(")) {
+      val count = Regex.quote(fn).r.findAllMatchIn(plan).size
+      assert(count === 1, s"$fn appears $count times in the plan:\n$plan")
     }
+    for (absent <- Seq("html_blocks", "pdf_glyph_runs", "lambda"))
+      assert(!plan.contains(absent), s"$absent in the plan:\n$plan")
+  }
+
+  test("output schema: names, types and nullability are pinned") {
+    // the parquet footer, and so the job's output bytes, follow this
+    // schema (e.g. `truncated` stays nullable)
+    val span = StructType(Seq(StructField("start", IntegerType),
+      StructField("end", IntegerType)))
+    val expected = StructType(Seq(
+      StructField("conv_id", StringType),
+      StructField("turn_idx", IntegerType),
+      StructField("path", StringType, nullable = false),
+      StructField("text", StringType),
+      StructField("spans", ArrayType(span, containsNull = true)),
+      StructField("confidence", DoubleType),
+      StructField("status", StringType, nullable = false),
+      StructField("blocks_total", IntegerType),
+      StructField("blocks_kept", IntegerType),
+      StructField("truncated", BooleanType)))
+    assert(Extract(parquetInput).schema === expected)
   }
 
   test("row count matches golden count") {

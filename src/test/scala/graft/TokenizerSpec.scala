@@ -183,6 +183,34 @@ class TokenizerSpec extends AnyFunSuite {
     assert(PdfGlyphRuns.parse(big, 5).isEmpty)
   }
 
+  test("candidateCount equals the declarative G-line count on pdf payloads") {
+    // PdfGlyphRuns.extract's confidence denominator; the staged Catalyst
+    // form it replaced split the payload on \n and counted lines
+    // starting with "G "
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFunctions.sniff
+    val payloads = Seq(
+      "%PDF-1\nG 1 2 3 a\nG 4 5 6 b\n",
+      "<div class=\"w\">\n%PDF-1\nG 1 2 3 a\nG bad\n",
+      "<div\nG 1 2 3 in-tag\n>%PDF-1\nG 1 2 3 a",
+      "%PDF-1\r\nG 1 2 3 a\r\nG 4 5 6 b\r\n\r\nG",
+      "  \n%PDF-1\nG 1 2 3 a\nG",
+      "%PDF-1\nG 1 2 3 a\nG ",
+      "%PDF-1\nG 1 2 3 \uD83D\uDE00\n\uD83D\uDE00G 1 2 3 x\nG \uD83D\uDE00\n",
+      "%PDF-1\n\nGG 1 2 3 x\n G 1 2 3 y\nGx\n%%EOF")
+    val rows = payloads.toDF("t").select(col("t"),
+      sniff(col("t"), lit(null).cast("string")).as("fmt"),
+      size(filter(split(col("t"), "\n"),
+        l => substring(l, 1, 2) === "G ")).as("n")).collect()
+    for (r <- rows) {
+      assert(r.getString(1) === "pdf", r.getString(0))
+      assert(PdfGlyphRuns.candidateCount(r.getString(0)) === r.getInt(2),
+        r.getString(0))
+    }
+  }
+
   test("cap_cursor names where the block cap stopped the scan") {
     val B = HtmlBlocks.MaxBlocks
     // cap fires with real content beyond: cursor < end of input
