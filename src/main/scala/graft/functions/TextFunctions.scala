@@ -1,13 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 
-/** Pure-Catalyst column functions for content sniffing, plain-text
-  * normalization, spans and confidence — the "no UDF-opaque regex soup"
-  * core. Everything here is built-in expressions (codegen'd, null-safe,
-  * pushdown-friendly).
+import graft.expressions.TurnNative
+
+/** Column functions for content sniffing, plain-text normalization, spans
+  * and confidence — no UDF-opaque regex soup. The per-row hot checks
+  * (sniff, blank, whole span, plain normalization, token spans) are
+  * native codegen'd calls in [[graft.expressions]], each cross-checked in
+  * FunctionsSpec/SpanVoteSpec against a declarative spec twin built from
+  * the same constants; the rest are built-in Catalyst expressions.
   */
 object TextFunctions {
 
@@ -24,33 +30,34 @@ object TextFunctions {
   val BlankRe = "\\A[\\s\\x00-\\x1F]*\\z"
   val PdfSniffRe = "(?s)\\A\\s*(?:<[^>]{0,200}>\\s*)?%PDF-"
   val HtmlSniffRe = "(?is)\\A\\s*<(!doctype|!--|[a-z][a-z0-9]*[\\s>/])"
+  val JsonSniffRe = "\\A\\s*\\{"
   val NumTokenRe = "\\A[0-9lIoOzZsSgGbB|]+\\z"
   val ConfusablesFrom = "lI|OoZzSsGgBb"
   val ConfusablesTo = "1110022556988"
 
-  /** A string that is empty / whitespace / control chars only — the graft
-    * analog of the reference's blank-image early check
-    * (`_is_blank_image`, reference `pipeline.py:425-456`).
-    * NOTE: Spark's `trim` strips only spaces, hence the regex.
+  /** one [[TurnNative]] call; NULL inputs reach it (it owns their meaning) */
+  private def turnNative(name: String, dataType: DataType, args: Column*): Column =
+    column(StaticInvoke(TurnNative.getClass, dataType, name, args.map(expr),
+      propagateNull = false, returnNullable = false))
+
+  /** A string that is null / empty / whitespace / control chars only
+    * (exactly [[BlankRe]]) — the graft analog of the reference's
+    * blank-image early check (`_is_blank_image`, reference
+    * `pipeline.py:425-456`). NOTE: Spark's `trim` strips only spaces.
     */
-  def isBlank(text: Column): Column =
-    text.isNull || text.rlike(BlankRe)
+  def isBlank(text: Column): Column = turnNative("isBlank", BooleanType, text)
 
   /** Content format sniffing — the analog of the reference's magic-byte
-    * `_validate_file_format` (reference `pipeline.py:2615-2685`), as a pure
-    * CASE chain evaluated cheapest-first (blank short-circuits everything,
-    * mirroring the early blank check at `pipeline.py:1917-1936`). Invalid /
-    * unknown content routes to "plain", never raises.
+    * `_validate_file_format` (reference `pipeline.py:2615-2685`), cheapest
+    * first: blank short-circuits everything (the early blank check at
+    * `pipeline.py:1917-1936`); then the `%PDF-` magic, optionally behind
+    * ONE wrapping tag of ≤ 200 chars (content beats container framing —
+    * the sniff-right-content-wrong cascade case); then an html tag; then a
+    * `{` payload WITH a tool. Invalid / unknown content routes to
+    * "plain", never raises.
     */
   def sniff(text: Column, tool: Column): Column =
-    when(isBlank(text), "blank")
-      // %PDF- magic, optionally behind ONE wrapping tag (content beats
-      // container framing — the sniff-right-content-wrong cascade case;
-      // magic-byte validation analog `pipeline.py:2615-2685`)
-      .when(text.rlike(PdfSniffRe), "pdf")
-      .when(text.rlike(HtmlSniffRe), "html")
-      .when(tool.isNotNull && text.rlike("\\A\\s*\\{"), "tooljson")
-      .otherwise("plain")
+    turnNative("sniff", StringType, text, tool)
 
   /** 0-based offset of the first non-whitespace char (0 when none). */
   def contentStart(text: Column): Column =
@@ -60,15 +67,18 @@ object TextFunctions {
   def contentEnd(text: Column): Column =
     length(regexp_replace(text, "\\s+\\z", ""))
 
-  /** Single span covering the trimmed content region of the raw payload;
-    * empty array for blank payloads.
+  /** Single span covering the trimmed content region of the raw payload
+    * ([[contentStart]], [[contentEnd]]); empty array for blank payloads.
     */
-  def wholeSpan(text: Column): Column = {
-    val s = contentStart(text)
-    val e = contentEnd(text)
-    when(e > s, array(struct(s.cast("int").as("start"), e.cast("int").as("end"))))
-      .otherwise(array().cast("array<struct<start:int,end:int>>"))
-  }
+  def wholeSpan(text: Column): Column =
+    turnNative("wholeSpan", TurnNative.wholeSpanType, text)
+
+  /** `{spans, conf}` of a tool result's parsed `$.output.text` value `t`
+    * ([[TurnNative.toolJsonSpan]]); NULL when `t` is.
+    */
+  def toolJsonSpan(raw: Column, t: Column): Column =
+    column(StaticInvoke(TurnNative.getClass, TurnNative.toolJsonType,
+      "toolJsonSpan", Seq(expr(raw), expr(t))))
 
   /** Char-level OCR-confusion correction, gated to numeric-looking tokens —
     * the canonical Catalyst re-expression of the reference's char-correction

@@ -32,7 +32,12 @@ import graft.functions.TextFunctions._
   * the τ-ladder CASE reads their fields. Catalyst's CollapseProject keeps
   * the stages separate because the producing expressions are non-cheap
   * and multiply-referenced; without this the assembled CASE would
-  * re-evaluate each parse several times per row.
+  * re-evaluate each parse several times per row. The sniff, the blank
+  * check, the whole-content span and the tool-JSON value span are
+  * [[graft.expressions.TurnNative]] calls too: the whole stage compiles
+  * to one generated row loop, and HotSpot leaves a method over 8,000
+  * bytecode bytes to the interpreter — MethodSizeSpec holds every
+  * stage of Extract and of the job's map stage under that limit.
   */
 object Extract {
 
@@ -66,9 +71,6 @@ object Extract {
   private val emptySpans: Column =
     array().cast("array<struct<start:int,end:int>>")
 
-  private def spanOf(start: Column, end: Column): Column =
-    struct(start.cast("int").as("start"), end.cast("int").as("end"))
-
   // ------------------------------------------------------------- blank
 
   private def blankRes: Column =
@@ -84,36 +86,21 @@ object Extract {
   // ------------------------------------------------------------- tooljson
 
   /** JSON tool-result path: `$.output.text` via Jackson-backed
-    * get_json_object (SURVEY X12); on parse failure falls back to the plain
+    * get_json_object (SURVEY X12), with span and confidence from the
+    * staged [[toolJsonSpan]] struct `s` (the value's raw span at
+    * 1.0 when the raw chars there equal the parsed value, else the whole
+    * content at 0.9); on parse failure falls back to the plain
     * normalization path with reduced confidence (status `fallback`).
     * `t` is the staged (once-per-row) parse result column.
-    *
-    * Span derivation (round-1 fix): the value marker is searched FROM the
-    * `"output"` key onward (a payload with an earlier unrelated `"text"`
-    * key no longer mis-anchors), and the span is only emitted when the
-    * raw bytes at the span actually equal the parsed value — JSON
-    * escapes break raw-offset equivalence, in which case the row stays a
-    * success with the whole-content span instead of a wrong one.
     */
-  private def toolJsonRes(raw: Column, t: Column, plain: Column,
-      wspan: Column): Column = {
-    val outPos = instr(raw, "\"output\"") // 1-based, 0 when absent
-    val markerPos = when(outPos > 0,
-      call_function("locate", lit("\"text\":\""), raw, outPos))
-      .otherwise(lit(0))
-    val start = markerPos + lit(7) // 0-based offset of the value
-    val verified = markerPos > 0 &&
-      raw.substr(start + 1, length(t)) === t
-    when(t.isNotNull && verified,
-      res(lit("tooljson"), t, array(spanOf(start, start + length(t))),
-        lit(1.0), lit("success"), lit(1), lit(1)))
-      .when(t.isNotNull,
-        res(lit("tooljson"), t, wspan, lit(0.9), lit("success"),
-          lit(1), lit(1)))
+  private def toolJsonRes(t: Column, s: Column, plain: Column,
+      wspan: Column): Column =
+    when(t.isNotNull,
+      res(lit("tooljson"), t, s.getField("spans"), s.getField("conf"),
+        lit("success"), lit(1), lit(1)))
       .otherwise(
         res(lit("tooljson"), plain, wspan,
           lit(0.3), lit("fallback"), lit(1), lit(0)))
-  }
 
   // ------------------------------------------------------------- html
 
@@ -199,6 +186,7 @@ object Extract {
     val fmt = col("__fmt")
     val h = col("__h")
     val p = col("__p")
+    val tj = col("__tj")
     val staged = df
       .withColumn("__fmt", sniff(raw, col("tool")))
       // stage the non-cheap parses ONCE per row, gated by format
@@ -210,21 +198,23 @@ object Extract {
         get_json_object(raw, "$.output.text")))
 
     // plain-path text + whole-span, staged ONCE and gated to the rows
-    // that can actually read them (plain/tooljson always; html/pdf only
-    // when every parsed alternative sits below the plain alternative's
-    // confidence → the ladder will pick plain). Staged because
-    // plainNormalize is referenced by four result branches (plain path,
-    // tooljson fallback, html/pdf cascade); inlining it four times pushed
-    // the generated projection past Janino's method limits and the whole
-    // stage fell back to interpreted eval (~2.5× per-row cost).
+    // that can actually read them (plain, unparsed tooljson; html/pdf
+    // only when every parsed alternative sits below the plain
+    // alternative's confidence → the ladder will pick plain). Staged
+    // because each is referenced by four result branches (plain path,
+    // tooljson fallback, html/pdf cascade): inlined, they would run up to
+    // four times per row and grow the generated row loop past HotSpot's
+    // 8,000-byte JIT limit (MethodSizeSpec).
     val (ckv, cav) = htmlConfs(h)
-    val needPlain = fmt === "plain" || fmt === "tooljson" ||
+    val needPlain = fmt === "plain" || (fmt === "tooljson" && tj.isNull) ||
       (fmt === "html" && greatest(ckv, cav) < PlainAltConf) ||
       (fmt === "pdf" &&
         (p.getField("runs") === 0 || p.getField("conf") < PlainAltConf))
     val staged2 = staged
       .withColumn("__plain", when(needPlain, plainNormalize(raw)))
       .withColumn("__wspan", when(needPlain, wholeSpan(raw)))
+      // read twice by the tooljson branch (spans, conf): staged too
+      .withColumn("__tjs", toolJsonSpan(raw, tj))
     val plain = col("__plain")
     val wspan = col("__wspan")
 
@@ -240,7 +230,7 @@ object Extract {
       when(fmt === "blank", blankRes)
         .when(fmt === "pdf", pdfRes(plain, wspan, p))
         .when(fmt === "html", htmlRes(plain, wspan, h))
-        .when(fmt === "tooljson", toolJsonRes(raw, col("__tj"), plain, wspan))
+        .when(fmt === "tooljson", toolJsonRes(tj, col("__tjs"), plain, wspan))
         .otherwise(plainRes(plain, wspan)))
       .withColumn("__trunc", when(fmt === "pdf", p.getField("truncated"))
         .when(fmt === "html", h.getField("truncated")).otherwise(lit(false)))

@@ -77,9 +77,12 @@ object SpanVote {
       // ingestion infers LongType) would throw CAST_OVERFLOW under ANSI
       // before the guard runs — or, non-ANSI, wrap into a plausible
       // in-range phantom span that sails through it (review finding).
-      // Scope: integral offset types only — a Double/Decimal offset
-      // beyond long range still throws on this cast under ANSI
-      col("start").cast("long").as("startL"), col("end").cast("long").as("endL"))
+      // try_cast: an offset with no long value (a Double/Decimal beyond
+      // long range, NaN, ±Inf, a non-numeric string) becomes NULL in any
+      // ANSI mode — never a throw, never NaN's non-ANSI 0 — and the
+      // guard drops it; in-range fractional offsets truncate as before
+      col("start").try_cast("long").as("startL"),
+      col("end").try_cast("long").as("endL"))
       // hostile-span guard AT THE SOURCE (null/inverted/degenerate/
       // out-of-int-range spans describe no span and never elect —
       // SpanVoteSpec/OperatorFuzzSpec pin the drop; filtering here

@@ -89,6 +89,72 @@ class FunctionsSpec extends SparkSpecBase {
     assert(rows(3).getSeq[org.apache.spark.sql.Row](0).isEmpty)
   }
 
+  test("native sniff, isBlank, wholeSpan and tool-JSON span equal their " +
+    "declarative twins (3 seeds, interpreted and codegen)") {
+    import org.scalacheck.{Gen, rng}
+    // hand edges: each Java \s char, the controls, DEL and U+00A0 (not
+    // \s), astral chars, upper-case tags, a 200- and a 201-char wrapping
+    // tag before the pdf magic (the sniff's bound), tool-result JSON
+    def wrapped(n: Int) = "<" + "d" * n + ">\n%PDF-1\nG 1 2 3 a"
+    val edges = Seq(null, "", " ", " \t\n\u000b\f\r ", "\u000b", "\f", "\r\n",
+      " \r\n x \u000b", "\fx\f", (0 to 0x1f).map(_.toChar).mkString, "\u007f", " \u007f ",
+      "\u00a0", "\u00a0x\u00a0", "\uD83D\uDE00", " \uD83D\uDE00 x \uD83D\uDE00\r\n",
+      "<DIV>x</DIV>", "<!DOCTYPE HTML><P>x", "\u000b<P >x", wrapped(200),
+      wrapped(201), "{\"output\":{\"text\":\"hi\"}}", "\f{\"a\":1}", "{")
+    val frag = Gen.oneOf(
+      Gen.oneOf(" ", "\t", "\n", "\u000b", "\f", "\r", "\r\n", "\u00a0"),
+      Gen.choose(0, 0x1f).map(_.toChar.toString), Gen.const("\u007f"),
+      Gen.alphaNumChar.map(_.toString),
+      Gen.oneOf("\uD83D\uDE00", "\u00e9", "\u4e2d"),
+      Gen.oneOf("<p>", "<DIV ", "</p>", "<!doctype html>", "<!-- c -->", "<3",
+        ">", "%PDF-", "{", "}", "\"output\"", "\"text\":\"", "G 1 2 3 x\n"))
+    // JSON's own whitespace, so most tool results parse
+    val ws = Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.oneOf(" ", "\t", "\n", "\r\n")))
+      .map(_.mkString)
+    // tool results whose value is raw-verifiable or not (escapes, a
+    // spaced marker, an earlier "text" key, astral chars before it)
+    val toolJson = for {
+      lead <- ws
+      early <- Gen.oneOf("", "\"text\":\"early\",", "\"n\":\"\uD83D\uDE00\",")
+      marker <- Gen.oneOf("\"text\":\"", "\"text\": \"")
+      v <- Gen.listOf(Gen.oneOf("a", "Z9", " ", "\\\"", "\\n", "\\u00e9", "\u00e9",
+        "\uD83D\uDE00")).map(_.mkString)
+      trail <- ws
+    } yield s"$lead{$early\"output\":{$marker$v\"}}$trail"
+
+    for (seed <- Seq(fuzzSeed, 1L, 2L)) {
+      def sample(g: Gen[String], n: Int, salt: Long) = (0 until n).flatMap(i =>
+        g(Gen.Parameters.default.withSize(40), rng.Seed(seed * 7919 + salt + i)))
+      val texts = edges ++ sample(Gen.listOf(frag).map(_.mkString), 300, 0) ++
+        sample(toolJson, 100, 100000)
+      val local = texts.flatMap(t => Seq((t, null: String), (t, "search")))
+        .toDF("t", "tool")
+      val dir = java.nio.file.Files.createTempDirectory("graft-twins").toString
+      local.write.mode("overwrite").parquet(dir)
+      for (df <- Seq(local, spark.read.parquet(dir))) {
+        val (t, tj) = (col("t"), get_json_object(col("t"), "$.output.text"))
+        val pairs = Seq(
+          "isBlank" -> (isBlank(t), TurnTwins.isBlank(t)),
+          "sniff" -> (sniff(t, col("tool")), TurnTwins.sniff(t, col("tool"))),
+          "wholeSpan" -> (wholeSpan(t), TurnTwins.wholeSpan(t)),
+          "toolJsonSpan" -> (toolJsonSpan(t, tj), TurnTwins.toolJsonSpan(t, tj)))
+        val out = df.select(col("t") +: pairs.flatMap { case (n, (a, b)) =>
+          Seq(a.as(s"${n}_nat"), b.as(s"${n}_dec")) }: _*).cache()
+        for ((n, _) <- pairs) {
+          val bad = out.filter(!(col(s"${n}_nat") <=> col(s"${n}_dec"))).collect()
+          assert(bad.isEmpty, s"seed $seed: native/declarative $n diverge: " +
+            bad.take(3).mkString("; "))
+        }
+        // the inputs reach every route and both tool-span outcomes
+        val fmts = out.select("sniff_nat").distinct().collect().map(_.getString(0))
+        assert(fmts.toSet === Set("blank", "pdf", "html", "tooljson", "plain"))
+        val confs = out.select("toolJsonSpan_nat.conf").distinct().collect()
+        assert(confs.filterNot(_.isNullAt(0)).map(_.getDouble(0)).toSet === Set(0.9, 1.0))
+        out.unpersist()
+      }
+    }
+  }
+
   test("geoMeanTopK matches the reference aggregate semantics") {
     def gm(scores: Seq[Double]): Double =
       Seq(scores).toDF("s").select(geoMeanTopK(col("s"))).head.getDouble(0)

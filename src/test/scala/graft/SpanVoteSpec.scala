@@ -99,6 +99,32 @@ class SpanVoteSpec extends SparkSpecBase {
     assert(out.head.getAs[Int]("start") === 0)
   }
 
+  test("non-integral offsets with no long value are dropped, not cast-crashed") {
+    // Double and Decimal offsets (JSON or CSV ingestion) beyond long
+    // range, NaN and ±Inf have no long value: under ANSI the cast to
+    // long threw; non-ANSI NaN became offset 0, a phantom span. They
+    // must drop like any other hostile span while in-range rows elect.
+    val inf = Double.PositiveInfinity
+    val dbl = Seq(
+      (1L, "e1", "ok", 0.9, 0.0, 4.0),
+      (1L, "e2", "nan", 0.9, Double.NaN, 4.0),
+      (1L, "e3", "inf", 0.9, 0.0, inf),
+      (1L, "e4", "ninf", 0.9, -inf, 4.0),
+      (1L, "e5", "huge", 0.9, 0.0, 1e30))
+      .toDF("row_id", "engine", "text", "conf", "start", "end")
+    val dec = dbl.filter(col("text").isin("ok", "huge"))
+      .withColumn("start", col("start").cast("decimal(38,0)"))
+      .withColumn("end", col("end").cast("decimal(38,0)"))
+    for (ansi <- Seq("true", "false"); df <- Seq(dbl, dec)) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val out = SpanVote.vote(df).collect()
+        assert(out.map(_.getAs[String]("text")).toSeq === Seq("ok"), s"ansi=$ansi")
+        assert(out.head.getAs[Int]("end") === 4)
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("native tokenSpans equals the declarative running-sum spec") {
     import graft.functions.TextFunctions.{tokenSpans, tokenSpansDeclarative}
     val cases = Seq(
