@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 
+import graft.expressions.{MinhashSig, NativeCall, ShingleHashes, Simhash, VecDot}
+
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (content-hash groupBy), MinHash+LSH near-dup, SimHash near-dup,
   * n-gram Jaccard verification, and embedding-cosine near-dup.
@@ -135,7 +137,8 @@ object Dedup {
     * of the window text.
     */
   def shingleHashes(text: Column, w: Int = 3): Column =
-    column(graft.expressions.ShingleHashes(expr(text), w))
+    column(NativeCall.static(ShingleHashes.getClass, "evalUtf8",
+      ShingleHashes.outType, Seq(expr(text), expr(lit(w)))))
 
   /** declarative spec form of [[shingleHashes]] (cross-checked in tests) */
   def shingleHashesDeclarative(text: Column, w: Int = 3): Column = {
@@ -183,7 +186,7 @@ object Dedup {
     *    materialization and leaves no session cache behind (the earlier
     *    persist-and-never-release form leaked a corpus-sized cache per
     *    call). The hashed-shingle pass is recomputed per verify side —
-    *    cheap by construction (native [[graft.expressions.ShingleHashes]]
+    *    cheap by construction (native [[ShingleHashes]]
     *    runs at ~25× the old declarative rate); the BROADCAST candidate
     *    join means the shingle frame itself never shuffles. A
     *    cluster-scale job with a non-broadcastable candidate set would
@@ -239,7 +242,7 @@ object Dedup {
     // cross-checked spec — its numHashes-way codegen alone cost ~14 s of
     // first-run Janino/JIT per session, driver-visible in the battery)
     val sigs = hsh.select(col("doc_id"),
-      column(graft.expressions.MinhashSig(expr(col("sh")), numHashes)).as("sig"))
+      column(MinhashSig(expr(col("sh")), numHashes)).as("sig"))
     val buckets = lshBands(sigs, bands, numHashes / bands)
       .groupBy("band_idx", "band_hash")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -256,12 +259,12 @@ object Dedup {
 
   /** 64-bit SimHash over whitespace tokens: per-bit vote of each token's
     * xxhash64 bits, assembled into one long. Native single-pass
-    * expression ([[graft.expressions.Simhash]]); the declarative
+    * expression ([[Simhash]]); the declarative
     * [[simhashFromHashes]] form is retained as the semantic spec and
     * cross-checked in DedupSpec.
     */
   def simhash(text: Column): Column =
-    column(graft.expressions.Simhash(expr(text)))
+    column(Simhash(expr(text)))
 
   /** per-token xxhash64 array — stage this as its own column before
     * calling [[simhashFromHashes]] so the 64 bit-vote passes read an
@@ -351,7 +354,7 @@ object Dedup {
     * which dominates all-pairs similarity joins).
     */
   def dot(x: Column, y: Column): Column =
-    column(graft.expressions.VecDot(expr(x), expr(y)))
+    column(VecDot(expr(x), expr(y)))
 
   /** Cosine similarity between two double-array columns. Prefer
     * [[cosinePrenormed]] inside joins — norms belong OUTSIDE the pair

@@ -1,8 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling polynomial fingerprint `fold(acc·31 + char) mod 1e9+7` as ONE
@@ -22,25 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * BMP, astral-pair and lone-surrogate inputs. The DuckDB twin in
   * `TextAnalysis.oracle` is unchanged (codepoint semantics there too).
   */
-case class Fingerprint(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "fingerprint64"
-
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    Fingerprint.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Fingerprint.evalUtf8($c)")
-}
-
 object Fingerprint {
 
   private val P = 1000000007L

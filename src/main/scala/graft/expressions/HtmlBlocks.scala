@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,28 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * the confidence-threshold routing stays in Extract's declarative τ-ladder,
   * mirroring the reference's split between detection and routing.
   *
-  * Codegen: a static call into [[HtmlBlocks.evalUtf8]] — keeps the
-  * projection inside whole-stage codegen (CodegenFallback would break the
-  * span and route rows through the interpreted path). Per-row cost is
-  * linear in payload size.
+  * Replaced by a static call of [[HtmlBlocks.evalUtf8]] ([[NativeCall]]).
+  * Per-row cost is linear in payload size.
   */
 case class HtmlBlocks(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = HtmlBlocks.outType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "html_blocks"
+  override lazy val replacement: Expression =
+    NativeCall.static(HtmlBlocks.getClass, "evalUtf8", HtmlBlocks.outType,
+      Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): HtmlBlocks =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlBlocks.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.HtmlBlocks.evalUtf8($c)")
 }
 
 object HtmlBlocks {

@@ -4,8 +4,7 @@ import java.util.Locale
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,22 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * eval (~4 ms/row measured at sf0.1); this walks the token array once.
   */
 case class KieBest(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = KieBest.outType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "kie_best"
+  override lazy val replacement: Expression =
+    NativeCall.static(KieBest.getClass, "evalUtf8", KieBest.outType, Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): KieBest =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    KieBest.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KieBest.evalUtf8($c)")
 }
 
 object KieBest {

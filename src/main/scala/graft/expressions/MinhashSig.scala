@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -28,24 +27,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * arrays before signing; direct callers must do the same (unreachable
   * via `shingleHashes`, which never returns an empty array).
   */
-case class MinhashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sig"
+  override lazy val replacement: Expression =
+    NativeCall.static(MinhashSig.getClass, "evalArray",
+      ArrayType(LongType, containsNull = true), Seq(child, Literal(numHashes)))
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSig =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    MinhashSig.evalArray(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.MinhashSig.evalArray($c, $numHashes)")
 }
 
 object MinhashSig {

@@ -1,11 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.TextFunctions
 
 /** Glyph-run extraction for PDF-like payloads: `PdfGlyphRuns(text)` →
   * `array<struct<line,x,y,text,start,end>>`.
@@ -31,26 +32,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * The SQL form parses the first [[PdfGlyphRuns.MaxRuns]] runs (chunk 0).
   */
 case class PdfGlyphRuns(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = PdfGlyphRuns.outType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "pdf_glyph_runs"
+  override lazy val replacement: Expression =
+    NativeCall.static(PdfGlyphRuns.getClass, "evalUtf8", PdfGlyphRuns.outType,
+      Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): PdfGlyphRuns =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    PdfGlyphRuns.evalUtf8(input.asInstanceOf[UTF8String])
-
-  /** codegen = a static call — keeps the projection inside whole-stage
-    * codegen instead of breaking the span (CodegenFallback would route
-    * every row through the interpreted eval path).
-    */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.PdfGlyphRuns.evalUtf8($c)")
 }
 
 object PdfGlyphRuns {
@@ -164,8 +155,10 @@ object PdfGlyphRuns {
     var i = 0
     while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
     if (i < n && s.charAt(i) == '<') {
+      // the sniff's `<[^>]{0,PdfWrapperChars}>`: code points, not chars
       val close = s.indexOf('>', i)
-      if (close < 0 || close - i > 200) return Array.empty
+      if (close < 0 ||
+        s.codePointCount(i + 1, close) > TextFunctions.PdfWrapperChars) return Array.empty
       i = close + 1
       while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
     }

@@ -1,8 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace collapse + numeric-context OCR char correction as ONE
@@ -30,26 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * spaces. Blank/null gating stays OUTSIDE in
   * [[graft.functions.TextFunctions.plainNormalize]].
   */
-case class PlainNormalize(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "plain_normalize"
-
-  override protected def withNewChildInternal(newChild: Expression): PlainNormalize =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    PlainNormalize.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.PlainNormalize.evalUtf8($c)")
-}
-
 object PlainNormalize {
 
   // lookup tables DERIVED from the single-source constant strings in

@@ -2,18 +2,15 @@ package graft.expressions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native regex-chain expressions for the KIE field-extraction operator.
+/** Native regex-chain evaluators for the KIE field-extraction operator.
   *
   * Each instance evaluates a whole first-match-wins pattern chain (or a
   * sequential replace-rule list) with PRECOMPILED `java.util.regex`
   * patterns in one call. The declarative per-pattern form
   * (`coalesce(nullif(regexp_extract(...)))` × N) stays the semantic spec
-  * mirrored by the DuckDB oracle; these expressions exist because the
+  * mirrored by the DuckDB oracle; these evaluators exist because the
   * inlined chains grew the collapsed projection's whole-stage codegen
   * past Janino's 64 KB method limit ("Code grows beyond 64 KB",
   * observed), silently interpreting the entire stage — and because one
@@ -22,53 +19,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * so semantics are bit-identical; FieldExtractSpec + the x05 oracle
   * compare enforce that.
   *
-  * Codegen: `ctx.addReferenceObj(this)` + a boxed instance call — stays
-  * inside whole-stage codegen with a tiny footprint per chain.
+  * Each evaluator is a serializable case class called per row through
+  * [[NativeCall.evaluator]]: `eval` returns the value, or null for no
+  * match. The patterns compile lazily once per deserialized instance.
   */
-abstract class ChainExpression extends UnaryExpression {
-  /** boxed result (null = no match); input is the payload string */
-  def evalBoxed(s: String): Any
-
-  // a chain with zero matching patterns yields null even for non-null
-  // input — never inherit the child's nullability
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    evalBoxed(input.asInstanceOf[UTF8String].toString)
-
-  protected def genBoxed(ctx: CodegenContext, ev: ExprCode,
-      javaBox: String, unbox: String => String): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("chain", this,
-        "graft.expressions.ChainExpression")
-      s"""
-       $javaBox boxed${ev.value} = ($javaBox) $ref.evalBoxed($c.toString());
-       if (boxed${ev.value} == null) { ${ev.isNull} = true; }
-       else { ${ev.value} = ${unbox(s"boxed${ev.value}")}; }
-      """
-    })
-}
-
-object ChainExpression {
+object RegexChains {
   /** compile with the same inline-(?i) convention as the Column chains */
   def compile(patterns: Seq[String], ci: Boolean): Array[Pattern] =
     patterns.map(p => Pattern.compile(if (ci) "(?i)" + p else p)).toArray
 }
 
 /** sequential regexp_replace rule list (X7/X8 OCR normalization) */
-case class RegexReplaceChain(child: Expression, rules: Seq[(String, String)],
-    caseInsensitive: Boolean) extends ChainExpression {
+case class RegexReplaceChain(rules: Seq[(String, String)], caseInsensitive: Boolean) {
   @transient private lazy val compiled =
-    ChainExpression.compile(rules.map(_._1), caseInsensitive)
+    RegexChains.compile(rules.map(_._1), caseInsensitive)
   @transient private lazy val repls = rules.map(_._2).toArray
 
-  override def dataType: DataType = StringType
-  override def prettyName: String = "regex_replace_chain"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def evalBoxed(s: String): Any = {
-    var cur = s
+  def eval(input: UTF8String): UTF8String = {
+    var cur = input.toString
     var i = 0
     while (i < compiled.length) {
       cur = compiled(i).matcher(cur).replaceAll(repls(i))
@@ -76,26 +44,18 @@ case class RegexReplaceChain(child: Expression, rules: Seq[(String, String)],
     }
     UTF8String.fromString(cur)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genBoxed(ctx, ev, "UTF8String", b => b)
 }
 
 /** first-match-wins int chain with per-pattern range guard (X3):
   * group(1), commas stripped, digit-length gate, value must be in
   * [lo, hi] or the NEXT pattern is tried.
   */
-case class FirstIntChain(child: Expression, patterns: Seq[String],
-    lo: Int, hi: Int, maxLen: Int) extends ChainExpression {
+case class FirstIntChain(patterns: Seq[String], lo: Int, hi: Int, maxLen: Int) {
   @transient private lazy val compiled =
-    ChainExpression.compile(patterns, ci = true)
+    RegexChains.compile(patterns, ci = true)
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "first_int_chain"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def evalBoxed(s: String): Any = {
+  def eval(input: UTF8String): java.lang.Integer = {
+    val s = input.toString
     var i = 0
     while (i < compiled.length) {
       val m = compiled(i).matcher(s)
@@ -113,23 +73,15 @@ case class FirstIntChain(child: Expression, patterns: Seq[String],
     }
     null
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genBoxed(ctx, ev, "java.lang.Integer", b => s"$b.intValue()")
 }
 
 /** first-match-wins string chain (mobile account/date/period fields) */
-case class FirstStrChain(child: Expression, patterns: Seq[String],
-    groupIdx: Int) extends ChainExpression {
+case class FirstStrChain(patterns: Seq[String], groupIdx: Int) {
   @transient private lazy val compiled =
-    ChainExpression.compile(patterns, ci = true)
+    RegexChains.compile(patterns, ci = true)
 
-  override def dataType: DataType = StringType
-  override def prettyName: String = "first_str_chain"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def evalBoxed(s: String): Any = {
+  def eval(input: UTF8String): UTF8String = {
+    val s = input.toString
     var i = 0
     while (i < compiled.length) {
       val m = compiled(i).matcher(s)
@@ -141,25 +93,17 @@ case class FirstStrChain(child: Expression, patterns: Seq[String],
     }
     null
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genBoxed(ctx, ev, "UTF8String", b => b)
 }
 
 /** X1/X2 advanced chain: first pattern whose `_normalise_number`d group
   * (l→1 g→9 O→0, strip non-digits, ≤ maxLen digits) is non-null.
   */
-case class NormIntChain(child: Expression, patterns: Seq[String],
-    maxLen: Int) extends ChainExpression {
+case class NormIntChain(patterns: Seq[String], maxLen: Int) {
   @transient private lazy val compiled =
-    ChainExpression.compile(patterns, ci = true)
+    RegexChains.compile(patterns, ci = true)
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "norm_int_chain"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def evalBoxed(s: String): Any = {
+  def eval(input: UTF8String): java.lang.Integer = {
+    val s = input.toString
     var i = 0
     while (i < compiled.length) {
       val m = compiled(i).matcher(s)
@@ -186,23 +130,15 @@ case class NormIntChain(child: Expression, patterns: Seq[String],
     }
     null
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genBoxed(ctx, ev, "java.lang.Integer", b => s"$b.intValue()")
 }
 
 /** first-match-wins fractional chain with range guard (water, X5) */
-case class FirstDoubleChain(child: Expression, patterns: Seq[String],
-    lo: Double, hi: Double) extends ChainExpression {
+case class FirstDoubleChain(patterns: Seq[String], lo: Double, hi: Double) {
   @transient private lazy val compiled =
-    ChainExpression.compile(patterns, ci = true)
+    RegexChains.compile(patterns, ci = true)
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "first_double_chain"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def evalBoxed(s: String): Any = {
+  def eval(input: UTF8String): java.lang.Double = {
+    val s = input.toString
     var i = 0
     while (i < compiled.length) {
       val m = compiled(i).matcher(s)
@@ -217,7 +153,4 @@ case class FirstDoubleChain(child: Expression, patterns: Seq[String],
     }
     null
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genBoxed(ctx, ev, "java.lang.Double", b => s"$b.doubleValue()")
 }

@@ -1,9 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashed w-token shingles of whitespace-tokenized text as ONE native
@@ -22,27 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * elements, seeded 42); fewer than w tokens → one hash of the
   * space-joined text.
   */
-case class ShingleHashes(child: Expression, w: Int) extends UnaryExpression
-    with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.evalUtf8(input.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.ShingleHashes.evalUtf8($c, $w)")
-}
-
 object ShingleHashes {
+
+  /** [[evalUtf8]]'s type: one hash per window, never empty */
+  val outType: ArrayType = ArrayType(LongType, containsNull = false)
 
   private val Seed = 42L // Spark's xxhash64 default seed
 

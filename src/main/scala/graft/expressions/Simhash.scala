@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,22 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashing role as in `pipeline.py:2580-2585` (sha256 lineage hashes).
   */
 case class Simhash(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash64"
+  override lazy val replacement: Expression =
+    NativeCall.static(Simhash.getClass, "evalUtf8", LongType, Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): Simhash =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    Simhash.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Simhash.evalUtf8($c)")
 }
 
 object Simhash {

@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,23 +28,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Lengths count Unicode code points, matching Spark `length`.
   */
 case class TokenSpans(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def dataType: DataType = TokenSpans.OutType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "token_spans"
+  override lazy val replacement: Expression =
+    NativeCall.static(TokenSpans.getClass, "evalUtf8", TokenSpans.OutType,
+      Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): TokenSpans =
     copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    TokenSpans.evalUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.TokenSpans.evalUtf8($c)")
 }
 
 object TokenSpans {

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions.{HtmlSniffRe, JsonSniffRe, PdfSniffRe}
 
 /** The per-turn routing checks of [[graft.operators.Extract]] as static
-  * calls, each staged through one `StaticInvoke` like
+  * calls, each staged through one [[NativeCall.static]] like
   * [[HtmlBlocks.extract]]: the content sniff, the blank check, the
   * whole-content span and the tool-JSON value span. Each replaces a chain
   * of regex and string expressions whose generated code pushed Extract's

@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -21,26 +20,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * differ — the shorter length wins (mirrors zip_with-with-multiply
   * where the null tail contributes nothing).
   */
-case class VecDot(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+case class VecDot(left: Expression, right: Expression) extends BinaryExpression
+    with RuntimeReplaceable with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "vec_dot"
+  override lazy val replacement: Expression =
+    NativeCall.static(VecDot.getClass, "dot", DoubleType, Seq(left, right))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.expressions.VecDot.dot($a, $b)")
 }
 
 object VecDot {

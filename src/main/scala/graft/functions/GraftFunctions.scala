@@ -7,12 +7,14 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import graft.expressions.{HtmlBlocks, KieBest, PdfGlyphRuns, Simhash, TokenSpans, VecDot}
 
 /** Column facade + SQL registration for the graft's custom Catalyst
-  * expressions. Everything else in the engine is Spark built-ins.
+  * expressions: each name is a `RuntimeReplaceable` shell over a
+  * [[graft.expressions.NativeCall]]. Everything else in the engine is
+  * Spark built-ins.
   */
 object GraftFunctions {
 
   /** `html_blocks(text)` → array<struct<text,start,end,words,link_words,
-    * boiler,cwords,clink_words,cmax_words>>
+    * boiler,cwords,clink_words,cmax_words,cap_cursor>>
     */
   def html_blocks(text: Column): Column =
     column(HtmlBlocks(expr(text)))

@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 
-import graft.expressions.TurnNative
+import graft.expressions.{NativeCall, PlainNormalize, TokenSpans, TurnNative}
 
 /** Column functions for content sniffing, plain-text normalization, spans
   * and confidence — no UDF-opaque regex soup. The per-row hot checks
@@ -28,7 +27,9 @@ object TextFunctions {
   // versa), and spelling [ \t\n\f\r\x0B] at every \s site would make the
   // dozen patterns below unreadable for a latent-only divergence.
   val BlankRe = "\\A[\\s\\x00-\\x1F]*\\z"
-  val PdfSniffRe = "(?s)\\A\\s*(?:<[^>]{0,200}>\\s*)?%PDF-"
+  /** most code points inside the one tag that may wrap a `%PDF-` payload */
+  final val PdfWrapperChars = 200
+  val PdfSniffRe = s"(?s)\\A\\s*(?:<[^>]{0,$PdfWrapperChars}>\\s*)?%PDF-"
   val HtmlSniffRe = "(?is)\\A\\s*<(!doctype|!--|[a-z][a-z0-9]*[\\s>/])"
   val JsonSniffRe = "\\A\\s*\\{"
   val NumTokenRe = "\\A[0-9lIoOzZsSgGbB|]+\\z"
@@ -37,8 +38,8 @@ object TextFunctions {
 
   /** one [[TurnNative]] call; NULL inputs reach it (it owns their meaning) */
   private def turnNative(name: String, dataType: DataType, args: Column*): Column =
-    column(StaticInvoke(TurnNative.getClass, dataType, name, args.map(expr),
-      propagateNull = false, returnNullable = false))
+    column(NativeCall.static(TurnNative.getClass, name, dataType,
+      args.map(expr), propagateNull = false))
 
   /** A string that is null / empty / whitespace / control chars only
     * (exactly [[BlankRe]]) — the graft analog of the reference's
@@ -51,10 +52,10 @@ object TextFunctions {
     * `_validate_file_format` (reference `pipeline.py:2615-2685`), cheapest
     * first: blank short-circuits everything (the early blank check at
     * `pipeline.py:1917-1936`); then the `%PDF-` magic, optionally behind
-    * ONE wrapping tag of ≤ 200 chars (content beats container framing —
-    * the sniff-right-content-wrong cascade case); then an html tag; then a
-    * `{` payload WITH a tool. Invalid / unknown content routes to
-    * "plain", never raises.
+    * ONE wrapping tag of ≤ [[PdfWrapperChars]] chars (content beats
+    * container framing — the sniff-right-content-wrong cascade case); then
+    * an html tag; then a `{` payload WITH a tool. Invalid / unknown
+    * content routes to "plain", never raises.
     */
   def sniff(text: Column, tool: Column): Column =
     turnNative("sniff", StringType, text, tool)
@@ -77,8 +78,8 @@ object TextFunctions {
     * ([[TurnNative.toolJsonSpan]]); NULL when `t` is.
     */
   def toolJsonSpan(raw: Column, t: Column): Column =
-    column(StaticInvoke(TurnNative.getClass, TurnNative.toolJsonType,
-      "toolJsonSpan", Seq(expr(raw), expr(t))))
+    column(NativeCall.static(TurnNative.getClass, "toolJsonSpan",
+      TurnNative.toolJsonType, Seq(expr(raw), expr(t))))
 
   /** Char-level OCR-confusion correction, gated to numeric-looking tokens —
     * the canonical Catalyst re-expression of the reference's char-correction
@@ -94,15 +95,23 @@ object TextFunctions {
 
   /** Plain-text path: whitespace collapse + numeric-context char
     * correction — native single pass
-    * ([[graft.expressions.PlainNormalize]]; this is the extraction job's
+    * ([[PlainNormalize]]; this is the extraction job's
     * hot stage: every plain/tooljson turn and every τ-ladder fallback
     * pays it, and the declarative form spent 3.1 of a 4.0 s full-Extract
     * pass in per-token regex work). The declarative pipeline is kept
     * below as the cross-checked spec twin.
     */
   def plainNormalize(text: Column): Column =
-    when(isBlank(text), lit(""))
-      .otherwise(column(graft.expressions.PlainNormalize(expr(text))))
+    when(isBlank(text), lit("")).otherwise(normalizeNonBlank(text))
+
+  /** [[plainNormalize]] without its blank gate — correct only on text
+    * known not to be blank (the gate is what maps control-only text to
+    * ""). Extract's ladder branches use it safely because [[sniff]]
+    * routes every blank row to "blank" first.
+    */
+  private[graft] def normalizeNonBlank(text: Column): Column =
+    column(NativeCall.static(PlainNormalize.getClass, "evalUtf8", StringType,
+      Seq(expr(text))))
 
   /** declarative spec form of [[plainNormalize]] (equivalence-tested in
     * FunctionsSpec): split on \s+ of the trimmed text, per-token gated
@@ -136,13 +145,13 @@ object TextFunctions {
 
   /** Whitespace tokens with offsets in the single-space-collapsed string,
     * `array<struct<tok,start,end>>` — native single pass
-    * ([[graft.expressions.TokenSpans]]); the declarative spec twin is
+    * ([[TokenSpans]]); the declarative spec twin is
     * [[tokenSpansDeclarative]] (cross-checked in SpanVoteSpec). Keeps the
     * ensemble path's token-offset stage NARROW — the posexplode +
     * per-row-window prefix sum it replaces shuffles every token row.
     */
   def tokenSpans(text: Column): Column =
-    column(graft.expressions.TokenSpans(expr(text)))
+    column(TokenSpans(expr(text)))
 
   /** declarative spec form of [[tokenSpans]]: running-sum offsets via an
     * indexed transform over the token array (per-row, no shuffle — usable

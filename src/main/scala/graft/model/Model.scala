@@ -5,18 +5,6 @@ import java.sql.Timestamp
 /** Character span into the RAW payload (0-based, end-exclusive). */
 case class Span(start: Int, end: Int)
 
-/** One transcript turn — the input row shape fixed by the harness
-  * (`BASELINE.json` `input_hint`): Iceberg-style transcript table of
-  * multi-turn conversation / agent transcripts.
-  */
-case class Turn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp)
-
 /** Generator row: input turn + analytically-computed golden expectation.
   * Goldens are computed at generation time, never by running the reference
   * (see FIXTURES.md §3).

@@ -1,12 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
-import org.apache.spark.sql.types.DataType
 
-import graft.expressions.{HtmlBlocks, PdfGlyphRuns}
+import graft.expressions.{HtmlBlocks, NativeCall, PdfGlyphRuns}
 import graft.functions.TextFunctions._
 
 /** The extraction core: per-turn content sniffing → per-format extraction
@@ -32,11 +30,13 @@ import graft.functions.TextFunctions._
   * the τ-ladder CASE reads their fields. Catalyst's CollapseProject keeps
   * the stages separate because the producing expressions are non-cheap
   * and multiply-referenced; without this the assembled CASE would
-  * re-evaluate each parse several times per row. The sniff, the blank
-  * check, the whole-content span and the tool-JSON value span are
-  * [[graft.expressions.TurnNative]] calls too: the whole stage compiles
-  * to one generated row loop, and HotSpot leaves a method over 8,000
-  * bytecode bytes to the interpreter — MethodSizeSpec holds every
+  * re-evaluate each parse several times per row. The plain normalization
+  * and the whole-content span are not staged: they sit in each ladder
+  * branch that returns them, and a CASE evaluates one branch per row. The
+  * sniff, the blank check, the whole-content span and the tool-JSON value
+  * span are [[graft.expressions.TurnNative]] calls too: the whole stage
+  * compiles to one generated row loop, and HotSpot leaves a method over
+  * 8,000 bytecode bytes to the interpreter — MethodSizeSpec holds every
   * stage of Extract and of the job's map stage under that limit.
   */
 object Extract {
@@ -56,9 +56,20 @@ object Extract {
   /** fixed confidence of the plain-normalization alternative */
   val PlainAltConf = 0.3
 
-  /** output struct shared by every path */
+  /** Output struct shared by every path.
+    *
+    * `truncated` is the truncation lineage (reference warnings trail,
+    * `pipeline.py:2799-2801`): hostile payloads stop at the parsers' hard
+    * caps — the flag records that content MAY have been dropped, so
+    * lineage (manifest `turns_truncated`) sees it instead of a silent cap.
+    * The flag is CONSERVATIVE, like the reference's page-count warning,
+    * and each parser derives it in its own coordinates: PDF at the CHUNK
+    * bound (single-window overflows are chunk-processed, not dropped),
+    * HTML from the tokenizer's cap-hit cursor. Every ladder branch of a
+    * parsed path carries its parser's flag.
+    */
   private def res(path: Column, text: Column, spans: Column, conf: Column,
-      status: Column, total: Column, kept: Column): Column =
+      status: Column, total: Column, kept: Column, truncated: Column): Column =
     struct(
       path.as("path"),
       text.as("text"),
@@ -66,7 +77,8 @@ object Extract {
       conf.cast("double").as("confidence"),
       status.as("status"),
       total.cast("int").as("blocks_total"),
-      kept.cast("int").as("blocks_kept"))
+      kept.cast("int").as("blocks_kept"),
+      truncated.as("truncated"))
 
   private val emptySpans: Column =
     array().cast("array<struct<start:int,end:int>>")
@@ -74,14 +86,15 @@ object Extract {
   // ------------------------------------------------------------- blank
 
   private def blankRes: Column =
-    res(lit("blank"), lit(""), emptySpans, lit(0.0), lit("blank"), lit(0), lit(0))
+    res(lit("blank"), lit(""), emptySpans, lit(0.0), lit("blank"), lit(0), lit(0),
+      lit(false))
 
   // ------------------------------------------------------------- plain
 
-  /** `plain`/`wspan`: the staged normalized-text / whole-span columns */
-  private def plainRes(plain: Column, wspan: Column): Column =
-    res(lit("plain"), plain, wspan, lit(1.0),
-      lit("success"), lit(1), lit(1))
+  /** the whole payload, normalized, as its own single span */
+  private def plainRes(raw: Column): Column =
+    res(lit("plain"), normalizeNonBlank(raw), wholeSpan(raw), lit(1.0),
+      lit("success"), lit(1), lit(1), lit(false))
 
   // ------------------------------------------------------------- tooljson
 
@@ -93,14 +106,11 @@ object Extract {
     * normalization path with reduced confidence (status `fallback`).
     * `t` is the staged (once-per-row) parse result column.
     */
-  private def toolJsonRes(t: Column, s: Column, plain: Column,
-      wspan: Column): Column =
+  private def toolJsonRes(raw: Column, t: Column, s: Column): Column =
     when(t.isNotNull,
       res(lit("tooljson"), t, s.getField("spans"), s.getField("conf"),
-        lit("success"), lit(1), lit(1)))
-      .otherwise(
-        res(lit("tooljson"), plain, wspan,
-          lit(0.3), lit("fallback"), lit(1), lit(0)))
+        lit("success"), lit(1), lit(1), lit(false)))
+      .otherwise(plainAlt(raw, lit("tooljson"), lit(1), lit(false)))
 
   // ------------------------------------------------------------- html
 
@@ -115,32 +125,36 @@ object Extract {
     * Ladder-chosen alternatives report status "fallback" (the status
     * vocabulary is the {success, fallback, blank} contract).
     */
-  private def htmlRes(plain: Column, wspan: Column, h: Column): Column = {
+  private def htmlRes(raw: Column, h: Column): Column = {
+    val truncated = h.getField("truncated")
     def assemble(c: Column, status: String): Column =
       res(lit("html"), c.getField("text"), c.getField("spans"),
-        c.getField("conf"), lit(status), h.getField("total"), c.getField("n"))
+        c.getField("conf"), lit(status), h.getField("total"), c.getField("n"),
+        truncated)
 
     val kept = h.getField("kept")
-    val (ckv, cav) = htmlConfs(h)
-    when(kept.getField("conf") >= TauEnhance, assemble(kept, "success"))
-      // keep-better ladder below τ_enhance (primary wins ties)
-      .when(ckv >= cav && ckv >= PlainAltConf, assemble(kept, "success"))
+    val ckv = coalesce(kept.getField("conf"), lit(-1.0))
+    val cav = coalesce(h.getField("aggr").getField("conf"), lit(-1.0))
+    // accepted at τ_enhance, else the keep-better ladder below it (primary
+    // wins ties; an empty selection competes at -1)
+    when(kept.getField("conf") >= TauEnhance ||
+      (ckv >= cav && ckv >= PlainAltConf), assemble(kept, "success"))
       .when(cav >= greatest(ckv, lit(PlainAltConf)),
         assemble(h.getField("aggr"), "fallback"))
       // best-effort return (`pipeline.py:2052-2065`): the plain
       // normalization of the raw payload beats everything parsed
-      .otherwise(plainAlt(plain, wspan, lit("html"), h.getField("total")))
+      .otherwise(plainAlt(raw, lit("html"), h.getField("total"), truncated))
   }
 
-  /** (primary, aggressive) html confidences, -1 for an empty selection */
-  private def htmlConfs(h: Column): (Column, Column) =
-    (coalesce(h.getField("kept").getField("conf"), lit(-1.0)),
-      coalesce(h.getField("aggr").getField("conf"), lit(-1.0)))
-
-  /** low-confidence plain-path alternative used by the per-path cascade */
-  private def plainAlt(plain: Column, wspan: Column, path: Column,
-      total: Column): Column =
-    res(path, plain, wspan, lit(0.3), lit("fallback"), total, lit(0))
+  /** Low-confidence plain-path alternative used by the per-path cascade.
+    * Inlined in each ladder branch that returns it: a CASE evaluates one
+    * branch per row, so the normalization runs at most once per row, and
+    * only on rows the ladder hands to it.
+    */
+  private def plainAlt(raw: Column, path: Column, total: Column,
+      truncated: Column): Column =
+    res(path, normalizeNonBlank(raw), wholeSpan(raw), lit(PlainAltConf),
+      lit("fallback"), total, lit(0), truncated)
 
   // ------------------------------------------------------------- pdf
 
@@ -153,22 +167,17 @@ object Extract {
     * keep-better comparison and returns the plain alternative (the
     * round-2 form only cascaded when ZERO runs parsed).
     */
-  private def pdfRes(plain: Column, wspan: Column, p: Column): Column = {
+  private def pdfRes(raw: Column, p: Column): Column = {
     val conf = p.getField("conf")
+    val truncated = p.getField("truncated")
     when(p.getField("runs") > 0 && conf >= PlainAltConf,
       res(lit("pdf"), p.getField("text"), p.getField("spans"), conf,
         when(conf >= 1.0, "success").otherwise("fallback"),
-        p.getField("lines"), p.getField("lines")))
+        p.getField("lines"), p.getField("lines"), truncated))
       // keep-better: zero runs OR run fraction below the plain
       // alternative's confidence → plain normalization wins
-      .otherwise(plainAlt(plain, wspan, lit("pdf"), lit(0)))
+      .otherwise(plainAlt(raw, lit("pdf"), lit(0), truncated))
   }
-
-  /** one staged per-row parse: the path module's static `extract` */
-  private def nativeExtract(owner: Class[_], dataType: DataType,
-      raw: Column): Column =
-    column(StaticInvoke(owner, dataType, "extract", Seq(expr(raw)),
-      returnNullable = false))
 
   // ------------------------------------------------------------- routing
 
@@ -191,49 +200,22 @@ object Extract {
       .withColumn("__fmt", sniff(raw, col("tool")))
       // stage the non-cheap parses ONCE per row, gated by format
       .withColumn("__h", when(fmt === "html",
-        nativeExtract(classOf[HtmlBlocks], HtmlBlocks.extractType, raw)))
+        column(NativeCall.static(HtmlBlocks.getClass, "extract",
+          HtmlBlocks.extractType, Seq(expr(raw))))))
       .withColumn("__p", when(fmt === "pdf",
-        nativeExtract(classOf[PdfGlyphRuns], PdfGlyphRuns.extractType, raw)))
+        column(NativeCall.static(PdfGlyphRuns.getClass, "extract",
+          PdfGlyphRuns.extractType, Seq(expr(raw))))))
       .withColumn("__tj", when(fmt === "tooljson",
         get_json_object(raw, "$.output.text")))
-
-    // plain-path text + whole-span, staged ONCE and gated to the rows
-    // that can actually read them (plain, unparsed tooljson; html/pdf
-    // only when every parsed alternative sits below the plain
-    // alternative's confidence → the ladder will pick plain). Staged
-    // because each is referenced by four result branches (plain path,
-    // tooljson fallback, html/pdf cascade): inlined, they would run up to
-    // four times per row and grow the generated row loop past HotSpot's
-    // 8,000-byte JIT limit (MethodSizeSpec).
-    val (ckv, cav) = htmlConfs(h)
-    val needPlain = fmt === "plain" || (fmt === "tooljson" && tj.isNull) ||
-      (fmt === "html" && greatest(ckv, cav) < PlainAltConf) ||
-      (fmt === "pdf" &&
-        (p.getField("runs") === 0 || p.getField("conf") < PlainAltConf))
-    val staged2 = staged
-      .withColumn("__plain", when(needPlain, plainNormalize(raw)))
-      .withColumn("__wspan", when(needPlain, wholeSpan(raw)))
       // read twice by the tooljson branch (spans, conf): staged too
       .withColumn("__tjs", toolJsonSpan(raw, tj))
-    val plain = col("__plain")
-    val wspan = col("__wspan")
 
-    // Truncation lineage (reference warnings trail, `pipeline.py:
-    // 2799-2801`): hostile payloads stop at the parsers' hard caps — the
-    // flag records that content MAY have been dropped, so lineage
-    // (manifest `turns_truncated`) sees it instead of a silent cap. The
-    // flag is CONSERVATIVE, like the reference's page-count warning, and
-    // each parser derives it in its own coordinates: PDF at the CHUNK
-    // bound (single-window overflows are chunk-processed, not dropped),
-    // HTML from the tokenizer's cap-hit cursor.
-    val routed = staged2.withColumn("__x",
+    val routed = staged.withColumn("__x",
       when(fmt === "blank", blankRes)
-        .when(fmt === "pdf", pdfRes(plain, wspan, p))
-        .when(fmt === "html", htmlRes(plain, wspan, h))
-        .when(fmt === "tooljson", toolJsonRes(tj, col("__tjs"), plain, wspan))
-        .otherwise(plainRes(plain, wspan)))
-      .withColumn("__trunc", when(fmt === "pdf", p.getField("truncated"))
-        .when(fmt === "html", h.getField("truncated")).otherwise(lit(false)))
+        .when(fmt === "pdf", pdfRes(raw, p))
+        .when(fmt === "html", htmlRes(raw, h))
+        .when(fmt === "tooljson", toolJsonRes(raw, tj, col("__tjs")))
+        .otherwise(plainRes(raw)))
 
     routed.select(Seq(col("conv_id"), col("turn_idx"),
       col("__x.path").as("path"),
@@ -243,7 +225,7 @@ object Extract {
       col("__x.status").as("status"),
       col("__x.blocks_total").as("blocks_total"),
       col("__x.blocks_kept").as("blocks_kept"),
-      col("__trunc").as("truncated")) ++
+      col("__x.truncated").as("truncated")) ++
       passThrough.map(col): _*)
   }
 }

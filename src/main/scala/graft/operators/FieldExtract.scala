@@ -2,6 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
+
+import graft.expressions.{FirstDoubleChain, FirstIntChain, FirstStrChain, KieBest, NativeCall, NormIntChain, RegexReplaceChain}
 
 /** KIE field extraction — the reference pipeline's actual purpose:
   * regex fallback chains with OCR-tolerant classes, first-match-wins
@@ -203,20 +207,20 @@ object FieldExtract {
 
   private def ci(p: String): String = "(?i)" + p
 
-  private def col2e(c: Column) =
-    org.apache.spark.sql.graftbridge.ColumnBridge.expr(c)
-  private def e2col(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(e)
+  /** one regex-chain evaluator per row ([[NativeCall.evaluator]]) */
+  private def chain(evaluator: Serializable, dataType: DataType,
+      text: Column): Column =
+    column(NativeCall.evaluator(evaluator, dataType, expr(text)))
 
   /** Apply a rule list sequentially (X7/X8) — native
-    * [[graft.expressions.RegexReplaceChain]]; semantics identical to
+    * [[RegexReplaceChain]]; semantics identical to
     * chained `regexp_replace` (same Java regex engine, asserted by the
     * x05 oracle compare), but one expression node instead of 8-13 —
     * the inlined chains blew whole-stage codegen past Janino's 64 KB
     * method limit and the whole projection ran interpreted.
     */
   def applyRules(text: Column, rules: Seq[Rule], caseInsensitive: Boolean): Column =
-    e2col(graft.expressions.RegexReplaceChain(col2e(text), rules, caseInsensitive))
+    chain(RegexReplaceChain(rules, caseInsensitive), StringType, text)
 
   /** declarative spec form of [[applyRules]] (cross-checked in tests) */
   def applyRulesDeclarative(text: Column, rules: Seq[Rule],
@@ -253,10 +257,10 @@ object FieldExtract {
   /** first-match-wins int chain with per-pattern range guard: a pattern
     * whose value fails the guard falls through to the NEXT pattern
     * (mirrors the reference's `break`-only-when-in-range loops).
-    * Native [[graft.expressions.FirstIntChain]].
+    * Native [[FirstIntChain]].
     */
   def firstInt(text: Column, pats: Seq[String], lo: Int, hi: Int): Column =
-    e2col(graft.expressions.FirstIntChain(col2e(text), pats, lo, hi, 7))
+    chain(FirstIntChain(pats, lo, hi, 7), IntegerType, text)
 
   /** declarative spec form of [[firstInt]] (cross-checked in tests) */
   def firstIntDeclarative(text: Column, pats: Seq[String], lo: Int,
@@ -267,23 +271,23 @@ object FieldExtract {
     }: _*)
 
   /** first-match-wins string chain (no guard) —
-    * native [[graft.expressions.FirstStrChain]].
+    * native [[FirstStrChain]].
     */
   def firstStr(text: Column, pats: Seq[String], idx: Int = 1): Column =
-    e2col(graft.expressions.FirstStrChain(col2e(text), pats, idx))
+    chain(FirstStrChain(pats, idx), StringType, text)
 
   /** first-match-wins fractional chain with range guard (water, X5) —
-    * native [[graft.expressions.FirstDoubleChain]].
+    * native [[FirstDoubleChain]].
     */
   def firstDouble(text: Column, pats: Seq[String], lo: Double,
       hi: Double): Column =
-    e2col(graft.expressions.FirstDoubleChain(col2e(text), pats, lo, hi))
+    chain(FirstDoubleChain(pats, lo, hi), DoubleType, text)
 
   /** X1/X2 advanced chain: first pattern whose normalised value is
-    * non-null — native [[graft.expressions.NormIntChain]].
+    * non-null — native [[NormIntChain]].
     */
   def normChain(text: Column, pats: Seq[String]): Column =
-    e2col(graft.expressions.NormIntChain(col2e(text), pats, 9))
+    chain(NormIntChain(pats, 9), IntegerType, text)
 
   /** declarative spec form of [[normChain]] (cross-checked in tests) */
   def normChainDeclarative(text: Column, pats: Seq[String]): Column =
@@ -382,7 +386,6 @@ object FieldExtract {
     */
   def withFields(df: DataFrame, textCol: String = "bill"): DataFrame = {
     val t = col(textCol)
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr => ex}
     val staged = df
       .withColumn("__pre", preprocessOcrErrors(t))
       .withColumn("__ct", numericalCorrections(t))
@@ -392,7 +395,7 @@ object FieldExtract {
       // semantics as [[kieField]], which remains the declarative spec —
       // cross-checked in FieldExtractSpec; the declarative form measured
       // ~4 ms/row interpreted at sf0.1)
-      .withColumn("__kie", column(graft.expressions.KieBest(ex(col("__pre")))))
+      .withColumn("__kie", column(KieBest(expr(col("__pre")))))
       .withColumn("__ke", col("__kie.ke"))
       .withColumn("__kc", col("__kie.kc"))
 

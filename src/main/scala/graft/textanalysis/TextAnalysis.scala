@@ -120,13 +120,16 @@ object TextAnalysis {
   /** Rolling polynomial fingerprint of the text: fold chars as
     * (acc*31 + ascii(c)) mod 1e9+7 — deterministic, overflow-free in
     * 64-bit on both Spark and DuckDB, so the oracle can recompute it.
-    * Native single-pass expression ([[graft.expressions.Fingerprint]]);
+    * Native single-pass call ([[graft.expressions.Fingerprint]]);
     * the declarative form below is the cross-checked spec (it allocates
     * a one-char UTF8String per character — the dominant t01 allocation).
     */
   def fingerprint(text: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
-    column(graft.expressions.Fingerprint(expr(text)))
+    import org.apache.spark.sql.types.LongType
+    import graft.expressions.{Fingerprint, NativeCall}
+    column(NativeCall.static(Fingerprint.getClass, "evalUtf8", LongType,
+      Seq(expr(text))))
   }
 
   /** declarative spec form of [[fingerprint]] (cross-checked in tests) */

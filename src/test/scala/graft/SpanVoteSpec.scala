@@ -161,7 +161,7 @@ class SpanVoteSpec extends SparkSpecBase {
     val plan = toks.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"token-offset stage must not shuffle:\n$plan")
-    assert(plan.contains("token_spans"), plan)
+    assert(plan.contains("graft.expressions.TokenSpans.evalUtf8("), plan)
   }
 
   test("x07 end-to-end: elected tokens equal the golden corrected tokens") {

@@ -183,6 +183,24 @@ class TokenizerSpec extends AnyFunSuite {
     assert(PdfGlyphRuns.parse(big, 5).isEmpty)
   }
 
+  test("the parser accepts exactly the wrapping tags the pdf sniff accepts") {
+    import graft.expressions.TurnNative
+    import org.apache.spark.unsafe.types.UTF8String
+    // the sniff's `<[^>]{0,200}>` counts code points: a surrogate pair
+    // is one, so 150 astral chars (300 UTF-16 units) still wrap
+    def wrapped(inner: String) = "<" + inner + ">\n%PDF-1\nG 1 2 3 a\nG 4 5 6 b\n"
+    val astral = "\uD83D\uDE00"
+    val cases = Seq(("d" * 199, "pdf", 2), ("d" * 200, "pdf", 2),
+      ("d" * 201, "html", 0), (astral * 150, "pdf", 2), (astral * 200, "pdf", 2),
+      (astral * 201, "plain", 0))
+    for ((inner, fmt, n) <- cases) {
+      val s = wrapped(inner)
+      assert(TurnNative.sniff(UTF8String.fromString(s), null).toString === fmt,
+        inner.length)
+      assert(runs(s).length === n, inner.length)
+    }
+  }
+
   test("candidateCount equals the declarative G-line count on pdf payloads") {
     // PdfGlyphRuns.extract's confidence denominator; the staged Catalyst
     // form it replaced split the payload on \n and counted lines
