@@ -39,9 +39,7 @@ import graft.operators.Extract
   * the wide run stays ≥ ~26 s and the narrow ≥ ~95 s, with TWO complete
   * pairs fitting the scaling budget (SPARK_GRAFT_BENCH_TURNS_4N,
   * default 1.8 M turns for the (1,4) pair; at 600 k turns the wide
-  * configs measured fixed job overhead, not the engine). An optional
-  * tail pair (local[1] vs local[N] on a quarter-size input) anchors the
-  * per-core floor when N > 1.
+  * configs measured fixed job overhead, not the engine).
   *
   * Part 2 (runs LAST, inside the reserve) — headline queries from
   * SparkEntry at SPARK_GRAFT_SF_DIR, timed individually. Results are
@@ -382,7 +380,6 @@ object Bench {
     // narrow): the 4-core wide stays ≥ ~26 s even in a clean window
     // (68.6 k turns/s max measured) and the 1-core narrow ≥ ~95 s
     val turns4N = sys.env.getOrElse("SPARK_GRAFT_BENCH_TURNS_4N", "1800000").toLong
-    val turnsAnchor = turns4N / 4
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
     // wall-clock reserved for the query battery (part 2, run LAST): the
     // scaling loop never spends into this, so the battery always runs —
@@ -419,7 +416,7 @@ object Bench {
     val qNames = SparkEntry.queries.keys.toSeq.sorted
     var results: Map[String, Double] = qNames.map(_ -> -1.0).toMap
     var samples = Vector.empty[(Int, String, Long, Double, Double, Double, Int)]
-    def emitCurrent(big: String, anchor: String): Unit = {
+    def emitCurrent(big: String): Unit = {
       val qs = qNames.map(k => "\"" + k + f"""\":${results(k)}%.3f""")
         .mkString("{", ",", "}")
       // -1 ("not measured") until at least one query has a real timing —
@@ -444,11 +441,8 @@ object Bench {
       def derive(inputs: Double*)(f: => Double): Double =
         if (inputs.exists(v => v < 0 || v.isNaN || v.isInfinite)) -1.0
         else { val v = f; if (v.isNaN || v.isInfinite || v < 0) -1.0 else v }
-      val sec1 = minExtract(1, anchor)
-      val secNanchor = minExtract(n, anchor)
       val secN = minExtract(n, big)
       val sec4N = minExtract(four, big)
-      val tps1 = derive(sec1)(turnsAnchor / sec1)
       val tpsN = derive(secN)(turns4N / secN)
       val tps4N = derive(sec4N)(turns4N / sec4N)
       // Per-round pairs: each narrow pairs with the FASTEST wide of its
@@ -482,18 +476,18 @@ object Bench {
       val effRounds = roundPairs.map(p => f"${p._2}%.3f").mkString("[", ",", "]")
       val effControl = derive(ctlThr(four), ctlThr(n))(ctlThr(four) / ctlThr(n) / 4.0)
       val effNormalized = derive(effRaw, effControl)(effRaw / effControl)
-      val eff1toN = derive(secNanchor, tps1)((turnsAnchor / secNanchor) / tps1 / n)
+      // unmeasured (1 → n) anchor keys stay at -1 for parsers of the full key set
       val scaling =
-        f"""{"n_cores":$n,"4n_cores":$four,"turns":$turns4N,"anchor_turns":$turnsAnchor,""" +
-          f""""sec_1":$sec1%.1f,"sec_n_anchor":$secNanchor%.1f,"sec_n":$secN%.1f,"sec_4n":$sec4N%.1f,""" +
-          f""""turns_per_sec_1":$tps1%.1f,""" +
+        f"""{"n_cores":$n,"4n_cores":$four,"turns":$turns4N,"anchor_turns":-1,""" +
+          f""""sec_1":-1.0,"sec_n_anchor":-1.0,"sec_n":$secN%.1f,"sec_4n":$sec4N%.1f,""" +
+          f""""turns_per_sec_1":-1.0,""" +
           f""""turns_per_sec_n":$tpsN%.1f,"turns_per_sec_4n":$tps4N%.1f,""" +
           f""""efficiency":$effRaw%.3f,"efficiency_rounds":$effRounds,""" +
           f""""efficiency_pair":$effPair%.3f,""" +
           f""""efficiency_minima":$effMinima%.3f,""" +
           f""""control_efficiency":$effControl%.3f,""" +
           f""""normalized_efficiency":$effNormalized%.3f,""" +
-          f""""efficiency_1_to_n":$eff1toN%.3f,"samples":${samples.size}}"""
+          f""""efficiency_1_to_n":-1.000,"samples":${samples.size}}"""
       emit(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","scaling":$scaling}""")
     }
 
@@ -501,8 +495,7 @@ object Bench {
     val inBase =
       if (new java.io.File("/dev/shm").canWrite) "/dev/shm" else "/tmp"
     val big = s"$inBase/graft_bench_turns_4n"
-    val anchor = s"$inBase/graft_bench_turns_1n"
-    emitCurrent(big, anchor)
+    emitCurrent(big)
 
     // ---- part 1 (FIRST): N vs 4N scaling, alternating fresh child JVMs.
     // The scaling pair is the one unmet north-rule criterion three rounds
@@ -510,8 +503,7 @@ object Bench {
     // ran first and left the children nothing, so the pair now spends the
     // budget FIRST and the battery runs inside its own reserve afterwards
     // (children need no battery state; the incremental emitter tolerates
-    // any ordering). Only the big input is generated up front — the
-    // anchor input is deferred to the optional tail.
+    // any ordering).
     //
     // The pair is (n, 4n) = (1, 4) here — derived once above, shared
     // with the emitter; the wide config claims only an eighth of the
@@ -549,8 +541,7 @@ object Bench {
     // last observed wall cost per (config, input) for budget gating,
     // seeded from round 3/4 measurements with degraded-phase headroom
     val est = scala.collection.mutable.Map[(Int, String), Double](
-      (n, big) -> 190.0, (four, big) -> 85.0,
-      (1, anchor) -> 150.0, (n, anchor) -> 70.0)
+      (n, big) -> 190.0, (four, big) -> 85.0)
     // what the scaling loop may still spend without invading the reserve
     def scalingLeft: Double = budget - elapsed - reserve
     // wall cost of the most recent ATTEMPTED child (None when the last
@@ -595,7 +586,7 @@ object Bench {
         System.err.println(
           f"[bench] round $round local[$c] ($turns turns): extract $e%.2f s, control $ctl%.2f s, bracket $br%.2f s")
         samples :+= ((c, dir, turns, e, ctl, br, round))
-        emitCurrent(big, anchor)
+        emitCurrent(big)
         e
       }
       lastAttemptWall = Some(elapsed - t0)
@@ -719,35 +710,10 @@ object Bench {
         tryChild(four, big, turns4N, r)
         tryChild(n, big, turns4N, r)
       }
-
-      // optional tail: the (1 → n) anchor pair on the quarter-size input
-      // (per-core throughput floor + a narrow-width efficiency point),
-      // only when the scaling budget still covers generating it + both
-      // children. Degenerate when the main narrow already runs at 1 core
-      // — the per-core floor then comes from the main pair itself.
-      if (n > 1 && scalingLeft > est((1, anchor)) + est((n, anchor)) + 30) {
-        val gen2 = session(cpus)
-        val anchorReady =
-          try {
-            TranscriptGen.inputDf(gen2, turnsAnchor)
-              .write.mode("overwrite").parquet(anchor)
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] anchor input write failed: ${e.getMessage}")
-            false
-          }
-        gen2.stop()
-        if (anchorReady) {
-          tryChild(1, anchor, turnsAnchor, 0)
-          tryChild(n, anchor, turnsAnchor, 0)
-        }
-      }
     }
     // free the tmpfs inputs before the battery — measurement scratch
-    Seq(big, anchor).foreach { d =>
-      val f = new java.io.File(d)
-      if (f.exists()) rmTree(f)
-    }
+    val bigFile = new java.io.File(big)
+    if (bigFile.exists()) rmTree(bigFile)
 
     // ---- part 2 (LAST, inside the reserve): headline queries at full
     // parallelism. A warm-up pass at the smallest available scale factor
@@ -774,7 +740,7 @@ object Bench {
           catch { case _: Throwable => -1.0 }
         results += name -> sec
         System.err.println(f"[bench] $name%-24s $sec%8.2f s")
-        emitCurrent(big, anchor)
+        emitCurrent(big)
       } else {
         System.err.println(s"[bench] $name skipped (budget exhausted)")
       }
@@ -803,7 +769,7 @@ object Bench {
       if (all.size == 3) results += name -> all(1)
     }
     spark.stop()
-    emitCurrent(big, anchor)
+    emitCurrent(big)
     System.err.println(f"[bench] done at $elapsed%.0f s")
   }
 }

@@ -25,23 +25,26 @@ import graft.plans.ExtractionJob
   */
 object SubmitMain {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: spark-submit --class graft.SubmitMain <jar> " +
-        "<inputParquet|gen:N> <outDir> [numBuckets] [waveBuckets]")
+    val usage = "usage: spark-submit --class graft.SubmitMain <jar> " +
+      "<inputParquet|gen:N> <outDir> [numBuckets] [waveBuckets]"
+    require(args.length >= 2, usage)
+    def number[T](s: String, parse: String => Option[T]): T =
+      parse(s).getOrElse(throw new IllegalArgumentException(s"not a number: '$s'; $usage"))
+    val turns =
+      if (args(0).startsWith("gen:")) Some(number(args(0).stripPrefix("gen:"), _.toLongOption))
+      else None
+    val numBuckets = if (args.length > 2) number(args(2), _.toIntOption) else 32
+    // wave-commit granularity: bound a mid-run kill's blast radius to
+    // waveBuckets buckets (see ExtractionJob.run scaladoc)
+    val waveBuckets = if (args.length > 3) Some(number(args(3), _.toIntOption)) else None
     val spark = SparkSession.builder()
       .appName("graft-extract")
       .getOrCreate()
     try {
       val t0 = System.nanoTime()
-      val input =
-        if (args(0).startsWith("gen:"))
-          gen.TranscriptGen.inputDf(spark, args(0).stripPrefix("gen:").toLong)
-        else spark.read.parquet(args(0))
-      val cfg = ExtractionJob.Config(outDir = args(1),
-        numBuckets = if (args.length > 2) args(2).toInt else 32,
-        // wave-commit granularity: bound a mid-run kill's blast radius
-        // to waveBuckets buckets (see ExtractionJob.run scaladoc)
-        waveBuckets = if (args.length > 3) Some(args(3).toInt) else None)
+      val input = turns.fold(spark.read.parquet(args(0)))(gen.TranscriptGen.inputDf(spark, _))
+      val cfg = ExtractionJob.Config(outDir = args(1), numBuckets = numBuckets,
+        waveBuckets = waveBuckets)
       // the manifest rows THIS run committed (a local frame: no Spark job)
       val rows = ExtractionJob.run(spark, input, cfg).collect()
       def total(c: String): Long =

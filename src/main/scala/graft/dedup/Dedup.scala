@@ -140,16 +140,6 @@ object Dedup {
     column(NativeCall.static(ShingleHashes.getClass, "evalUtf8",
       ShingleHashes.outType, Seq(expr(text), expr(lit(w)))))
 
-  /** declarative spec form of [[shingleHashes]] (cross-checked in tests) */
-  def shingleHashesDeclarative(text: Column, w: Int = 3): Column = {
-    val toks = split(trim(text), "\\s+")
-    val hs = transform(toks, t => xxhash64(t))
-    val n = size(hs)
-    when(n < w, array(xxhash64(array_join(toks, " "))))
-      .otherwise(transform(sequence(lit(1), n - (w - 1)),
-        i => xxhash64(slice(hs, i, lit(w)))))
-  }
-
   /** Exact n-gram Jaccard verification of candidate pairs (convenience
     * form computing shingles from text — prefer the staged form when the
     * shingle frame already exists).

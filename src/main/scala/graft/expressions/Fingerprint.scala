@@ -4,8 +4,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling polynomial fingerprint `fold(acc·31 + char) mod 1e9+7` as ONE
   * native expression — the [[Simhash]]/[[MinhashSig]] escalation path:
-  * the declarative form ([[graft.textanalysis.TextAnalysis
-  * .fingerprintDeclarative]], kept as the cross-checked spec) materializes
+  * the declarative form (`fingerprintDeclarative`, the cross-checked spec
+  * twin in `src/test`) materializes
   * a one-character UTF8String PER CHARACTER via `split(text, "")` before
   * folding — the dominant allocation in the t01 analysis pass.
   *

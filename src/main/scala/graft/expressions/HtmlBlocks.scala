@@ -22,10 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the graft analog of the reference's text-detection stage (boxes +
   * per-box features, `pytorch_mobile/ocr_pipeline.py:447-533`).
-  * [[HtmlBlocks.extract]] adds the classification and confidence on top
-  * (the html path's whole per-row job, staged by `graft.operators.Extract`);
-  * the confidence-threshold routing stays in Extract's declarative τ-ladder,
-  * mirroring the reference's split between detection and routing.
+  * [[HtmlBlocks.extract]] adds the classification and confidence on top;
+  * [[TurnNative.extract]] arbitrates its selections on the τ-ladder.
   *
   * Replaced by a static call of [[HtmlBlocks.evalUtf8]] ([[NativeCall]]).
   * Per-row cost is linear in payload size.
@@ -48,25 +46,18 @@ object HtmlBlocks {
   /** classifier: minimum words for a content block (Boilerpipe-style) */
   val MinWords = 8
 
-  /** NOT NULL struct of the given fields */
-  private[expressions] def requiredStruct(fields: (String, DataType)*): StructType =
-    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  /** One block selection and its confidence. */
+  final case class Selection(blocks: Vector[Block], conf: Double) {
+    /** the blocks' texts, newline-joined */
+    def text: String = blocks.map(_.text).mkString("\n")
+  }
 
-  /** raw-char spans, the `spans` column type of every extraction path */
-  val spansType: ArrayType = ArrayType(
-    requiredStruct("start" -> IntegerType, "end" -> IntegerType), containsNull = false)
+  /** [[extract]]'s result: the block count, the cap flag, and the primary
+    * (`kept`) and aggressive (`aggr`) selections, each None when empty. */
+  final case class Extracted(total: Int, truncated: Boolean,
+      kept: Option[Selection], aggr: Option[Selection])
 
-  /** one assembled block selection: joined text, spans, confidence, size */
-  private val candidateType = requiredStruct("text" -> StringType,
-    "spans" -> spansType, "conf" -> DoubleType, "n" -> IntegerType)
-
-  /** [[extract]] result: all blocks, the cap flag, and the primary (`kept`)
-    * and aggressive (`aggr`) selections — each NULL when it is empty */
-  val extractType: StructType =
-    requiredStruct("total" -> IntegerType, "truncated" -> BooleanType)
-      .add("kept", candidateType).add("aggr", candidateType)
-
-  /** The html path's per-row job, one call: tokenize, then assemble the
+  /** The html path's parse, one call: tokenize, then select the
     * density-classified blocks (`kept`, see [[keep]]) and the aggressive
     * re-parse (`aggr`: every non-boiler block regardless of density, its
     * confidence halved — the re-parse penalty). Confidence is the
@@ -74,12 +65,11 @@ object HtmlBlocks {
     * (1 - link_density²) scores. `truncated`: the [[MaxBlocks]] cap fired
     * with non-whitespace content left past the stop point (`capCursor`).
     */
-  def extract(input: UTF8String): InternalRow = {
-    val blocks = tokenize(input.toString)
+  def extract(s: String): Extracted = {
+    val blocks = tokenize(s)
     val n = blocks.length
-    InternalRow(n, n == MaxBlocks && blocks.last.capCursor >= 0,
-      candidate(blocks.filter(keep), 1.0),
-      candidate(blocks.filterNot(_.boiler), 0.5))
+    Extracted(n, n == MaxBlocks && blocks.last.capCursor >= 0,
+      select(blocks.filter(keep), 1.0), select(blocks.filterNot(_.boiler), 0.5))
   }
 
   /** Boilerpipe-style keep predicate with Readability-style subtree
@@ -97,14 +87,12 @@ object HtmlBlocks {
         (b.cmaxWords < MinWords && b.cwords >= MinWords * 2 &&
           b.clinkWords * 3 <= b.cwords))
 
-  private def candidate(bs: Vector[Block], confScale: Double): InternalRow =
-    if (bs.isEmpty) null
-    else InternalRow(UTF8String.fromString(bs.map(_.text).mkString("\n")),
-      new GenericArrayData(bs.map[Any](b => InternalRow(b.start, b.end)).toArray),
-      geoMeanTopK(bs.map { b =>
-        val ld = b.linkWords.toDouble / b.words
-        1.0 - ld * ld
-      }.toArray) * confScale, bs.length)
+  private def select(bs: Vector[Block], confScale: Double): Option[Selection] =
+    if (bs.isEmpty) None
+    else Some(Selection(bs, geoMeanTopK(bs.map { b =>
+      val ld = b.linkWords.toDouble / b.words
+      1.0 - ld * ld
+    }.toArray) * confScale))
 
   /** Top-k geometric mean (reference `field_confidence`,
     * `pipeline.py:399-414`): floor each score at 1e-3, keep the top 80 %

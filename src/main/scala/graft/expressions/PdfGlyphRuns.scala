@@ -17,8 +17,8 @@ import graft.functions.TextFunctions
   * ARBITRARY order. The expression parses runs with raw char offsets and
   * performs the layout-analysis step: recursive XY-cut of the runs into
   * reading-order text lines (`line` field). [[PdfGlyphRuns.extract]] is the
-  * pdf path's whole per-row job on top of it (chunking, reading-order sort,
-  * line assembly, parse confidence), staged by `graft.operators.Extract`.
+  * pdf path's parse on top of it (chunking, reading-order sort, line
+  * assembly, parse confidence); [[TurnNative.extract]] routes its result.
   *
   * Reference analog: bbox detection + clockwise point ordering feeding
   * reading-order concatenation (`pytorch_mobile/ocr_pipeline.py:655-664`,
@@ -100,14 +100,19 @@ object PdfGlyphRuns {
   final case class Run(var line: Int, x: Int, y: Int, text: String,
       start: Int, end: Int)
 
-  /** The pdf path's per-row job, one call: parse the chunk windows (one
-    * scan), sort the runs into reading order (line, x, raw offset — a
-    * total order), join them (a space within a line, a newline between
-    * lines) and derive the parse confidence: parsed runs over candidate
-    * `G ` lines ([[candidateCount]]).
+  /** [[extract]]'s result: reading-order text, the runs in that order,
+    * the parse confidence, the distinct line count and the chunk-cap flag.
     */
-  def extract(input: UTF8String): InternalRow = {
-    val s = input.toString
+  final case class Extracted(text: String, runs: Array[Run], conf: Double,
+      lines: Int, truncated: Boolean)
+
+  /** The pdf path's parse, one call: parse the chunk windows (one scan),
+    * sort the runs into reading order (line, x, raw offset — a total
+    * order), join them (a space within a line, a newline between lines)
+    * and derive the parse confidence: parsed runs over candidate `G `
+    * lines ([[candidateCount]]).
+    */
+  def extract(s: String): Extracted = {
     val cands = candidateCount(s)
     val cap = MaxChunks * MaxRuns
     val runs = scan(s, 0, cap).grouped(MaxRuns).zipWithIndex
@@ -121,16 +126,10 @@ object PdfGlyphRuns {
       if (k > 0) text.append(if (newLine) '\n' else ' ')
       text.append(r.text)
     }
-    InternalRow(UTF8String.fromString(text.toString),
-      new GenericArrayData(runs.map[Any](r => InternalRow(r.start, r.end))),
+    Extracted(text.toString, runs,
       if (cands > 0) runs.length.toDouble / cands else 0.0,
-      lines, runs.length, runs.length == cap && cands > cap)
+      lines, runs.length == cap && cands > cap)
   }
-
-  val extractType: StructType = HtmlBlocks.requiredStruct(
-    "text" -> StringType, "spans" -> HtmlBlocks.spansType,
-    "conf" -> DoubleType, "lines" -> IntegerType, "runs" -> IntegerType,
-    "truncated" -> BooleanType)
 
   private val readingOrder = java.util.Comparator.comparingInt[Run](_.line)
     .thenComparingInt(_.x).thenComparingInt(_.start)

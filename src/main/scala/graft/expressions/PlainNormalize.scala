@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * full-Extract pass at 400 k turns. Here the token gate is a hand
   * character-class loop and the whole output builds into one buffer.
   *
-  * Semantics are IDENTICAL to the declarative pipeline, kept as
-  * [[graft.functions.TextFunctions.plainNormalizeDeclarative]] and
+  * Semantics are IDENTICAL to the declarative pipeline, kept as the
+  * `plainNormalizeDeclarative` spec twin in `src/test` and
   * cross-checked in FunctionsSpec (hand edge cases + a ScalaCheck
   * equivalence property over confusables/whitespace/control/unicode
   * alphabets):
@@ -63,8 +63,12 @@ object PlainNormalize {
     c < 128 && gateTable(c)
 
   /** static eval shared by interpreted and generated code paths */
-  def evalUtf8(input: UTF8String): UTF8String = {
-    val s = TokenSpans.trimJavaWs(input.toString)
+  def evalUtf8(input: UTF8String): UTF8String =
+    UTF8String.fromString(normalize(input.toString))
+
+  /** the normalization of an already-decoded payload */
+  def normalize(input: String): String = {
+    val s = TokenSpans.trimJavaWs(input)
     val toks = TokenSpans.splitJavaWs(s)
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
@@ -86,6 +90,6 @@ object PlainNormalize {
       } else sb.append(t)
       i += 1
     }
-    UTF8String.fromString(sb.toString)
+    sb.toString
   }
 }

@@ -4,22 +4,26 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions.{HtmlSniffRe, JsonSniffRe, PdfSniffRe}
 
-/** The per-turn routing checks of [[graft.operators.Extract]] as static
-  * calls, each staged through one [[NativeCall.static]] like
-  * [[HtmlBlocks.extract]]: the content sniff, the blank check, the
-  * whole-content span and the tool-JSON value span. Each replaces a chain
-  * of regex and string expressions whose generated code pushed Extract's
-  * row loop past HotSpot's 8,000-byte JIT limit (MethodSizeSpec).
+/** One turn of [[graft.operators.Extract]] as static calls: the content
+  * sniff, then [[extract]] — the per-format parse
+  * ([[HtmlBlocks.extract]], [[PdfGlyphRuns.extract]], the tool-JSON value
+  * span or [[PlainNormalize]]) and the τ-ladder that picks the result.
+  * The blank check, the whole-content span and the tool-JSON value span
+  * are also SQL-level functions of their own
+  * ([[graft.functions.TextFunctions]]). Each call replaces Catalyst
+  * expressions whose generated code pushed Extract's row loop past
+  * HotSpot's 8,000-byte JIT limit (MethodSizeSpec).
   *
   * The regexes are the [[graft.functions.TextFunctions]] constants the
   * DuckDB twins are generated from; all are `\A`-anchored, so `lookingAt`
   * is `rlike`'s `find(0)` without the retry at every offset. The
-  * declarative forms are the spec twins in `src/test` (FunctionsSpec).
+  * declarative forms, the Catalyst ladder included, are the spec twins in
+  * `src/test` (FunctionsSpec, ExtractTwinSpec).
   */
 object TurnNative {
 
@@ -57,31 +61,42 @@ object TurnNative {
       else Plain
     }
 
-  /** `wholeSpan`'s type: one `{start, end}` or none */
+  /** raw-char spans `{start, end}`, the `spans` type of every path */
   val wholeSpanType: ArrayType = ArrayType(StructType(Seq(
     StructField("start", IntegerType), StructField("end", IntegerType))))
 
   /** Java-regex `\s`: space, \t, \n, \x0B, \f, \r */
-  private def javaWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+  private def javaWs(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  private def span(start: Int, end: Int): ArrayData =
+    new GenericArrayData(Array[Any](InternalRow(start, end)))
+
+  private def noSpans: ArrayData = new GenericArrayData(Array.empty[Any])
 
   /** The content region between leading and trailing `\s` runs, in code
-    * points (Spark `length`); empty for NULL or all-`\s` text. The runs
-    * are ASCII, so a byte scan from each end counts their chars.
+    * points (Spark `length`); empty for NULL or all-`\s` text.
     */
-  def wholeSpan(text: UTF8String): ArrayData = {
-    val n = if (text == null) 0 else text.numBytes
+  def wholeSpan(text: UTF8String): ArrayData =
+    if (text == null) noSpans else wholeSpan(text.toString)
+
+  /** [[wholeSpan]] of decoded text: the `\s` runs are ASCII, so their
+    * char counts are code-point counts
+    */
+  private def wholeSpan(s: String): ArrayData = {
     var b = 0
-    while (b < n && javaWs(text.getByte(b))) b += 1
-    var e = n
-    while (e > b && javaWs(text.getByte(e - 1))) e -= 1
-    new GenericArrayData(
-      if (e == b) Array.empty[Any]
-      else Array[Any](InternalRow(b, text.numChars - (n - e))))
+    while (b < s.length && javaWs(s.charAt(b))) b += 1
+    var e = s.length
+    while (e > b && javaWs(s.charAt(e - 1))) e -= 1
+    if (e == b) noSpans else span(b, b + s.codePointCount(b, e))
   }
 
   /** [[toolJsonSpan]]'s result */
-  val toolJsonType: StructType = HtmlBlocks.requiredStruct(
-    "spans" -> HtmlBlocks.spansType, "conf" -> DoubleType)
+  val toolJsonType: StructType = StructType(Seq(
+    StructField("spans", ArrayType(StructType(Seq(
+      StructField("start", IntegerType, nullable = false),
+      StructField("end", IntegerType, nullable = false))), containsNull = false),
+      nullable = false),
+    StructField("conf", DoubleType, nullable = false)))
 
   private val OutputKey = UTF8String.fromString("\"output\"")
   private val TextMarker = UTF8String.fromString("\"text\":\"")
@@ -98,8 +113,115 @@ object TurnNative {
     val marker = if (out < 0) -1 else raw.indexOf(TextMarker, out)
     val start = marker + TextMarker.numChars
     val end = start + t.numChars
-    if (marker >= 0 && raw.substring(start, end) == t)
-      InternalRow(new GenericArrayData(Array[Any](InternalRow(start, end))), 1.0)
+    if (marker >= 0 && raw.substring(start, end) == t) InternalRow(span(start, end), 1.0)
     else InternalRow(wholeSpan(raw), 0.9)
+  }
+
+  // ------------------------------------------------------------- extract
+
+  /** Confidence ladder (reference `config.py:10-12`: accept 0.95 /
+    * enhance 0.90 / escalate 0.85; routing `pipeline.py:1984-2050`): a
+    * parse at or above TauEnhance is accepted as-is; below it the
+    * alternate parses of the SAME row (aggressive re-parse, plain
+    * normalization) are compared and whichever confidence wins is kept —
+    * the scale-correct form of the reference's "retry at 600 DPI and keep
+    * whichever is better" (a filter+union second pass would double the
+    * input scan at 100 TB). The escalate tier (<0.85 → LLM) has no Spark
+    * analog by design; keep-better best-effort applies.
+    */
+  val TauEnhance = 0.90
+
+  /** fixed confidence of the plain-normalization alternative */
+  val PlainAltConf = 0.3
+
+  /** [[extract]]'s result, Extract's output columns. `truncated` is the
+    * truncation lineage (reference warnings trail, `pipeline.py:2799-2801`):
+    * hostile payloads stop at the parsers' hard caps, and the flag records
+    * that content MAY have been dropped, so the manifest's
+    * `turns_truncated` sees it instead of a silent cap. Each parser derives
+    * it in its own coordinates (PDF at the chunk bound, HTML from the
+    * tokenizer's cap-hit cursor), and every result of a parsed path,
+    * the plain alternative included, carries its parser's flag.
+    */
+  val extractType: StructType = StructType(Seq(
+    StructField("path", StringType, nullable = false),
+    StructField("text", StringType),
+    StructField("spans", wholeSpanType),
+    StructField("confidence", DoubleType),
+    StructField("status", StringType, nullable = false),
+    StructField("blocks_total", IntegerType),
+    StructField("blocks_kept", IntegerType),
+    StructField("truncated", BooleanType)))
+
+  private val Success = UTF8String.fromString("success")
+  private val Fallback = UTF8String.fromString("fallback")
+
+  /** One turn's extraction, routed by its sniffed format `fmt`; `toolText`
+    * is the parsed `$.output.text` of a tooljson turn (NULL when it does
+    * not parse). The text is decoded at most once. Blank turns are empty;
+    * tool results whose value parsed report it ([[toolJsonSpan]]); pdf
+    * and html parses go through the τ-ladder; plain text is normalized.
+    * Every "fallback" result outside pdf and html is the plain
+    * alternative ([[plainAlt]]).
+    */
+  def extract(text: UTF8String, fmt: UTF8String, toolText: UTF8String): InternalRow =
+    if (fmt == Blank)
+      result(Blank, UTF8String.EMPTY_UTF8, noSpans, 0.0, Blank, 0, 0, truncated = false)
+    else if (fmt == ToolJson && toolText != null) {
+      val sc = toolJsonSpan(text, toolText)
+      result(ToolJson, toolText, sc.getArray(0), sc.getDouble(1), Success, 1, 1,
+        truncated = false)
+    } else {
+      val s = text.toString
+      if (fmt == Pdf) pdf(s)
+      else if (fmt == Html) html(s)
+      else if (fmt == ToolJson) plainAlt(s, ToolJson, 1, truncated = false)
+      else result(Plain, UTF8String.fromString(PlainNormalize.normalize(s)),
+        wholeSpan(s), 1.0, Success, 1, 1, truncated = false)
+    }
+
+  private def result(path: UTF8String, text: UTF8String, spans: ArrayData,
+      conf: Double, status: UTF8String, total: Int, kept: Int,
+      truncated: Boolean): InternalRow =
+    InternalRow(path, text, spans, conf, status, total, kept, truncated)
+
+  /** The plain-normalization alternative a low-confidence parse falls
+    * back to, at [[PlainAltConf]] with no blocks kept.
+    */
+  private def plainAlt(s: String, path: UTF8String, total: Int,
+      truncated: Boolean): InternalRow =
+    result(path, UTF8String.fromString(PlainNormalize.normalize(s)), wholeSpan(s),
+      PlainAltConf, Fallback, total, 0, truncated)
+
+  /** html τ-ladder: the primary selection at ≥ [[TauEnhance]] is accepted;
+    * below that, keep-better across primary, aggressive re-parse and the
+    * plain alternative (primary wins ties; an empty selection competes at
+    * -1). Ladder-chosen alternatives report status "fallback".
+    */
+  private def html(s: String): InternalRow = {
+    val h = HtmlBlocks.extract(s)
+    val ck = h.kept.fold(-1.0)(_.conf)
+    val ca = h.aggr.fold(-1.0)(_.conf)
+    def chosen(c: HtmlBlocks.Selection, status: UTF8String) =
+      result(Html, UTF8String.fromString(c.text),
+        new GenericArrayData(c.blocks.map[Any](b => InternalRow(b.start, b.end)).toArray),
+        c.conf, status, h.total, c.blocks.length, h.truncated)
+    if (ck >= TauEnhance || (ck >= ca && ck >= PlainAltConf)) chosen(h.kept.get, Success)
+    else if (ca >= math.max(ck, PlainAltConf)) chosen(h.aggr.get, Fallback)
+    // best-effort return (`pipeline.py:2052-2065`): the plain
+    // normalization of the raw payload beats everything parsed
+    else plainAlt(s, Html, h.total, h.truncated)
+  }
+
+  /** pdf τ-ladder: the plain alternative IS the pdf path's alternative —
+    * zero runs, or a run fraction below [[PlainAltConf]], returns it.
+    */
+  private def pdf(s: String): InternalRow = {
+    val p = PdfGlyphRuns.extract(s)
+    if (p.runs.nonEmpty && p.conf >= PlainAltConf)
+      result(Pdf, UTF8String.fromString(p.text),
+        new GenericArrayData(p.runs.map[Any](r => InternalRow(r.start, r.end))),
+        p.conf, if (p.conf >= 1.0) Success else Fallback, p.lines, p.lines, p.truncated)
+    else plainAlt(s, Pdf, 0, p.truncated)
   }
 }

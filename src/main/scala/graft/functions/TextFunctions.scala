@@ -98,30 +98,12 @@ object TextFunctions {
     * ([[PlainNormalize]]; this is the extraction job's
     * hot stage: every plain/tooljson turn and every τ-ladder fallback
     * pays it, and the declarative form spent 3.1 of a 4.0 s full-Extract
-    * pass in per-token regex work). The declarative pipeline is kept
-    * below as the cross-checked spec twin.
+    * pass in per-token regex work). The declarative pipeline is the
+    * cross-checked spec twin in `src/test`.
     */
   def plainNormalize(text: Column): Column =
-    when(isBlank(text), lit("")).otherwise(normalizeNonBlank(text))
-
-  /** [[plainNormalize]] without its blank gate — correct only on text
-    * known not to be blank (the gate is what maps control-only text to
-    * ""). Extract's ladder branches use it safely because [[sniff]]
-    * routes every blank row to "blank" first.
-    */
-  private[graft] def normalizeNonBlank(text: Column): Column =
-    column(NativeCall.static(PlainNormalize.getClass, "evalUtf8", StringType,
-      Seq(expr(text))))
-
-  /** declarative spec form of [[plainNormalize]] (equivalence-tested in
-    * FunctionsSpec): split on \s+ of the trimmed text, per-token gated
-    * translate, rejoin — higher-order `transform` over the token array.
-    */
-  def plainNormalizeDeclarative(text: Column): Column = {
-    val trimmed = regexp_replace(regexp_replace(text, "\\A\\s+", ""), "\\s+\\z", "")
-    when(isBlank(text), lit(""))
-      .otherwise(array_join(transform(split(trimmed, "\\s+"), w => correctToken(w)), " "))
-  }
+    when(isBlank(text), lit("")).otherwise(column(NativeCall.static(
+      PlainNormalize.getClass, "evalUtf8", StringType, Seq(expr(text)))))
 
   /** Top-k geometric-mean confidence over an array<double> of block/token
     * scores — the reference's `field_confidence` aggregate
@@ -145,29 +127,13 @@ object TextFunctions {
 
   /** Whitespace tokens with offsets in the single-space-collapsed string,
     * `array<struct<tok,start,end>>` — native single pass
-    * ([[TokenSpans]]); the declarative spec twin is
-    * [[tokenSpansDeclarative]] (cross-checked in SpanVoteSpec). Keeps the
+    * ([[TokenSpans]]); the declarative spec twin `tokenSpansDeclarative`
+    * lives in `src/test` (cross-checked in SpanVoteSpec). Keeps the
     * ensemble path's token-offset stage NARROW — the posexplode +
     * per-row-window prefix sum it replaces shuffles every token row.
     */
   def tokenSpans(text: Column): Column =
     column(TokenSpans(expr(text)))
-
-  /** declarative spec form of [[tokenSpans]]: running-sum offsets via an
-    * indexed transform over the token array (per-row, no shuffle — usable
-    * as a spec; the native form is the hot-path implementation).
-    */
-  def tokenSpansDeclarative(text: Column): Column = {
-    val trimmed =
-      regexp_replace(regexp_replace(text, "\\A\\s+", ""), "\\s+\\z", "")
-    val toks = split(trimmed, "\\s+")
-    val lens = transform(toks, t => length(t))
-    transform(toks, (t, i) => {
-      val off = (aggregate(slice(lens, lit(1), i), lit(0), (a, l) => a + l) +
-        i).cast("int")
-      struct(t.as("tok"), off.as("start"), (off + length(t)).cast("int").as("end"))
-    })
-  }
 
   /** Run-length collapse of repeated characters — the CTC-decode analog
     * (SURVEY G8; reference collapse-repeats-drop-blanks,

@@ -205,7 +205,7 @@ object FieldExtract {
 
   // ===================================================== Spark expressions
 
-  private def ci(p: String): String = "(?i)" + p
+  private[graft] def ci(p: String): String = "(?i)" + p
 
   /** one regex-chain evaluator per row ([[NativeCall.evaluator]]) */
   private def chain(evaluator: Serializable, dataType: DataType,
@@ -222,13 +222,6 @@ object FieldExtract {
   def applyRules(text: Column, rules: Seq[Rule], caseInsensitive: Boolean): Column =
     chain(RegexReplaceChain(rules, caseInsensitive), StringType, text)
 
-  /** declarative spec form of [[applyRules]] (cross-checked in tests) */
-  def applyRulesDeclarative(text: Column, rules: Seq[Rule],
-      caseInsensitive: Boolean): Column =
-    rules.foldLeft(text) { case (acc, (p, r)) =>
-      regexp_replace(acc, if (caseInsensitive) ci(p) else p, r)
-    }
-
   def preprocessOcrErrors(text: Column): Column =
     applyRules(text, preprocessRules, caseInsensitive = true)
 
@@ -240,7 +233,7 @@ object FieldExtract {
     * THROW, and the gate keeps Spark and DuckDB byte-identical on
     * pathological leading-zero strings where TRY_CAST semantics differ.
     */
-  private def gatedInt(digits: Column, maxLen: Int): Column =
+  private[graft] def gatedInt(digits: Column, maxLen: Int): Column =
     when(length(digits) <= maxLen, digits).cast("int")
 
   /** `_normalise_number` (X9): l→1 g→9 O→0, strip non-digits, null when
@@ -251,7 +244,7 @@ object FieldExtract {
       nullif(regexp_replace(translate(s, "lgO", "190"), "[^0-9]", ""), lit("")),
       maxLen = 9)
 
-  private def extractGroup(text: Column, p: String, idx: Int = 1): Column =
+  private[graft] def extractGroup(text: Column, p: String, idx: Int = 1): Column =
     nullif(regexp_extract(text, ci(p), idx), lit(""))
 
   /** first-match-wins int chain with per-pattern range guard: a pattern
@@ -261,14 +254,6 @@ object FieldExtract {
     */
   def firstInt(text: Column, pats: Seq[String], lo: Int, hi: Int): Column =
     chain(FirstIntChain(pats, lo, hi, 7), IntegerType, text)
-
-  /** declarative spec form of [[firstInt]] (cross-checked in tests) */
-  def firstIntDeclarative(text: Column, pats: Seq[String], lo: Int,
-      hi: Int): Column =
-    coalesce(pats.map { p =>
-      val v = gatedInt(translate(extractGroup(text, p), ",", ""), maxLen = 7)
-      when(v.between(lo, hi), v)
-    }: _*)
 
   /** first-match-wins string chain (no guard) —
     * native [[FirstStrChain]].
@@ -288,10 +273,6 @@ object FieldExtract {
     */
   def normChain(text: Column, pats: Seq[String]): Column =
     chain(NormIntChain(pats, 9), IntegerType, text)
-
-  /** declarative spec form of [[normChain]] (cross-checked in tests) */
-  def normChainDeclarative(text: Column, pats: Seq[String]): Column =
-    coalesce(pats.map(p => normaliseNumber(extractGroup(text, p))): _*)
 
   /** cross-field validation (`_validate_extraction_values`,
     * `pipeline.py:2200-2221`): vacuously true when either side is null.

@@ -123,6 +123,10 @@ object ExtractionJob {
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config,
       onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
+    // a zero saltChunk makes every salted key NULL (ANSI off: salting
+    // silently stops) or fails the first write task (ANSI on)
+    require(cfg.numBuckets > 0, s"numBuckets must be positive, got ${cfg.numBuckets}")
+    require(cfg.saltChunk > 0, s"saltChunk must be positive, got ${cfg.saltChunk}")
     val waves: Seq[Option[Seq[Int]]] = cfg.waveBuckets match {
       case None => Seq(onlyBuckets)
       case Some(w) =>

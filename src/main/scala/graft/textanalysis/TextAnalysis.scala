@@ -121,8 +121,9 @@ object TextAnalysis {
     * (acc*31 + ascii(c)) mod 1e9+7 — deterministic, overflow-free in
     * 64-bit on both Spark and DuckDB, so the oracle can recompute it.
     * Native single-pass call ([[graft.expressions.Fingerprint]]);
-    * the declarative form below is the cross-checked spec (it allocates
-    * a one-char UTF8String per character — the dominant t01 allocation).
+    * the declarative form is the cross-checked spec twin
+    * `fingerprintDeclarative` in `src/test` (it allocates a one-char
+    * UTF8String per character — the dominant t01 allocation).
     */
   def fingerprint(text: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
@@ -131,11 +132,6 @@ object TextAnalysis {
     column(NativeCall.static(Fingerprint.getClass, "evalUtf8", LongType,
       Seq(expr(text))))
   }
-
-  /** declarative spec form of [[fingerprint]] (cross-checked in tests) */
-  def fingerprintDeclarative(text: Column): Column =
-    aggregate(split(text, ""), lit(0L),
-      (acc, c) => (acc * 31 + ascii(c)) % 1000000007L)
 
   /** Full per-document analysis projection over a `documents`-shaped
     * table. The token arrays and every shared sub-feature are STAGED as

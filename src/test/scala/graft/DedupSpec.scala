@@ -157,7 +157,7 @@ class DedupSpec extends SparkSpecBase {
       .toDF("text")
     val native = df.select(Dedup.shingleHashes(col("text"), 3).as("hs"))
       .collect().map(_.getSeq[Long](0)).toSeq
-    val decl = df.select(Dedup.shingleHashesDeclarative(col("text"), 3).as("hs"))
+    val decl = df.select(DeclarativeTwins.shingleHashesDeclarative(col("text"), 3).as("hs"))
       .collect().map(_.getSeq[Long](0)).toSeq
     assert(native === decl)
   }

@@ -177,15 +177,15 @@ class FieldExtractSpec extends SparkSpecBase {
     }
     val b = col("bill")
     both(FieldExtract.firstInt(b, FieldExtract.elecPatterns, 50, 50000),
-      FieldExtract.firstIntDeclarative(b, FieldExtract.elecPatterns, 50, 50000))
+      DeclarativeTwins.firstIntDeclarative(b, FieldExtract.elecPatterns, 50, 50000))
     both(FieldExtract.firstInt(b, FieldExtract.carbPatterns, 10, 20000),
-      FieldExtract.firstIntDeclarative(b, FieldExtract.carbPatterns, 10, 20000))
+      DeclarativeTwins.firstIntDeclarative(b, FieldExtract.carbPatterns, 10, 20000))
     both(FieldExtract.normChain(b, FieldExtract.carbonChain),
-      FieldExtract.normChainDeclarative(b, FieldExtract.carbonChain))
+      DeclarativeTwins.normChainDeclarative(b, FieldExtract.carbonChain))
     both(FieldExtract.applyRules(b, FieldExtract.preprocessRules, caseInsensitive = true),
-      FieldExtract.applyRulesDeclarative(b, FieldExtract.preprocessRules, caseInsensitive = true))
+      DeclarativeTwins.applyRulesDeclarative(b, FieldExtract.preprocessRules, caseInsensitive = true))
     both(FieldExtract.applyRules(b, FieldExtract.numericalRules, caseInsensitive = false),
-      FieldExtract.applyRulesDeclarative(b, FieldExtract.numericalRules, caseInsensitive = false))
+      DeclarativeTwins.applyRulesDeclarative(b, FieldExtract.numericalRules, caseInsensitive = false))
   }
 
   test("blank and hostile payloads yield all-null fields, no errors") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.functions.TextFunctions._
+import graft.DeclarativeTwins.plainNormalizeDeclarative
 
 /** Unit tests for the pure-Catalyst column functions (sniffer, char
   * correction, normalization, confidence aggregate) — mirrors the

@@ -28,20 +28,20 @@ class GoldenEqualitySpec extends SparkSpecBase {
   }
 
   test("staged projection: each tokenizer plans EXACTLY once") {
-    // The staging invariant (Extract Scaladoc): the html and pdf paths
-    // are one native `extract` call each and the Jackson JSON parse one
-    // get_json_object, each materialized once per row as a gated
-    // intermediate column; a refactor that lets CollapseProject re-inline
-    // them into the assembled CASE multiplies per-row cost. The paths'
-    // assembly lives in the native calls: no bare tokenizer call and no
-    // higher-order lambda is left in the plan.
+    // The staging invariant (Extract Scaladoc): the turn's parse and
+    // τ-ladder are one native `TurnNative.extract` call and the Jackson
+    // JSON parse one get_json_object, each materialized once per row; a
+    // refactor that lets CollapseProject re-inline the call into each
+    // selected field multiplies per-row cost. The parsers run inside the
+    // call: no parser call of its own and no higher-order lambda is left
+    // in the plan.
     val plan = Extract(parquetInput).queryExecution.executedPlan.toString
-    for (fn <- Seq("graft.expressions.HtmlBlocks.extract(",
-        "graft.expressions.PdfGlyphRuns.extract(", "get_json_object(")) {
+    for (fn <- Seq("graft.expressions.TurnNative.extract(", "get_json_object(")) {
       val count = Regex.quote(fn).r.findAllMatchIn(plan).size
       assert(count === 1, s"$fn appears $count times in the plan:\n$plan")
     }
-    for (absent <- Seq("html_blocks", "pdf_glyph_runs", "lambda"))
+    for (absent <- Seq("HtmlBlocks.extract(", "PdfGlyphRuns.extract(",
+        "html_blocks", "pdf_glyph_runs", "lambda"))
       assert(!plan.contains(absent), s"$absent in the plan:\n$plan")
   }
 

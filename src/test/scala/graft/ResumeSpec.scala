@@ -373,6 +373,31 @@ class ResumeSpec extends SparkSpecBase {
     assert(resume <= 14, s"3-wave resume ran $resume Spark jobs")
   }
 
+  for ((field, cfg) <- Seq(
+      "numBuckets" -> ((dir: String) => Config(dir, numBuckets = 0)),
+      "saltChunk" -> ((dir: String) => Config(dir, saltChunk = 0))))
+    test(s"a non-positive $field is rejected before anything is written") {
+      // a zero saltChunk would make every salted key NULL (salting off
+      // with ANSI off, DIVIDE_BY_ZERO in the first write task with it on)
+      val dir = tmp()
+      val ex = intercept[IllegalArgumentException] {
+        ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 50L), cfg(dir))
+      }
+      assert(ex.getMessage.contains(s"$field must be positive, got 0"))
+      assert(new java.io.File(dir).list().isEmpty)
+    }
+
+  test("SubmitMain fails on a numeric argument that does not parse, with the usage") {
+    // parsed before the session starts: a bad argument never reaches a job
+    val dir = tmp()
+    for (args <- Seq(Seq("gen:ten", dir), Seq("gen:10", dir, "x"),
+        Seq("gen:10", dir, "8", "2.5"))) {
+      val ex = intercept[IllegalArgumentException] { SubmitMain.main(args.toArray) }
+      assert(ex.getMessage.contains("usage: spark-submit"), args)
+    }
+    assert(new java.io.File(dir).list().isEmpty)
+  }
+
   test("custom-key discovery is capped at MaxBucketIds and fails fast") {
     // more distinct ids than the cap: the bounded probe rejects the key
     // before anything is written

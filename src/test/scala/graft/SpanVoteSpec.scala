@@ -126,7 +126,8 @@ class SpanVoteSpec extends SparkSpecBase {
   }
 
   test("native tokenSpans equals the declarative running-sum spec") {
-    import graft.functions.TextFunctions.{tokenSpans, tokenSpansDeclarative}
+    import graft.functions.TextFunctions.tokenSpans
+    import DeclarativeTwins.tokenSpansDeclarative
     val cases = Seq(
       "plain simple words",
       "  leading and trailing  ",

@@ -81,7 +81,7 @@ class TextAnalysisSpec extends SparkSpecBase {
       .toDF("text")
     val native = df.select(TextAnalysis.fingerprint(col("text")).as("f"))
       .collect().map(_.getLong(0)).toSeq
-    val decl = df.select(TextAnalysis.fingerprintDeclarative(col("text")).as("f"))
+    val decl = df.select(DeclarativeTwins.fingerprintDeclarative(col("text")).as("f"))
       .collect().map(_.getLong(0)).toSeq
     assert(native === decl)
   }
