@@ -6,21 +6,22 @@ import graft.plans.ExtractionJob
 
 /** spark-submit entry point for the extraction job (the north-rule
   * deployment surface: `spark-submit --class graft.SubmitMain <jar>
-  * <input> <outDir> [numBuckets]`). Unlike [[Verify]]/[[Bench]] (driver
-  * harness mains that build their own local sessions), this main takes
-  * the session FROM spark-submit — master, executor sizing, shuffle
-  * partitions and AQE all come from the cluster launch config, exactly
-  * as a 1000-executor run would set them.
+  * <input> <outDir> [numBuckets] [waveBuckets]`). Unlike
+  * [[Verify]]/[[Bench]] (driver harness mains that build their own local
+  * sessions), this main takes the session FROM spark-submit — master,
+  * executor sizing, shuffle partitions and AQE all come from the cluster
+  * launch config, exactly as a 1000-executor run would set them.
   *
   * `<input>`: a transcript-shaped parquet path
   * (conv_id, turn_idx, role, text, tool, ts), or `gen:N` to synthesize
   * N deterministic turns in-job (smoke runs need no pre-made input).
   *
   * Re-running with the same `<outDir>` resumes from the manifest:
-  * completed buckets are filtered out, partial buckets are
-  * overwritten atomically via dynamic partition overwrite — kill the
-  * job at any point and re-submit to finish it. Pass `[waveBuckets]` to
-  * commit in waves of that many buckets, so a kill loses at most one
+  * completed buckets are skipped, partial buckets are overwritten
+  * atomically via dynamic partition overwrite — kill the job at any
+  * point and re-submit it, with the same `[numBuckets]`, to finish it
+  * (another bucket count fails before it writes). Pass `[waveBuckets]`
+  * to commit in waves of that many buckets, so a kill loses at most one
   * wave instead of the whole run.
   */
 object SubmitMain {

@@ -119,18 +119,6 @@ object TurnNative {
 
   // ------------------------------------------------------------- extract
 
-  /** Confidence ladder (reference `config.py:10-12`: accept 0.95 /
-    * enhance 0.90 / escalate 0.85; routing `pipeline.py:1984-2050`): a
-    * parse at or above TauEnhance is accepted as-is; below it the
-    * alternate parses of the SAME row (aggressive re-parse, plain
-    * normalization) are compared and whichever confidence wins is kept —
-    * the scale-correct form of the reference's "retry at 600 DPI and keep
-    * whichever is better" (a filter+union second pass would double the
-    * input scan at 100 TB). The escalate tier (<0.85 → LLM) has no Spark
-    * analog by design; keep-better best-effort applies.
-    */
-  val TauEnhance = 0.90
-
   /** fixed confidence of the plain-normalization alternative */
   val PlainAltConf = 0.3
 
@@ -193,10 +181,17 @@ object TurnNative {
     result(path, UTF8String.fromString(PlainNormalize.normalize(s)), wholeSpan(s),
       PlainAltConf, Fallback, total, 0, truncated)
 
-  /** html τ-ladder: the primary selection at ≥ [[TauEnhance]] is accepted;
-    * below that, keep-better across primary, aggressive re-parse and the
-    * plain alternative (primary wins ties; an empty selection competes at
-    * -1). Ladder-chosen alternatives report status "fallback".
+  /** html τ-ladder (reference `config.py:10-12`: accept 0.95 / enhance
+    * 0.90 / escalate 0.85; routing `pipeline.py:1984-2050`): keep-better
+    * across the primary selection, the aggressive re-parse of the SAME
+    * row and the plain alternative (primary wins ties; an empty selection
+    * competes at -1) — the scale-correct form of the reference's "retry
+    * at 600 DPI and keep whichever is better" (a filter+union second pass
+    * would double the input scan at 100 TB). Ladder-chosen alternatives
+    * report status "fallback". A primary at the enhance bar is accepted
+    * without a clause of its own: the aggressive confidence is halved, so
+    * at most 0.5, and a primary at 0.90 already wins keep-better. The
+    * escalate tier (<0.85 → LLM) has no Spark analog by design.
     */
   private def html(s: String): InternalRow = {
     val h = HtmlBlocks.extract(s)
@@ -206,7 +201,7 @@ object TurnNative {
       result(Html, UTF8String.fromString(c.text),
         new GenericArrayData(c.blocks.map[Any](b => InternalRow(b.start, b.end)).toArray),
         c.conf, status, h.total, c.blocks.length, h.truncated)
-    if (ck >= TauEnhance || (ck >= ca && ck >= PlainAltConf)) chosen(h.kept.get, Success)
+    if (ck >= ca && ck >= PlainAltConf) chosen(h.kept.get, Success)
     else if (ca >= math.max(ck, PlainAltConf)) chosen(h.aggr.get, Fallback)
     // best-effort return (`pipeline.py:2052-2065`): the plain
     // normalization of the raw payload beats everything parsed

@@ -29,9 +29,6 @@ import graft.functions.TextFunctions.sniff
   */
 object Extract {
 
-  /** fixed confidence of the plain-normalization alternative */
-  val PlainAltConf: Double = TurnNative.PlainAltConf
-
   /** transcripts(conv_id, turn_idx, role, text, tool, ts) →
     * extracted(conv_id, turn_idx, path, text, spans, confidence, status,
     * blocks_total, blocks_kept, truncated)

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Extract
 
@@ -20,12 +20,13 @@ import graft.operators.Extract
   *    mega-conversation (10^8 turns) spreads across buckets in
   *    saltChunk-sized runs instead of serializing into one task; per-turn
   *    outputs never need re-merging so ordering inside each chunk suffices.
-  *  - Resume: the input is filtered against the completed manifest
-  *    buckets, snapshotted once per run — the graft analog of the
-  *    reference's cache reuse (`pipeline.py:100-191`) but with durable
-  *    exactly-once-per-bucket semantics: data is written with dynamic
-  *    partition overwrite, so re-running a bucket that crashed mid-write
-  *    replaces its directory instead of appending duplicates.
+  *  - Resume: every run plans one todo list — the bucket ids it is asked
+  *    for minus the ids completed in one `_manifest` snapshot — and
+  *    commits it in waves; the graft analog of the reference's cache reuse
+  *    (`pipeline.py:100-191`) but with durable exactly-once-per-bucket
+  *    semantics: data is written with dynamic partition overwrite, so
+  *    re-running a bucket that crashed mid-write replaces its directory
+  *    instead of appending duplicates.
   *  - Lineage/metrics (north_star triplet): turns processed, blocks
   *    dropped, parser fallbacks — derived per bucket with one hash
   *    aggregate over the written rows and appended to the manifest.
@@ -33,10 +34,12 @@ import graft.operators.Extract
 object ExtractionJob {
 
   /** @param bucketExpr overrides the salted-hash bucket key (e.g. a
-    *   modulo key for an oracle-reproducible layout, or a date-derived
-    *   key for time-partitioned reruns); must be deterministic in the
-    *   input row — resume identity depends on the same row mapping to
-    *   the same bucket across runs. Default: [[bucketCol]].
+    *   modulo key for an oracle-reproducible layout); must be
+    *   deterministic in the input row and give ids in
+    *   `[0, numBuckets)` — resume identity depends on the same row
+    *   mapping to the same bucket across runs, and a run plans its waves
+    *   over that range. A NULL or out-of-range id fails the job at the
+    *   first such row. Default: [[bucketCol]].
     * @param waveBuckets commit granularity: process at most this many
     *   buckets per write+manifest commit (a "wave"), so a mid-run kill
     *   loses only the current wave instead of the whole run — the
@@ -58,41 +61,64 @@ object ExtractionJob {
     pmod(hash(col("conv_id"), floor(col("turn_idx") / saltChunk).cast("int")),
       lit(numBuckets))
 
+  /** the SQL text of `cfg`'s row→bucket mapping, without the guard of
+    * [[bucketKey]]: recorded as `bucket_key` on every manifest row, so a
+    * resume under another mapping (numBuckets, saltChunk or bucketExpr
+    * changed) is refused before it writes a row twice.
+    */
+  private def bucketKeySql(cfg: Config): String =
+    cfg.bucketExpr.getOrElse(bucketCol(cfg.numBuckets, cfg.saltChunk)).toString
+
   /** the bucket-id column for `cfg`, pinned to int. A custom expr gets a
-    * per-row null fail-fast (`coalesce` + `raise_error`, zero cost on the
-    * non-null branch): a NULL key would otherwise write rows under
-    * `__HIVE_DEFAULT_PARTITION__`, NPE the driver-side id collects, and —
-    * worst — be silently dropped by the resume complement filter on the
-    * NEXT run (null fails `!isin(...)`). Failing the job at the first
-    * null row, before any of that, is the only resume-safe semantics.
-    * The default hash key is never null, so it skips the branch.
+    * per-row guard (`coalesce` + `raise_error`, one range compare on the
+    * good branch): a NULL id would write rows under
+    * `__HIVE_DEFAULT_PARTITION__`, and an id outside `[0, numBuckets)` is
+    * in no wave, so its rows would be silently dropped. Failing the job
+    * at the first such row, before any of that, is the only resume-safe
+    * semantics. The default hash key is in range by construction, so it
+    * skips the guard.
     */
   private def bucketKey(cfg: Config): Column =
     cfg.bucketExpr match {
       case None => bucketCol(cfg.numBuckets, cfg.saltChunk)
-      case Some(e) => coalesce(e.cast("int"),
-        raise_error(lit("graft.ExtractionJob: custom bucketExpr produced" +
-          " a NULL bucket id — bucket keys must be non-null and" +
-          " deterministic per input row")).cast("int"))
+      case Some(e) =>
+        val id = e.cast("int")
+        coalesce(when(id >= 0 && id < cfg.numBuckets, id),
+          raise_error(lit("graft.ExtractionJob: custom bucketExpr produced" +
+            s" a NULL bucket id or one outside [0, ${cfg.numBuckets}) — bucket" +
+            " keys must be non-null, in range and deterministic per input row"))
+            .cast("int"))
     }
 
   def dataDir(cfg: Config): String = s"${cfg.outDir}/data"
   def manifestDir(cfg: Config): String = s"${cfg.outDir}/_manifest"
 
-  /** completed bucket ids from prior runs (empty frame when no manifest) */
+  /** The `_manifest` table: one row per bucket a wave committed, with the
+    * bucket key it was written under. Every field is nullable, as a read
+    * of the table gives it.
+    */
+  private val ManifestSchema = StructType(
+    StructField("bucket", IntegerType) +:
+      Seq("turns_processed", "blocks_dropped", "parser_fallbacks", "blank_turns",
+        "turns_truncated").map(StructField(_, LongType)) :+
+      StructField("status", StringType) :+
+      StructField("wall_ms", LongType) :+
+      StructField("bucket_key", StringType))
+
+  /** distinct (bucket, bucket_key) of the buckets prior runs completed;
+    * an empty frame when there is no manifest. The explicit schema reads
+    * manifest files written before a column was added without a
+    * schema-merge pass: their missing columns read as NULL.
+    */
   def completedBuckets(spark: SparkSession, cfg: Config): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(manifestDir(cfg))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path))
-      // mergeSchema: manifests written before a metrics-column addition
-      // (e.g. turns_truncated) coexist with new files in one dir; a
-      // single-footer schema pick would randomly drop the new columns
-      spark.read.option("mergeSchema", "true").parquet(manifestDir(cfg))
-        .filter(col("status") === "complete")
-        .select("bucket").distinct()
+      spark.read.schema(ManifestSchema).parquet(manifestDir(cfg))
+        .filter(col("status") === "complete").select("bucket", "bucket_key").distinct()
     else
       spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField("bucket", IntegerType))))
+        ManifestSchema(Set("bucket", "bucket_key")))
   }
 
   /** Run (or resume) the extraction job over `input` (transcript schema).
@@ -102,20 +128,20 @@ object ExtractionJob {
     * `onlyBuckets` processes a subset — used by tests to simulate a killed
     * run (the manifest then records only those buckets as complete).
     *
-    * Every run is a loop of waves, each written and manifest-committed on
-    * its own: `cfg.waveBuckets = None` is one wave (of `onlyBuckets`, or
-    * every todo bucket), `Some(w)` splits the candidate ids into waves of
-    * `w`, so a SIGKILL mid-run loses at most one wave's work and a
-    * re-submit resumes from the last committed wave (demonstrated at
-    * stress scale in BASELINE.md). Cost model:
-    *  - one `_manifest` snapshot per run, read before any write: this
-    *    run's waves are disjoint, so no wave completes an id that a later
-    *    wave asks for;
+    * The run's todo list is `onlyBuckets` (default: every id in
+    * `[0, numBuckets)`) minus the ids completed in one `_manifest`
+    * snapshot, read before any write. It is cut into waves of
+    * `cfg.waveBuckets` ids (None = one wave), each written and
+    * manifest-committed on its own, so a SIGKILL mid-run loses at most
+    * one wave's work and a re-submit resumes from the last committed
+    * wave (demonstrated at stress scale in BASELINE.md). A manifest row
+    * written under another bucket key fails the run before it writes;
+    * rows from before the key was recorded (NULL) resume as before.
+    * Cost model — waves over the remaining ids:
+    *  - one `_manifest` snapshot per run; an empty todo list then starts
+    *    no Spark job;
     *  - K waves = K input scans (the bucket key is computed, not a storage
-    *    partition; a wave whose ids are all done folds to an empty scan).
-    *    The default key's candidates are the static range 0 until
-    *    numBuckets; a custom key's are discovered by one pruned distinct
-    *    scan, capped at [[MaxBucketIds]]. At 100 TB pick
+    *    partition), each filtered to `bucket IN wave`. At 100 TB pick
     *    w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
     *    commits without the re-scan;
     *  - one manifest aggregate per wave over the rows it durably wrote,
@@ -127,70 +153,38 @@ object ExtractionJob {
     // silently stops) or fails the first write task (ANSI on)
     require(cfg.numBuckets > 0, s"numBuckets must be positive, got ${cfg.numBuckets}")
     require(cfg.saltChunk > 0, s"saltChunk must be positive, got ${cfg.saltChunk}")
-    val waves: Seq[Option[Seq[Int]]] = cfg.waveBuckets match {
-      case None => Seq(onlyBuckets)
-      case Some(w) =>
-        require(w > 0, s"waveBuckets must be positive, got $w")
-        val candidates = onlyBuckets.getOrElse(bucketIds(input, cfg)).distinct.sorted
-        // zero candidates (empty input under a custom key, or an empty
-        // onlyBuckets): ONE empty wave, so the output/manifest dirs exist
-        // and the return is an empty manifest frame
-        if (candidates.isEmpty) Seq(Some(Nil))
-        else candidates.grouped(w).map(Some(_)).toSeq
-    }
+    cfg.waveBuckets.foreach(w => require(w > 0, s"waveBuckets must be positive, got $w"))
+    val key = bucketKeySql(cfg)
 
-    // EAGER snapshot of completed bucket ids (≤ the bucket count): a lazy
-    // manifest read is re-evaluated after this run's own writes refresh
-    // the path cache, which silently empties every frame derived from it
-    val doneIds = completedBuckets(spark, cfg).collect().map(_.getInt(0)).toSeq
-    val notDone = if (doneIds.isEmpty) lit(true) else !col("bucket").isin(doneIds: _*)
-    // bucketKey pins the schema to int and fail-fasts null custom keys
+    // EAGER snapshot (≤ one row per bucket and key): a lazy manifest read
+    // is re-evaluated after this run's own writes refresh the path cache
+    val done = completedBuckets(spark, cfg).collect()
+    val otherKeys = done.flatMap(r => Option(r.getString(1))).distinct.filter(_ != key)
+    require(otherKeys.isEmpty, s"graft.ExtractionJob: ${manifestDir(cfg)} has buckets" +
+      s" completed under bucket key ${otherKeys.mkString(", ")}, but this run's key is" +
+      s" $key — resuming would write rows under a second bucket mapping")
+    val doneIds = done.map(_.getInt(0)).toSet
+    val todo = onlyBuckets.getOrElse(0 until cfg.numBuckets).distinct.sorted.filterNot(doneIds)
+    val waves = todo.grouped(cfg.waveBuckets.getOrElse(todo.length max 1)).toSeq
+
+    // bucketKey pins the schema to int and guards custom keys
     val bucketed = input.withColumn("bucket", bucketKey(cfg))
-
-    val commits = waves.map { wave =>
-      // this wave's buckets: not complete before the run (complement, not
-      // `0 until numBuckets`: a custom bucketExpr may use keys outside that
-      // range), and in the wave. The one predicate selects the input rows
-      // and prunes the manifest's read-back of the written table.
-      val thisRun = wave.fold(notDone)(bs => notDone && col("bucket").isin(bs: _*))
-      commitWave(spark, bucketed.filter(thisRun), thisRun, cfg)
+    val rows = waves.flatMap { wave =>
+      // the one predicate selects the input rows and prunes the
+      // manifest's read-back of the written table
+      val inWave = col("bucket").isin(wave: _*)
+      commitWave(spark, bucketed.filter(inWave), inWave, cfg, key)
     }
-    // collecting a local frame runs no Spark job
-    spark.createDataFrame(java.util.Arrays.asList(commits.flatMap(_.collect()): _*),
-      commits.head.schema)
-  }
-
-  /** Cap on the distinct ids a custom `bucketExpr` may yield under wave
-    * commits: discovery collects them to the driver, so a key with more
-    * values is rejected before anything is written.
-    */
-  val MaxBucketIds = 10000
-
-  /** candidate bucket ids: the default hash key is 0 until numBuckets by
-    * construction (no pass over the input); a CUSTOM bucketExpr can emit
-    * any int (date-derived, offset), so its ids are discovered — a
-    * column-pruned distinct over the single computed int column, probed
-    * with `limit(MaxBucketIds + 1)` so the collect stays bounded. Without
-    * discovery, out-of-range ids would silently match no wave.
-    */
-  private def bucketIds(input: DataFrame, cfg: Config): Seq[Int] = cfg.bucketExpr match {
-    case None => 0 until cfg.numBuckets
-    case Some(e) =>
-      val ids = input.select(bucketKey(cfg).as("bucket")).distinct()
-        .limit(MaxBucketIds + 1).collect().map(_.getInt(0)).toSeq
-      require(ids.length <= MaxBucketIds,
-        s"graft.ExtractionJob: custom bucketExpr $e yields more than" +
-          s" $MaxBucketIds distinct bucket ids (MaxBucketIds)")
-      ids
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
   }
 
   /** One wave: extract and write `todo` (the wave's input rows), derive
     * the wave's manifest rows from the rows durably written under
-    * `thisRun`, and append them as one manifest file. Returns the
-    * appended rows as a local frame.
+    * `inWave`, and append them as one manifest file. Returns the
+    * appended rows.
     */
-  private def commitWave(spark: SparkSession, todo: DataFrame, thisRun: Column,
-      cfg: Config): DataFrame = {
+  private def commitWave(spark: SparkSession, todo: DataFrame, inWave: Column,
+      cfg: Config, key: String): Seq[Row] = {
     val t0 = System.currentTimeMillis()
 
     // bucket is computed ONCE on the input and passed THROUGH the
@@ -233,10 +227,10 @@ object ExtractionJob {
     // bucket is never complete, so its rows — just re-written by this
     // wave's dynamic overwrite — correctly enter this manifest.
     //
-    // explicit schema: an all-buckets-done resume or an empty input
-    // leaves nothing to infer from, and the read must still plan
+    // explicit schema: a wave whose ids have no input rows leaves
+    // nothing to infer from, and the read must still plan
     val manifest = spark.read.schema(extracted.schema).parquet(dataDir(cfg))
-      .filter(thisRun)
+      .filter(inWave)
       .groupBy("bucket")
       .agg(
         count(lit(1)).as("turns_processed"),
@@ -249,15 +243,15 @@ object ExtractionJob {
         sum(when(col("truncated"), 1).otherwise(0)).as("turns_truncated"))
       .withColumn("status", lit("complete"))
       .withColumn("wall_ms", lit(System.currentTimeMillis() - t0))
+      .withColumn("bucket_key", lit(key))
 
     // the aggregate runs once: its rows (≤ the wave's bucket ids —
     // driver-safe) are collected and appended as exactly those rows, so
-    // the file and the returned frame hold the same values. Nullable
-    // schema: the one a read of `_manifest` has.
-    val local = spark.createDataFrame(java.util.Arrays.asList(manifest.collect(): _*),
-      StructType(manifest.schema.map(_.copy(nullable = true))))
-    local.coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(cfg))
-    local
+    // the file and the returned frame hold the same values
+    val rows = manifest.collect().toSeq
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
+      .coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(cfg))
+    rows
   }
 
   /** the final output table (all completed buckets), stable per-key order */

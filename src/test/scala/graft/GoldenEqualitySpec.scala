@@ -112,7 +112,7 @@ class GoldenEqualitySpec extends SparkSpecBase {
     for (p <- Seq("html", "pdf")) {
       val ladder = out.filter(col("path") === p &&
         col("status") === "fallback" &&
-        col("confidence") === Extract.PlainAltConf)
+        col("confidence") === graft.expressions.TurnNative.PlainAltConf)
       assert(ladder.count() > 0, s"no ladder-fallback rows for path $p")
       assert(ladder.filter(col("blocks_kept") =!= 0).count() === 0)
     }

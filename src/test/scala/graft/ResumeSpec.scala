@@ -139,7 +139,12 @@ class ResumeSpec extends SparkSpecBase {
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val in = TranscriptGen.inputDf(spark, 500L)
     ExtractionJob.run(spark, in, cfg)
-    val again = ExtractionJob.run(spark, in, cfg)
+    // an empty todo list: the manifest snapshot is the run's only work
+    val snapshot = jobsOf { ExtractionJob.completedBuckets(spark, cfg).collect(); () }
+    var again: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { again = ExtractionJob.run(spark, in, cfg); () }
+    assert(snapshot >= 1 && jobs === snapshot,
+      s"third run ran $jobs Spark jobs, its snapshot $snapshot")
     assert(again.count() === 0)
     assert(ExtractionJob.output(spark, cfg).count() === 500L)
   }
@@ -148,11 +153,12 @@ class ResumeSpec extends SparkSpecBase {
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val in = TranscriptGen.inputDf(spark, 500L)
     ExtractionJob.run(spark, in, cfg, onlyBuckets = Some(Seq(0, 1)))
-    // simulate a pre-upgrade table: strip the newest metrics column from
-    // the existing manifest files, then resume with the current writer —
-    // the manifest dir now mixes schemas and must read with mergeSchema
+    // simulate a pre-upgrade table: strip the newest metrics column and
+    // the bucket key from the existing manifest files, then resume with
+    // the current writer — the manifest dir now mixes schemas, and the
+    // legacy rows' NULL key resumes as if it matched
     val mdir = ExtractionJob.manifestDir(cfg)
-    val oldSchema = spark.read.parquet(mdir).drop("turns_truncated")
+    val oldSchema = spark.read.parquet(mdir).drop("turns_truncated", "bucket_key")
     val staging = tmp()
     oldSchema.write.mode("overwrite").parquet(staging)
     def rm(f: java.io.File): Unit = {
@@ -163,15 +169,17 @@ class ResumeSpec extends SparkSpecBase {
       java.nio.file.Paths.get(mdir))
 
     val resumed = ExtractionJob.run(spark, in, cfg)
-    // only the two missing buckets processed; their rows carry the column
+    // only the two missing buckets processed; their rows carry the columns
     assert(resumed.select("bucket").distinct().count() === 2)
     assert(resumed.agg(sum("turns_truncated")).head.getLong(0) >= 0L)
     val all = spark.read.option("mergeSchema", "true")
       .parquet(mdir)
     assert(all.select("bucket").distinct().count() === 4)
-    // pre-upgrade rows surface null for the new column, new rows a value
-    assert(all.filter(col("turns_truncated").isNull).count() === 2)
-    assert(all.filter(col("turns_truncated").isNotNull).count() === 2)
+    // pre-upgrade rows surface null for the new columns, new rows a value
+    for (c <- Seq("turns_truncated", "bucket_key")) {
+      assert(all.filter(col(c).isNull).count() === 2, c)
+      assert(all.filter(col(c).isNotNull).count() === 2, c)
+    }
   }
 
   test("salting splits a mega-conversation across buckets; order survives") {
@@ -209,76 +217,120 @@ class ResumeSpec extends SparkSpecBase {
     assert(turns === (0 until 16 * 64))
   }
 
-  test("custom bucketExpr with ids outside 0..numBuckets-1 resumes exactly") {
-    // the resume prune and the manifest's this-run filter both work by
-    // COMPLEMENT (everything except prior-complete ids), never by
-    // enumerating 0 until numBuckets — a date-derived or offset bucket
-    // key must round-trip kill/resume exactly like the default hash key
-    val cfgA = Config(tmp(), numBuckets = 3, saltChunk = 64,
-      bucketExpr = Some(pmod(col("turn_idx"), lit(3)) + lit(100)))
-    val cfgB = Config(tmp(), numBuckets = 3, saltChunk = 64,
-      bucketExpr = Some(pmod(col("turn_idx"), lit(3)) + lit(100)))
+  test("custom bucketExpr ids in 0..numBuckets-1 kill/resume exactly " +
+    "under single and wave commits") {
+    // a custom key in range plans like the default key: the killed run's
+    // ids are skipped and the table equals an uninterrupted run
     val in = TranscriptGen.inputDf(spark, 900L)
-
+    val cfgA = Config(tmp(), numBuckets = 3, saltChunk = 64,
+      bucketExpr = Some(pmod(col("turn_idx"), lit(3))))
     ExtractionJob.run(spark, in, cfgA) // reference single-shot
-    // killed run: one out-of-range bucket id completes, then resume
-    ExtractionJob.run(spark, in, cfgB, onlyBuckets = Some(Seq(100)))
-    val resumed = ExtractionJob.run(spark, in, cfgB)
-    assert(resumed.select("bucket").distinct().count() === 2)
-    val manifest = spark.read.parquet(ExtractionJob.manifestDir(cfgB))
-    assert(manifest.select("bucket").collect().map(_.getInt(0)).sorted
-      === Array(100, 101, 102))
-    assert(manifest.count() === 3) // no bucket committed twice
-    assert(manifest.agg(sum("turns_processed")).head.getLong(0) === 900L)
-
     val a = ExtractionJob.output(spark, cfgA)
-    val b = ExtractionJob.output(spark, cfgB)
-    assert(a.exceptAll(b).count() === 0)
-    assert(b.exceptAll(a).count() === 0)
-    // a third run is a no-op even though no id is below numBuckets
-    assert(ExtractionJob.run(spark, in, cfgB).count() === 0)
+    for (waves <- Seq(None, Some(1))) {
+      val cfgB = cfgA.copy(outDir = tmp(), waveBuckets = waves)
+      ExtractionJob.run(spark, in, cfgB, onlyBuckets = Some(Seq(1)))
+      val resumed = ExtractionJob.run(spark, in, cfgB)
+      assert(resumed.select("bucket").collect().map(_.getInt(0)).sorted === Array(0, 2),
+        s"waves=$waves")
+      val manifest = spark.read.parquet(ExtractionJob.manifestDir(cfgB))
+      assert(manifest.count() === 3, s"waves=$waves") // no bucket committed twice
+      assert(manifest.agg(sum("turns_processed")).head.getLong(0) === 900L)
+      val b = ExtractionJob.output(spark, cfgB)
+      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0,
+        s"waves=$waves")
+      assert(ExtractionJob.run(spark, in, cfgB).count() === 0)
+    }
   }
 
-  test("custom bucketExpr ids are discovered under wave commits") {
-    // the wave loop's candidate space is 0 until numBuckets ONLY for the
-    // default hash key; a custom expr's ids are discovered by a pruned
-    // distinct scan — without it, out-of-range ids match no wave and the
-    // job silently writes nothing
-    val cfg = Config(tmp(), numBuckets = 3, saltChunk = 64,
-      bucketExpr = Some(pmod(col("turn_idx"), lit(3)) + lit(100)),
-      waveBuckets = Some(2)) // 2 waves: [100,101], [102]
+  test("a custom bucketExpr id outside 0..numBuckets-1 fails fast, committing no bucket") {
+    // an out-of-range id is in no wave: unguarded, its rows would be
+    // silently left out. The guard fails the first wave instead, even
+    // when the bad id is on one row among in-range ones
     val in = TranscriptGen.inputDf(spark, 300L)
-    val m = ExtractionJob.run(spark, in, cfg)
-    assert(m.select("bucket").collect().map(_.getInt(0)).sorted
-      === Array(100, 101, 102))
-    assert(m.agg(sum("turns_processed")).head.getLong(0) === 300L)
-    assert(ExtractionJob.output(spark, cfg).count() === 300L)
-    // resume across the wave path is still a no-op
-    assert(ExtractionJob.run(spark, in, cfg).count() === 0)
+    for ((waves, bad) <- Seq(None -> 3, Some(2) -> -1)) {
+      val cfg = Config(tmp(), numBuckets = 3, saltChunk = 64,
+        bucketExpr = Some(when(col("turn_idx") === 7, lit(bad))
+          .otherwise(pmod(col("turn_idx"), lit(3)))),
+        waveBuckets = waves)
+      val ex = intercept[Exception] { ExtractionJob.run(spark, in, cfg) }
+      assert(messages(ex).contains("bucketExpr"), s"waves=$waves")
+      assert(messages(ex).contains("[0, 3)"), s"waves=$waves")
+      assert(!new java.io.File(ExtractionJob.manifestDir(cfg)).exists(), s"waves=$waves")
+      assert(Option(new java.io.File(ExtractionJob.dataDir(cfg)).list()).toSeq.flatten
+        .forall(!_.startsWith("bucket=")), s"waves=$waves")
+    }
+  }
+
+  test("a scattered-done resume commits waves over the remaining ids only") {
+    // {0,3} of 8 done, waves of 3: the todo list 1,2,4,5,6,7 commits as
+    // two full waves, and no wave holds a done id
+    val in = TranscriptGen.inputDf(spark, N)
+    val cfgA = Config(tmp(), numBuckets = 8, saltChunk = 64)
+    val cfgW = cfgA.copy(outDir = tmp(), waveBuckets = Some(3))
+    ExtractionJob.run(spark, in, cfgA) // reference: uninterrupted run
+    ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(Seq(0, 3)))
+    val resumed = ExtractionJob.run(spark, in, cfgW)
+    assert(resumed.select("bucket").collect().map(_.getInt(0)).sorted
+      === Array(1, 2, 4, 5, 6, 7))
+    assert(manifestFiles(cfgW) === 3) // the partial run's wave + two
+    val manifest = spark.read.parquet(ExtractionJob.manifestDir(cfgW))
+    assert(manifest.count() === 8)
+    assert(manifest.select("bucket").distinct().count() === 8)
+    val a = ExtractionJob.output(spark, cfgA)
+    val b = ExtractionJob.output(spark, cfgW)
+    assert(a.count() === N && b.count() === N)
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
+  }
+
+  test("a resume under another bucket key fails fast and leaves data/ unchanged") {
+    // buckets {0,1} complete at numBuckets=4, then a resume at 8 into the
+    // same outDir: unchecked, it re-bucketed every row and wrote most of
+    // them a second time (25,622 rows for 20,000 keys at 20 k turns)
+    val in = TranscriptGen.inputDf(spark, 1000L)
+    val cfg4 = Config(tmp(), numBuckets = 4, saltChunk = 64)
+    ExtractionJob.run(spark, in, cfg4, onlyBuckets = Some(Seq(0, 1)))
+    def listing: Seq[(String, Long, Long)] = {
+      val root = java.nio.file.Paths.get(ExtractionJob.dataDir(cfg4))
+      val files = Files.walk(root)
+      try files.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].toFile)
+        .map(f => (root.relativize(f.toPath).toString, f.length, f.lastModified)).sorted
+      finally files.close()
+    }
+    val before = listing
+    val ex = intercept[IllegalArgumentException] {
+      ExtractionJob.run(spark, in, cfg4.copy(numBuckets = 8))
+    }
+    for (n <- Seq(4, 8))
+      assert(ex.getMessage.contains(ExtractionJob.bucketCol(n, 64).toString), ex.getMessage)
+    assert(listing === before)
+    // the same key still resumes
+    ExtractionJob.run(spark, in, cfg4)
+    assert(ExtractionJob.output(spark, cfg4).count() === 1000L)
   }
 
   test("wave mode with zero candidate buckets returns an empty manifest") {
-    // empty input under a custom key discovers no ids; the run must be a
-    // no-op returning an empty manifest frame (one empty wave creates the
-    // dirs), not a PATH_NOT_FOUND on the manifest read
-    val cfg = Config(tmp(), numBuckets = 3, saltChunk = 64,
-      bucketExpr = Some(pmod(col("turn_idx"), lit(3)) + lit(100)),
-      waveBuckets = Some(2))
-    val empty = TranscriptGen.inputDf(spark, 100L).filter(lit(false))
-    assert(ExtractionJob.run(spark, empty, cfg).count() === 0)
-    // the dirs it created are a valid resume base for a real input
-    val m = ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 100L), cfg)
+    // an empty todo list plans no wave: the run starts no Spark job,
+    // creates no dir and returns an empty frame with the manifest schema
+    val in = TranscriptGen.inputDf(spark, 100L)
+    val cfg = Config(tmp(), numBuckets = 3, saltChunk = 64, waveBuckets = Some(2))
+    var none: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { none = ExtractionJob.run(spark, in, cfg, onlyBuckets = Some(Nil)); () }
+      === 0)
+    assert(none.count() === 0)
+    assert(new java.io.File(cfg.outDir).list().isEmpty)
+    // a zero-row input commits empty waves; the dirs they create are a
+    // valid resume base for a real input
+    assert(ExtractionJob.run(spark, in.filter(lit(false)), cfg).count() === 0)
+    val m = ExtractionJob.run(spark, in, cfg)
+    assert(m.schema === none.schema)
     assert(m.agg(sum("turns_processed")).head.getLong(0) === 100L)
   }
 
   test("a NULL custom bucket key fails the job fast with a clear message") {
-    // a null key would write under __HIVE_DEFAULT_PARTITION__, NPE the
-    // driver-side id collects, and silently drop the rows from the next
-    // resume's complement filter — the per-row raise_error guard turns
-    // all of that into an immediate, named failure
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).mkString("\n")
+    // a null key would write under __HIVE_DEFAULT_PARTITION__ and match
+    // no wave on the next run — the per-row raise_error guard turns that
+    // into an immediate, named failure
     val in = TranscriptGen.inputDf(spark, 50L)
     for (waves <- Seq(None, Some(2))) {
       val cfg = Config(tmp(), numBuckets = 3, saltChunk = 64,
@@ -308,6 +360,11 @@ class ResumeSpec extends SparkSpecBase {
             col("prev_turn") >= col("turn_idx"))))
     assert(bad.count() === 0)
   }
+
+  /** every message in a throwable's cause chain */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString("\n")
 
   /** parquet files in the manifest dir (one per commit) */
   private def manifestFiles(cfg: Config): Int =
@@ -346,13 +403,14 @@ class ResumeSpec extends SparkSpecBase {
     assert(sameRows(single, readManifest(cfg)))
     assert(manifestFiles(cfg) === 1)
 
-    // wave resume: 2 + 3 commits, each one file; the resume returns the
-    // manifest's rows minus the partial run's
+    // wave resume: 2 + 1 commits, each one file (the resume's one wave
+    // is the two remaining ids); it returns the manifest's rows minus
+    // the partial run's
     val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
     val partial = ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
     assert(manifestFiles(cfgW) === 2)
     val resumed = ExtractionJob.run(spark, in, cfgW)
-    assert(manifestFiles(cfgW) === 5)
+    assert(manifestFiles(cfgW) === 3)
     assert(resumed.select("bucket").collect().map(_.getInt(0)).sorted === Array(6, 7))
     assert(sameRows(resumed, readManifest(cfgW).exceptAll(partial)))
     assert(sameRows(partial.union(resumed), readManifest(cfgW)))
@@ -361,8 +419,9 @@ class ResumeSpec extends SparkSpecBase {
   test("Spark jobs per commit stay capped") {
     // one commit = data write (2 jobs) + manifest aggregate collect (2) +
     // one-file manifest append (1); a resume adds one manifest snapshot
-    // (3) and its all-done first wave. A second manifest aggregate or a
-    // read of `_manifest` after a write breaks the caps.
+    // (2: its distinct collect) and commits only the remaining ids, here
+    // one wave. A second manifest aggregate, a read of `_manifest` after
+    // a write or a wave of done ids breaks the caps.
     val in = TranscriptGen.inputDf(spark, 1000L)
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val single = jobsOf { ExtractionJob.run(spark, in, cfg).collect(); () }
@@ -370,7 +429,7 @@ class ResumeSpec extends SparkSpecBase {
     val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
     ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
     val resume = jobsOf { ExtractionJob.run(spark, in, cfgW).collect(); () }
-    assert(resume <= 14, s"3-wave resume ran $resume Spark jobs")
+    assert(resume <= 7, s"one-wave resume ran $resume Spark jobs")
   }
 
   for ((field, cfg) <- Seq(
@@ -396,20 +455,5 @@ class ResumeSpec extends SparkSpecBase {
       assert(ex.getMessage.contains("usage: spark-submit"), args)
     }
     assert(new java.io.File(dir).list().isEmpty)
-  }
-
-  test("custom-key discovery is capped at MaxBucketIds and fails fast") {
-    // more distinct ids than the cap: the bounded probe rejects the key
-    // before anything is written
-    val n = ExtractionJob.MaxBucketIds + 1
-    val in = spark.range(n).select(col("id").cast("string").as("conv_id"),
-      lit(0).as("turn_idx"), lit("user").as("role"), lit("x").as("text"),
-      lit(null).cast("string").as("tool"))
-    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64,
-      bucketExpr = Some(col("conv_id").cast("int")), waveBuckets = Some(2))
-    val ex = intercept[IllegalArgumentException] { ExtractionJob.run(spark, in, cfg) }
-    assert(ex.getMessage.contains("bucketExpr"))
-    assert(ex.getMessage.contains(ExtractionJob.MaxBucketIds.toString))
-    assert(!new java.io.File(ExtractionJob.dataDir(cfg)).exists())
   }
 }
