@@ -3,19 +3,21 @@ package graft.expressions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.json.GetJsonObjectEvaluator
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions.{HtmlSniffRe, JsonSniffRe, PdfSniffRe}
 
-/** One turn of [[graft.operators.Extract]] as static calls: the content
-  * sniff, then [[extract]] — the per-format parse
-  * ([[HtmlBlocks.extract]], [[PdfGlyphRuns.extract]], the tool-JSON value
-  * span or [[PlainNormalize]]) and the τ-ladder that picks the result.
-  * The blank check, the whole-content span and the tool-JSON value span
-  * are also SQL-level functions of their own
-  * ([[graft.functions.TextFunctions]]). Each call replaces Catalyst
+/** One turn of [[graft.operators.Extract]] as one static call,
+  * [[extract]]: the blank check on the bytes, one decode, the content
+  * sniff on the decoded text, the per-format parse ([[HtmlBlocks.extract]],
+  * [[PdfGlyphRuns.extract]], `get_json_object`'s evaluator plus the
+  * tool-JSON value span, or [[PlainNormalize]]) and the τ-ladder that
+  * picks the result. The sniff, the blank check, the whole-content span
+  * and the tool-JSON value span are also SQL-level functions of their own
+  * ([[graft.functions.TextFunctions]]). The call replaces Catalyst
   * expressions whose generated code pushed Extract's row loop past
   * HotSpot's 8,000-byte JIT limit (MethodSizeSpec).
   *
@@ -52,14 +54,14 @@ object TurnNative {
     * (a `{` payload with a tool) or plain — decoded once, cheapest first
     */
   def sniff(text: UTF8String, tool: UTF8String): UTF8String =
-    if (isBlank(text)) Blank
-    else {
-      val s = text.toString
-      if (PdfSniff.matcher(s).lookingAt()) Pdf
-      else if (HtmlSniff.matcher(s).lookingAt()) Html
-      else if (tool != null && JsonSniff.matcher(s).lookingAt()) ToolJson
-      else Plain
-    }
+    if (isBlank(text)) Blank else sniff(text.toString, tool)
+
+  /** [[sniff]] of the decoded text of a non-blank turn */
+  private def sniff(s: String, tool: UTF8String): UTF8String =
+    if (PdfSniff.matcher(s).lookingAt()) Pdf
+    else if (HtmlSniff.matcher(s).lookingAt()) Html
+    else if (tool != null && JsonSniff.matcher(s).lookingAt()) ToolJson
+    else Plain
 
   /** raw-char spans `{start, end}`, the `spans` type of every path */
   val wholeSpanType: ArrayType = ArrayType(StructType(Seq(
@@ -144,29 +146,44 @@ object TurnNative {
   private val Success = UTF8String.fromString("success")
   private val Fallback = UTF8String.fromString("fallback")
 
-  /** One turn's extraction, routed by its sniffed format `fmt`; `toolText`
-    * is the parsed `$.output.text` of a tooljson turn (NULL when it does
-    * not parse). The text is decoded at most once. Blank turns are empty;
-    * tool results whose value parsed report it ([[toolJsonSpan]]); pdf
-    * and html parses go through the τ-ladder; plain text is normalized.
-    * Every "fallback" result outside pdf and html is the plain
-    * alternative ([[plainAlt]]).
+  /** `get_json_object(_, '$.output.text')`'s own evaluator, one per
+    * thread: `setJson` mutates it
     */
-  def extract(text: UTF8String, fmt: UTF8String, toolText: UTF8String): InternalRow =
-    if (fmt == Blank)
+  private val OutputText = ThreadLocal.withInitial[GetJsonObjectEvaluator](
+    () => new GetJsonObjectEvaluator(UTF8String.fromString("$.output.text")))
+
+  /** One whole turn, `text` decoded at most once: the blank check on its
+    * bytes, then the [[sniff]] of the decoded text routes it. Blank turns
+    * are empty; a tool result reports its parsed `$.output.text` value
+    * ([[toolJsonSpan]]); pdf and html parses go through the τ-ladder;
+    * plain text is normalized. Every "fallback" result outside pdf and
+    * html is the plain alternative ([[plainAlt]]), e.g. a tool result
+    * whose value does not parse.
+    */
+  def extract(text: UTF8String, tool: UTF8String): InternalRow =
+    if (isBlank(text))
       result(Blank, UTF8String.EMPTY_UTF8, noSpans, 0.0, Blank, 0, 0, truncated = false)
-    else if (fmt == ToolJson && toolText != null) {
-      val sc = toolJsonSpan(text, toolText)
-      result(ToolJson, toolText, sc.getArray(0), sc.getDouble(1), Success, 1, 1,
-        truncated = false)
-    } else {
+    else {
       val s = text.toString
-      if (fmt == Pdf) pdf(s)
-      else if (fmt == Html) html(s)
-      else if (fmt == ToolJson) plainAlt(s, ToolJson, 1, truncated = false)
+      val fmt = sniff(s, tool)
+      if (fmt eq Pdf) pdf(s)
+      else if (fmt eq Html) html(s)
+      else if (fmt eq ToolJson) toolJson(text, s)
       else result(Plain, UTF8String.fromString(PlainNormalize.normalize(s)),
         wholeSpan(s), 1.0, Success, 1, 1, truncated = false)
     }
+
+  private def toolJson(text: UTF8String, s: String): InternalRow = {
+    val json = OutputText.get
+    json.setJson(text)
+    json.evaluate() match {
+      case t: UTF8String =>
+        val sc = toolJsonSpan(text, t)
+        result(ToolJson, t, sc.getArray(0), sc.getDouble(1), Success, 1, 1,
+          truncated = false)
+      case _ => plainAlt(s, ToolJson, 1, truncated = false)
+    }
+  }
 
   private def result(path: UTF8String, text: UTF8String, spans: ArrayData,
       conf: Double, status: UTF8String, total: Int, kept: Int,

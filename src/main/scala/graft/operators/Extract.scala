@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 
 import graft.expressions.{NativeCall, TurnNative}
-import graft.functions.TextFunctions.sniff
 
 /** The extraction core: per-turn content sniffing → per-format extraction
   * path → extracted text + raw-char spans + confidence + status +
@@ -20,11 +19,12 @@ import graft.functions.TextFunctions.sniff
   * whichever is better" (`pipeline.py:1989-2002`) — a filter+union second
   * pass was rejected because it doubles the input scan at 100 TB.
   *
-  * Three stages: the sniffed format, the Jackson parse of a tool result's
-  * `$.output.text` (gated to tooljson turns), and one
-  * [[graft.expressions.TurnNative.extract]] call that parses the turn on
-  * its path and runs the τ-ladder. Each per-row parse runs at most once,
-  * and the whole stage compiles to a generated row loop under HotSpot's
+  * One [[graft.expressions.TurnNative.extract]] call per turn owns the
+  * whole turn: it decodes the text once, sniffs it, parses it on its path
+  * (a tool result's `$.output.text` through `get_json_object`'s own
+  * evaluator) and runs the τ-ladder. The call is materialized once per
+  * row and its fields selected from it, so each parse runs at most once,
+  * and the stage compiles to a generated row loop under HotSpot's
   * 8,000-byte JIT limit (MethodSizeSpec).
   */
 object Extract {
@@ -39,15 +39,10 @@ object Extract {
     * columns unchanged (e.g. `ts` for event-time streaming aggregation).
     */
   def apply(df: DataFrame, passThrough: Seq[String]): DataFrame = {
-    val raw = col("text")
-    val fmt = col("__fmt")
-    val routed = df
-      .withColumn("__fmt", sniff(raw, col("tool")))
-      .withColumn("__tj", when(fmt === "tooljson", get_json_object(raw, "$.output.text")))
-      .withColumn("__x", column(NativeCall.static(TurnNative.getClass, "extract",
-        TurnNative.extractType, Seq(expr(raw), expr(fmt), expr(col("__tj"))),
-        propagateNull = false)))
-    routed.select(Seq(col("conv_id"), col("turn_idx")) ++
+    val x = column(NativeCall.static(TurnNative.getClass, "extract",
+      TurnNative.extractType, Seq(expr(col("text")), expr(col("tool"))),
+      propagateNull = false))
+    df.withColumn("__x", x).select(Seq(col("conv_id"), col("turn_idx")) ++
       TurnNative.extractType.fieldNames.map(f => col(s"__x.$f").as(f)) ++
       passThrough.map(col): _*)
   }

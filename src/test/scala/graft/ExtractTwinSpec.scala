@@ -66,25 +66,31 @@ class ExtractTwinSpec extends SparkSpecBase {
   private def rows(df: DataFrame): Array[Row] =
     df.orderBy("conv_id", "turn_idx").collect()
 
+  /** Extract's native rows, after asserting they equal the twin's */
+  private def sameAsTwin(df: DataFrame, label: String): Array[Row] = {
+    val nat = Extract(df)
+    val twin = ExtractTwin(df)
+    assert(nat.schema === twin.schema, label)
+    val (a, b) = (rows(nat), rows(twin))
+    assert(a.length === b.length, label)
+    val conf = nat.schema.fieldIndex("confidence")
+    def bits(r: Row) = r.toSeq.updated(conf,
+      if (r.isNullAt(conf)) null
+      else java.lang.Double.doubleToRawLongBits(r.getDouble(conf)))
+    val bad = a.zip(b).filter { case (x, y) => bits(x) != bits(y) }
+    assert(bad.isEmpty, s"$label: ${bad.length} rows diverge, first: " +
+      bad.take(2).map { case (x, y) => s"\n native $x\n twin   $y" }.mkString)
+    a
+  }
+
   test("native Extract equals the declarative τ-ladder twin (3 seeds, " +
     "interpreted and codegen)") {
     for (seed <- Seq(fuzzSeed, 1L, 2L)) {
       val local = inputs(seed).toDF("conv_id", "turn_idx", "text", "tool")
-      val dir = java.nio.file.Files.createTempDirectory("graft-extract-twin").toString
+      val dir = tempDir("graft-extract-twin")
       local.write.mode("overwrite").parquet(dir)
       for ((mode, df) <- Seq("local" -> local, "parquet" -> spark.read.parquet(dir))) {
-        val nat = Extract(df)
-        val twin = ExtractTwin(df)
-        assert(nat.schema === twin.schema, s"seed $seed $mode")
-        val (a, b) = (rows(nat), rows(twin))
-        assert(a.length === b.length)
-        val conf = nat.schema.fieldIndex("confidence")
-        def bits(r: Row) = r.toSeq.updated(conf,
-          if (r.isNullAt(conf)) null
-          else java.lang.Double.doubleToRawLongBits(r.getDouble(conf)))
-        val bad = a.zip(b).filter { case (x, y) => bits(x) != bits(y) }
-        assert(bad.isEmpty, s"seed $seed $mode: ${bad.length} rows diverge, first: " +
-          bad.take(2).map { case (x, y) => s"\n native $x\n twin   $y" }.mkString)
+        val a = sameAsTwin(df, s"seed $seed $mode")
         // the inputs reach every path, status and cap flag
         val seen = a.map(r => (r.getAs[String]("path"), r.getAs[String]("status"))).toSet
         for (p <- Seq("html", "pdf", "tooljson"); s <- Seq("success", "fallback"))
@@ -92,6 +98,34 @@ class ExtractTwinSpec extends SparkSpecBase {
         assert(seen(("blank", "blank")) && seen(("plain", "success")))
         assert(a.exists(_.getAs[Boolean]("truncated")))
       }
+    }
+  }
+
+  test("the per-thread JSON evaluator holds no state between rows: tool-JSON " +
+    "kinds interleaved in one partition and across concurrent tasks") {
+    // every other row parses to its own value, so a row that reads the
+    // value left over from an earlier row shows whatever its kind
+    val parsed = (i: Int) => s"""{"output":{"text":"value $i"}}""" -> "search"
+    val kinds: Seq[Int => (String, String)] = Seq(
+      parsed, i => s"""{"output":{"text":"cut $i""" -> "search", // unparsable
+      parsed, i => s"""{"other":{"text":"no output $i"}}""" -> "search",
+      parsed, _ => "{" -> null) // a `{` without a tool is plain
+    val local = (0 until 1800).map { i =>
+      val (text, tool) = kinds(i % kinds.length)(i)
+      ("tj", i, text, tool)
+    }.toDF("conv_id", "turn_idx", "text", "tool")
+    // files of 250 interleaved rows each, read as concurrent tasks
+    val dir = tempDir("graft-extract-tj")
+    local.coalesce(1).write.mode("overwrite").option("maxRecordsPerFile", 250L).parquet(dir)
+    val parquet = spark.read.parquet(dir)
+    assert(parquet.rdd.getNumPartitions > 1)
+    for ((mode, df) <- Seq("local" -> local, "one partition" -> parquet.coalesce(1),
+        "tasks on local[4]" -> parquet)) {
+      val a = sameAsTwin(df, mode)
+      val seen = a.map(r => (r.getAs[String]("path"), r.getAs[String]("status")))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      assert(seen === Map(("tooljson", "success") -> 900, ("tooljson", "fallback") -> 600,
+        ("plain", "success") -> 300), mode)
     }
   }
 }

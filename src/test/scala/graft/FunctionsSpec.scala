@@ -130,7 +130,7 @@ class FunctionsSpec extends SparkSpecBase {
         sample(toolJson, 100, 100000)
       val local = texts.flatMap(t => Seq((t, null: String), (t, "search")))
         .toDF("t", "tool")
-      val dir = java.nio.file.Files.createTempDirectory("graft-twins").toString
+      val dir = tempDir("graft-twins")
       local.write.mode("overwrite").parquet(dir)
       for (df <- Seq(local, spark.read.parquet(dir))) {
         val (t, tj) = (col("t"), get_json_object(col("t"), "$.output.text"))

@@ -22,26 +22,25 @@ class GoldenEqualitySpec extends SparkSpecBase {
   /** Parquet-backed input — local relations constant-fold and show no
     * real plan. */
   private lazy val parquetInput = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val dir = tempDir("graft-plan")
     TranscriptGen.inputDf(spark, 200L).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
 
   test("staged projection: each tokenizer plans EXACTLY once") {
-    // The staging invariant (Extract Scaladoc): the turn's parse and
-    // τ-ladder are one native `TurnNative.extract` call and the Jackson
-    // JSON parse one get_json_object, each materialized once per row; a
-    // refactor that lets CollapseProject re-inline the call into each
-    // selected field multiplies per-row cost. The parsers run inside the
-    // call: no parser call of its own and no higher-order lambda is left
+    // The staging invariant (Extract Scaladoc): the whole turn — sniff,
+    // Jackson JSON parse, path parse and τ-ladder — is one native
+    // `TurnNative.extract` call, materialized once per row; a refactor
+    // that lets CollapseProject re-inline the call into each selected
+    // field multiplies per-row cost. The sniff and the parsers run inside
+    // the call: no call of their own and no higher-order lambda is left
     // in the plan.
     val plan = Extract(parquetInput).queryExecution.executedPlan.toString
-    for (fn <- Seq("graft.expressions.TurnNative.extract(", "get_json_object(")) {
-      val count = Regex.quote(fn).r.findAllMatchIn(plan).size
-      assert(count === 1, s"$fn appears $count times in the plan:\n$plan")
-    }
-    for (absent <- Seq("HtmlBlocks.extract(", "PdfGlyphRuns.extract(",
-        "html_blocks", "pdf_glyph_runs", "lambda"))
+    val fn = "graft.expressions.TurnNative.extract("
+    val count = Regex.quote(fn).r.findAllMatchIn(plan).size
+    assert(count === 1, s"$fn appears $count times in the plan:\n$plan")
+    for (absent <- Seq("get_json_object(", "TurnNative.sniff(", "HtmlBlocks.extract(",
+        "PdfGlyphRuns.extract(", "html_blocks", "pdf_glyph_runs", "lambda"))
       assert(!plan.contains(absent), s"$absent in the plan:\n$plan")
   }
 

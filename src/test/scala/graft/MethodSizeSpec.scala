@@ -23,7 +23,7 @@ class MethodSizeSpec extends SparkSpecBase {
   /** Parquet-backed input: local relations constant-fold and compile no
     * row loop. */
   private lazy val input: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-methods").toString
+    val dir = tempDir("graft-methods")
     TranscriptGen.inputDf(spark, 200L).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }

@@ -99,7 +99,7 @@ class NativeCallSpec extends SparkSpecBase {
 
   test("generated and interpreted calls agree on every converted function") {
     val local = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
-    val dir = java.nio.file.Files.createTempDirectory("graft-native").toString
+    val dir = tempDir("graft-native")
     local.write.mode("overwrite").parquet(dir)
     val (interpreted, localCodegen) = evaluate(local)
     val (generated, scanCodegen) = evaluate(spark.read.parquet(dir))
@@ -121,7 +121,7 @@ class NativeCallSpec extends SparkSpecBase {
 
   test("SQL functions keep their output column names, types and nullability") {
     GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sqlnames").toString
+    val dir = tempDir("graft-sqlnames")
     Seq(("<p>a b</p>", Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(5L))).toDF("t", "a", "b", "h")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("native_call_names")

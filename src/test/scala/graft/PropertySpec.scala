@@ -71,43 +71,45 @@ class PropertySpec extends SparkSpecBase {
     // corrupted by seeded random truncation, NUL/byte splices, chunk
     // duplication, and tag/run-line injection must still extract with a
     // contract status and in-bounds spans — never throw
-    val rng = new scala.util.Random(fuzzSeed)
     val base = TranscriptGen.inputDf(spark, 400L)
       .select("conv_id", "turn_idx", "role", "text", "tool")
       .collect()
-    def corrupt(s: String): String = {
-      if (s == null || s.isEmpty) return s
-      rng.nextInt(5) match {
-        case 0 => s.take(rng.nextInt(s.length)) // truncate anywhere
-        case 1 => // splice control/NUL bytes at a random offset
-          val i = rng.nextInt(s.length)
-          s.substring(0, i) + "\u0000\u202e" + s.substring(i)
-        case 2 => // duplicate a random chunk (simulates re-sent frames)
-          val i = rng.nextInt(s.length); val j = i + rng.nextInt(s.length - i)
-          s.substring(0, j) + s.substring(i, j) + s.substring(j)
-        case 3 => // inject structure the sniffers key on
-          val i = rng.nextInt(s.length)
-          s.substring(0, i) + "<div><p>G 12 x 9 %PDF-{\"" + s.substring(i)
-        case _ => s.reverse
+    for (seed <- Seq(fuzzSeed, 1L, 2L)) {
+      val rng = new scala.util.Random(seed)
+      def corrupt(s: String): String = {
+        if (s == null || s.isEmpty) return s
+        rng.nextInt(5) match {
+          case 0 => s.take(rng.nextInt(s.length)) // truncate anywhere
+          case 1 => // splice control/NUL bytes at a random offset
+            val i = rng.nextInt(s.length)
+            s.substring(0, i) + "\u0000\u202e" + s.substring(i)
+          case 2 => // duplicate a random chunk (simulates re-sent frames)
+            val i = rng.nextInt(s.length); val j = i + rng.nextInt(s.length - i)
+            s.substring(0, j) + s.substring(i, j) + s.substring(j)
+          case 3 => // inject structure the sniffers key on
+            val i = rng.nextInt(s.length)
+            s.substring(0, i) + "<div><p>G 12 x 9 %PDF-{\"" + s.substring(i)
+          case _ => s.reverse
+        }
       }
-    }
-    val fuzzed = base.map(r => (
-      r.getString(0), r.getInt(1), r.getString(2),
-      corrupt(r.getString(3)),
-      Option(r.getString(4)).map(corrupt).orNull))
-      .toSeq.toDF("conv_id", "turn_idx", "role", "text", "tool")
-    val out = Extract(fuzzed)
-      .join(fuzzed.select(col("conv_id"), col("turn_idx"),
-        col("text").as("raw")), Seq("conv_id", "turn_idx"))
-      .collect() // forces full evaluation of every fuzzed row
-    assert(out.length === base.length)
-    val okStatus = Set("success", "fallback", "blank")
-    out.foreach { r =>
-      assert(okStatus.contains(r.getAs[String]("status")))
-      val rawLen = Option(r.getAs[String]("raw")).map(_.length).getOrElse(0)
-      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("spans")).foreach { sp =>
-        val (st, en) = (sp.getInt(0), sp.getInt(1))
-        assert(st >= 0 && st < en && en <= rawLen, s"bad span ($st,$en)")
+      val fuzzed = base.map(r => (
+        r.getString(0), r.getInt(1), r.getString(2),
+        corrupt(r.getString(3)),
+        Option(r.getString(4)).map(corrupt).orNull))
+        .toSeq.toDF("conv_id", "turn_idx", "role", "text", "tool")
+      val out = Extract(fuzzed)
+        .join(fuzzed.select(col("conv_id"), col("turn_idx"),
+          col("text").as("raw")), Seq("conv_id", "turn_idx"))
+        .collect() // forces full evaluation of every fuzzed row
+      assert(out.length === base.length, s"seed $seed")
+      val okStatus = Set("success", "fallback", "blank")
+      out.foreach { r =>
+        assert(okStatus.contains(r.getAs[String]("status")), s"seed $seed: $r")
+        val rawLen = Option(r.getAs[String]("raw")).map(_.length).getOrElse(0)
+        r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("spans")).foreach { sp =>
+          val (st, en) = (sp.getInt(0), sp.getInt(1))
+          assert(st >= 0 && st < en && en <= rawLen, s"seed $seed: bad span ($st,$en)")
+        }
       }
     }
   }

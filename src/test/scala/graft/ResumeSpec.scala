@@ -16,8 +16,7 @@ class ResumeSpec extends SparkSpecBase {
 
   private val N = 4000L
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-job").toString
+  private def tmp(): String = tempDir("graft-job")
 
   test("single-shot run writes all buckets + consistent manifest") {
     val cfg = Config(tmp(), numBuckets = 8, saltChunk = 64)

@@ -153,7 +153,7 @@ class SpanVoteSpec extends SparkSpecBase {
     import graft.functions.TextFunctions.tokenSpans
     // parquet-backed input: local relations constant-fold and would show
     // no real plan (verify-skill gotcha)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts").toString
+    val dir = tempDir("graft-ts")
     spark.range(100)
       .selectExpr("cast(id as string) AS row_id", "'a bb ccc' AS text")
       .write.mode("overwrite").parquet(dir)
@@ -190,28 +190,21 @@ class SpanVoteSpec extends SparkSpecBase {
       ("r", "b", "l23", 0.55, 0, 4),
       ("r", "b", "far", 0.7, 40, 43),
       ("r2", "a", "xx", 0.8, 0, 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sv-ckpt")
-    try {
-      val persisted = SpanVote.vote(in)
-        .orderBy("row_id", "start", "end").collect().toSeq
-      val checkpointed = SpanVote.vote(in, checkpointDir = Some(dir.toString))
-        .orderBy("row_id", "start", "end").collect().toSeq
-      assert(checkpointed === persisted)
-      // the durable copy actually exists where promised (one unique
-      // subdir per invocation — a second vote() must not overwrite the
-      // first call's still-lazy result)
-      def ckptDirs() = Option(dir.toFile.listFiles()).toSeq.flatten
-        .filter(_.getName.startsWith("spanvote_tokens_"))
-      assert(ckptDirs().length === 1)
-      val again = SpanVote.vote(in, checkpointDir = Some(dir.toString))
-        .orderBy("row_id", "start", "end").collect().toSeq
-      assert(again === persisted)
-      assert(ckptDirs().length === 2)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
+    val dir = new java.io.File(tempDir("graft-sv-ckpt"))
+    val persisted = SpanVote.vote(in)
+      .orderBy("row_id", "start", "end").collect().toSeq
+    val checkpointed = SpanVote.vote(in, checkpointDir = Some(dir.getPath))
+      .orderBy("row_id", "start", "end").collect().toSeq
+    assert(checkpointed === persisted)
+    // the durable copy actually exists where promised (one unique
+    // subdir per invocation — a second vote() must not overwrite the
+    // first call's still-lazy result)
+    def ckptDirs() = Option(dir.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("spanvote_tokens_"))
+    assert(ckptDirs().length === 1)
+    val again = SpanVote.vote(in, checkpointDir = Some(dir.getPath))
+      .orderBy("row_id", "start", "end").collect().toSeq
+    assert(again === persisted)
+    assert(ckptDirs().length === 2)
   }
 }

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole forked test JVM. */
@@ -19,8 +25,24 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpecBase extends AnyFunSuite {
+abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = ArrayBuffer.empty[Path]
+
+  /** A fresh directory `<tmp>/<prefix>…` for the suite's files. It lives
+    * until `afterAll`, after the suite's last (possibly lazy) read of it,
+    * and is deleted there with everything in it.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.foreach(d => JavaUtils.deleteRecursively(d.toFile))
+    finally super.afterAll()
 
   /** Seed for the generative fuzz suites. Deterministic by default (CI
     * runs are reproducible); override with GRAFT_FUZZ_SEED for soak
