@@ -1,8 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Extract
 
@@ -28,8 +33,9 @@ import graft.operators.Extract
   *    re-running a bucket that crashed mid-write replaces its directory
   *    instead of appending duplicates.
   *  - Lineage/metrics (north_star triplet): turns processed, blocks
-  *    dropped, parser fallbacks — derived per bucket with one hash
-  *    aggregate over the written rows and appended to the manifest.
+  *    dropped, parser fallbacks — observed per bucket in the write's own
+  *    result stage ([[WaveStats]]) and appended to the manifest, with no
+  *    read of the rows just written.
   */
 object ExtractionJob {
 
@@ -97,13 +103,10 @@ object ExtractionJob {
     * bucket key it was written under. Every field is nullable, as a read
     * of the table gives it.
     */
-  private val ManifestSchema = StructType(
-    StructField("bucket", IntegerType) +:
-      Seq("turns_processed", "blocks_dropped", "parser_fallbacks", "blank_turns",
-        "turns_truncated").map(StructField(_, LongType)) :+
-      StructField("status", StringType) :+
-      StructField("wall_ms", LongType) :+
-      StructField("bucket_key", StringType))
+  private val ManifestSchema = StructType(WaveStats.RowType.fields.toSeq :+
+    StructField("status", StringType) :+
+    StructField("wall_ms", LongType) :+
+    StructField("bucket_key", StringType))
 
   /** distinct (bucket, bucket_key) of the buckets prior runs completed;
     * an empty frame when there is no manifest. The explicit schema reads
@@ -113,8 +116,15 @@ object ExtractionJob {
   def completedBuckets(spark: SparkSession, cfg: Config): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(manifestDir(cfg))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      spark.read.schema(ManifestSchema).parquet(manifestDir(cfg))
+    // the part files, not the dir: Spark ignores a root path whose name
+    // starts with `_` as hidden and warns on every read of it. The same
+    // rule skips `_SUCCESS`, `_temporary` and `.crc` files here.
+    val parts = if (!fs.exists(path)) Array.empty[String]
+      else fs.listStatus(path).map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .map(_.toString)
+    if (parts.nonEmpty)
+      spark.read.schema(ManifestSchema).parquet(parts.toIndexedSeq: _*)
         .filter(col("status") === "complete").select("bucket", "bucket_key").distinct()
     else
       spark.createDataFrame(java.util.Collections.emptyList[Row](),
@@ -144,8 +154,10 @@ object ExtractionJob {
     *    partition), each filtered to `bucket IN wave`. At 100 TB pick
     *    w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
     *    commits without the re-scan;
-    *  - one manifest aggregate per wave over the rows it durably wrote,
-    *    collected and appended as one file.
+    *  - per wave, 3 Spark jobs: the write (its map stage, then sort plus
+    *    write) and one manifest append. The manifest rows come from an
+    *    observation on the write's result stage, not from a job of their
+    *    own.
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config,
       onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
@@ -169,21 +181,17 @@ object ExtractionJob {
 
     // bucketKey pins the schema to int and guards custom keys
     val bucketed = input.withColumn("bucket", bucketKey(cfg))
-    val rows = waves.flatMap { wave =>
-      // the one predicate selects the input rows and prunes the
-      // manifest's read-back of the written table
-      val inWave = col("bucket").isin(wave: _*)
-      commitWave(spark, bucketed.filter(inWave), inWave, cfg, key)
-    }
+    val rows = waves.flatMap(wave =>
+      commitWave(spark, bucketed.filter(col("bucket").isin(wave: _*)), wave, cfg, key))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
   }
 
-  /** One wave: extract and write `todo` (the wave's input rows), derive
-    * the wave's manifest rows from the rows durably written under
-    * `inWave`, and append them as one manifest file. Returns the
-    * appended rows.
+  /** One wave: extract and write `todo` (the wave's input rows, all with
+    * a bucket id in `wave`), and append the wave's manifest rows, taken
+    * from the write itself, as one manifest file. Returns the appended
+    * rows.
     */
-  private def commitWave(spark: SparkSession, todo: DataFrame, inWave: Column,
+  private def commitWave(spark: SparkSession, todo: DataFrame, wave: Seq[Int],
       cfg: Config, key: String): Seq[Row] = {
     val t0 = System.currentTimeMillis()
 
@@ -206,49 +214,37 @@ object ExtractionJob {
       // in (conv_id, turn_idx) order.
       .sortWithinPartitions("bucket", "conv_id", "turn_idx")
 
+    // lineage/metrics per bucket, observed on the rows the writer
+    // consumes — the plain-parquet analog of an Iceberg writer putting
+    // its stats in the commit metadata. The observation sits above the
+    // sort, so it runs in the write's result stage, whose accumulators
+    // Spark merges once per partition however often a task is retried
+    // (a map-stage observation could count a retried stage's rows
+    // twice), and it keeps the sort's ordering, so the writer adds no
+    // sort of its own. A fresh Observation per wave: each fires once.
+    // `truncated` is the truncation lineage: turns whose payload hit a
+    // tokenizer cap (content dropped — reference warnings trail,
+    // pipeline.py:2799)
+    val observation = new Observation()
+    val stats = WaveStats(Seq(col("bucket"), col("blocks_total") - col("blocks_kept"),
+      col("status") === "fallback", col("status") === "blank", col("truncated"))
+      .map(expr), wave)
+
     // exactly-once per bucket: dynamic partition overwrite replaces a
     // bucket dir on re-run instead of appending duplicates
-    extracted.write
+    extracted.observe(observation, column(stats.toAggregateExpression()).as("stats"))
+      .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(dataDir(cfg))
+    val wallMs = System.currentTimeMillis() - t0
 
-    // lineage/metrics per bucket, from the rows just durably WRITTEN: a
-    // partition-pruned + column-pruned (five small metric columns, never
-    // the text) read of the output table. This replaced a
-    // persist(MEMORY_AND_DISK) of the full extracted frame (round-5
-    // measurement at (1,4) and (2,8) cores: the compressed-columnar
-    // cache build sat on the hot path and cost more than this re-read —
-    // which touches ~1 % of the written bytes — at every width), and it
-    // is the honest lineage source: the manifest describes the durable
-    // bytes, not a cached twin of them. An Iceberg writer would emit
-    // these stats in commit metadata for free. A crashed run's partial
-    // bucket is never complete, so its rows — just re-written by this
-    // wave's dynamic overwrite — correctly enter this manifest.
-    //
-    // explicit schema: a wave whose ids have no input rows leaves
-    // nothing to infer from, and the read must still plan
-    val manifest = spark.read.schema(extracted.schema).parquet(dataDir(cfg))
-      .filter(inWave)
-      .groupBy("bucket")
-      .agg(
-        count(lit(1)).as("turns_processed"),
-        sum(col("blocks_total") - col("blocks_kept")).as("blocks_dropped"),
-        sum(when(col("status") === "fallback", 1).otherwise(0))
-          .as("parser_fallbacks"),
-        sum(when(col("status") === "blank", 1).otherwise(0)).as("blank_turns"),
-        // truncation lineage: turns whose payload hit a tokenizer cap
-        // (content dropped — reference warnings trail, pipeline.py:2799)
-        sum(when(col("truncated"), 1).otherwise(0)).as("turns_truncated"))
-      .withColumn("status", lit("complete"))
-      .withColumn("wall_ms", lit(System.currentTimeMillis() - t0))
-      .withColumn("bucket_key", lit(key))
-
-    // the aggregate runs once: its rows (≤ the wave's bucket ids —
-    // driver-safe) are collected and appended as exactly those rows, so
-    // the file and the returned frame hold the same values
-    val rows = manifest.collect().toSeq
+    // one row per wave id the write saw a row of (≤ the wave's ids —
+    // driver-safe; none for a zero-row wave), appended as exactly those
+    // rows, so the file and the returned frame hold the same values
+    val rows = observation.get("stats").asInstanceOf[scala.collection.Seq[Row]].toSeq
+      .map(r => Row.fromSeq(r.toSeq ++ Seq("complete", wallMs, key)))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
       .coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(cfg))
     rows
@@ -257,4 +253,89 @@ object ExtractionJob {
   /** the final output table (all completed buckets), stable per-key order */
   def output(spark: SparkSession, cfg: Config): DataFrame =
     spark.read.parquet(dataDir(cfg))
+}
+
+/** The manifest metrics of one wave as one bounded aggregate: per id of
+  * `ids`, the row count, `sum(dropped)` (NULL when no operand is, as
+  * `sum` gives it) and the number of rows whose `fallback`, `blank` and
+  * `truncated` flags are true — `children` are (bucket, dropped, the three
+  * flags). The buffer is `ids.length × K` longs, an id's slot found by
+  * binary search, so its size grows with the wave, never with its rows or
+  * with `numBuckets`. The result holds one [[WaveStats.RowType]] struct
+  * per id with ≥ 1 row, the rows `groupBy(bucket)` over the same rows
+  * would give.
+  */
+private[graft] final case class WaveStats(children: Seq[Expression], ids: Seq[Int],
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[Long]] {
+  import WaveStats.K
+
+  @transient private lazy val sortedIds = ids.sorted.toArray
+  @transient private lazy val in = children.toArray
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(WaveStats.RowType, containsNull = false)
+
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](ids.length * K)
+
+  override def update(buf: Array[Long], row: InternalRow): Array[Long] = {
+    val bucket = in(0).eval(row).asInstanceOf[Int]
+    val i = java.util.Arrays.binarySearch(sortedIds, bucket)
+    if (i < 0) throw new IllegalStateException(s"bucket id $bucket is not in this wave")
+    val at = i * K
+    buf(at) += 1
+    val dropped = in(1).eval(row)
+    if (dropped != null) {
+      buf(at + 1) += dropped.asInstanceOf[Number].longValue
+      buf(at + 2) += 1
+    }
+    var f = 2
+    while (f < in.length) {
+      if (in(f).eval(row) == true) buf(at + f + 1) += 1
+      f += 1
+    }
+    buf
+  }
+
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+    var j = 0
+    while (j < buf.length) { buf(j) += other(j); j += 1 }
+    buf
+  }
+
+  override def eval(buf: Array[Long]): Any =
+    new GenericArrayData(sortedIds.indices.filter(i => buf(i * K) > 0).map { i =>
+      val at = i * K
+      InternalRow(sortedIds(i), buf(at), if (buf(at + 2) > 0) buf(at + 1) else null,
+        buf(at + 3), buf(at + 4), buf(at + 5))
+    })
+
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bytes = java.nio.ByteBuffer.allocate(buf.length * 8)
+    bytes.asLongBuffer().put(buf)
+    bytes.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val buf = new Array[Long](bytes.length / 8)
+    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(buf)
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): WaveStats = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): WaveStats = copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): WaveStats =
+    copy(children = c)
+}
+
+private[graft] object WaveStats {
+
+  /** longs per id: count, dropped sum, dropped's non-NULL operands,
+    * fallback, blank and truncated turns */
+  val K = 6
+
+  /** one id's result: the manifest's bucket and metric columns */
+  val RowType: StructType = StructType(StructField("bucket", IntegerType) +:
+    Seq("turns_processed", "blocks_dropped", "parser_fallbacks", "blank_turns",
+      "turns_truncated").map(StructField(_, LongType)))
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.gen.TranscriptGen
@@ -416,19 +417,158 @@ class ResumeSpec extends SparkSpecBase {
   }
 
   test("Spark jobs per commit stay capped") {
-    // one commit = data write (2 jobs) + manifest aggregate collect (2) +
-    // one-file manifest append (1); a resume adds one manifest snapshot
+    // one commit = data write (2 jobs: its map stage, then sort plus
+    // write) + one-file manifest append (1); the manifest rows come from
+    // the write's own observation. A resume adds one manifest snapshot
     // (2: its distinct collect) and commits only the remaining ids, here
-    // one wave. A second manifest aggregate, a read of `_manifest` after
-    // a write or a wave of done ids breaks the caps.
+    // one wave. A manifest aggregate job, a read of `_manifest` after a
+    // write or a wave of done ids breaks the caps.
     val in = TranscriptGen.inputDf(spark, 1000L)
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val single = jobsOf { ExtractionJob.run(spark, in, cfg).collect(); () }
-    assert(single <= 5, s"single commit ran $single Spark jobs")
+    assert(single <= 3, s"single commit ran $single Spark jobs")
     val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
     ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
     val resume = jobsOf { ExtractionJob.run(spark, in, cfgW).collect(); () }
-    assert(resume <= 7, s"one-wave resume ran $resume Spark jobs")
+    assert(resume <= 5, s"one-wave resume ran $resume Spark jobs")
+  }
+
+  /** the five manifest sums per bucket of `rows`, by the aggregate the
+    * manifest was once read back from `data/` with */
+  private def readBack(rows: DataFrame): DataFrame =
+    rows.groupBy("bucket").agg(
+      count(lit(1)).as("turns_processed"),
+      sum(col("blocks_total") - col("blocks_kept")).as("blocks_dropped"),
+      sum(when(col("status") === "fallback", 1).otherwise(0)).as("parser_fallbacks"),
+      sum(when(col("status") === "blank", 1).otherwise(0)).as("blank_turns"),
+      sum(when(col("truncated"), 1).otherwise(0)).as("turns_truncated"))
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("the manifest equals the five sums recomputed from the written table") {
+    // the sums are observed in the write, never read back: they must
+    // still describe the durable rows of every committed bucket
+    val in = TranscriptGen.inputDf(spark, N)
+    val sums = Seq("bucket", "turns_processed", "blocks_dropped", "parser_fallbacks",
+      "blank_turns", "turns_truncated")
+    def check(cfg: Config, what: String): Unit = {
+      val manifest = spark.read.parquet(ExtractionJob.manifestDir(cfg)).select(sums.map(col): _*)
+      assert(manifest.count() === cfg.numBuckets, what)
+      assert(sameRows(manifest, readBack(ExtractionJob.output(spark, cfg))), what)
+    }
+
+    val single = Config(tmp(), numBuckets = 8, saltChunk = 64)
+    ExtractionJob.run(spark, in, single)
+    check(single, "single commit")
+
+    val waves = single.copy(outDir = tmp(), waveBuckets = Some(3))
+    ExtractionJob.run(spark, in, waves, onlyBuckets = Some(Seq(0, 3)))
+    ExtractionJob.run(spark, in, waves)
+    check(waves, "scattered-done resume in waves of 3")
+
+    val custom = Config(tmp(), numBuckets = 3, saltChunk = 64,
+      bucketExpr = Some(pmod(col("turn_idx"), lit(3))))
+    ExtractionJob.run(spark, in, custom)
+    check(custom, "custom bucketExpr")
+  }
+
+  test("the wave aggregate equals groupBy(bucket) on NULL operands and empty ids") {
+    // Extract never emits a NULL block count or truncated flag, so the
+    // job's own rows cannot show the NULL rule: sum(dropped) stays NULL
+    // for a bucket with no non-NULL operand, and an id without rows has
+    // no row at all
+    import spark.implicits._
+    val rows = Seq[(Int, Option[Int], Option[Int], String, Option[Boolean])](
+      (0, Some(5), Some(2), "ok", Some(true)), (0, None, Some(1), "fallback", None),
+      (1, None, None, "blank", Some(false)), (1, Some(3), None, "fallback", None),
+      (4, Some(7), Some(7), "blank", Some(true)))
+      .toDF("bucket", "blocks_total", "blocks_kept", "status", "truncated")
+    val observation = new org.apache.spark.sql.Observation()
+    val stats = graft.plans.WaveStats(Seq(col("bucket"),
+      col("blocks_total") - col("blocks_kept"), col("status") === "fallback",
+      col("status") === "blank", col("truncated"))
+      .map(org.apache.spark.sql.graftbridge.ColumnBridge.expr), Seq(0, 1, 2, 4))
+    rows.observe(observation, org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      stats.toAggregateExpression()).as("stats")).collect()
+    val observed = observation.get("stats").asInstanceOf[scala.collection.Seq[Row]].toSeq
+    val expected = readBack(rows).orderBy("bucket").collect().toSeq
+    assert(observed.map(_.toSeq) === expected.map(_.toSeq))
+    assert(observed.map(_.get(2)) === Seq(3L, null, 0L))
+  }
+
+  test("the write plans one sort, and the manifest observation sits in its result stage") {
+    // the observation keeps the (bucket, conv_id, turn_idx) ordering the
+    // writer requires, so no second whole-partition sort is planned, and
+    // it runs above the Exchange, where a retried task's rows count once
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Plans extends AdaptiveSparkPlanHelper
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = Plans.collect(qe.executedPlan) {
+        case w: DataWritingCommandExec => w
+      }.foreach(w => w.cmd match {
+        case c: InsertIntoHadoopFsRelationCommand
+            if c.outputPath.toString.endsWith(ExtractionJob.dataDir(cfg)) =>
+          writes.add(w.child); ()
+        case _ =>
+      })
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 500L), cfg)
+      org.apache.spark.graftbridge.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    assert(writes.size === 1, "one data write")
+    val plan = writes.peek
+    assert(Plans.collect(plan) { case s: SortExec => s }.size === 1, plan.treeString)
+    val observers = Plans.collect(plan) { case c: CollectMetricsExec => c }
+    assert(observers.size === 1, plan.treeString)
+    assert(Plans.collect(observers.head) { case e: ShuffleExchangeLike => e }.nonEmpty,
+      s"the observation is not above the Exchange:\n${plan.treeString}")
+    assert(Plans.collect(plan) { case q: ShuffleQueryStageExec => q }
+      .forall(q => Plans.collect(q.plan) { case c: CollectMetricsExec => c }.isEmpty),
+      s"the observation runs in a map stage:\n${plan.treeString}")
+  }
+
+  test("a manifest snapshot logs no hidden-path warning; a _temporary-only manifest is empty") {
+    // `_manifest` starts with `_`, so Spark ignores it as a root path and
+    // warns on every read; the snapshot reads its part files instead
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
+    ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 200L), cfg,
+      onlyBuckets = Some(Seq(0, 1)))
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        logged.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val done = try ExtractionJob.completedBuckets(spark, cfg).collect()
+      finally root.removeAppender(appender)
+    assert(done.map(_.getInt(0)).sorted === Array(0, 1))
+    assert(!logged.toArray.exists(_.toString.contains("All paths were ignored")),
+      logged.toArray.mkString("\n"))
+
+    val temporaryOnly = Config(tmp())
+    assert(new java.io.File(ExtractionJob.manifestDir(temporaryOnly), "_temporary/0").mkdirs())
+    assert(ExtractionJob.completedBuckets(spark, temporaryOnly).collect().isEmpty)
   }
 
   for ((field, cfg) <- Seq(
