@@ -1,12 +1,19 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Extract
@@ -36,6 +43,11 @@ import graft.operators.Extract
   *    dropped, parser fallbacks — observed per bucket in the write's own
   *    result stage ([[WaveStats]]) and appended to the manifest, with no
   *    read of the rows just written.
+  *  - Manifest I/O on the driver, as an Iceberg commit writes its
+  *    manifests: the resume snapshot streams the part files through a
+  *    `ParquetReader`, and each wave's append is one parquet file written
+  *    under a hidden name and renamed into place (a kill mid-append leaves
+  *    a hidden file every read skips). Neither starts a Spark job.
   */
 object ExtractionJob {
 
@@ -108,27 +120,72 @@ object ExtractionJob {
     StructField("wall_ms", LongType) :+
     StructField("bucket_key", StringType))
 
-  /** distinct (bucket, bucket_key) of the buckets prior runs completed;
-    * an empty frame when there is no manifest. The explicit schema reads
-    * manifest files written before a column was added without a
-    * schema-merge pass: their missing columns read as NULL.
+  /** distinct (bucket, bucket_key) of the buckets prior runs completed,
+    * as a local frame; empty when there is no manifest. Read on the
+    * driver ([[readCompleted]]), so it starts no Spark job.
     */
-  def completedBuckets(spark: SparkSession, cfg: Config): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(manifestDir(cfg))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the part files, not the dir: Spark ignores a root path whose name
-    // starts with `_` as hidden and warns on every read of it. The same
-    // rule skips `_SUCCESS`, `_temporary` and `.crc` files here.
-    val parts = if (!fs.exists(path)) Array.empty[String]
-      else fs.listStatus(path).map(_.getPath)
+  def completedBuckets(spark: SparkSession, cfg: Config): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(readCompleted(spark, cfg).map { case (b, k) => Row(b, k) }: _*),
+      ManifestSchema(Set("bucket", "bucket_key")))
+
+  /** distinct (bucket, bucket_key) of the manifest's `complete` rows,
+    * streamed row by row from each part file with a `ParquetReader` on
+    * the driver: memory holds the distinct pairs, never a whole file.
+    * Spark's hidden-file rule (a name starting with `_` or `.`) skips
+    * `_SUCCESS`, `_temporary`, `.crc` files and an append still in
+    * progress, as `spark.read.parquet` does. A column a file was written
+    * without (before it was added) reads as NULL; a row without a bucket
+    * completes none.
+    */
+  private def readCompleted(spark: SparkSession, cfg: Config): Seq[(Int, String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestDir(cfg))
+    val fs = dir.getFileSystem(conf)
+    val parts = if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
         .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map(_.toString)
-    if (parts.nonEmpty)
-      spark.read.schema(ManifestSchema).parquet(parts.toIndexedSeq: _*)
-        .filter(col("status") === "complete").select("bucket", "bucket_key").distinct()
-    else
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        ManifestSchema(Set("bucket", "bucket_key")))
+    val done = scala.collection.mutable.LinkedHashSet.empty[(Int, String)]
+    for (part <- parts) {
+      val reader = ParquetReader.builder(new GroupReadSupport, part).withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
+        def has(name: String) = g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
+        def string(name: String) = if (has(name)) g.getString(name, 0) else null
+        if (has("bucket") && string("status") == "complete")
+          done += g.getInteger("bucket", 0) -> string("bucket_key")
+      } finally reader.close()
+    }
+    done.toSeq
+  }
+
+  /** Appends `rows` (with [[ManifestSchema]]) to the manifest as one
+    * snappy parquet file written on the driver, the way an Iceberg
+    * commit writes its manifests. The file is written under a hidden
+    * name and renamed into place, so a kill mid-append leaves only a
+    * hidden file, which every manifest read skips: that wave's buckets
+    * are redone.
+    */
+  private def appendManifest(spark: SparkSession, cfg: Config, rows: Seq[Row]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestDir(cfg))
+    val id = java.util.UUID.randomUUID()
+    val staged = new Path(dir, s".part-$id.parquet.inprogress")
+    val schema = new SparkToParquetSchemaConverter(SQLConf.get).convert(ManifestSchema)
+    val writer = ExampleParquetWriter.builder(staged).withConf(conf).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(schema)
+      r.toSeq.zipWithIndex.foreach {
+        case (null, _) => // a NULL is an absent optional value
+        case (v: Int, i) => g.add(i, v)
+        case (v: Long, i) => g.add(i, v)
+        case (v: String, i) => g.add(i, v)
+      }
+      writer.write(g)
+    } finally writer.close()
+    val part = new Path(dir, s"part-$id-c000.snappy.parquet")
+    if (!dir.getFileSystem(conf).rename(staged, part))
+      throw new java.io.IOException(s"graft.ExtractionJob: could not commit $staged as $part")
   }
 
   /** Run (or resume) the extraction job over `input` (transcript schema).
@@ -148,16 +205,16 @@ object ExtractionJob {
     * written under another bucket key fails the run before it writes;
     * rows from before the key was recorded (NULL) resume as before.
     * Cost model — waves over the remaining ids:
-    *  - one `_manifest` snapshot per run; an empty todo list then starts
-    *    no Spark job;
+    *  - one `_manifest` snapshot per run, read on the driver (no Spark
+    *    job); an empty todo list then starts no Spark job at all;
     *  - K waves = K input scans (the bucket key is computed, not a storage
     *    partition), each filtered to `bucket IN wave`. At 100 TB pick
     *    w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
     *    commits without the re-scan;
-    *  - per wave, 3 Spark jobs: the write (its map stage, then sort plus
-    *    write) and one manifest append. The manifest rows come from an
-    *    observation on the write's result stage, not from a job of their
-    *    own.
+    *  - per wave, 2 Spark jobs: the write (its map stage, then sort plus
+    *    write). The manifest rows come from an observation on the write's
+    *    result stage, and the driver appends them as one file (hidden
+    *    name, then rename); a wave that saw no row appends none.
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config,
       onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
@@ -168,14 +225,13 @@ object ExtractionJob {
     cfg.waveBuckets.foreach(w => require(w > 0, s"waveBuckets must be positive, got $w"))
     val key = bucketKeySql(cfg)
 
-    // EAGER snapshot (≤ one row per bucket and key): a lazy manifest read
-    // is re-evaluated after this run's own writes refresh the path cache
-    val done = completedBuckets(spark, cfg).collect()
-    val otherKeys = done.flatMap(r => Option(r.getString(1))).distinct.filter(_ != key)
+    // one snapshot, read before any write (≤ one pair per bucket and key)
+    val done = readCompleted(spark, cfg)
+    val otherKeys = done.flatMap(d => Option(d._2)).distinct.filter(_ != key)
     require(otherKeys.isEmpty, s"graft.ExtractionJob: ${manifestDir(cfg)} has buckets" +
       s" completed under bucket key ${otherKeys.mkString(", ")}, but this run's key is" +
       s" $key — resuming would write rows under a second bucket mapping")
-    val doneIds = done.map(_.getInt(0)).toSet
+    val doneIds = done.map(_._1).toSet
     val todo = onlyBuckets.getOrElse(0 until cfg.numBuckets).distinct.sorted.filterNot(doneIds)
     val waves = todo.grouped(cfg.waveBuckets.getOrElse(todo.length max 1)).toSeq
 
@@ -188,8 +244,8 @@ object ExtractionJob {
 
   /** One wave: extract and write `todo` (the wave's input rows, all with
     * a bucket id in `wave`), and append the wave's manifest rows, taken
-    * from the write itself, as one manifest file. Returns the appended
-    * rows.
+    * from the write itself, as one manifest file ([[appendManifest]]).
+    * Returns the appended rows.
     */
   private def commitWave(spark: SparkSession, todo: DataFrame, wave: Seq[Int],
       cfg: Config, key: String): Seq[Row] = {
@@ -241,12 +297,12 @@ object ExtractionJob {
     val wallMs = System.currentTimeMillis() - t0
 
     // one row per wave id the write saw a row of (≤ the wave's ids —
-    // driver-safe; none for a zero-row wave), appended as exactly those
-    // rows, so the file and the returned frame hold the same values
+    // driver-safe), appended as exactly those rows, so the file and the
+    // returned frame hold the same values. A zero-row wave appends no
+    // file: it would carry no row
     val rows = observation.get("stats").asInstanceOf[scala.collection.Seq[Row]].toSeq
       .map(r => Row.fromSeq(r.toSeq ++ Seq("complete", wallMs, key)))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(cfg))
+    if (rows.nonEmpty) appendManifest(spark, cfg, rows)
     rows
   }
 

@@ -139,11 +139,12 @@ class ResumeSpec extends SparkSpecBase {
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val in = TranscriptGen.inputDf(spark, 500L)
     ExtractionJob.run(spark, in, cfg)
-    // an empty todo list: the manifest snapshot is the run's only work
+    // an empty todo list: the manifest snapshot, read on the driver, is
+    // the run's only work
     val snapshot = jobsOf { ExtractionJob.completedBuckets(spark, cfg).collect(); () }
     var again: org.apache.spark.sql.DataFrame = null
     val jobs = jobsOf { again = ExtractionJob.run(spark, in, cfg); () }
-    assert(snapshot >= 1 && jobs === snapshot,
+    assert(snapshot === 0 && jobs === 0,
       s"third run ran $jobs Spark jobs, its snapshot $snapshot")
     assert(again.count() === 0)
     assert(ExtractionJob.output(spark, cfg).count() === 500L)
@@ -320,8 +321,10 @@ class ResumeSpec extends SparkSpecBase {
     assert(none.count() === 0)
     assert(new java.io.File(cfg.outDir).list().isEmpty)
     // a zero-row input commits empty waves; the dirs they create are a
-    // valid resume base for a real input
+    // valid resume base for a real input. A wave that saw no row appends
+    // no manifest file
     assert(ExtractionJob.run(spark, in.filter(lit(false)), cfg).count() === 0)
+    assert(manifestFiles(cfg) === 0)
     val m = ExtractionJob.run(spark, in, cfg)
     assert(m.schema === none.schema)
     assert(m.agg(sum("turns_processed")).head.getLong(0) === 100L)
@@ -418,19 +421,19 @@ class ResumeSpec extends SparkSpecBase {
 
   test("Spark jobs per commit stay capped") {
     // one commit = data write (2 jobs: its map stage, then sort plus
-    // write) + one-file manifest append (1); the manifest rows come from
-    // the write's own observation. A resume adds one manifest snapshot
-    // (2: its distinct collect) and commits only the remaining ids, here
-    // one wave. A manifest aggregate job, a read of `_manifest` after a
-    // write or a wave of done ids breaks the caps.
+    // write); the manifest rows come from the write's own observation,
+    // and the manifest append and the resume's snapshot run on the
+    // driver and start no Spark job. A resume commits only the remaining
+    // ids, here one wave. A manifest aggregate job, a Spark read or write
+    // of `_manifest` or a wave of done ids breaks the caps.
     val in = TranscriptGen.inputDf(spark, 1000L)
     val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
     val single = jobsOf { ExtractionJob.run(spark, in, cfg).collect(); () }
-    assert(single <= 3, s"single commit ran $single Spark jobs")
+    assert(single <= 2, s"single commit ran $single Spark jobs")
     val cfgW = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
     ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
     val resume = jobsOf { ExtractionJob.run(spark, in, cfgW).collect(); () }
-    assert(resume <= 5, s"one-wave resume ran $resume Spark jobs")
+    assert(resume <= 2, s"one-wave resume ran $resume Spark jobs")
   }
 
   /** the five manifest sums per bucket of `rows`, by the aggregate the
@@ -569,6 +572,46 @@ class ResumeSpec extends SparkSpecBase {
     val temporaryOnly = Config(tmp())
     assert(new java.io.File(ExtractionJob.manifestDir(temporaryOnly), "_temporary/0").mkdirs())
     assert(ExtractionJob.completedBuckets(spark, temporaryOnly).collect().isEmpty)
+  }
+
+  test("a kill mid-append leaves only hidden files; a resume redoes that wave") {
+    // the last wave writes its data, then dies while appending its
+    // manifest file: only a truncated hidden in-progress file remains,
+    // next to a `_temporary/` dir and a `_SUCCESS` file. No read counts
+    // them, and the resume redoes the wave over its written buckets
+    val in = TranscriptGen.inputDf(spark, N)
+    val cfgA = Config(tmp(), numBuckets = 8, saltChunk = 64)
+    val cfgW = cfgA.copy(outDir = tmp(), waveBuckets = Some(3))
+    ExtractionJob.run(spark, in, cfgA) // reference: uninterrupted run
+    ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(0 until 6))
+    val mdir = new java.io.File(ExtractionJob.manifestDir(cfgW))
+    def parts = mdir.listFiles().filter(_.getName.startsWith("part-")).toSet
+    val committed = parts
+    ExtractionJob.run(spark, in, cfgW, onlyBuckets = Some(Seq(6, 7)))
+    val Seq(last) = (parts -- committed).toSeq
+    val bytes = Files.readAllBytes(last.toPath)
+    Files.write(new java.io.File(mdir, s".${last.getName}.inprogress").toPath,
+      bytes.take(bytes.length / 2))
+    assert(last.delete() && new java.io.File(mdir, s".${last.getName}.crc").delete())
+    assert(new java.io.File(mdir, "_temporary/0").mkdirs())
+    Files.write(new java.io.File(mdir, "_temporary/0/part-00000.snappy.parquet").toPath,
+      "PAR1 not a parquet file".getBytes("UTF-8"))
+    assert(new java.io.File(mdir, "_SUCCESS").createNewFile())
+
+    assert(ExtractionJob.completedBuckets(spark, cfgW).collect().map(_.getInt(0)).sorted
+      === (0 until 6).toArray)
+    val read = spark.read.parquet(mdir.toString)
+    assert(read.count() === 6)
+    assert(read.select("bucket").distinct().count() === 6)
+
+    val resumed = ExtractionJob.run(spark, in, cfgW)
+    assert(resumed.select("bucket").collect().map(_.getInt(0)).sorted === Array(6, 7))
+    assert(spark.read.parquet(mdir.toString).count() === 8)
+    val a = ExtractionJob.output(spark, cfgA)
+    val b = ExtractionJob.output(spark, cfgW)
+    assert(a.count() === N && b.count() === N)
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
   }
 
   for ((field, cfg) <- Seq(
