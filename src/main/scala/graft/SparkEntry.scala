@@ -820,10 +820,10 @@ object SparkEntry {
     // The NORTH-STAR bucketed job under the DuckDB value oracle (SURVEY
     // S7/S8/T6 — x03 itself stays rows-only because its hash-salted
     // bucket ids and repo-generated transcripts are not DuckDB-
-    // reproducible): the FULL ExtractionJob.run — salted-bucket
-    // repartition, ONE write-path sort, dynamic-partition-overwrite
-    // parquet sink, manifest lineage aggregate, manifest append +
-    // read-back — over a documents-derived transcript frame with
+    // reproducible): the FULL ExtractionJob.run — one write task per
+    // bucket, ONE sort in it, the bucket's parquet file renamed into
+    // place, the manifest sums counted in the write loop, manifest
+    // append + read-back — over a documents-derived transcript frame with
     // closed-form payloads (the x19/x20 generators + a blank turn per
     // doc_id%7 and an over-cap pdf turn per doc_id%29), re-keyed by
     // `conv_id % numBuckets` so every manifest value has a closed form.

@@ -17,12 +17,13 @@ import graft.plans.ExtractionJob
   * N deterministic turns in-job (smoke runs need no pre-made input).
   *
   * Re-running with the same `<outDir>` resumes from the manifest:
-  * completed buckets are skipped, partial buckets are overwritten
-  * atomically via dynamic partition overwrite — kill the job at any
-  * point and re-submit it, with the same `[numBuckets]`, to finish it
-  * (another bucket count fails before it writes). Pass `[waveBuckets]`
-  * to commit in waves of that many buckets, so a kill loses at most one
-  * wave instead of the whole run.
+  * completed buckets are skipped, and a bucket's dir left by a killed
+  * run is deleted and written again (one file per bucket, renamed into
+  * place by its write task; the manifest append is the commit) — kill
+  * the job at any point and re-submit it, with the same `[numBuckets]`,
+  * to finish it (another bucket count fails before it writes). Pass
+  * `[waveBuckets]` to commit in waves of that many buckets, so a kill
+  * loses at most one wave instead of the whole run.
   */
 object SubmitMain {
   def main(args: Array[String]): Unit = {

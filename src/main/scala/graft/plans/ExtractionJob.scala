@@ -1,20 +1,24 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Extract
 
@@ -36,13 +40,18 @@ import graft.operators.Extract
   *    for minus the ids completed in one `_manifest` snapshot — and
   *    commits it in waves; the graft analog of the reference's cache reuse
   *    (`pipeline.py:100-191`) but with durable exactly-once-per-bucket
-  *    semantics: data is written with dynamic partition overwrite, so
-  *    re-running a bucket that crashed mid-write replaces its directory
-  *    instead of appending duplicates.
+  *    semantics: the manifest is the commit log. A todo id has no
+  *    `complete` row, so the driver deletes its `data/bucket=<b>` dir
+  *    (a crash's leftovers) before the wave writes it again.
+  *  - One task per wave bucket ([[BucketWriter]]): the task writes its
+  *    bucket's one parquet file in place under a hidden name and renames
+  *    it to a name fixed per wave and bucket, so a retried task replaces
+  *    the file instead of adding a second one. No committer, staging dir
+  *    or job-commit rename is involved.
   *  - Lineage/metrics (north_star triplet): turns processed, blocks
-  *    dropped, parser fallbacks — observed per bucket in the write's own
-  *    result stage ([[WaveStats]]) and appended to the manifest, with no
-  *    read of the rows just written.
+  *    dropped, parser fallbacks — counted by each write task in its write
+  *    loop and appended to the manifest, with no read of the rows just
+  *    written.
   *  - Manifest I/O on the driver, as an Iceberg commit writes its
   *    manifests: the resume snapshot streams the part files through a
   *    `ParquetReader`, and each wave's append is one parquet file written
@@ -115,10 +124,9 @@ object ExtractionJob {
     * bucket key it was written under. Every field is nullable, as a read
     * of the table gives it.
     */
-  private val ManifestSchema = StructType(WaveStats.RowType.fields.toSeq :+
-    StructField("status", StringType) :+
-    StructField("wall_ms", LongType) :+
-    StructField("bucket_key", StringType))
+  private val ManifestSchema = StructType.fromDDL("bucket INT, turns_processed BIGINT," +
+    " blocks_dropped BIGINT, parser_fallbacks BIGINT, blank_turns BIGINT," +
+    " turns_truncated BIGINT, status STRING, wall_ms BIGINT, bucket_key STRING")
 
   /** distinct (bucket, bucket_key) of the buckets prior runs completed,
     * as a local frame; empty when there is no manifest. Read on the
@@ -211,10 +219,13 @@ object ExtractionJob {
     *    partition), each filtered to `bucket IN wave`. At 100 TB pick
     *    w ≈ numBuckets/4..8; a real Iceberg writer would get per-snapshot
     *    commits without the re-scan;
-    *  - per wave, 2 Spark jobs: the write (its map stage, then sort plus
-    *    write). The manifest rows come from an observation on the write's
-    *    result stage, and the driver appends them as one file (hidden
-    *    name, then rename); a wave that saw no row appends none.
+    *  - per wave, 2 Spark jobs: the map stage, then one write task per
+    *    wave id ([[BucketWriter]]), which sorts its bucket's rows, writes
+    *    them as one file and counts its manifest row. The driver deletes
+    *    the wave ids' old dirs first and appends the counted rows as one
+    *    manifest file after (hidden name, then rename); a wave that saw no
+    *    row appends none. Each bucket is one file, so
+    *    `spark.sql.files.maxRecordsPerFile` does not apply.
     */
   def run(spark: SparkSession, input: DataFrame, cfg: Config,
       onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
@@ -223,6 +234,8 @@ object ExtractionJob {
     require(cfg.numBuckets > 0, s"numBuckets must be positive, got ${cfg.numBuckets}")
     require(cfg.saltChunk > 0, s"saltChunk must be positive, got ${cfg.saltChunk}")
     cfg.waveBuckets.foreach(w => require(w > 0, s"waveBuckets must be positive, got $w"))
+    for (b <- onlyBuckets.getOrElse(Nil)) require(b >= 0 && b < cfg.numBuckets,
+      s"onlyBuckets id $b is outside [0, ${cfg.numBuckets})")
     val key = bucketKeySql(cfg)
 
     // one snapshot, read before any write (≤ one pair per bucket and key)
@@ -242,10 +255,11 @@ object ExtractionJob {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
   }
 
-  /** One wave: extract and write `todo` (the wave's input rows, all with
-    * a bucket id in `wave`), and append the wave's manifest rows, taken
-    * from the write itself, as one manifest file ([[appendManifest]]).
-    * Returns the appended rows.
+  /** One wave: extract `todo` (the wave's input rows, all with a bucket
+    * id in `wave`), write each id's rows as one file in one task
+    * ([[BucketWriter]]), and append the rows the tasks counted as one
+    * manifest file ([[appendManifest]]), the wave's commit. Returns the
+    * appended rows.
     */
   private def commitWave(spark: SparkSession, todo: DataFrame, wave: Seq[Int],
       cfg: Config, key: String): Seq[Row] = {
@@ -256,52 +270,34 @@ object ExtractionJob {
     // bucketExpr a second time on Extract's OUTPUT, where any key not a
     // pure function of (conv_id, turn_idx) either fails analysis — the
     // output lacks role/tool/ts — or silently disagrees with the resume
-    // filter's pre-Extract value, breaking exactly-once on resume)
-    val extracted = Extract(todo, Seq("bucket"))
-      .repartition(cfg.numBuckets, col("bucket"))
-      // bucket LEADS the sort key: the dynamic-partition file writer
-      // requires rows ordered by the partition columns and would insert
-      // its OWN whole-partition sort (by bucket alone) when the child
-      // ordering doesn't satisfy it — a second full sort of every
-      // partition, and per-(conv) row order would then hang on that
-      // sort's stability. Sorting (bucket, conv_id, turn_idx) here
-      // satisfies the writer's requirement prefix-wise (ONE sort total)
-      // and keeps the T6 contract: within every bucket file, rows are
-      // in (conv_id, turn_idx) order.
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+    // filter's pre-Extract value, breaking exactly-once on resume).
+    // An id's position in the wave is its partition, so each of the
+    // wave's tasks holds exactly one bucket; sorting it keeps the T6
+    // contract: within every bucket file, rows are in (conv_id, turn_idx)
+    // order
+    val qe = Extract(todo, Seq("bucket"))
+      .repartitionById(wave.length,
+        (array_position(typedLit(wave.toArray), col("bucket")) - 1).cast("int"))
+      .sortWithinPartitions("conv_id", "turn_idx")
+      .queryExecution
 
-    // lineage/metrics per bucket, observed on the rows the writer
-    // consumes — the plain-parquet analog of an Iceberg writer putting
-    // its stats in the commit metadata. The observation sits above the
-    // sort, so it runs in the write's result stage, whose accumulators
-    // Spark merges once per partition however often a task is retried
-    // (a map-stage observation could count a retried stage's rows
-    // twice), and it keeps the sort's ordering, so the writer adds no
-    // sort of its own. A fresh Observation per wave: each fires once.
-    // `truncated` is the truncation lineage: turns whose payload hit a
-    // tokenizer cap (content dropped — reference warnings trail,
-    // pipeline.py:2799)
-    val observation = new Observation()
-    val stats = WaveStats(Seq(col("bucket"), col("blocks_total") - col("blocks_kept"),
-      col("status") === "fallback", col("status") === "blank", col("truncated"))
-      .map(expr), wave)
-
-    // exactly-once per bucket: dynamic partition overwrite replaces a
-    // bucket dir on re-run instead of appending duplicates
-    extracted.observe(observation, column(stats.toAggregateExpression()).as("stats"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(dataDir(cfg))
+    // a todo id has no complete row: whatever its dir holds is a crash's
+    val dir = new Path(dataDir(cfg))
+    wave.foreach(b => dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(dir, s"bucket=$b"), true))
+    val writer = new BucketWriter(spark, dir.toString, qe.executedPlan.output)
+    // `runJob` keeps one result per partition, the succeeded attempt's,
+    // so a retried task counts once
+    val counted = SQLExecution.withNewExecutionId(qe, Some("ExtractionJob.commitWave")) {
+      spark.sparkContext.runJob(qe.toRdd,
+        (task: TaskContext, rows: Iterator[InternalRow]) => writer.write(task.taskAttemptId(), rows))
+    }
     val wallMs = System.currentTimeMillis() - t0
 
-    // one row per wave id the write saw a row of (≤ the wave's ids —
-    // driver-safe), appended as exactly those rows, so the file and the
-    // returned frame hold the same values. A zero-row wave appends no
-    // file: it would carry no row
-    val rows = observation.get("stats").asInstanceOf[scala.collection.Seq[Row]].toSeq
-      .map(r => Row.fromSeq(r.toSeq ++ Seq("complete", wallMs, key)))
+    // one row per wave id that had a row, in wave (= id) order, appended
+    // as exactly those rows, so the file and the returned frame hold the
+    // same values. A zero-row wave appends no file: it would carry no row
+    val rows = counted.toSeq.flatten.map(r => Row.fromSeq(r.toSeq ++ Seq("complete", wallMs, key)))
     if (rows.nonEmpty) appendManifest(spark, cfg, rows)
     rows
   }
@@ -311,87 +307,76 @@ object ExtractionJob {
     spark.read.parquet(dataDir(cfg))
 }
 
-/** The manifest metrics of one wave as one bounded aggregate: per id of
-  * `ids`, the row count, `sum(dropped)` (NULL when no operand is, as
-  * `sum` gives it) and the number of rows whose `fallback`, `blank` and
-  * `truncated` flags are true — `children` are (bucket, dropped, the three
-  * flags). The buffer is `ids.length × K` longs, an id's slot found by
-  * binary search, so its size grows with the wave, never with its rows or
-  * with `numBuckets`. The result holds one [[WaveStats.RowType]] struct
-  * per id with ≥ 1 row, the rows `groupBy(bucket)` over the same rows
-  * would give.
+/** One bucket's write task, built once per wave on the driver: writes the
+  * rows it is given, all of one bucket, in their order, as the one file
+  * `<dir>/bucket=<b>/part-<wave>-<b>-c000.snappy.parquet`, and returns
+  * the bucket's manifest sums. `output` is the rows' schema; the file
+  * holds every column but `bucket`, as a `partitionBy("bucket")` write
+  * gives it. The files come from Spark's own parquet writer factory
+  * (`ParquetFileFormat.prepareWrite`), so codec and footer are Spark's;
+  * its Hadoop conf reaches the tasks as one broadcast, not a copy per
+  * task. `<wave>` is a fresh id per writer.
   */
-private[graft] final case class WaveStats(children: Seq[Expression], ids: Seq[Int],
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-  import WaveStats.K
+private[graft] final class BucketWriter(spark: SparkSession, dir: String, output: Seq[Attribute])
+    extends Serializable {
+  private val data = output.filter(_.name != "bucket")
+  private val schema = DataTypeUtils.fromAttributes(data)
+  private val (factory, conf) = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    (new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema),
+      spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
+  }
+  private val wave = java.util.UUID.randomUUID().toString
+  private val Seq(fallback, blank) = Seq("fallback", "blank").map(UTF8String.fromString)
 
-  @transient private lazy val sortedIds = ids.sorted.toArray
-  @transient private lazy val in = children.toArray
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(WaveStats.RowType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](ids.length * K)
-
-  override def update(buf: Array[Long], row: InternalRow): Array[Long] = {
-    val bucket = in(0).eval(row).asInstanceOf[Int]
-    val i = java.util.Arrays.binarySearch(sortedIds, bucket)
-    if (i < 0) throw new IllegalStateException(s"bucket id $bucket is not in this wave")
-    val at = i * K
-    buf(at) += 1
-    val dropped = in(1).eval(row)
-    if (dropped != null) {
-      buf(at + 1) += dropped.asInstanceOf[Number].longValue
-      buf(at + 2) += 1
+  /** Writes `rows` under a hidden name, then renames the file over the
+    * bucket's final name, so a second attempt replaces the first's file;
+    * an attempt that fails deletes its hidden file. Returns (bucket,
+    * turns, `sum(blocks_total - blocks_kept)` — NULL when no operand pair
+    * is non-NULL, as `sum` gives it —, fallback, blank and truncated
+    * turns), or None for no row. Truncated turns are the truncation
+    * lineage: a tokenizer cap dropped content (the reference's warnings
+    * trail, pipeline.py:2799). Fails on a second bucket id.
+    */
+  def write(attempt: Long, rows: Iterator[InternalRow]): Option[Row] =
+    if (!rows.hasNext) None else {
+      val at = output.map(_.name).zipWithIndex.toMap
+      val Seq(b, total, kept, status, truncated) =
+        Seq("bucket", "blocks_total", "blocks_kept", "status", "truncated").map(at)
+      val project = UnsafeProjection.create(data, output)
+      val first = rows.next()
+      val bucket = first.getInt(b)
+      val task = new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID())
+      val part = new Path(s"$dir/bucket=$bucket",
+        s"part-$wave-$bucket-c000${factory.getFileExtension(task)}")
+      val staged = new Path(part.getParent, s".${part.getName}.inprogress-$attempt")
+      val fs = part.getFileSystem(task.getConfiguration)
+      // turns, dropped, dropped's non-NULL operand pairs, fallback, blank, truncated
+      val n = new Array[Long](6)
+      val file = factory.newInstance(staged.toString, schema, task)
+      try {
+        (Iterator.single(first) ++ rows).foreach { r =>
+          if (r.getInt(b) != bucket) throw new IllegalStateException(
+            s"graft.ExtractionJob: bucket ids $bucket and ${r.getInt(b)} in one write task")
+          file.write(project(r))
+          n(0) += 1
+          if (!r.isNullAt(total) && !r.isNullAt(kept)) {
+            n(1) += r.getInt(total).toLong - r.getInt(kept)
+            n(2) += 1
+          }
+          if (!r.isNullAt(status) && r.getUTF8String(status) == fallback) n(3) += 1
+          if (!r.isNullAt(status) && r.getUTF8String(status) == blank) n(4) += 1
+          if (!r.isNullAt(truncated) && r.getBoolean(truncated)) n(5) += 1
+        }
+        file.close()
+        fs.delete(part, false)
+        if (!fs.rename(staged, part))
+          throw new java.io.IOException(s"graft.ExtractionJob: could not commit $staged as $part")
+      } catch { case e: Throwable =>
+        try file.close() catch { case scala.util.control.NonFatal(_) => }
+        fs.delete(staged, false)
+        throw e
+      }
+      Some(Row(bucket, n(0), if (n(2) > 0) n(1) else null, n(3), n(4), n(5)))
     }
-    var f = 2
-    while (f < in.length) {
-      if (in(f).eval(row) == true) buf(at + f + 1) += 1
-      f += 1
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < buf.length) { buf(j) += other(j); j += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any =
-    new GenericArrayData(sortedIds.indices.filter(i => buf(i * K) > 0).map { i =>
-      val at = i * K
-      InternalRow(sortedIds(i), buf(at), if (buf(at + 2) > 0) buf(at + 1) else null,
-        buf(at + 3), buf(at + 4), buf(at + 5))
-    })
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bytes = java.nio.ByteBuffer.allocate(buf.length * 8)
-    bytes.asLongBuffer().put(buf)
-    bytes.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val buf = new Array[Long](bytes.length / 8)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(buf)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): WaveStats = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WaveStats = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): WaveStats =
-    copy(children = c)
-}
-
-private[graft] object WaveStats {
-
-  /** longs per id: count, dropped sum, dropped's non-NULL operands,
-    * fallback, blank and truncated turns */
-  val K = 6
-
-  /** one id's result: the manifest's bucket and metric columns */
-  val RowType: StructType = StructType(StructField("bucket", IntegerType) +:
-    Seq("turns_processed", "blocks_dropped", "parser_fallbacks", "blank_turns",
-      "turns_truncated").map(StructField(_, LongType)))
 }

@@ -175,19 +175,21 @@ class FunctionsSpec extends SparkSpecBase {
 
     // the html path's native top-k mean is this expression bit for bit
     // (x19/x20 round confidence to 6 places, so only this pins it)
-    val rng = new scala.util.Random(fuzzSeed)
-    val cases = Seq(Seq(0.5, 0.5), Seq(0.0, 1.0), Seq(1e-4, 0.3, 0.97),
-      Seq.fill(20)(0.9), scores) ++
-      (1 to 60).map(n => Seq.fill(n)(
-        if (rng.nextInt(5) == 0) rng.nextDouble() * 2e-3 else rng.nextDouble()))
-    assert(cases.exists(_.size <= 20) && cases.exists(_.size > 20) &&
-      cases.exists(_.exists(_ < 1e-3)))
-    val catalyst = cases.toDF("s").select(geoMeanTopK(col("s")))
-      .collect().map(_.getDouble(0))
-    for ((s, c) <- cases.zip(catalyst)) {
-      val native = graft.expressions.HtmlBlocks.geoMeanTopK(s.toArray)
-      assert(java.lang.Double.doubleToRawLongBits(native) ===
-        java.lang.Double.doubleToRawLongBits(c), s"$native vs $c on $s")
+    for (seed <- Seq(fuzzSeed, 1L, 2L)) {
+      val rng = new scala.util.Random(seed)
+      val cases = Seq(Seq(0.5, 0.5), Seq(0.0, 1.0), Seq(1e-4, 0.3, 0.97),
+        Seq.fill(20)(0.9), scores) ++
+        (1 to 60).map(n => Seq.fill(n)(
+          if (rng.nextInt(5) == 0) rng.nextDouble() * 2e-3 else rng.nextDouble()))
+      assert(cases.exists(_.size <= 20) && cases.exists(_.size > 20) &&
+        cases.exists(_.exists(_ < 1e-3)), s"seed $seed")
+      val catalyst = cases.toDF("s").select(geoMeanTopK(col("s")))
+        .collect().map(_.getDouble(0))
+      for ((s, c) <- cases.zip(catalyst)) {
+        val native = graft.expressions.HtmlBlocks.geoMeanTopK(s.toArray)
+        assert(java.lang.Double.doubleToRawLongBits(native) ===
+          java.lang.Double.doubleToRawLongBits(c), s"seed $seed: $native vs $c on $s")
+      }
     }
   }
 

@@ -57,13 +57,19 @@ class NativeCallSpec extends SparkSpecBase {
       case _ => s.reverse
     }
 
-  private lazy val texts: Seq[String] = {
+  /** generated turns and bills, uncorrupted */
+  private lazy val generatedTexts: Seq[String] = {
     val turns = TranscriptGen.inputDf(spark, 400L).select("text", "tool").collect()
       .flatMap(r => Seq(r.getString(0), r.getString(1)))
     val bills = BillGen.withBill(spark.range(150).selectExpr("id AS doc_id", "'' AS text"))
       .select("bill").as[String].collect()
-    val rng = new scala.util.Random(fuzzSeed)
-    edges ++ turns ++ bills ++ (turns ++ bills).map(corrupt(rng))
+    turns.toSeq ++ bills
+  }
+
+  /** the edges, the generated texts and their corruptions under `seed` */
+  private def texts(seed: Long): Seq[String] = {
+    val rng = new scala.util.Random(seed)
+    edges ++ generatedTexts ++ generatedTexts.map(corrupt(rng))
   }
 
   /** each converted function's column over `t` (string) */
@@ -98,25 +104,28 @@ class NativeCallSpec extends SparkSpecBase {
   }
 
   test("generated and interpreted calls agree on every converted function") {
-    val local = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
-    val dir = tempDir("graft-native")
-    local.write.mode("overwrite").parquet(dir)
-    val (interpreted, localCodegen) = evaluate(local)
-    val (generated, scanCodegen) = evaluate(spark.read.parquet(dir))
-    // the local relation is evaluated while planning (reflective eval);
-    // the parquet scan runs the generated row loop
-    assert(!localCodegen && scanCodegen)
-    assert(interpreted.length === texts.length)
-    val names = "id" +: converted(col("t")).map(_._1)
-    for (k <- 1 until names.length) {
-      val bad = interpreted.zip(generated).filter { case (a, b) => a.get(k) != b.get(k) }
-      assert(bad.isEmpty, s"${names(k)}: codegen and interpreted eval diverge on " +
-        bad.take(2).map { case (a, b) => s"${texts(a.getInt(0))}: ${a.get(k)} vs ${b.get(k)}" }
-          .mkString("; "))
+    for (seed <- Seq(fuzzSeed, 1L, 2L)) {
+      val texts = this.texts(seed)
+      val local = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
+      val dir = tempDir("graft-native")
+      local.write.mode("overwrite").parquet(dir)
+      val (interpreted, localCodegen) = evaluate(local)
+      val (generated, scanCodegen) = evaluate(spark.read.parquet(dir))
+      // the local relation is evaluated while planning (reflective eval);
+      // the parquet scan runs the generated row loop
+      assert(!localCodegen && scanCodegen, s"seed $seed")
+      assert(interpreted.length === texts.length, s"seed $seed")
+      val names = "id" +: converted(col("t")).map(_._1)
+      for (k <- 1 until names.length) {
+        val bad = interpreted.zip(generated).filter { case (a, b) => a.get(k) != b.get(k) }
+        assert(bad.isEmpty, s"seed $seed: ${names(k)}: codegen and interpreted eval diverge on " +
+          bad.take(2).map { case (a, b) => s"${texts(a.getInt(0))}: ${a.get(k)} vs ${b.get(k)}" }
+            .mkString("; "))
+      }
+      // the corpus reaches the chains' matches, not only their NULLs
+      for (k <- names.indices.drop(1))
+        assert(interpreted.exists(!_.isNullAt(k)), s"seed $seed: ${names(k)}")
     }
-    // the corpus reaches the chains' matches, not only their NULLs
-    for (k <- names.indices.drop(1))
-      assert(interpreted.exists(!_.isNullAt(k)), names(k))
   }
 
   test("SQL functions keep their output column names, types and nullability") {

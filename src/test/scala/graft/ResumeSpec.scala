@@ -480,67 +480,65 @@ class ResumeSpec extends SparkSpecBase {
     // Extract never emits a NULL block count or truncated flag, so the
     // job's own rows cannot show the NULL rule: sum(dropped) stays NULL
     // for a bucket with no non-NULL operand, and an id without rows has
-    // no row at all
+    // no row at all. Each id's rows go through the write task's sums as
+    // that id's task would get them
     import spark.implicits._
     val rows = Seq[(Int, Option[Int], Option[Int], String, Option[Boolean])](
       (0, Some(5), Some(2), "ok", Some(true)), (0, None, Some(1), "fallback", None),
       (1, None, None, "blank", Some(false)), (1, Some(3), None, "fallback", None),
       (4, Some(7), Some(7), "blank", Some(true)))
       .toDF("bucket", "blocks_total", "blocks_kept", "status", "truncated")
-    val observation = new org.apache.spark.sql.Observation()
-    val stats = graft.plans.WaveStats(Seq(col("bucket"),
-      col("blocks_total") - col("blocks_kept"), col("status") === "fallback",
-      col("status") === "blank", col("truncated"))
-      .map(org.apache.spark.sql.graftbridge.ColumnBridge.expr), Seq(0, 1, 2, 4))
-    rows.observe(observation, org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      stats.toAggregateExpression()).as("stats")).collect()
-    val observed = observation.get("stats").asInstanceOf[scala.collection.Seq[Row]].toSeq
+    val qe = rows.queryExecution
+    val internal = qe.toRdd.map(_.copy()).collect()
+    val writer = new graft.plans.BucketWriter(spark, tmp(), qe.executedPlan.output)
+    val counted = Seq(0, 1, 2, 4).flatMap(id =>
+      writer.write(id.toLong, internal.iterator.filter(_.getInt(0) == id)))
     val expected = readBack(rows).orderBy("bucket").collect().toSeq
-    assert(observed.map(_.toSeq) === expected.map(_.toSeq))
-    assert(observed.map(_.get(2)) === Seq(3L, null, 0L))
+    assert(counted.map(_.toSeq) === expected.map(_.toSeq))
+    assert(counted.map(_.get(2)) === Seq(3L, null, 0L))
   }
 
-  test("the write plans one sort, and the manifest observation sits in its result stage") {
-    // the observation keeps the (bucket, conv_id, turn_idx) ordering the
-    // writer requires, so no second whole-partition sort is planned, and
-    // it runs above the Exchange, where a retried task's rows count once
-    import org.apache.spark.sql.execution.{CollectMetricsExec, SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+  test("a wave plans one sort, one pass-through exchange of its ids and no insert command") {
+    // each wave id is one partition of the exchange, its rows sorted once
+    // in their task; the rows reach parquet through the wave's own write
+    // tasks, never through an insert command and its committer
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     object Plans extends AdaptiveSparkPlanHelper
-    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64)
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = Plans.collect(qe.executedPlan) {
-        case w: DataWritingCommandExec => w
-      }.foreach(w => w.cmd match {
-        case c: InsertIntoHadoopFsRelationCommand
-            if c.outputPath.toString.endsWith(ExtractionJob.dataDir(cfg)) =>
-          writes.add(w.child); ()
-        case _ =>
-      })
+          ns: Long): Unit = { plans.add(qe.executedPlan); () }
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
+          e: Exception): Unit = { plans.add(qe.executedPlan); () }
     }
+    // 5 ids in waves of 3: a wave of 3 ids and one of 2 (a 1-id wave
+    // plans a single-partition exchange instead)
+    val cfg = Config(tmp(), numBuckets = 5, saltChunk = 64, waveBuckets = Some(3))
     spark.listenerManager.register(listener)
     try {
       ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 500L), cfg)
       org.apache.spark.graftbridge.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
 
-    assert(writes.size === 1, "one data write")
-    val plan = writes.peek
-    assert(Plans.collect(plan) { case s: SortExec => s }.size === 1, plan.treeString)
-    val observers = Plans.collect(plan) { case c: CollectMetricsExec => c }
-    assert(observers.size === 1, plan.treeString)
-    assert(Plans.collect(observers.head) { case e: ShuffleExchangeLike => e }.nonEmpty,
-      s"the observation is not above the Exchange:\n${plan.treeString}")
-    assert(Plans.collect(plan) { case q: ShuffleQueryStageExec => q }
-      .forall(q => Plans.collect(q.plan) { case c: CollectMetricsExec => c }.isEmpty),
-      s"the observation runs in a map stage:\n${plan.treeString}")
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    def exchanges(p: SparkPlan) = Plans.collect(p) { case e: ShuffleExchangeLike => e }
+    val waves = all.filter(p => exchanges(p).exists(
+      _.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough]))
+    assert(waves.size === 2, all.map(_.treeString).mkString("\n"))
+    val widths = waves.map { plan =>
+      assert(Plans.collect(plan) { case s: SortExec => s }.size === 1, plan.treeString)
+      val Seq(e) = exchanges(plan)
+      e.outputPartitioning.numPartitions
+    }
+    assert(widths.sorted === Seq(2, 3))
+    assert(all.forall(p => Plans.collect(p) {
+      case w: DataWritingCommandExec if w.cmd.isInstanceOf[InsertIntoHadoopFsRelationCommand] => w
+    }.isEmpty), all.map(_.treeString).mkString("\n"))
   }
 
   test("a manifest snapshot logs no hidden-path warning; a _temporary-only manifest is empty") {
@@ -612,6 +610,112 @@ class ResumeSpec extends SparkSpecBase {
     assert(a.count() === N && b.count() === N)
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
+  }
+
+  /** every file and dir under `dir`, relative to it */
+  private def tree(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = Files.walk(root)
+    try files.toArray.toSeq.map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+    finally files.close()
+  }
+
+  test("a resume replaces what a crash left in a todo bucket's dir") {
+    // a todo bucket's dir holds only leftovers: a visible part file (here
+    // a copy of another bucket's, so any survivor shows as extra rows), a
+    // hidden in-progress file and a committer's `_temporary/` dir
+    val in = TranscriptGen.inputDf(spark, N)
+    val cfgA = Config(tmp(), numBuckets = 8, saltChunk = 64)
+    val cfgB = cfgA.copy(outDir = tmp())
+    ExtractionJob.run(spark, in, cfgA) // reference: uninterrupted run
+    ExtractionJob.run(spark, in, cfgB, onlyBuckets = Some(0 until 4))
+    val data = new java.io.File(ExtractionJob.dataDir(cfgB))
+    val Seq(part) = new java.io.File(data, "bucket=0").listFiles().toSeq
+      .filter(_.getName.startsWith("part-"))
+    val todo = new java.io.File(data, "bucket=5")
+    assert(new java.io.File(todo, "_temporary/0").mkdirs())
+    Files.copy(part.toPath, new java.io.File(todo, part.getName).toPath)
+    Files.copy(part.toPath, new java.io.File(todo, "_temporary/0/part-00000.snappy.parquet").toPath)
+    Files.write(new java.io.File(todo, s".${part.getName}.inprogress-7").toPath,
+      "PAR1 half a file".getBytes("UTF-8"))
+
+    ExtractionJob.run(spark, in, cfgB)
+    assert(todo.list().toSeq.count(_.startsWith("part-")) === 1)
+    assert(!todo.list().exists(n => n.startsWith("_") || n.contains("inprogress")))
+    val a = ExtractionJob.output(spark, cfgA)
+    val b = ExtractionJob.output(spark, cfgB)
+    assert(a.count() === N && b.count() === N)
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
+  }
+
+  test("a retried bucket write leaves one file and the same sums; a failed one no file") {
+    // two attempts of one bucket's task, as a retry or a speculative copy
+    // runs them: the second replaces the first's file under the same name.
+    // A third attempt meets a second bucket id: it fails and deletes its
+    // hidden file, and the committed file stays
+    val extracted = graft.operators.Extract(
+      TranscriptGen.inputDf(spark, 500L).withColumn("bucket", lit(2)), Seq("bucket"))
+    val qe = extracted.queryExecution
+    val rows = qe.toRdd.map(_.copy()).collect()
+    val dir = tmp()
+    val writer = new graft.plans.BucketWriter(spark, dir, qe.executedPlan.output)
+    val (first, second) = (writer.write(11L, rows.iterator), writer.write(12L, rows.iterator))
+    assert(first.nonEmpty && first === second)
+    assert(first.get.getLong(1) === 500L)
+    val stray = rows.head.copy()
+    stray.setInt(qe.executedPlan.output.indexWhere(_.name == "bucket"), 3)
+    val ex = intercept[IllegalStateException] {
+      writer.write(13L, rows.iterator ++ Iterator(stray))
+    }
+    assert(ex.getMessage.contains("bucket ids 2 and 3"), ex.getMessage)
+    val files = tree(dir)
+    assert(files.count(_.startsWith("bucket=2/part-")) === 1, files)
+    assert(!files.exists(_.contains("inprogress")), files)
+    assert(spark.read.parquet(dir).count() === 500L)
+  }
+
+  test("a wave of 3 ids runs a write stage of exactly 3 tasks") {
+    val cfg = Config(tmp(), numBuckets = 8, saltChunk = 64, waveBuckets = Some(3))
+    val writeTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask") { writeTasks.add(e.taskInfo.partitionId); () }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 1000L), cfg,
+        onlyBuckets = Some(Seq(1, 4, 6)))
+      org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(writeTasks.toArray.toSeq.map(_.asInstanceOf[Int]).sorted === Seq(0, 1, 2))
+  }
+
+  test("a run leaves no committer files in data/") {
+    val cfg = Config(tmp(), numBuckets = 4, saltChunk = 64, waveBuckets = Some(3))
+    val in = TranscriptGen.inputDf(spark, 1000L)
+    ExtractionJob.run(spark, in, cfg, onlyBuckets = Some(Seq(0, 1)))
+    ExtractionJob.run(spark, in, cfg)
+    val files = tree(ExtractionJob.dataDir(cfg))
+    assert(!files.exists(f => f.contains("_temporary") || f.contains(".spark-staging") ||
+      f.contains("_SUCCESS") || f.contains("inprogress")), files)
+    assert(files.count(_.contains("/part-")) === 4, files)
+  }
+
+  test("an onlyBuckets id outside [0, numBuckets) is rejected before anything is written") {
+    // unchecked, it is in no bucket's range: the run wrote nothing and
+    // returned no row, on every run
+    for (bad <- Seq(99, -1)) {
+      val dir = tmp()
+      val ex = intercept[IllegalArgumentException] {
+        ExtractionJob.run(spark, TranscriptGen.inputDf(spark, 50L), Config(dir, numBuckets = 4),
+          onlyBuckets = Some(Seq(0, bad)))
+      }
+      assert(ex.getMessage.contains(s"onlyBuckets id $bad is outside [0, 4)"), ex.getMessage)
+      assert(new java.io.File(dir).list().isEmpty)
+    }
   }
 
   for ((field, cfg) <- Seq(
