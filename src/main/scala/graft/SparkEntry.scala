@@ -1194,10 +1194,10 @@ object SparkEntry {
 
     // cross-row geometric mean (SURVEY A1 cross-row form)
     "q06_geomean" -> ((s, dir) => {
+      import graft.functions.TextFunctions.geoMeanAgg
       val orders = s.read.parquet(s"$dir/orders.parquet")
       orders.groupBy(col("o_orderpriority"))
-        .agg(round(exp(avg(log(greatest(col("o_totalprice"), lit(1e-3))))), 4)
-          .as("geo_price"),
+        .agg(round(geoMeanAgg(col("o_totalprice")), 4).as("geo_price"),
           count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
     }),

@@ -15,11 +15,10 @@ import graft.functions.TextFunctions.{HtmlSniffRe, JsonSniffRe, PdfSniffRe}
   * sniff on the decoded text, the per-format parse ([[HtmlBlocks.extract]],
   * [[PdfGlyphRuns.extract]], `get_json_object`'s evaluator plus the
   * tool-JSON value span, or [[PlainNormalize]]) and the τ-ladder that
-  * picks the result. The sniff, the blank check, the whole-content span
-  * and the tool-JSON value span are also SQL-level functions of their own
-  * ([[graft.functions.TextFunctions]]). The call replaces Catalyst
-  * expressions whose generated code pushed Extract's row loop past
-  * HotSpot's 8,000-byte JIT limit (MethodSizeSpec).
+  * picks the result. The sniff and the blank check are also Column
+  * functions of their own ([[graft.functions.TextFunctions]]). The call
+  * replaces Catalyst expressions whose generated code pushed Extract's
+  * row loop past HotSpot's 8,000-byte JIT limit (MethodSizeSpec).
   *
   * The regexes are the [[graft.functions.TextFunctions]] constants the
   * DuckDB twins are generated from; all are `\A`-anchored, so `lookingAt`
@@ -91,14 +90,6 @@ object TurnNative {
     while (e > b && javaWs(s.charAt(e - 1))) e -= 1
     if (e == b) noSpans else span(b, b + s.codePointCount(b, e))
   }
-
-  /** [[toolJsonSpan]]'s result */
-  val toolJsonType: StructType = StructType(Seq(
-    StructField("spans", ArrayType(StructType(Seq(
-      StructField("start", IntegerType, nullable = false),
-      StructField("end", IntegerType, nullable = false))), containsNull = false),
-      nullable = false),
-    StructField("conf", DoubleType, nullable = false)))
 
   private val OutputKey = UTF8String.fromString("\"output\"")
   private val TextMarker = UTF8String.fromString("\"text\":\"")

@@ -9,7 +9,7 @@ import graft.expressions.{NativeCall, PlainNormalize, TokenSpans, TurnNative}
 
 /** Column functions for content sniffing, plain-text normalization, spans
   * and confidence — no UDF-opaque regex soup. The per-row hot checks
-  * (sniff, blank, whole span, plain normalization, token spans) are
+  * (sniff, blank, plain normalization, token spans) are
   * native codegen'd calls in [[graft.expressions]], each cross-checked in
   * FunctionsSpec/SpanVoteSpec against a declarative spec twin built from
   * the same constants; the rest are built-in Catalyst expressions.
@@ -67,19 +67,6 @@ object TextFunctions {
   /** 0-based offset just past the last non-whitespace char. */
   def contentEnd(text: Column): Column =
     length(regexp_replace(text, "\\s+\\z", ""))
-
-  /** Single span covering the trimmed content region of the raw payload
-    * ([[contentStart]], [[contentEnd]]); empty array for blank payloads.
-    */
-  def wholeSpan(text: Column): Column =
-    turnNative("wholeSpan", TurnNative.wholeSpanType, text)
-
-  /** `{spans, conf}` of a tool result's parsed `$.output.text` value `t`
-    * ([[TurnNative.toolJsonSpan]]); NULL when `t` is.
-    */
-  def toolJsonSpan(raw: Column, t: Column): Column =
-    column(NativeCall.static(TurnNative.getClass, "toolJsonSpan",
-      TurnNative.toolJsonType, Seq(expr(raw), expr(t))))
 
   /** Char-level OCR-confusion correction, gated to numeric-looking tokens —
     * the canonical Catalyst re-expression of the reference's char-correction

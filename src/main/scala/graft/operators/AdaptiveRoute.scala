@@ -75,28 +75,25 @@ object AdaptiveRoute {
 
   /** classify → route → annotate over any (idCols..., textCol) frame.
     * Output: input id columns + (tier, engine, preprocessing, reason,
-    * routed_text). Quality score/tier are STAGED so the four strategy
-    * columns read an attribute, not four re-evaluations.
+    * routed_text). The tokens and the quality score/tier are STAGED so
+    * the score's components and the four strategy columns read an
+    * attribute, not re-evaluations.
     */
   def route(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
+    val toks = col("__toks")
     val staged = df
-      .withColumn("__q", TextAnalysis.qualityScore(t))
+      .withColumn("__toks", TextAnalysis.tokens(t))
+      .withColumn("__q", TextAnalysis.qualityScore(toks, TextAnalysis.punctRatio(t),
+        TextAnalysis.meanTokenLen(toks), TextAnalysis.stopwordRatio(toks)))
       .withColumn("tier", TextAnalysis.qualityTier(col("__q")))
     staged
       .withColumn("engine", engineFor(col("tier")))
       .withColumn("preprocessing", preprocessingFor(col("tier")))
       .withColumn("reason", reasonFor(col("tier")))
       .withColumn("routed_text", routedText(col("tier"), t))
-      .drop("__q")
+      .drop("__q", "__toks")
   }
-
-  /** the full reference shape over utility bills: classify → route →
-    * extract (FieldExtract over the ROUTED text) → annotate. One narrow
-    * projection end-to-end.
-    */
-  def routeAndExtract(bills: DataFrame, textCol: String = "bill"): DataFrame =
-    FieldExtract.withFields(route(bills, textCol), textCol = "routed_text")
 
   /** S5 cache/memo between routing and extraction (the reference's
     * ImageCache holds decoded pages between the route decision and every

@@ -228,25 +228,6 @@ object FieldExtract {
   def numericalCorrections(text: Column): Column =
     applyRules(text, numericalRules, caseInsensitive = false)
 
-  /** digit-string → int with an explicit length gate instead of a
-    * try-cast: ANSI mode (Spark 4 default) makes a bare overflow cast
-    * THROW, and the gate keeps Spark and DuckDB byte-identical on
-    * pathological leading-zero strings where TRY_CAST semantics differ.
-    */
-  private[graft] def gatedInt(digits: Column, maxLen: Int): Column =
-    when(length(digits) <= maxLen, digits).cast("int")
-
-  /** `_normalise_number` (X9): l→1 g→9 O→0, strip non-digits, null when
-    * no digits survive.
-    */
-  def normaliseNumber(s: Column): Column =
-    gatedInt(
-      nullif(regexp_replace(translate(s, "lgO", "190"), "[^0-9]", ""), lit("")),
-      maxLen = 9)
-
-  private[graft] def extractGroup(text: Column, p: String, idx: Int = 1): Column =
-    nullif(regexp_extract(text, ci(p), idx), lit(""))
-
   /** first-match-wins int chain with per-pattern range guard: a pattern
     * whose value fails the guard falls through to the NEXT pattern
     * (mirrors the reference's `break`-only-when-in-range loops).
@@ -547,6 +528,11 @@ object FieldExtract {
   private def exGSql(x: String, p: String, i: Int = 1) =
     s"NULLIF(regexp_extract($x, ${sqCi(p)}, $i), '')"
 
+  /** digit-string → int with an explicit length gate instead of a
+    * TRY_CAST, as the natives gate: the gate keeps Spark and DuckDB
+    * byte-identical on pathological leading-zero strings where TRY_CAST
+    * semantics differ.
+    */
   private def gatedIntSql(d: String, maxLen: Int) =
     s"CAST(CASE WHEN length($d) <= $maxLen THEN $d END AS INT)"
 

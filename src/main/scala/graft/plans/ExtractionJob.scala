@@ -250,21 +250,16 @@ object ExtractionJob {
 
     // bucketKey pins the schema to int and guards custom keys
     val bucketed = input.withColumn("bucket", bucketKey(cfg))
-    val rows = waves.flatMap(wave =>
-      commitWave(spark, bucketed.filter(col("bucket").isin(wave: _*)), wave, cfg, key))
+    val rows = waves.flatMap(wave => commitWave(spark, bucketed, wave, cfg, key))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
   }
 
-  /** One wave: extract `todo` (the wave's input rows, all with a bucket
-    * id in `wave`), write each id's rows as one file in one task
-    * ([[BucketWriter]]), and append the rows the tasks counted as one
-    * manifest file ([[appendManifest]]), the wave's commit. Returns the
-    * appended rows.
+  /** One wave's rows: the rows of `bucketed` (the input with its
+    * `bucket` id column) whose id is in `wave`, extracted with `bucket`
+    * passed through, one partition per wave id, each in (conv_id,
+    * turn_idx) order.
     */
-  private def commitWave(spark: SparkSession, todo: DataFrame, wave: Seq[Int],
-      cfg: Config, key: String): Seq[Row] = {
-    val t0 = System.currentTimeMillis()
-
+  private[graft] def wavePlan(bucketed: DataFrame, wave: Seq[Int]): DataFrame =
     // bucket is computed ONCE on the input and passed THROUGH the
     // extraction (review fix: the earlier drop-and-recompute evaluated
     // bucketExpr a second time on Extract's OUTPUT, where any key not a
@@ -275,11 +270,20 @@ object ExtractionJob {
     // wave's tasks holds exactly one bucket; sorting it keeps the T6
     // contract: within every bucket file, rows are in (conv_id, turn_idx)
     // order
-    val qe = Extract(todo, Seq("bucket"))
+    Extract(bucketed.filter(col("bucket").isin(wave: _*)), Seq("bucket"))
       .repartitionById(wave.length,
         (array_position(typedLit(wave.toArray), col("bucket")) - 1).cast("int"))
       .sortWithinPartitions("conv_id", "turn_idx")
-      .queryExecution
+
+  /** One wave: write each id's rows ([[wavePlan]]) as one file in one
+    * task ([[BucketWriter]]), and append the rows the tasks counted as
+    * one manifest file ([[appendManifest]]), the wave's commit. Returns
+    * the appended rows.
+    */
+  private def commitWave(spark: SparkSession, bucketed: DataFrame, wave: Seq[Int],
+      cfg: Config, key: String): Seq[Row] = {
+    val t0 = System.currentTimeMillis()
+    val qe = wavePlan(bucketed, wave).queryExecution
 
     // a todo id has no complete row: whatever its dir holds is a crash's
     val dir = new Path(dataDir(cfg))

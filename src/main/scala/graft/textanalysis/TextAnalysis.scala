@@ -23,9 +23,6 @@ object TextAnalysis {
   /** Whitespace tokens of the trimmed text. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish sub-token estimate: runs of letters, runs of digits, or a
     * single other non-space char (the classic pre-tokenizer regex).
     */
@@ -47,40 +44,40 @@ object TextAnalysis {
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by", "be", "this")
 
-  /** fraction of whitespace tokens that are stopwords. */
-  def stopwordRatio(text: Column): Column = {
-    val toks = tokens(text)
-    val hits = size(filter(toks, t =>
-      stopwords.map(t === _).reduce(_ || _)))
-    when(size(toks) === 0, 0.0)
-      .otherwise(hits.cast("double") / size(toks))
-  }
+  /** how many of the tokens `toks` are in `words` */
+  private def hits(toks: Column, words: Seq[String]): Column =
+    size(filter(toks, t => words.map(t === _).reduce(_ || _)))
 
-  /** Mean token length of the whitespace tokens. */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
+  /** fraction of the whitespace tokens `toks` that are stopwords. */
+  def stopwordRatio(toks: Column): Column =
+    when(size(toks) === 0, 0.0)
+      .otherwise(hits(toks, stopwords).cast("double") / size(toks))
+
+  /** Mean token length of the whitespace tokens `toks`. */
+  def meanTokenLen(toks: Column): Column =
     when(size(toks) === 0, 0.0).otherwise(
       aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
         / size(toks))
-  }
 
   /** Weighted quality score in [0,1] — the analog of the reference's
     * weighted image-quality score (`adaptive_ocr_pipeline.py:139-143`).
     * Components: enough tokens (saturating at 100), sane mean token
-    * length (peak near 5), low punctuation, some stopwords.
+    * length (peak near 5), low punctuation, some stopwords. Takes the
+    * whitespace tokens `toks` with their [[punctRatio]],
+    * [[meanTokenLen]] and [[stopwordRatio]], so a caller that stages
+    * those evaluates each once per row.
     */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(tokenCount(text).cast("double") / 100.0, lit(1.0))
-    val mtl = meanTokenLen(text)
+  def qualityScore(toks: Column, punct: Column, mtl: Column, stopr: Column): Column = {
+    val lenScore = least(size(toks).cast("double") / 100.0, lit(1.0))
     val mtlScore = greatest(lit(0.0), lit(1.0) - abs(mtl - 5.0) / 5.0)
-    val punctScore = greatest(lit(0.0), lit(1.0) - punctRatio(text) * 4.0)
-    val stopScore = least(stopwordRatio(text) * 5.0, lit(1.0))
-    // NULL text pins to 0.0 explicitly: least/greatest SKIP nulls (both
-    // here and in DuckDB), so without the guard a null document's
-    // null-poisoned components vanish and the score lands at 0.6 →
-    // tier "medium" — a missing payload must route as very_low, not
+    val punctScore = greatest(lit(0.0), lit(1.0) - punct * 4.0)
+    val stopScore = least(stopr * 5.0, lit(1.0))
+    // NULL text (so NULL tokens) pins to 0.0 explicitly: least/greatest
+    // SKIP nulls (both here and in DuckDB), so without the guard a null
+    // document's null-poisoned components vanish and the score lands at
+    // 0.6 → tier "medium" — a missing payload must route as very_low, not
     // medium (adversarial probe, round 5)
-    when(text.isNull, lit(0.0)).otherwise(
+    when(toks.isNull, lit(0.0)).otherwise(
       round(lenScore * 0.3 + mtlScore * 0.2 + punctScore * 0.2
         + stopScore * 0.3, 6))
   }
@@ -101,20 +98,17 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "et", "des", "une"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  private def markerHits(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(lower(text)), t => markers.map(t === _).reduce(_ || _)))
-
-  /** n-gram-heuristic language ID: count marker-token hits per language,
-    * argmax with fixed priority-order tie-break; "und" (undetermined)
-    * when no marker hits at all.
+  /** n-gram-heuristic language ID over the lower-cased whitespace
+    * tokens `ltoks`: count marker-token hits per language, argmax with
+    * fixed priority-order tie-break; "und" (undetermined) when no marker
+    * hits at all.
     */
-  def langId(text: Column): Column = {
-    val hits = langMarkers.map { case (l, ms) => l -> markerHits(text, ms) }
-    val best = greatest(hits.map(_._2): _*)
-    val chain = hits.foldLeft(when(best === 0, "und")) {
+  def langId(ltoks: Column): Column = {
+    val counts = langMarkers.map { case (l, ms) => l -> hits(ltoks, ms) }
+    val best = greatest(counts.map(_._2): _*)
+    counts.foldLeft(when(best === 0, "und")) {
       case (acc, (l, h)) => acc.when(h === best, l)
-    }
-    chain.otherwise("und")
+    }.otherwise("und")
   }
 
   /** Rolling polynomial fingerprint of the text: fold chars as
@@ -142,43 +136,18 @@ object TextAnalysis {
   def analyze(docs: DataFrame): DataFrame = {
     val t = col("text")
     val toks = col("__toks")
-    val n = col("__n")
     val staged = docs
       .withColumn("__toks", tokens(t))
       .withColumn("__ltoks", tokens(lower(t)))
-      .withColumn("__n", size(col("__toks")))
       .withColumn("__punct", punctRatio(t))
-      .withColumn("__stopr", {
-        val hits = size(filter(toks, w => stopwords.map(w === _).reduce(_ || _)))
-        when(n === 0, 0.0).otherwise(hits.cast("double") / n)
-      })
-      .withColumn("__mtl",
-        when(n === 0, 0.0).otherwise(
-          aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double") / n))
-      .withColumn("__q", {
-        val lenScore = least(n.cast("double") / 100.0, lit(1.0))
-        val mtlScore = greatest(lit(0.0), lit(1.0) - abs(col("__mtl") - 5.0) / 5.0)
-        val punctScore = greatest(lit(0.0), lit(1.0) - col("__punct") * 4.0)
-        val stopScore = least(col("__stopr") * 5.0, lit(1.0))
-        // same NULL-text pin as qualityScore: least/greatest skip the
-        // null-poisoned components, which otherwise lands null text at
-        // 0.6 → "medium"
-        when(t.isNull, lit(0.0)).otherwise(
-          round(lenScore * 0.3 + mtlScore * 0.2 + punctScore * 0.2
-            + stopScore * 0.3, 6))
-      })
-      .withColumn("__lang", {
-        val hits = langMarkers.map { case (l, ms) =>
-          l -> size(filter(col("__ltoks"), w => ms.map(w === _).reduce(_ || _)))
-        }
-        val best = greatest(hits.map(_._2): _*)
-        hits.foldLeft(when(best === 0, "und")) {
-          case (acc, (l, h)) => acc.when(h === best, l)
-        }.otherwise("und")
-      })
+      .withColumn("__stopr", stopwordRatio(toks))
+      .withColumn("__mtl", meanTokenLen(toks))
+      .withColumn("__q",
+        qualityScore(toks, col("__punct"), col("__mtl"), col("__stopr")))
+      .withColumn("__lang", langId(col("__ltoks")))
     staged.select(
       col("doc_id"),
-      n.cast("long").as("n_tokens"),
+      size(toks).cast("long").as("n_tokens"),
       subTokenCount(t).cast("long").as("n_subtokens"),
       round(col("__punct"), 6).as("punct_ratio"),
       round(col("__stopr"), 6).as("stopword_ratio"),

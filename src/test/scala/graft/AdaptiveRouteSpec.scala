@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.AdaptiveRoute
+import graft.operators.{AdaptiveRoute, FieldExtract}
 
 /** Tier→strategy routing (reference `_select_processing_strategy`,
   * `adaptive_ocr_pipeline.py:349-407`) and the full
@@ -50,7 +50,7 @@ class AdaptiveRouteSpec extends SparkSpecBase {
     val routed = AdaptiveRoute.route(df, "bill")
     val tier = routed.select("tier").head().getString(0)
     assert(tier !== "high", s"fixture unexpectedly scored high: $tier")
-    val out = AdaptiveRoute.routeAndExtract(df)
+    val out = FieldExtract.withFields(routed, textCol = "routed_text")
     assert(out.select("electricity_kwh").head().getAs[Any](0) === 299)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.{correctToken, isBlank}
-import graft.operators.FieldExtract.{Rule, ci, extractGroup, gatedInt, normaliseNumber}
+import graft.operators.FieldExtract.{Rule, ci}
 
 /** Declarative spec twins of the graft's single-pass natives: the Catalyst
   * pipelines each native replaced, kept as the reference its spec checks
@@ -52,6 +52,24 @@ object DeclarativeTwins {
       .otherwise(transform(sequence(lit(1), n - (w - 1)),
         i => xxhash64(slice(hs, i, lit(w)))))
   }
+
+  /** digit-string → int with an explicit length gate instead of a
+    * try-cast: ANSI mode (Spark 4 default) makes a bare overflow cast
+    * THROW (the SQL twin `gatedIntSql` gates the same way).
+    */
+  private def gatedInt(digits: Column, maxLen: Int): Column =
+    when(length(digits) <= maxLen, digits).cast("int")
+
+  private def extractGroup(text: Column, p: String): Column =
+    nullif(regexp_extract(text, ci(p), 1), lit(""))
+
+  /** `_normalise_number` (X9): l→1 g→9 O→0, strip non-digits, null when
+    * no digits survive.
+    */
+  private def normaliseNumber(s: Column): Column =
+    gatedInt(
+      nullif(regexp_replace(translate(s, "lgO", "190"), "[^0-9]", ""), lit("")),
+      maxLen = 9)
 
   /** [[graft.operators.FieldExtract.applyRules]] */
   def applyRulesDeclarative(text: Column, rules: Seq[Rule],

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expressions.{HtmlBlocks, NativeCall, PdfGlyphRuns, PlainNormalize}
 import graft.expressions.TurnNative.PlainAltConf
-import graft.functions.TextFunctions._
+import graft.TurnTwins.{sniff, toolJsonSpan, wholeSpan}
 
 /** The html and pdf parses packed as the Spark structs the declarative
   * ladder in [[ExtractTwin]] reads: static calls for [[NativeCall.static]].

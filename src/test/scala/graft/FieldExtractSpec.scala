@@ -138,7 +138,7 @@ class FieldExtractSpec extends SparkSpecBase {
 
   test("normaliseNumber handles OCR glyphs (X9)") {
     val df = Seq("l2O", "2,9 9", "g8", "xx").toDF("s")
-      .select(FieldExtract.normaliseNumber($"s").as("v"))
+      .select(FieldExtract.normChain($"s", Seq("(.+)")).as("v"))
     assert(df.collect().map(_.getAs[Any]("v")).toSeq === Seq(120, 299, 98, null))
   }
 

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
+import graft.expressions.{NativeCall, TurnNative}
 import graft.functions.GraftFunctions
 import graft.functions.TextFunctions._
 import graft.DeclarativeTwins.plainNormalizeDeclarative
@@ -13,6 +17,25 @@ import graft.DeclarativeTwins.plainNormalizeDeclarative
   */
 class FunctionsSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** the natives [[TurnNative.extract]] calls for a turn's spans, as
+    * columns of their own: NULL text reaches `wholeSpan`, and a NULL
+    * argument makes `toolJsonSpan` NULL
+    */
+  private def wholeSpan(text: Column): Column =
+    column(NativeCall.static(TurnNative.getClass, "wholeSpan",
+      TurnNative.wholeSpanType, Seq(expr(text)), propagateNull = false))
+
+  private val toolJsonType = StructType(Seq(
+    StructField("spans", ArrayType(StructType(Seq(
+      StructField("start", IntegerType, nullable = false),
+      StructField("end", IntegerType, nullable = false))), containsNull = false),
+      nullable = false),
+    StructField("conf", DoubleType, nullable = false)))
+
+  private def toolJsonSpan(raw: Column, t: Column): Column =
+    column(NativeCall.static(TurnNative.getClass, "toolJsonSpan", toolJsonType,
+      Seq(expr(raw), expr(t))))
 
   private def sniffOne(text: String, tool: String = null): String =
     Seq((text, tool)).toDF("text", "tool")

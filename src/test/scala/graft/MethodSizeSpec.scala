@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.debug.codegenStringSeq
-import org.apache.spark.sql.functions._
 
 import graft.gen.TranscriptGen
 import graft.operators.Extract
@@ -28,13 +27,9 @@ class MethodSizeSpec extends SparkSpecBase {
     spark.read.parquet(dir)
   }
 
-  /** the job's map stage over one wave: the rows with `bucket IN ids` */
-  private def jobMap(ids: Seq[Int]): DataFrame = {
-    val bucketed = input.withColumn("bucket", ExtractionJob.bucketCol(32, 4096))
-    Extract(bucketed.filter(col("bucket").isin(ids: _*)), Seq("bucket"))
-      .repartition(32, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-  }
+  /** the job's plan for one wave of `ids` under the default bucket key */
+  private def jobMap(ids: Seq[Int]): DataFrame =
+    ExtractionJob.wavePlan(input.withColumn("bucket", ExtractionJob.bucketCol(32, 4096)), ids)
 
   private def largestMethods(df: DataFrame): Seq[Int] = {
     val key = "spark.sql.adaptive.enabled"

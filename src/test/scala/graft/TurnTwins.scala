@@ -8,7 +8,9 @@ import graft.functions.TextFunctions._
 /** Declarative spec twins of the native routing checks in
   * [[graft.expressions.TurnNative]]: the Catalyst regex and string
   * expressions they replaced, built from the same TextFunctions
-  * constants. FunctionsSpec checks native ≡ twin on seeded inputs.
+  * constants. FunctionsSpec checks native ≡ twin on seeded inputs, and
+  * [[ExtractTwin]] builds its ladder from them, so the twin side of
+  * ExtractTwinSpec makes no TurnNative call.
   */
 object TurnTwins {
 
