@@ -376,7 +376,8 @@ object SparkEntry {
     // span — clustered by span IoU, one variant elected per cluster
     // (rows-only: token offsets not SQL-expressible)
     "x07_span_vote" -> ((s, _) => {
-      import graft.functions.TextFunctions.{correctToken, tokenSpans}
+      import graft.functions.GraftFunctions.token_spans
+      import graft.functions.TextFunctions.correctToken
       val plain = TranscriptGen.inputDf(s, 5000L)
         .withColumn("__fmt",
           graft.functions.TextFunctions.sniff(col("text"), col("tool")))
@@ -389,7 +390,7 @@ object SparkEntry {
       // just to compute a running sum the tokenizer already knows; at
       // 10^12 turns that Exchange dominated the ensemble path
       val toks = plain.select(col("row_id"),
-          explode(tokenSpans(col("text"))).as("t"))
+          explode(token_spans(col("text"))).as("t"))
         .select(col("row_id"), col("t.tok").as("tok"),
           col("t.start").as("off"), col("t.end").as("tend"))
       // both engine variants from ONE pass over the token stage (explode
@@ -564,12 +565,13 @@ object SparkEntry {
     // (offsets, IoU, conf sums) is integer- or identical-double-derived,
     // so both engines compute bit-equal values.
     "x15_span_vote_sql" -> ((s, dir) => {
-      import graft.functions.TextFunctions.{correctToken, isBlank, tokenSpans}
+      import graft.functions.GraftFunctions.token_spans
+      import graft.functions.TextFunctions.{correctToken, isBlank}
       val docs = spread(s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text"))
         .filter(!isBlank(col("text")))
       val toks = docs.select(col("doc_id").as("row_id"),
-          posexplode(tokenSpans(col("text"))).as(Seq("pos", "t")))
+          posexplode(token_spans(col("text"))).as(Seq("pos", "t")))
         .select(col("row_id"), col("pos"), col("t.tok").as("tok"),
           col("t.start").as("off"), col("t.end").as("tend"))
       // all three engine variants from ONE pass over the token stage
@@ -1883,13 +1885,13 @@ object SparkEntry {
 
       // LSH pipeline downstream-of-hash twin: the same closed-form
       // shingle arrays, the same (a_i, b_i) permutation family (VALUES
-      // table derived from Dedup.hashParams — single source), banding on
+      // table derived from MinhashSig.hashParams — single source), banding on
       // band-slice VALUES (≡ banding on xxhash64(slice) up to ~2⁻⁶⁴
       // collisions), the same >1/≤4096 bucket gate, distinct a<b pairs,
       // exact Jaccard over the hash sets.
       "t11_lsh_pipeline_sql" -> {
         val vals = (0 until 32).map { i =>
-          val (a, b) = graft.dedup.Dedup.hashParams(i)
+          val (a, b) = graft.expressions.MinhashSig.hashParams(i)
           s"($i,$a,$b)"
         }.mkString(", ")
         s"""WITH d AS (SELECT doc_id, doc_id // 4 AS c, doc_id % 4 AS k

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-import graft.expressions.{MinhashSig, NativeCall, ShingleHashes, Simhash, VecDot}
+import graft.expressions.{MinhashSig, NativeCall, NativeFunction, ShingleHashes}
+import graft.functions.GraftFunctions
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (content-hash groupBy), MinHash+LSH near-dup, SimHash near-dup,
@@ -55,41 +57,14 @@ object Dedup {
 
   // ------------------------------------------------------------- minhash
 
-  /** 31-bit Mersenne prime modulus for the universal hash family: keeps
-    * every intermediate product < 2^62, so the arithmetic is exact under
-    * ANSI mode (no long overflow) while staying pure codegen expressions.
+  /** `minhash_sig(hs)`: the numHashes-member MinHash signature of an
+    * array of raw shingle hashes, one native pass ([[MinhashSig]]). An
+    * empty array signs all-null (see the [[MinhashSig]] contract).
     */
-  private val P31 = 2147483647L // 2^31 - 1
-
-  /** deterministic universal-hash parameters (a_i, b_i) in [1, P31) */
-  private[graft] def hashParams(i: Int): (Long, Long) = (
-    1L + java.lang.Long.remainderUnsigned(
-      0x9E3779B97F4A7C15L * (i + 1), P31 - 1),
-    java.lang.Long.remainderUnsigned(0xC2B2AE3D27D4EB4FL * (i + 1), P31))
-
-  /** numHashes minhash values over a column of PRE-COMPUTED base hashes
-    * (each in [0, P31)); family member i applies (a_i*h + b_i) mod P31.
-    */
-  def minhashSignature(baseHashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      val (a, b) = hashParams(i)
-      array_min(transform(baseHashes, h =>
-        pmod(h * lit(a) + lit(b), lit(P31))))
-    }: _*)
-
-  /** doc_id + minhash signature per document. The shingle array and the
-    * base hashes are STAGED as intermediate columns so each of the
-    * numHashes permutation passes reads an attribute instead of
-    * re-evaluating the shingle subtree — measured >10× per-row cost
-    * difference (same staging discipline as the Extract operator).
-    */
-  def minhashed(docs: DataFrame, numHashes: Int = 32, shingleWidth: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs
-      .withColumn("__sh", shingles(col(textCol), shingleWidth))
-      .withColumn("__base", transform(col("__sh"), s => pmod(xxhash64(s), lit(P31))))
-      .select(col(idCol).as("doc_id"),
-        minhashSignature(col("__base"), numHashes).as("sig"))
+  def minhashSig(hs: Column, numHashes: Int): Column =
+    column(NativeFunction("minhash_sig", MinhashSig.getClass, "evalArray",
+      ArrayType(LongType, containsNull = true), Seq(ArrayType(LongType)),
+      Seq(expr(hs)), Seq(numHashes)))
 
   /** LSH banding: (band_idx, band_hash, doc_id) rows. bands×rowsPerBand
     * must equal the signature length. Banded keys are what gets shuffled —
@@ -228,11 +203,10 @@ object Dedup {
     // (all-null signatures band identically — a quadratic trap).
     // Unreachable via shingleHashes (never empty) → zero-cost guard.
     val hsh = hsh0.filter(size(col("sh")) > 0)
-    // native single-pass signature (declarative minhashSignature is the
-    // cross-checked spec — its numHashes-way codegen alone cost ~14 s of
-    // first-run Janino/JIT per session, driver-visible in the battery)
-    val sigs = hsh.select(col("doc_id"),
-      column(MinhashSig(expr(col("sh")), numHashes)).as("sig"))
+    // native single-pass signature (the declarative twin's numHashes-way
+    // codegen alone cost ~14 s of first-run Janino/JIT per session,
+    // driver-visible in the battery)
+    val sigs = hsh.select(col("doc_id"), minhashSig(col("sh"), numHashes).as("sig"))
     val buckets = lshBands(sigs, bands, numHashes / bands)
       .groupBy("band_idx", "band_hash")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -246,35 +220,6 @@ object Dedup {
   }
 
   // ------------------------------------------------------------- simhash
-
-  /** 64-bit SimHash over whitespace tokens: per-bit vote of each token's
-    * xxhash64 bits, assembled into one long. Native single-pass
-    * expression ([[Simhash]]); the declarative
-    * [[simhashFromHashes]] form is retained as the semantic spec and
-    * cross-checked in DedupSpec.
-    */
-  def simhash(text: Column): Column =
-    column(Simhash(expr(text)))
-
-  /** per-token xxhash64 array — stage this as its own column before
-    * calling [[simhashFromHashes]] so the 64 bit-vote passes read an
-    * attribute instead of re-tokenizing (same staging discipline as
-    * [[minhashed]]).
-    */
-  def tokenHashes(text: Column): Column =
-    transform(split(trim(text), "\\s+"), t => xxhash64(t))
-
-  /** 64 bit-vote aggregates over a pre-computed hash array (Scala-side
-    * loop so each shift amount is a literal — every vote is one
-    * codegen'd array pass).
-    */
-  def simhashFromHashes(hs: Column): Column =
-    (0 until 64).map { b =>
-      val vote = aggregate(hs, lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1)
-          .otherwise(-1))
-      when(vote > 0, lit(1L << b)).otherwise(0L)
-    }.reduce((a, c) => a.bitwiseOR(c))
 
   /** SimHash near-dup pairs: band the 64-bit hash into four 16-bit chunks
     * (any equal chunk ⇒ candidate — the pigeonhole guarantee holds ONLY
@@ -296,7 +241,7 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       maxBucket: Int = 4096): DataFrame =
     simhashPairs(
-      docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("sh")),
+      docs.select(col(idCol).as("doc_id"), GraftFunctions.simhash64(col(textCol)).as("sh")),
       maxHamming, maxBucket)
 
   /** The downstream of [[simhashDedup]] — 16-bit chunk banding →
@@ -338,13 +283,12 @@ object Dedup {
 
   // ------------------------------------------------------------- embeddings
 
-  /** dot product of two double-array columns — the native [[VecDot]]
-    * expression (allocation-free primitive loop; the declarative
-    * zip_with+aggregate form allocates a temp array per evaluation,
-    * which dominates all-pairs similarity joins).
+  /** `vec_dot(x, y)`: dot product of two double-array columns — the
+    * native [[graft.expressions.VecDot]] (allocation-free primitive loop;
+    * the declarative zip_with+aggregate form allocates a temp array per
+    * evaluation, which dominates all-pairs similarity joins).
     */
-  def dot(x: Column, y: Column): Column =
-    column(VecDot(expr(x), expr(y)))
+  def dot(x: Column, y: Column): Column = GraftFunctions.call("vec_dot", x, y)
 
   /** Cosine similarity between two double-array columns. Prefer
     * [[cosinePrenormed]] inside joins — norms belong OUTSIDE the pair

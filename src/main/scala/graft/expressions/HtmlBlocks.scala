@@ -1,13 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming HTML tag tokenizer + block builder as a native Catalyst
-  * expression: `HtmlBlocks(text)` →
+  * call: `html_blocks(text)` →
   * `array<struct<text,start,end,words,link_words,boiler>>`.
   *
   * One pass over the payload: tags are tokenized (attributes skipped
@@ -25,22 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[HtmlBlocks.extract]] adds the classification and confidence on top;
   * [[TurnNative.extract]] arbitrates its selections on the τ-ladder.
   *
-  * Replaced by a static call of [[HtmlBlocks.evalUtf8]] ([[NativeCall]]).
-  * Per-row cost is linear in payload size.
+  * The SQL name is a [[NativeFunction]] over a static call of
+  * [[HtmlBlocks.evalUtf8]]. Per-row cost is linear in payload size.
   */
-case class HtmlBlocks(child: Expression) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def prettyName: String = "html_blocks"
-  override lazy val replacement: Expression =
-    NativeCall.static(HtmlBlocks.getClass, "evalUtf8", HtmlBlocks.outType,
-      Seq(child))
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlBlocks =
-    copy(child = newChild)
-}
-
 object HtmlBlocks {
 
   /** classifier: minimum words for a content block (Boilerpipe-style) */

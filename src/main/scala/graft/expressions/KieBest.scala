@@ -4,17 +4,17 @@ import java.util.Locale
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-KIE candidate selection (`pipeline.py:2244-2303` re-expressed) as
-  * ONE native expression: `KieBest(preprocessedText)` →
+  * ONE native call: `kie_best(preprocessedText)` ([[NativeFunction]]) →
   * `struct<ke:int, kc:int>` (best electricity / carbon candidates, null
   * when none).
   *
-  * Semantics are IDENTICAL to the declarative token pipeline in
-  * [[graft.operators.FieldExtract]] (and to its DuckDB oracle twin):
+  * Semantics are IDENTICAL to the declarative token pipeline
+  * (`DeclarativeTwins.kieField` in `src/test`) and to its DuckDB oracle
+  * twin in [[graft.operators.FieldExtract]]:
   * whitespace tokens fully matching the number shape are candidates,
   * context = ±5 neighboring tokens joined+lowercased, keyword scores ×2
   * plus unit boosts ×3, range guards, best by (score desc, |v−center|
@@ -22,18 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * join → lower → contains chain per token per field through interpreted
   * eval (~4 ms/row measured at sf0.1); this walks the token array once.
   */
-case class KieBest(child: Expression) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def prettyName: String = "kie_best"
-  override lazy val replacement: Expression =
-    NativeCall.static(KieBest.getClass, "evalUtf8", KieBest.outType, Seq(child))
-
-  override protected def withNewChildInternal(newChild: Expression): KieBest =
-    copy(child = newChild)
-}
-
 object KieBest {
 
   val outType: DataType = StructType(Seq(

@@ -1,12 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature over an array of (raw xxhash64) shingle hashes as
-  * ONE native expression — the same escalation path as [[Simhash]]: the
-  * declarative form ([[graft.dedup.Dedup.minhashSignature]], kept as the
+  * ONE native call, `minhash_sig(hs)` — a [[NativeFunction]] built only
+  * by [[graft.dedup.Dedup.minhashSig]], with the family size as its
+  * constant — the same escalation path as [[Simhash]]: the declarative
+  * form (`DeclarativeTwins.minhashSignature` in `src/test`, the
   * cross-checked spec) generates `numHashes` separate `array_min ∘
   * transform` passes, whose whole-stage codegen alone took ~14 s of
   * Janino/JIT on the first t03 run of a session (driver-visible in the
@@ -27,43 +27,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * arrays before signing; direct callers must do the same (unreachable
   * via `shingleHashes`, which never returns an empty array).
   */
-case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def prettyName: String = "minhash_sig"
-  override lazy val replacement: Expression =
-    NativeCall.static(MinhashSig.getClass, "evalArray",
-      ArrayType(LongType, containsNull = true), Seq(child, Literal(numHashes)))
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
-    copy(child = newChild)
-}
-
 object MinhashSig {
 
-  private val P31 = 2147483647L // 2^31 - 1, matches Dedup.P31
+  /** 31-bit Mersenne prime modulus for the universal hash family: keeps
+    * every intermediate product < 2^62, so the arithmetic is exact under
+    * ANSI mode (no long overflow) in the declarative twin too.
+    */
+  val P31 = 2147483647L // 2^31 - 1
 
-  /** (a_i, b_i) tables per family size, cached (tiny) — same derivation
-    * as Dedup.hashParams.
+  /** deterministic universal-hash parameters (a_i, b_i) of family member
+    * i: a_i in [1, P31), b_i in [0, P31)
+    */
+  def hashParams(i: Int): (Long, Long) = (
+    1L + java.lang.Long.remainderUnsigned(0x9E3779B97F4A7C15L * (i + 1), P31 - 1),
+    java.lang.Long.remainderUnsigned(0xC2B2AE3D27D4EB4FL * (i + 1), P31))
+
+  /** the [[hashParams]] of members 0 until n as (a, b) arrays, cached
+    * per family size (tiny)
     */
   private val paramCache =
     new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
 
   private def params(n: Int): (Array[Long], Array[Long]) =
-    paramCache.computeIfAbsent(n, _ => {
-      val as = new Array[Long](n)
-      val bs = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        as(i) = 1L + java.lang.Long.remainderUnsigned(
-          0x9E3779B97F4A7C15L * (i + 1), P31 - 1)
-        bs(i) = java.lang.Long.remainderUnsigned(
-          0xC2B2AE3D27D4EB4FL * (i + 1), P31)
-        i += 1
-      }
-      (as, bs)
-    })
+    paramCache.computeIfAbsent(n, _ => (0 until n).map(hashParams).toArray.unzip)
 
   /** static eval shared by interpreted and generated code paths */
   def evalArray(hs: ArrayData, numHashes: Int): ArrayData = {

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.types.DataType
 
@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.DataType
   * static method of a Scala object ([[static]]), and a native that holds
   * state — the regex chains' precompiled patterns — is a method of a
   * serializable evaluator carried in the plan as an object literal
-  * ([[evaluator]]). The SQL-registered names are `RuntimeReplaceable`
-  * shells whose `replacement` is one of these calls, so executed plans
-  * show the call itself (`static_invoke(graft.expressions.X.method(…))`).
+  * ([[evaluator]]). A named native is a [[NativeFunction]] whose
+  * `replacement` is one of these calls, so executed plans show the call
+  * itself (`static_invoke(graft.expressions.X.method(…))`).
   */
 object NativeCall {
 
@@ -31,4 +31,28 @@ object NativeCall {
   def evaluator(evaluator: Serializable, dataType: DataType,
       arg: Expression): Expression =
     Invoke(Literal.fromObject(evaluator), "eval", dataType, Seq(arg))
+}
+
+/** A named native, `name(children)`: the SQL shell over
+  * `NativeCall.static(owner, method, outType, children ++ constants)`.
+  *
+  * The name and the children's SQL are the column name (`constants` stay
+  * out of it, so `minhash_sig(h)` carries its family size unseen), and
+  * `inputTypes` is the argument contract: a mistyped argument fails
+  * analysis with `DATATYPE_MISMATCH`, a coercible one gets a cast. The
+  * optimizer's first batch swaps the shell for its `replacement`, so no
+  * executed plan holds it.
+  */
+case class NativeFunction(name: String, owner: Class[_], method: String,
+    outType: DataType, override val inputTypes: Seq[DataType],
+    children: Seq[Expression], constants: Seq[Any] = Nil)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+
+  override def prettyName: String = name
+  override lazy val replacement: Expression =
+    NativeCall.static(owner, method, outType, children ++ constants.map(Literal(_)))
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): NativeFunction =
+    copy(children = newChildren)
 }

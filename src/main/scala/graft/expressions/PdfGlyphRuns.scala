@@ -1,14 +1,13 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
-/** Glyph-run extraction for PDF-like payloads: `PdfGlyphRuns(text)` →
+/** Glyph-run extraction for PDF-like payloads: `pdf_glyph_runs(text)` →
   * `array<struct<line,x,y,text,start,end>>`.
   *
   * Payload format (FIXTURES.md §2, the sandbox stand-in for a PDFBox-backed
@@ -29,21 +28,9 @@ import graft.functions.TextFunctions
   * don't kill the job, mirroring `_validate_file_format`'s role but with
   * row-level status semantics, SURVEY S3).
   *
-  * The SQL form parses the first [[PdfGlyphRuns.MaxRuns]] runs (chunk 0).
+  * The SQL name is a [[NativeFunction]] over [[PdfGlyphRuns.evalUtf8]],
+  * which parses the first [[PdfGlyphRuns.MaxRuns]] runs (chunk 0).
   */
-case class PdfGlyphRuns(child: Expression) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def prettyName: String = "pdf_glyph_runs"
-  override lazy val replacement: Expression =
-    NativeCall.static(PdfGlyphRuns.getClass, "evalUtf8", PdfGlyphRuns.outType,
-      Seq(child))
-
-  override protected def withNewChildInternal(newChild: Expression): PdfGlyphRuns =
-    copy(child = newChild)
-}
-
 object PdfGlyphRuns {
 
   /** static eval shared by interpreted and generated code paths */

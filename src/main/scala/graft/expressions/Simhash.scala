@@ -1,13 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of whitespace-tokenized text as ONE native expression —
-  * the escalation path VecDot already took: the declarative form
-  * ([[graft.dedup.Dedup.simhashFromHashes]]) runs 64 separate `aggregate`
+/** 64-bit SimHash of whitespace-tokenized text as ONE native call,
+  * `simhash64(text)` ([[NativeFunction]]) — the escalation path VecDot
+  * already took: the declarative form (`DeclarativeTwins.simhashFromHashes`
+  * in `src/test`) runs 64 separate `aggregate`
   * passes over the token-hash array per row (measured 8 s at sf0.1);
   * this evaluates tokenize → xxhash64 → 64 bit votes in a single pass
   * with a stack vote array and no allocations beyond the token walk.
@@ -22,18 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * the graft-side LLM-data-pipeline operator family (builder prompt);
   * hashing role as in `pipeline.py:2580-2585` (sha256 lineage hashes).
   */
-case class Simhash(child: Expression) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def prettyName: String = "simhash64"
-  override lazy val replacement: Expression =
-    NativeCall.static(Simhash.getClass, "evalUtf8", LongType, Seq(child))
-
-  override protected def withNewChildInternal(newChild: Expression): Simhash =
-    copy(child = newChild)
-}
-
 object Simhash {
 
   private val Seed = 42L // Spark's xxhash64 default seed

@@ -1,15 +1,16 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace tokens with char-span offsets in the COLLAPSED string
-  * (tokens rejoined by single spaces) as ONE native single-pass
-  * expression — the token-offset stage of the span-vote ensemble
-  * (SURVEY J1+A4; reference token/bbox alignment `pipeline.py:1729-1837`).
+  * (tokens rejoined by single spaces) as ONE native single-pass call,
+  * `token_spans(text)` ([[NativeFunction]]) — the token-offset stage of
+  * the span-vote ensemble (SURVEY J1+A4; reference token/bbox alignment
+  * `pipeline.py:1729-1837`).
   *
   * Replaces the posexplode + per-row window prefix-sum pipeline: that
   * shape shuffles every token row once just to compute a running sum the
@@ -27,19 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (offsets in the single-space-joined string); end = start + numChars.
   * Lengths count Unicode code points, matching Spark `length`.
   */
-case class TokenSpans(child: Expression) extends UnaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def prettyName: String = "token_spans"
-  override lazy val replacement: Expression =
-    NativeCall.static(TokenSpans.getClass, "evalUtf8", TokenSpans.OutType,
-      Seq(child))
-
-  override protected def withNewChildInternal(newChild: Expression): TokenSpans =
-    copy(child = newChild)
-}
-
 object TokenSpans {
 
   val OutType: DataType = ArrayType(StructType(Seq(
@@ -54,7 +42,7 @@ object TokenSpans {
 
   /** `\A\s+`/`\s+\z` trim with Java-regex `\s` (== what Spark's
     * regexp_replace uses, NOT Unicode whitespace) — the load-bearing
-    * trim semantics shared by [[TokenSpans]] and [[PlainNormalize]]
+    * trim semantics shared by [[evalUtf8]] and [[PlainNormalize]]
     */
   def trimJavaWs(s: String): String =
     TrailWS.matcher(LeadWS.matcher(s).replaceFirst("")).replaceFirst("")

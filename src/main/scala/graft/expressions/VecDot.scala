@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Native dot product over two `array<double>` columns: `VecDot(a, b)`.
+/** Native dot product over two `array<double>` columns: `vec_dot(a, b)`,
+  * a [[NativeFunction]] over [[VecDot.dot]].
   *
   * The declarative form `aggregate(zip_with(a, b, _*_), 0d, _+_)`
   * allocates an intermediate 64-element array PER PAIR inside similarity
@@ -20,20 +19,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * differ — the shorter length wins (mirrors zip_with-with-multiply
   * where the null tail contributes nothing).
   */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression
-    with RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def prettyName: String = "vec_dot"
-  override lazy val replacement: Expression =
-    NativeCall.static(VecDot.getClass, "dot", DoubleType, Seq(left, right))
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecDot =
-    copy(left = newLeft, right = newRight)
-}
-
 object VecDot {
 
   /** allocation-free primitive loop shared by interpreted + codegen paths */

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 
-import graft.expressions.{NativeCall, PlainNormalize, TokenSpans, TurnNative}
+import graft.expressions.{NativeCall, PlainNormalize, TurnNative}
 
 /** Column functions for content sniffing, plain-text normalization, spans
   * and confidence — no UDF-opaque regex soup. The per-row hot checks
-  * (sniff, blank, plain normalization, token spans) are
+  * (sniff, blank, plain normalization) are
   * native codegen'd calls in [[graft.expressions]], each cross-checked in
-  * FunctionsSpec/SpanVoteSpec against a declarative spec twin built from
+  * FunctionsSpec against a declarative spec twin built from
   * the same constants; the rest are built-in Catalyst expressions.
   */
 object TextFunctions {
@@ -111,16 +111,6 @@ object TextFunctions {
     */
   def geoMeanAgg(conf: Column): Column =
     exp(avg(log(greatest(conf, lit(1e-3)))))
-
-  /** Whitespace tokens with offsets in the single-space-collapsed string,
-    * `array<struct<tok,start,end>>` — native single pass
-    * ([[TokenSpans]]); the declarative spec twin `tokenSpansDeclarative`
-    * lives in `src/test` (cross-checked in SpanVoteSpec). Keeps the
-    * ensemble path's token-offset stage NARROW — the posexplode +
-    * per-row-window prefix sum it replaces shuffles every token row.
-    */
-  def tokenSpans(text: Column): Column =
-    column(TokenSpans(expr(text)))
 
   /** Run-length collapse of repeated characters — the CTC-decode analog
     * (SURVEY G8; reference collapse-repeats-drop-blanks,

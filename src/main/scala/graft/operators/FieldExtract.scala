@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 
-import graft.expressions.{FirstDoubleChain, FirstIntChain, FirstStrChain, KieBest, NativeCall, NormIntChain, RegexReplaceChain}
+import graft.expressions.{FirstDoubleChain, FirstIntChain, FirstStrChain, NativeCall, NormIntChain, RegexReplaceChain}
+import graft.functions.GraftFunctions.kie_best
 
 /** KIE field extraction — the reference pipeline's actual purpose:
   * regex fallback chains with OCR-tolerant classes, first-match-wins
@@ -289,57 +290,6 @@ object FieldExtract {
     pos === 0 || ok
   }
 
-  // --------------------------------------------------------------- text KIE
-
-  /** Packed sort key for KIE candidate selection: one BIGINT encoding
-    * (score desc, |v-center| asc, position asc, value) so `array_min`
-    * replaces a struct-comparator sort identically in Spark and DuckDB.
-    * Layout: (35-score)·2^48 + absdiff·2^28 + min(idx,1000)·2^18 + v,
-    * with v < 2^18 (KIE values ≤ 100000). Ties resolve to the earliest
-    * candidate — Python's stable sort.
-    */
-  private val VBits = 262144L // 2^18
-
-  /** tokenized scan input, staged once per row */
-  def kieTokens(pre: Column): Column = split(pre, "\\s+")
-
-  /** KIE candidate key arrays for one field over the staged token array.
-    * `center` is the tie-break anchor (300 for electricity, 120 for
-    * carbon — `pipeline.py:2294-2300`).
-    */
-  private def kieKeys(toks: Column, isElectricity: Boolean): Column = {
-    val (kws, lo, hi, center, boostWords) =
-      if (isElectricity) (elecKeywords, 50, 50000, 300, Seq("kwh"))
-      else (carbonKeywords, 10, 20000, 120, Seq("co2e", "co2", "kg"))
-    // guard: sequence(1, 0) infers a DESCENDING step in Spark — an empty
-    // token list must yield an empty index list, not [1, 0]
-    val idxs = when(size(toks) > 0, sequence(lit(1), size(toks)))
-      .otherwise(array().cast("array<int>"))
-    val keys = transform(idxs, i => {
-      val vs = translate(
-        regexp_extract(element_at(toks, i), kieNumToken, 1), ",", "")
-      val v = when(length(vs).between(1, 7), vs).cast("long")
-      val lo5 = greatest(i - KieCtxTokens, lit(1))
-      val ctx = lower(array_join(concat(
-        slice(toks, lo5, i - lo5),
-        slice(toks, i + 1, lit(KieCtxTokens))), " "))
-      val score = kws.map(w => when(ctx.contains(w), 2L).otherwise(0L))
-        .reduce(_ + _) +
-        when(boostWords.map(w => ctx.contains(w)).reduce(_ || _), 3L).otherwise(0L)
-      when(v >= 10 && v <= 100000 && score > 0 && v.between(lo, hi),
-        (lit(35L) - score) * lit(1L << 48) +
-          abs(v - center) * lit(1L << 28) +
-          least(i.cast("long"), lit(1000L)) * lit(VBits) + v)
-    })
-    filter(keys, k => k.isNotNull)
-  }
-
-  /** best KIE candidate value (null when none) for one field. */
-  def kieField(toks: Column, isElectricity: Boolean): Column = {
-    val ks = kieKeys(toks, isElectricity)
-    when(size(ks) > 0, pmod(array_min(ks), lit(VBits)).cast("int"))
-  }
-
   // ------------------------------------------------------------- operator
 
   /** Full extract_fields over a text column: simple regex → conditional
@@ -353,11 +303,11 @@ object FieldExtract {
       .withColumn("__ct", numericalCorrections(t))
       .withColumn("__se", firstInt(t, elecPatterns, 50, 50000))
       .withColumn("__sc", carbonFirstInt(t))
-      // KIE candidate scan as ONE native single-pass expression (same
-      // semantics as [[kieField]], which remains the declarative spec —
+      // KIE candidate scan as ONE native single-pass call (same
+      // semantics as the declarative twin `DeclarativeTwins.kieField` —
       // cross-checked in FieldExtractSpec; the declarative form measured
       // ~4 ms/row interpreted at sf0.1)
-      .withColumn("__kie", column(KieBest(expr(col("__pre")))))
+      .withColumn("__kie", kie_best(col("__pre")))
       .withColumn("__ke", col("__kie.ke"))
       .withColumn("__kc", col("__kie.kc"))
 
@@ -584,6 +534,10 @@ object FieldExtract {
     s"($pos = 0 OR $ok)"
   }
 
+  /** DuckDB twin of the KIE candidate keys over `toks`: one BIGINT per
+    * candidate, (35-score)·2^48 + |v-center|·2^28 + min(i,1000)·2^18 + v,
+    * the packed key [[graft.expressions.KieBest]] takes the minimum of.
+    */
   private def kieKeysSql(elec: Boolean): String = {
     val (kws, lo, hi, center, boosts) =
       if (elec) (elecKeywords, 50, 50000, 300, Seq("kwh"))

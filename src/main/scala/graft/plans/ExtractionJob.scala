@@ -57,6 +57,10 @@ import graft.operators.Extract
   *    `ParquetReader`, and each wave's append is one parquet file written
   *    under a hidden name and renamed into place (a kill mid-append leaves
   *    a hidden file every read skips). Neither starts a Spark job.
+  *  - Every path the job reads, writes or deletes resolves through the
+  *    session's Hadoop conf (`sessionState.newHadoopConf()`), so a
+  *    filesystem or credential set with `spark.conf.set` reaches the
+  *    manifest as it reaches the data files.
   */
 object ExtractionJob {
 
@@ -147,7 +151,7 @@ object ExtractionJob {
     * completes none.
     */
   private def readCompleted(spark: SparkSession, cfg: Config): Seq[(Int, String)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(manifestDir(cfg))
     val fs = dir.getFileSystem(conf)
     val parts = if (!fs.exists(dir)) Nil
@@ -174,7 +178,7 @@ object ExtractionJob {
     * are redone.
     */
   private def appendManifest(spark: SparkSession, cfg: Config, rows: Seq[Row]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(manifestDir(cfg))
     val id = java.util.UUID.randomUUID()
     val staged = new Path(dir, s".part-$id.parquet.inprogress")
@@ -287,8 +291,8 @@ object ExtractionJob {
 
     // a todo id has no complete row: whatever its dir holds is a crash's
     val dir = new Path(dataDir(cfg))
-    wave.foreach(b => dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new Path(dir, s"bucket=$b"), true))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    wave.foreach(b => fs.delete(new Path(dir, s"bucket=$b"), true))
     val writer = new BucketWriter(spark, dir.toString, qe.executedPlan.output)
     // `runJob` keeps one result per partition, the succeeded attempt's,
     // so a retried task counts once

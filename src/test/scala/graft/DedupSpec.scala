@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.functions.GraftFunctions.simhash64
 
 class DedupSpec extends SparkSpecBase {
   import spark.implicits._
@@ -63,7 +64,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("minhash signature approximates jaccard") {
     val df = Seq(1L -> base, 2L -> (base + " phi chi")).toDF("doc_id", "text")
-    val sigs = Dedup.minhashed(df, numHashes = 128).collect()
+    val sigs = DeclarativeTwins.minhashed(df, numHashes = 128).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
     val est = sigs(1L).zip(sigs(2L)).count { case (a, b) => a == b } / 128.0
     assert(math.abs(est - 0.9) < 0.15) // 128 hashes → se ≈ 0.027
@@ -74,7 +75,7 @@ class DedupSpec extends SparkSpecBase {
       1L -> base, 2L -> (base + " phi"),
       3L -> "completely disjoint vocabulary paragraph regarding databases")
       .toDF("doc_id", "text")
-    val sh = df.select(col("doc_id"), Dedup.simhash(col("text")).as("h"))
+    val sh = df.select(col("doc_id"), simhash64(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(1L), sh(2L)) <= 6)
@@ -84,10 +85,10 @@ class DedupSpec extends SparkSpecBase {
   test("native Simhash expression equals the declarative 64-vote pipeline") {
     val df = Seq("a b c", "  alpha\tbeta  gamma ", "", "single",
       "x y z w 123 l23", base).toDF("text")
-    val a = df.select(Dedup.simhash(col("text")).as("h"))
+    val a = df.select(simhash64(col("text")).as("h"))
       .collect().map(_.getLong(0)).toSeq
     val b = df.select(
-        Dedup.simhashFromHashes(Dedup.tokenHashes(col("text"))).as("h"))
+        DeclarativeTwins.simhashFromHashes(DeclarativeTwins.tokenHashes(col("text"))).as("h"))
       .collect().map(_.getLong(0)).toSeq
     assert(a === b)
   }
@@ -98,7 +99,7 @@ class DedupSpec extends SparkSpecBase {
         if (i % 3 == 0) " phi" else if (i % 3 == 1) " chi psi" else ""
       i -> (base + s" tok${i / 6}" + extra)
     }.toDF("doc_id", "text")
-    val hs = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("h"))
+    val hs = docs.select(col("doc_id"), simhash64(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for {
       a <- hs.keys; b <- hs.keys
@@ -163,15 +164,14 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("native MinhashSig equals the declarative signature pipeline") {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
     val df = Seq(base, base + " phi chi", "a b", "", "single",
       "  spaced   out\ttokens ").toDF("text")
       .select(Dedup.shingleHashes(col("text"), 3).as("hs"))
     val native = df.select(
-        column(graft.expressions.MinhashSig(expr(col("hs")), 32)).as("sig"))
+        Dedup.minhashSig(col("hs"), 32).as("sig"))
       .collect().map(_.getSeq[Long](0)).toSeq
     val decl = df.select(
-        Dedup.minhashSignature(
+        DeclarativeTwins.minhashSignature(
           transform(col("hs"), h => pmod(h, lit(2147483647L))), 32).as("sig"))
       .collect().map(_.getSeq[Long](0)).toSeq
     assert(native === decl)
@@ -241,9 +241,9 @@ class DedupSpec extends SparkSpecBase {
 
   test("minhash signature values are stable across partitioning") {
     val docs = (0L until 50L).map(i => i -> s"$base token$i extra words here")
-    val a = Dedup.minhashed(docs.toDF("doc_id", "text").repartition(1))
+    val a = DeclarativeTwins.minhashed(docs.toDF("doc_id", "text").repartition(1))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val b = Dedup.minhashed(docs.toDF("doc_id", "text").repartition(7))
+    val b = DeclarativeTwins.minhashed(docs.toDF("doc_id", "text").repartition(7))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(a === b)
   }

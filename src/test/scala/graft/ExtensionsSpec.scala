@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.GraftFunctions
 
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -51,6 +54,37 @@ class ExtensionsSpec extends AnyFunSuite {
         .head().getAs[Double]("d") === 9.0)
       assert(s.sql("SELECT simhash64(123) = simhash64('123') AS eq")
         .head().getAs[Boolean]("eq"))
+
+      // the whole table: each name is catalog-visible under
+      // GraftExtensions with its usage text, gates its arity, and fails
+      // analysis on each mistyped argument (an argument of each input
+      // type, and one no implicit cast reaches)
+      def good(t: DataType): String = t match {
+        case StringType => "'x'"
+        case ArrayType(DoubleType, _) => "ARRAY(1.0D)"
+      }
+      def mistyped(t: DataType): String = t match {
+        case StringType => "ARRAY(1)"
+        case ArrayType(DoubleType, _) => "'abc'"
+      }
+      for (f <- GraftFunctions.sqlFunctions) {
+        val info = s.catalog.getFunction(f.name)
+        assert(info.className === classOf[GraftExtensions].getName, f.name)
+        assert(info.description === f.usage, f.name)
+        val n = f.inputTypes.length
+        for (count <- Seq(0, n + 1)) {
+          val call = s"SELECT ${f.name}(${Seq.fill(count)("'x'").mkString(", ")})"
+          val e = intercept[Exception](s.sql(call).collect())
+          assert(e.getMessage.contains(s"${f.name} expects $n argument(s), got $count"), call)
+        }
+        for (i <- 0 until n) {
+          val args = f.inputTypes.zipWithIndex.map { case (t, j) => if (j == i) mistyped(t) else good(t) }
+          val call = s"SELECT ${f.name}(${args.mkString(", ")})"
+          val e = intercept[org.apache.spark.sql.AnalysisException](s.sql(call).collect())
+          assert(e.getMessage.contains("DATATYPE_MISMATCH"), call)
+        }
+        s.sql(s"SELECT ${f.name}(${f.inputTypes.map(good).mkString(", ")})").collect()
+      }
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -144,20 +144,19 @@ class FieldExtractSpec extends SparkSpecBase {
 
   test("native KieBest expression equals the declarative token pipeline") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
+    import graft.functions.GraftFunctions.kie_best
     val texts = Seq(
       "Electricity 299 kWh xxxxxx xxxxx xxxxxxx Kg CO2e 120 tail here",
       "  leading space 450 kWh and then 77 kg CO2e trailing",
       "usage 1,234 kWh reading 45 kg", "", "no numbers", "50 kWh",
       "a b c d e f 10000 kWh g h i j k 20 kg CO2e l m n")
     val df = texts.toDF("pre")
-    val native = df.select(
-        column(graft.expressions.KieBest(expr(col("pre")))).as("k"))
+    val native = df.select(kie_best(col("pre")).as("k"))
       .select(col("k.ke"), col("k.kc")).collect().toSeq
-    val toks = FieldExtract.kieTokens(col("pre"))
+    val toks = DeclarativeTwins.kieTokens(col("pre"))
     val decl = df.select(
-        FieldExtract.kieField(toks, isElectricity = true).as("ke"),
-        FieldExtract.kieField(toks, isElectricity = false).as("kc"))
+        DeclarativeTwins.kieField(toks, isElectricity = true).as("ke"),
+        DeclarativeTwins.kieField(toks, isElectricity = false).as("kc"))
       .collect().toSeq
     assert(native.map(r => (r.get(0), r.get(1))) ===
       decl.map(r => (r.get(0), r.get(1))))

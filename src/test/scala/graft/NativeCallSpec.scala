@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.expressions.MinhashSig
 import graft.functions.GraftFunctions
 import graft.functions.TextFunctions.plainNormalize
 import graft.gen.{BillGen, TranscriptGen}
@@ -84,7 +82,7 @@ class NativeCallSpec extends SparkSpecBase {
       "simhash64" -> simhash64(t),
       "kie_best" -> kie_best(t),
       "token_spans" -> token_spans(t),
-      "minhash_sig" -> column(MinhashSig(expr(Dedup.shingleHashes(t)), 16)),
+      "minhash_sig" -> Dedup.minhashSig(Dedup.shingleHashes(t), 16),
       "plainNormalize" -> plainNormalize(t),
       "fingerprint" -> TextAnalysis.fingerprint(t),
       "shingleHashes" -> Dedup.shingleHashes(t, 2),
@@ -164,8 +162,8 @@ class NativeCallSpec extends SparkSpecBase {
       ("html_blocks(x)", html, false), ("pdf_glyph_runs(x)", pdf, false),
       ("simhash64(123)", LongType, false), ("kie_best(x)", kie, false),
       ("token_spans(x)", spans, false), ("vec_dot(array(1.0), array(2.0))", DoubleType, false)))
-    // MinhashSig is built by name from code, not SQL
-    val sig = spark.read.parquet(dir).select(column(MinhashSig(expr(col("h")), 4)))
+    // minhash_sig is built from code, not SQL
+    val sig = spark.read.parquet(dir).select(Dedup.minhashSig(col("h"), 4))
       .schema.head
     assert((sig.name, sig.dataType, sig.nullable) ===
       (("minhash_sig(h)", ArrayType(LongType, containsNull = true), true)))

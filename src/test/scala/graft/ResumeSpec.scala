@@ -649,6 +649,35 @@ class ResumeSpec extends SparkSpecBase {
     assert(b.exceptAll(a).count() === 0)
   }
 
+  test("a filesystem set in the session conf only reaches the manifest too") {
+    // `fs.<scheme>.impl` set with spark.conf.set is in the session's
+    // Hadoop conf but not in the SparkContext's, so an out dir under that
+    // scheme resolves only through the session's. Uncached instances, so
+    // a lookup through the SparkContext's conf cannot borrow this one
+    val scheme = SessionOnlyFs.Scheme
+    val settings = Seq(s"fs.$scheme.impl" -> classOf[SessionOnlyFs].getName,
+      s"fs.$scheme.impl.disable.cache" -> "true")
+    assert(spark.sparkContext.hadoopConfiguration.get(s"fs.$scheme.impl") == null)
+    val in = TranscriptGen.inputDf(spark, N)
+    val cfgA = Config(tmp(), numBuckets = 8, saltChunk = 64)
+    val cfgB = Config(s"$scheme://${tmp()}", numBuckets = 8, saltChunk = 64,
+      waveBuckets = Some(3))
+    ExtractionJob.run(spark, in, cfgA) // reference: uninterrupted, local
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      ExtractionJob.run(spark, in, cfgB, onlyBuckets = Some(0 until 4))
+      val resumed = ExtractionJob.run(spark, in, cfgB)
+      assert(resumed.collect().map(_.getInt(0)).toSeq === (4 until 8))
+      val manifest = spark.read.parquet(ExtractionJob.manifestDir(cfgB))
+      assert(manifest.count() === 8) // no bucket processed twice
+      val a = ExtractionJob.output(spark, cfgA)
+      val b = ExtractionJob.output(spark, cfgB)
+      assert(a.count() === N && b.count() === N)
+      assert(a.exceptAll(b).count() === 0)
+      assert(b.exceptAll(a).count() === 0)
+    } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a retried bucket write leaves one file and the same sums; a failed one no file") {
     // two attempts of one bucket's task, as a retry or a speculative copy
     // runs them: the second replaces the first's file under the same name.
@@ -742,4 +771,18 @@ class ResumeSpec extends SparkSpecBase {
     }
     assert(new java.io.File(dir).list().isEmpty)
   }
+}
+
+/** The local filesystem under the scheme [[SessionOnlyFs.Scheme]], which
+  * no Hadoop default names: a path of it resolves only through a conf
+  * that sets `fs.<scheme>.impl` to this class.
+  */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = SessionOnlyFs.Uri
+  override def getScheme: String = SessionOnlyFs.Scheme
+}
+
+object SessionOnlyFs {
+  val Scheme = "graftsession"
+  val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
 }

@@ -126,7 +126,7 @@ class SpanVoteSpec extends SparkSpecBase {
   }
 
   test("native tokenSpans equals the declarative running-sum spec") {
-    import graft.functions.TextFunctions.tokenSpans
+    import graft.functions.GraftFunctions.token_spans
     import DeclarativeTwins.tokenSpansDeclarative
     val cases = Seq(
       "plain simple words",
@@ -138,19 +138,19 @@ class SpanVoteSpec extends SparkSpecBase {
       "unicode été café 123",
       "l23 O5 Z99 numbers 42")
     val df = cases.toDF("text")
-      .select(tokenSpans($"text").as("nat"),
+      .select(token_spans($"text").as("nat"),
         tokenSpansDeclarative($"text").as("dec"))
     assert(df.filter(to_json($"nat") =!= to_json($"dec")).count() === 0)
     // spot-check offsets are collapsed-string offsets
     val one = Seq("  aa   bbb c ").toDF("text")
-      .select(tokenSpans($"text").as("s")).collect().head
+      .select(token_spans($"text").as("s")).collect().head
       .getSeq[org.apache.spark.sql.Row](0)
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
     assert(one === Seq(("aa", 0, 2), ("bbb", 3, 6), ("c", 7, 8)))
   }
 
   test("tokenSpans token stage is NARROW — no Exchange before the ensemble join") {
-    import graft.functions.TextFunctions.tokenSpans
+    import graft.functions.GraftFunctions.token_spans
     // parquet-backed input: local relations constant-fold and would show
     // no real plan (verify-skill gotcha)
     val dir = tempDir("graft-ts")
@@ -158,7 +158,7 @@ class SpanVoteSpec extends SparkSpecBase {
       .selectExpr("cast(id as string) AS row_id", "'a bb ccc' AS text")
       .write.mode("overwrite").parquet(dir)
     val toks = spark.read.parquet(dir)
-      .select(col("row_id"), explode(tokenSpans(col("text"))).as("t"))
+      .select(col("row_id"), explode(token_spans(col("text"))).as("t"))
     val plan = toks.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"token-offset stage must not shuffle:\n$plan")
