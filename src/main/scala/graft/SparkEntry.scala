@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.functions.TextFunctions.geoMeanAgg
 import graft.gen.TranscriptGen
 import graft.media.{Media, MediaGen}
 import graft.operators.Extract
@@ -62,7 +63,7 @@ object SparkEntry {
     * the latent boundary it guards (every pair is re-hash-checked at two
     * SFs per round, so a flip would be caught, not silent).
     */
-  private def roundB(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private def roundB(c: Column): Column = {
     val scaled = c * lit(1000000)
     when(c >= 0, floor(scaled + lit(0.5)))
       .otherwise(-floor(-scaled + lit(0.5))).cast("double") / lit(1000000)
@@ -187,13 +188,31 @@ object SparkEntry {
     * a change to the run-line shape lands in one place; the x22 oracle's
     * closed forms recompute the same arithmetic.
     */
-  private def runLinePdfPayload(did: org.apache.spark.sql.Column,
-      upper: Int, letter: String, mult: Int): org.apache.spark.sql.Column =
+  private def runLinePdfPayload(did: Column,
+      upper: Int, letter: String, mult: Int): Column =
     concat(lit("%PDF-SIM\n"),
       array_join(transform(sequence(lit(0), lit(upper)), i =>
         concat(lit("G 40 "), (lit(100) + i * 20).cast("string"),
           lit(s" 12 $letter"),
           pmod(did * mult + i, lit(1000)).cast("string"))), "\n"))
+
+  /** per-conversation assembly (SURVEY A3), ONE builder for x02 and its
+    * DuckDB-oracled twin x12: per `conv_id`, the turn count, any `extra`
+    * aggregates, the geometric-mean confidence and the first `k` turns'
+    * `text` in `turn_idx` order. The head stays bounded: collect_list
+    * skips the nulls of the `turn_idx < k` gate, so at most k structs
+    * ever enter a conversation's buffer.
+    */
+  private def convAssembly(turns: DataFrame, text: Column, conf: Column,
+      k: Int, extra: Column*): DataFrame = {
+    val head = array_join(transform(
+      sort_array(collect_list(when(col("turn_idx") < k,
+        struct(col("turn_idx"), text.as("t"))))),
+      t => t.getField("t")), "\n")
+    turns.groupBy(col("conv_id")).agg(count(lit(1)).as("n_turns"),
+      extra :+ round(geoMeanAgg(conf), 6).as("geo_conf") :+
+        head.as("conv_text_head"): _*)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ================= extraction engine (repo-generated transcripts;
@@ -211,23 +230,10 @@ object SparkEntry {
     // job's sortWithinPartitions layout (x03), never a groupBy.
     "x02_conv_assembly" -> ((s, _) => {
       // SINGLE aggregation pass (round-2 verdict: the stats/preview split
-      // evaluated Extract twice — one groupBy now computes both; the
-      // preview buffer stays bounded because collect_list skips the
-      // nulls that the `when(turn_idx < 50, ...)` gate produces, so at
-      // most 50 structs ever enter the buffer per conversation).
-      Extract(TranscriptGen.inputDf(s, 5000L))
-        .groupBy(col("conv_id"))
-        .agg(
-          count(lit(1)).as("n_turns"),
-          sum(when(col("status") === "success", 1).otherwise(0)).as("n_success"),
-          round(exp(avg(log(greatest(col("confidence"), lit(1e-3))))), 6)
-            .as("geo_conf"),
-          array_join(
-            transform(
-              sort_array(collect_list(when(col("turn_idx") < 50,
-                struct(col("turn_idx"), col("text"))))),
-              t => t.getField("text")),
-            "\n").as("conv_text_head"))
+      // evaluated Extract twice — one groupBy now computes both)
+      convAssembly(Extract(TranscriptGen.inputDf(s, 5000L)), col("text"),
+        col("confidence"), 50,
+        sum(when(col("status") === "success", 1).otherwise(0)).as("n_success"))
     }),
 
     // the full bucketed job: salted-bucket layout + manifest lineage
@@ -476,9 +482,8 @@ object SparkEntry {
     // conversation assembly under the DuckDB oracle (round-3 verdict #7:
     // x02 is rows-only because Extract text isn't SQL-expressible; this
     // twin derives a transcript-shaped frame from the documents table —
-    // the BillGen trick — and puts A3's sort_array/collect_list/geo-conf
-    // assembly semantics under the hard per-value signal, with the
-    // bounded-head gate applied BEFORE the aggregate exactly like x02)
+    // the BillGen trick — and runs x02's own assembly builder,
+    // `convAssembly`, under the hard per-value signal)
     "x12_conv_assembly_sql" -> ((s, dir) => {
       import graft.functions.TextFunctions.plainNormalize
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -488,18 +493,7 @@ object SparkEntry {
         floor(col("doc_id") / 40).cast("int").as("turn_idx"),
         plainNormalize(col("text")).as("norm"),
         (lit(0.5) + (col("doc_id") % 50).cast("double") / 100.0).as("conf"))
-      turns.groupBy("conv_id")
-        .agg(
-          count(lit(1)).as("n_turns"),
-          round(exp(avg(log(greatest(col("conf"), lit(1e-3))))), 6)
-            .as("geo_conf"),
-          array_join(
-            transform(
-              sort_array(collect_list(when(col("turn_idx") < 5,
-                struct(col("turn_idx"), col("norm"))))),
-              t => t.getField("norm")),
-            "\n").as("conv_text_head"))
-        .orderBy("conv_id")
+      convAssembly(turns, col("norm"), col("conf"), 5).orderBy("conv_id")
     }),
 
     // per-row token/confidence ops under the DuckDB oracle — flips the
@@ -1196,7 +1190,6 @@ object SparkEntry {
 
     // cross-row geometric mean (SURVEY A1 cross-row form)
     "q06_geomean" -> ((s, dir) => {
-      import graft.functions.TextFunctions.geoMeanAgg
       val orders = s.read.parquet(s"$dir/orders.parquet")
       orders.groupBy(col("o_orderpriority"))
         .agg(round(geoMeanAgg(col("o_totalprice")), 4).as("geo_price"),

@@ -163,13 +163,4 @@ object Calibration {
     }
     Some(hi)
   }
-
-  /** per-tier thresholds (reference τ ladder: accept 0.95 / enhance 0.90 /
-    * llm 0.85 target accuracies) for one fitted model
-    */
-  def thresholds(m: Model,
-      targets: Map[String, Double] = Map(
-        "accept" -> 0.95, "enhance" -> 0.90, "llm" -> 0.85))
-      : Map[String, Option[Double]] =
-    targets.map { case (k, t) => k -> threshold(m, t) }
 }

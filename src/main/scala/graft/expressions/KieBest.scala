@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.operators.FieldExtract
+
 /** Text-KIE candidate selection (`pipeline.py:2244-2303` re-expressed) as
   * ONE native call: `kie_best(preprocessedText)` ([[NativeFunction]]) →
   * `struct<ke:int, kc:int>` (best electricity / carbon candidates, null
@@ -14,13 +16,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics are IDENTICAL to the declarative token pipeline
   * (`DeclarativeTwins.kieField` in `src/test`) and to its DuckDB oracle
-  * twin in [[graft.operators.FieldExtract]]:
+  * twin in [[graft.operators.FieldExtract]], and all three read the same
+  * tables there (`KieElec`, `KieCarbon`, `kieNumToken`, `KieCtxTokens`):
   * whitespace tokens fully matching the number shape are candidates,
-  * context = ±5 neighboring tokens joined+lowercased, keyword scores ×2
+  * context = the neighboring tokens joined+lowercased, keyword scores ×2
   * plus unit boosts ×3, range guards, best by (score desc, |v−center|
   * asc, position asc). The declarative form ran the tokenize → slice →
   * join → lower → contains chain per token per field through interpreted
-  * eval (~4 ms/row measured at sf0.1); this walks the token array once.
+  * eval (~4 ms/row measured at sf0.1); this walks the token array once
+  * and scores both fields per candidate.
   */
 object KieBest {
 
@@ -28,91 +32,65 @@ object KieBest {
     StructField("ke", IntegerType, nullable = true),
     StructField("kc", IntegerType, nullable = true)))
 
-  /** full-token number shape — same alternation (and its quirks) as the
-    * chain patterns' numAlt
+  // FieldExtract's tables, read lazily (as PlainNormalize reads
+  // TextFunctions' constants): FieldExtract builds this object's calls
+  private lazy val numToken: Pattern = Pattern.compile(FieldExtract.kieNumToken)
+  private lazy val fields = Array(FieldExtract.KieElec, FieldExtract.KieCarbon)
+
+  /** token `i`'s context: its neighbors within `KieCtxTokens`, joined and
+    * lowercased. array_join semantics: separator between EVERY pair,
+    * empty elements included (a length-based check would drop the
+    * separator after a leading empty token).
     */
-  private val numToken: Pattern =
-    Pattern.compile("""(?:\d{1,3}(?:,\d{3})*|\d{2,5})""")
-
-  private val CtxTokens = 5
-
-  private val elecKws = Array("kwh", "electricity", "consumption", "usage",
-    "electric", "reading")
-  private val carbKws = Array("co2", "carbon", "footprint", "emission", "kg",
-    "environmental", "c02")
-  private val elecBoost = Array("kwh")
-  private val carbBoost = Array("co2e", "co2", "kg")
+  private def context(toks: Array[String], i: Int): String = {
+    val w = FieldExtract.KieCtxTokens
+    val sb = new java.lang.StringBuilder(64)
+    var first = true
+    var j = math.max(0, i - w)
+    while (j <= math.min(toks.length - 1, i + w)) {
+      if (j != i) {
+        if (!first) sb.append(' ')
+        sb.append(toks(j))
+        first = false
+      }
+      j += 1
+    }
+    sb.toString.toLowerCase(Locale.ROOT)
+  }
 
   def evalUtf8(input: UTF8String): InternalRow = {
     val toks = input.toString.split("\\s+", -1)
-    var bestE = Long.MaxValue
-    var bestC = Long.MaxValue
+    val best = Array(Long.MaxValue, Long.MaxValue) // packed keys per field
     var i = 0
     while (i < toks.length) {
       val tok = toks(i)
-      if (tok.nonEmpty && numToken.matcher(tok).matches()) {
-        val vs =
-          if (tok.indexOf(',') >= 0) tok.replace(",", "") else tok
-        if (vs.length >= 1 && vs.length <= 7) {
+      if (numToken.matcher(tok).matches()) {
+        val vs = if (tok.indexOf(',') >= 0) tok.replace(",", "") else tok
+        if (vs.length <= FieldExtract.MaxIntDigits) {
           val v = java.lang.Long.parseLong(vs)
-          if (v >= 10 && v <= 100000) {
-            // context = ±CtxTokens neighbors, joined + lowercased
-            val lo = math.max(0, i - CtxTokens)
-            val hi = math.min(toks.length - 1, i + CtxTokens)
-            // array_join semantics: separator between EVERY pair, empty
-            // elements included (a length-based check would drop the
-            // separator after a leading empty token)
-            val sb = new java.lang.StringBuilder(64)
-            var first = true
-            var j = lo
-            while (j <= hi) {
-              if (j != i) {
-                if (!first) sb.append(' ')
-                sb.append(toks(j))
-                first = false
+          val idx = math.min(i + 1L, 1000L) // 1-based, capped
+          var ctx: String = null // built once, for the first in-range field
+          var f = 0
+          while (f < fields.length) {
+            val kf = fields(f)
+            if (v >= kf.lo && v <= kf.hi) {
+              if (ctx == null) ctx = context(toks, i)
+              val score = 2L * kf.keywords.count(ctx.contains) +
+                (if (kf.boosts.exists(ctx.contains)) 3L else 0L)
+              if (score > 0) {
+                val key = (35L - score) * (1L << 48) +
+                  math.abs(v - kf.center) * (1L << 28) + idx * (1L << 18) + v
+                if (key < best(f)) best(f) = key
               }
-              j += 1
             }
-            val ctx = sb.toString.toLowerCase(Locale.ROOT)
-            val idx = math.min(i + 1L, 1000L) // 1-based, capped
-
-            var es = 0L
-            var k = 0
-            while (k < elecKws.length) {
-              if (ctx.contains(elecKws(k))) es += 2; k += 1
-            }
-            if (ctx.contains(elecBoost(0))) es += 3
-            if (es > 0 && v >= 50 && v <= 50000) {
-              val key = (35L - es) * (1L << 48) +
-                math.abs(v - 300L) * (1L << 28) + idx * (1L << 18) + v
-              if (key < bestE) bestE = key
-            }
-
-            var cs = 0L
-            k = 0
-            while (k < carbKws.length) {
-              if (ctx.contains(carbKws(k))) cs += 2; k += 1
-            }
-            var boosted = false
-            k = 0
-            while (k < carbBoost.length && !boosted) {
-              boosted = ctx.contains(carbBoost(k)); k += 1
-            }
-            if (boosted) cs += 3
-            if (cs > 0 && v >= 10 && v <= 20000) {
-              val key = (35L - cs) * (1L << 48) +
-                math.abs(v - 120L) * (1L << 28) + idx * (1L << 18) + v
-              if (key < bestC) bestC = key
-            }
+            f += 1
           }
         }
       }
       i += 1
     }
-    val ke: Any =
-      if (bestE == Long.MaxValue) null else (bestE % (1L << 18)).toInt
-    val kc: Any =
-      if (bestC == Long.MaxValue) null else (bestC % (1L << 18)).toInt
-    InternalRow(ke, kc)
+    def value(key: Long): Any =
+      if (key == Long.MaxValue) null else (key % (1L << 18)).toInt
+    InternalRow(value(best(0)), value(best(1)))
   }
 }

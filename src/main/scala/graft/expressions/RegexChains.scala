@@ -6,9 +6,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native regex-chain evaluators for the KIE field-extraction operator.
   *
-  * Each instance evaluates a whole first-match-wins pattern chain (or a
-  * sequential replace-rule list) with PRECOMPILED `java.util.regex`
-  * patterns in one call. The declarative per-pattern form
+  * Each instance evaluates a whole first-match-wins pattern chain
+  * ([[FirstMatchChain]]) or a sequential replace-rule list
+  * ([[RegexReplaceChain]]) with PRECOMPILED `java.util.regex` patterns in
+  * one call. The declarative per-pattern form
   * (`coalesce(nullif(regexp_extract(...)))` × N) stays the semantic spec
   * mirrored by the DuckDB oracle; these evaluators exist because the
   * inlined chains grew the collapsed projection's whole-stage codegen
@@ -46,107 +47,84 @@ case class RegexReplaceChain(rules: Seq[(String, String)], caseInsensitive: Bool
   }
 }
 
-/** first-match-wins int chain with per-pattern range guard (X3):
-  * group(1), commas stripped, digit-length gate, value must be in
-  * [lo, hi] or the NEXT pattern is tried.
+/** How a [[FirstMatchChain]] turns a non-empty matched group into its
+  * value: the value (boxed as the column's type), or null to send the
+  * chain on to its NEXT pattern.
   */
-case class FirstIntChain(patterns: Seq[String], lo: Int, hi: Int, maxLen: Int) {
-  @transient private lazy val compiled =
-    RegexChains.compile(patterns, ci = true)
+sealed trait GroupValue extends Serializable {
+  def apply(g: String): AnyRef
+}
 
-  def eval(input: UTF8String): java.lang.Integer = {
-    val s = input.toString
-    var i = 0
-    while (i < compiled.length) {
-      val m = compiled(i).matcher(s)
-      if (m.find()) {
-        val g = m.group(1)
-        if (g != null && g.nonEmpty) {
-          val d = if (g.indexOf(',') >= 0) g.replace(",", "") else g
-          if (d.length <= maxLen && d.forall(_.isDigit) && d.nonEmpty) {
-            val v = java.lang.Long.parseLong(d)
-            if (v >= lo && v <= hi) return java.lang.Integer.valueOf(v.toInt)
-          }
+object GroupValue {
+
+  /** the group itself (mobile account/date/period fields) */
+  case object AsString extends GroupValue {
+    def apply(g: String): AnyRef = UTF8String.fromString(g)
+  }
+
+  /** commas stripped, at most `maxLen` digits, value in [lo, hi] (X3) */
+  case class IntIn(lo: Int, hi: Int, maxLen: Int) extends GroupValue {
+    def apply(g: String): AnyRef = {
+      val d = if (g.indexOf(',') >= 0) g.replace(",", "") else g
+      if (d.length <= maxLen && d.nonEmpty && d.forall(_.isDigit)) {
+        val v = java.lang.Long.parseLong(d)
+        if (v >= lo && v <= hi) return java.lang.Integer.valueOf(v.toInt)
+      }
+      null
+    }
+  }
+
+  /** X1/X2 `_normalise_number` (X9): l→1 g→9 O→0, strip non-digits,
+    * null unless 1 to `maxLen` digits survive
+    */
+  case class NormInt(maxLen: Int) extends GroupValue {
+    def apply(g: String): AnyRef = {
+      val sb = new java.lang.StringBuilder(g.length)
+      var k = 0
+      while (k < g.length) {
+        g.charAt(k) match {
+          case c if c >= '0' && c <= '9' => sb.append(c)
+          case 'l' => sb.append('1')
+          case 'g' => sb.append('9')
+          case 'O' => sb.append('0')
+          case _ => ()
         }
+        k += 1
       }
-      i += 1
+      if (sb.length > 0 && sb.length <= maxLen)
+        java.lang.Integer.valueOf(Integer.parseInt(sb.toString))
+      else null
     }
-    null
+  }
+
+  /** fractional value in [lo, hi] (water, X5) */
+  case class DoubleIn(lo: Double, hi: Double) extends GroupValue {
+    def apply(g: String): AnyRef = {
+      val v = java.lang.Double.parseDouble(g) // pattern shape: \d+(\.\d+)?
+      if (v >= lo && v <= hi) java.lang.Double.valueOf(v) else null
+    }
   }
 }
 
-/** first-match-wins string chain (mobile account/date/period fields) */
-case class FirstStrChain(patterns: Seq[String], groupIdx: Int) {
-  @transient private lazy val compiled =
-    RegexChains.compile(patterns, ci = true)
-
-  def eval(input: UTF8String): UTF8String = {
-    val s = input.toString
-    var i = 0
-    while (i < compiled.length) {
-      val m = compiled(i).matcher(s)
-      if (m.find()) {
-        val g = m.group(groupIdx)
-        if (g != null && g.nonEmpty) return UTF8String.fromString(g)
-      }
-      i += 1
-    }
-    null
-  }
-}
-
-/** X1/X2 advanced chain: first pattern whose `_normalise_number`d group
-  * (l→1 g→9 O→0, strip non-digits, ≤ maxLen digits) is non-null.
+/** first-match-wins chain: the value of the first pattern whose `group`
+  * is non-empty and accepted by `value`; a rejected group (range guard,
+  * digit-length gate) falls through to the NEXT pattern, mirroring the
+  * reference's `break`-only-when-in-range loops.
   */
-case class NormIntChain(patterns: Seq[String], maxLen: Int) {
+case class FirstMatchChain(patterns: Seq[String], group: Int, value: GroupValue) {
   @transient private lazy val compiled =
     RegexChains.compile(patterns, ci = true)
 
-  def eval(input: UTF8String): java.lang.Integer = {
+  def eval(input: UTF8String): AnyRef = {
     val s = input.toString
     var i = 0
     while (i < compiled.length) {
       val m = compiled(i).matcher(s)
       if (m.find()) {
-        val g = m.group(1)
+        val g = m.group(group)
         if (g != null && g.nonEmpty) {
-          val sb = new java.lang.StringBuilder(g.length)
-          var k = 0
-          while (k < g.length) {
-            g.charAt(k) match {
-              case c if c >= '0' && c <= '9' => sb.append(c)
-              case 'l' => sb.append('1')
-              case 'g' => sb.append('9')
-              case 'O' => sb.append('0')
-              case _ => ()
-            }
-            k += 1
-          }
-          if (sb.length > 0 && sb.length <= maxLen)
-            return java.lang.Integer.valueOf(Integer.parseInt(sb.toString))
-        }
-      }
-      i += 1
-    }
-    null
-  }
-}
-
-/** first-match-wins fractional chain with range guard (water, X5) */
-case class FirstDoubleChain(patterns: Seq[String], lo: Double, hi: Double) {
-  @transient private lazy val compiled =
-    RegexChains.compile(patterns, ci = true)
-
-  def eval(input: UTF8String): java.lang.Double = {
-    val s = input.toString
-    var i = 0
-    while (i < compiled.length) {
-      val m = compiled(i).matcher(s)
-      if (m.find()) {
-        val g = m.group(1)
-        if (g != null && g.nonEmpty) {
-          val v = java.lang.Double.parseDouble(g) // pattern shape: \d+(\.\d+)?
-          if (v >= lo && v <= hi) return java.lang.Double.valueOf(v)
+          val v = value(g)
+          if (v != null) return v
         }
       }
       i += 1

@@ -31,29 +31,34 @@ object ShingleHashes {
   /** hoisted: String.split("\\s+") recompiles the pattern per call */
   private val WS = java.util.regex.Pattern.compile("\\s+")
 
-  private def hashStr(s: String): Long = {
+  /** Spark's `split(trim(s), "\\s+")`, shared with [[Simhash]]: `trim`
+    * strips ' ' only, and split's default limit -1 keeps trailing empty
+    * tokens
+    */
+  private[expressions] def tokens(s: String): Array[String] = {
+    var lo = 0
+    var hi = s.length
+    while (lo < hi && s.charAt(lo) == ' ') lo += 1
+    while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
+    WS.split(s.substring(lo, hi), -1)
+  }
+
+  /** Spark's `xxhash64(s)`, shared with [[Simhash]] */
+  private[expressions] def tokenHash(s: String): Long = {
     val u = UTF8String.fromString(s)
     XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
   }
 
   /** static eval shared by interpreted and generated code paths */
   def evalUtf8(input: UTF8String, w: Int): ArrayData = {
-    val s = input.toString
-    // Spark `trim` strips ' ' only; split("\s+") with Spark's default
-    // limit -1 keeps trailing empty tokens — replicate exactly
-    var lo = 0
-    var hi = s.length
-    while (lo < hi && s.charAt(lo) == ' ') lo += 1
-    while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-    val toks = WS.split(s.substring(lo, hi), -1)
-
+    val toks = tokens(input.toString)
     if (toks.length < w) {
-      return new GenericArrayData(Array(hashStr(toks.mkString(" "))))
+      return new GenericArrayData(Array(tokenHash(toks.mkString(" "))))
     }
     val th = new Array[Long](toks.length)
     var j = 0
     while (j < toks.length) {
-      th(j) = hashStr(toks(j))
+      th(j) = tokenHash(toks(j))
       j += 1
     }
     val out = new Array[Long](toks.length - (w - 1))

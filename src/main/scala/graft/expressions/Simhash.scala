@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of whitespace-tokenized text as ONE native call,
@@ -13,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics are IDENTICAL to the declarative pipeline
   * `simhashFromHashes(tokenHashes(text))` (asserted by DedupSpec):
-  * tokens = space-trimmed text split on `\s+`, token hash = Spark's
-  * `xxhash64` (XXH64 over UTF-8 bytes, seed 42), bit b set iff the
+  * tokens and token hashes as [[ShingleHashes]] takes them (Spark's
+  * `split(trim(text), "\s+")` and `xxhash64`), bit b set iff the
   * +1/−1 vote over token bits is strictly positive.
   *
   * Reference analog: document fingerprinting for near-dup detection —
@@ -23,27 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Simhash {
 
-  private val Seed = 42L // Spark's xxhash64 default seed
-
-  /** hoisted: String.split("\\s+") recompiles the pattern per call */
-  private val WS = java.util.regex.Pattern.compile("\\s+")
-
   /** static eval shared by interpreted and generated code paths */
   def evalUtf8(input: UTF8String): Long = {
-    val s = input.toString
-    // Spark `trim` strips ' ' only; then split("\\s+") — replicate exactly
-    var lo = 0
-    var hi = s.length
-    while (lo < hi && s.charAt(lo) == ' ') lo += 1
-    while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-    val trimmed = s.substring(lo, hi)
-
     val votes = new Array[Int](64)
-    val toks = WS.split(trimmed, -1)
+    val toks = ShingleHashes.tokens(input.toString)
     var t = 0
     while (t < toks.length) {
-      val u = UTF8String.fromString(toks(t))
-      val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
+      val h = ShingleHashes.tokenHash(toks(t))
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expr}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 
-import graft.expressions.{FirstDoubleChain, FirstIntChain, FirstStrChain, NativeCall, NormIntChain, RegexReplaceChain}
+import graft.expressions.{FirstMatchChain, NativeCall, RegexReplaceChain}
+import graft.expressions.GroupValue.{AsString, DoubleIn, IntIn, NormInt}
 import graft.functions.GraftFunctions.kie_best
 
 /** KIE field extraction — the reference pipeline's actual purpose:
@@ -198,8 +199,24 @@ object FieldExtract {
   val kieNumToken: String = s"^($numAlt)$$"
   val KieCtxTokens = 5
 
-  val elecKeywords = Seq("kwh", "electricity", "consumption", "usage", "electric", "reading")
-  val carbonKeywords = Seq("co2", "carbon", "footprint", "emission", "kg", "environmental", "c02")
+  /** digit-length gate of every int field: a longer digit string (after
+    * comma stripping) is no value, so parses and casts never overflow
+    */
+  val MaxIntDigits = 7
+
+  /** one text-KIE field (`pipeline.py:2244-2303`): each context keyword
+    * scores +2, any boost word +3 once; candidates outside [lo, hi] drop,
+    * ties break on |v − center|. `hi` < 2^18 keeps the packed key exact.
+    */
+  case class KieField(keywords: Seq[String], boosts: Seq[String], lo: Int,
+      hi: Int, center: Int)
+  val KieElec = KieField(
+    Seq("kwh", "electricity", "consumption", "usage", "electric", "reading"),
+    Seq("kwh"), 50, 50000, 300)
+  val KieCarbon = KieField(
+    Seq("co2", "carbon", "footprint", "emission", "kg", "environmental", "c02"),
+    Seq("co2e", "co2", "kg"), 10, 20000, 120)
+
   val elecUnitWords = Seq("kwh", "kw", "wh", "kilowatt", "electricity")
   val elecBillWords = Seq("consumption", "usage", "reading", "total", "bill")
   val carbonUnitWords = Seq("co2", "kg", "carbon", "footprint", "emission")
@@ -231,30 +248,26 @@ object FieldExtract {
 
   /** first-match-wins int chain with per-pattern range guard: a pattern
     * whose value fails the guard falls through to the NEXT pattern
-    * (mirrors the reference's `break`-only-when-in-range loops).
-    * Native [[FirstIntChain]].
+    * (mirrors the reference's `break`-only-when-in-range loops). Each
+    * chain below is one native [[FirstMatchChain]].
     */
   def firstInt(text: Column, pats: Seq[String], lo: Int, hi: Int): Column =
-    chain(FirstIntChain(pats, lo, hi, 7), IntegerType, text)
+    chain(FirstMatchChain(pats, 1, IntIn(lo, hi, MaxIntDigits)), IntegerType, text)
 
-  /** first-match-wins string chain (no guard) —
-    * native [[FirstStrChain]].
-    */
+  /** first-match-wins string chain (no guard) */
   def firstStr(text: Column, pats: Seq[String], idx: Int = 1): Column =
-    chain(FirstStrChain(pats, idx), StringType, text)
+    chain(FirstMatchChain(pats, idx, AsString), StringType, text)
 
-  /** first-match-wins fractional chain with range guard (water, X5) —
-    * native [[FirstDoubleChain]].
-    */
+  /** first-match-wins fractional chain with range guard (water, X5) */
   def firstDouble(text: Column, pats: Seq[String], lo: Double,
       hi: Double): Column =
-    chain(FirstDoubleChain(pats, lo, hi), DoubleType, text)
+    chain(FirstMatchChain(pats, 1, DoubleIn(lo, hi)), DoubleType, text)
 
   /** X1/X2 advanced chain: first pattern whose normalised value is
-    * non-null — native [[NormIntChain]].
+    * non-null
     */
   def normChain(text: Column, pats: Seq[String]): Column =
-    chain(NormIntChain(pats, 9), IntegerType, text)
+    chain(FirstMatchChain(pats, 1, NormInt(9)), IntegerType, text)
 
   /** cross-field validation (`_validate_extraction_values`,
     * `pipeline.py:2200-2221`): vacuously true when either side is null.
@@ -488,7 +501,7 @@ object FieldExtract {
 
   private def firstIntSql(x: String, pats: Seq[String], lo: Int, hi: Int) =
     "COALESCE(" + pats.map { p =>
-      val v = gatedIntSql(s"replace(${exGSql(x, p)}, ',', '')", 7)
+      val v = gatedIntSql(s"replace(${exGSql(x, p)}, ',', '')", MaxIntDigits)
       s"CASE WHEN $v BETWEEN $lo AND $hi THEN $v END"
     }.mkString(", ") + ")"
 
@@ -538,12 +551,10 @@ object FieldExtract {
     * candidate, (35-score)·2^48 + |v-center|·2^28 + min(i,1000)·2^18 + v,
     * the packed key [[graft.expressions.KieBest]] takes the minimum of.
     */
-  private def kieKeysSql(elec: Boolean): String = {
-    val (kws, lo, hi, center, boosts) =
-      if (elec) (elecKeywords, 50, 50000, 300, Seq("kwh"))
-      else (carbonKeywords, 10, 20000, 120, Seq("co2e", "co2", "kg"))
+  private def kieKeysSql(field: KieField): String = {
+    val KieField(kws, boosts, lo, hi, center) = field
     val vs = s"replace(regexp_extract(toks[i], ${sqCi(kieNumToken)}, 1), ',', '')"
-    val v = s"CAST(CASE WHEN length($vs) BETWEEN 1 AND 7 THEN $vs END AS BIGINT)"
+    val v = s"CAST(CASE WHEN length($vs) BETWEEN 1 AND $MaxIntDigits THEN $vs END AS BIGINT)"
     val ctx = s"lower(array_to_string(list_concat(" +
       s"list_slice(toks, greatest(i - $KieCtxTokens, 1), i - 1), " +
       s"list_slice(toks, i + 1, i + $KieCtxTokens)), ' '))"
@@ -552,7 +563,7 @@ object FieldExtract {
       s" + CASE WHEN ${boosts.map(w => s"contains($ctx, ${sq(w)})").mkString(" OR ")} THEN 3 ELSE 0 END"
     val key = s"(35 - ($score)) * 281474976710656 + abs($v - $center) * 268435456" +
       s" + least(i, 1000) * 262144 + $v"
-    val cond = s"$v >= 10 AND $v <= 100000 AND ($score) > 0 AND $v BETWEEN $lo AND $hi"
+    val cond = s"($score) > 0 AND $v BETWEEN $lo AND $hi"
     s"list_filter(list_transform(range(1, len(toks) + 1)," +
       s" i -> CASE WHEN $cond THEN $key END), k -> k IS NOT NULL)"
   }
@@ -575,8 +586,8 @@ object FieldExtract {
       SELECT *, string_split_regex(pre, '\\s+') AS toks
       FROM s1),
     s3 AS (
-      SELECT *, ${kieKeysSql(elec = true)} AS eks,
-        ${kieKeysSql(elec = false)} AS cks
+      SELECT *, ${kieKeysSql(KieElec)} AS eks,
+        ${kieKeysSql(KieCarbon)} AS cks
       FROM s2),
     s4 AS (
       SELECT *,

@@ -159,10 +159,9 @@ class CalibrationSpec extends SparkSpecBase {
     assert(Calibration.threshold(m, 0.05) === Some(0.2))
     // above the curve's top: unreachable
     assert(Calibration.threshold(m, 0.95) === None)
-    // τ ladder helper
-    val taus = Calibration.thresholds(m, Map("accept" -> 0.85, "llm" -> 0.3))
-    assert(math.abs(taus("accept").get - 0.95) < 1e-6)
-    assert(math.abs(taus("llm").get - 0.4) < 1e-6)
+    // τ ladder: one threshold per tier target (accept 0.85, llm 0.3)
+    assert(math.abs(Calibration.threshold(m, 0.85).get - 0.95) < 1e-6)
+    assert(math.abs(Calibration.threshold(m, 0.3).get - 0.4) < 1e-6)
   }
 
   test("x06 end-to-end: rows, bounds, and degraded rows carry lower calibration") {

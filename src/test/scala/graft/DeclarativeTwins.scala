@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup.shingles
 import graft.expressions.MinhashSig.{P31, hashParams}
 import graft.functions.TextFunctions.{correctToken, isBlank}
-import graft.operators.FieldExtract.{KieCtxTokens, Rule, carbonKeywords, ci, elecKeywords, kieNumToken}
+import graft.operators.FieldExtract.{KieCarbon, KieCtxTokens, KieElec, KieField, Rule, ci, kieNumToken}
 
 /** Declarative spec twins of the graft's single-pass natives: the Catalyst
   * pipelines each native replaced, kept as the reference its spec checks
@@ -62,8 +62,8 @@ object DeclarativeTwins {
   private def gatedInt(digits: Column, maxLen: Int): Column =
     when(length(digits) <= maxLen, digits).cast("int")
 
-  private def extractGroup(text: Column, p: String): Column =
-    nullif(regexp_extract(text, ci(p), 1), lit(""))
+  private def extractGroup(text: Column, p: String, idx: Int = 1): Column =
+    nullif(regexp_extract(text, ci(p), idx), lit(""))
 
   /** `_normalise_number` (X9): l→1 g→9 O→0, strip non-digits, null when
     * no digits survive.
@@ -86,6 +86,18 @@ object DeclarativeTwins {
     coalesce(pats.map { p =>
       val v = gatedInt(translate(extractGroup(text, p), ",", ""), maxLen = 7)
       when(v.between(lo, hi), v)
+    }: _*)
+
+  /** [[graft.operators.FieldExtract.firstStr]] */
+  def firstStrDeclarative(text: Column, pats: Seq[String], idx: Int): Column =
+    coalesce(pats.map(p => extractGroup(text, p, idx)): _*)
+
+  /** [[graft.operators.FieldExtract.firstDouble]] */
+  def firstDoubleDeclarative(text: Column, pats: Seq[String], lo: Double,
+      hi: Double): Column =
+    coalesce(pats.map { p =>
+      val v = extractGroup(text, p).try_cast("double")
+      when(v >= lo && v <= hi, v)
     }: _*)
 
   /** [[graft.operators.FieldExtract.normChain]] */
@@ -148,13 +160,11 @@ object DeclarativeTwins {
   def kieTokens(pre: Column): Column = split(pre, "\\s+")
 
   /** KIE candidate key arrays for one field over the staged token array.
-    * `center` is the tie-break anchor (300 for electricity, 120 for
-    * carbon — `pipeline.py:2294-2300`).
+    * `center` is the tie-break anchor (`pipeline.py:2294-2300`).
     */
   private def kieKeys(toks: Column, isElectricity: Boolean): Column = {
-    val (kws, lo, hi, center, boostWords) =
-      if (isElectricity) (elecKeywords, 50, 50000, 300, Seq("kwh"))
-      else (carbonKeywords, 10, 20000, 120, Seq("co2e", "co2", "kg"))
+    val KieField(kws, boostWords, lo, hi, center) =
+      if (isElectricity) KieElec else KieCarbon
     // guard: sequence(1, 0) infers a DESCENDING step in Spark — an empty
     // token list must yield an empty index list, not [1, 0]
     val idxs = when(size(toks) > 0, sequence(lit(1), size(toks)))

@@ -166,21 +166,39 @@ class FieldExtractSpec extends SparkSpecBase {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.col
     import graft.gen.BillGen
-    // real bill corpus (all five corruption variants) as the probe set
+    // real bill corpus (all five corruption variants) as the probe set,
+    // plus edges whose first matching pattern's group is rejected and a
+    // later pattern's accepted: an out-of-range int, a normalised group of
+    // more than 9 digits, a water value above 10000
+    val fallThrough = Seq("Electricity 30 kWh, Consumption: 299",
+      "consumption 1,234,567,890 kWh and 42 Electricity",
+      "used 12.5 m3; Water: 20000 m3")
     val bills = (0L until 60L).map(i => (i, s"doc $i words here"))
       .toDF("doc_id", "text")
       .select(BillGen.billCol(col("doc_id"), col("text")).as("bill"))
+      .union(fallThrough.toDF("bill"))
     def both(n: Column, d: Column): Unit = {
       val rows = bills.select(n.as("n"), d.as("d")).collect()
       rows.foreach(r => assert(r.get(0) === r.get(1)))
     }
     val b = col("bill")
+    val edges = fallThrough.toDF("bill").select(
+      FieldExtract.firstInt(b, FieldExtract.elecPatterns, 50, 50000),
+      FieldExtract.normChain(b, FieldExtract.energyChain),
+      FieldExtract.firstDouble(b, FieldExtract.waterPatterns, 0.1, 10000.0)).collect()
+    assert(edges.indices.map(i => edges(i).get(i)) === Seq(299, 42, 12.5))
     both(FieldExtract.firstInt(b, FieldExtract.elecPatterns, 50, 50000),
       DeclarativeTwins.firstIntDeclarative(b, FieldExtract.elecPatterns, 50, 50000))
     both(FieldExtract.firstInt(b, FieldExtract.carbPatterns, 10, 20000),
       DeclarativeTwins.firstIntDeclarative(b, FieldExtract.carbPatterns, 10, 20000))
     both(FieldExtract.normChain(b, FieldExtract.carbonChain),
       DeclarativeTwins.normChainDeclarative(b, FieldExtract.carbonChain))
+    both(FieldExtract.normChain(b, FieldExtract.energyChain),
+      DeclarativeTwins.normChainDeclarative(b, FieldExtract.energyChain))
+    both(FieldExtract.firstStr(b, FieldExtract.periodPatterns, 2),
+      DeclarativeTwins.firstStrDeclarative(b, FieldExtract.periodPatterns, 2))
+    both(FieldExtract.firstDouble(b, FieldExtract.waterPatterns, 0.1, 10000.0),
+      DeclarativeTwins.firstDoubleDeclarative(b, FieldExtract.waterPatterns, 0.1, 10000.0))
     both(FieldExtract.applyRules(b, FieldExtract.preprocessRules, caseInsensitive = true),
       DeclarativeTwins.applyRulesDeclarative(b, FieldExtract.preprocessRules, caseInsensitive = true))
     both(FieldExtract.applyRules(b, FieldExtract.numericalRules, caseInsensitive = false),
